@@ -68,7 +68,7 @@ object Affinity {
 
   /** Frequent pairs with both endpoint supports:
     * (x, y, cp, cx, cy), x < y, cp ≥ minPairs. `b` must be the DISTINCT
-    * (basket, item) frame (read twice — callers persist it).
+    * (basket, item) frame (read twice — callers materialize it).
     *
     * `pruneItems` toggles the Apriori frequent-item pre-filter. It is a
     * pure PERFORMANCE guard — monotonicity means it can never change the
@@ -102,9 +102,8 @@ object Affinity {
                        pruneItems: Boolean = true): DataFrame = {
     require(minPairs >= 1, s"minPairs must be >= 1, got $minPairs")
     // read three times (basket count, item supports, pair generation) —
-    // one scan, scoped persist
-    val b = Helpers.releaseAfterFirstAction(
-      baskets.select("basket", "item").distinct().persist())
+    // one scan
+    val b = baskets.select("basket", "item").distinct().localCheckpoint()
     val nBaskets = b.agg(countDistinct("basket").as("n"))
     val joined = countedPairs(b, minPairs, pruneItems)
     val fwd = joined.select(col("x").as("antecedent"), col("y").as("consequent"),
@@ -131,8 +130,7 @@ object Affinity {
   def itemNeighbors(baskets: DataFrame, topK: Int = 5, minPairs: Long = 2L,
                     pruneItems: Boolean = true): DataFrame = {
     require(topK >= 1 && minPairs >= 1, s"need topK/minPairs >= 1, got $topK/$minPairs")
-    val b = Helpers.releaseAfterFirstAction(
-      baskets.select("basket", "item").distinct().persist())
+    val b = baskets.select("basket", "item").distinct().localCheckpoint()
     val joined = countedPairs(b, minPairs, pruneItems)
     def cosine(cp: Column, ca: Column, cb: Column): Column =
       round(cp.cast("double") / sqrt(ca.cast("double") * cb.cast("double")), 6)

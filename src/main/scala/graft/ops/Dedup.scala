@@ -237,13 +237,8 @@ object Dedup {
   def jaccardPairs(documents: DataFrame, threshold: Double = 0.5,
                    orderByDocFreq: Boolean = true,
                    sorted: Boolean = true): DataFrame =
-    // one shingling pass, cached: prefix generation and verify both read it.
-    // The cache is scoped to the first consuming action (all consumers run
-    // inside that one job tree) — without the release hook, every call in a
-    // long-lived session would pin its blocks forever.
-    jaccardPairsPreShingled(
-      Helpers.releaseAfterFirstAction(shingleArrays(documents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+    // one shingling pass, materialized: prefix generation and verify both read it
+    jaccardPairsPreShingled(shingleArrays(documents).localCheckpoint(),
       threshold, orderByDocFreq, sorted)
 
   /** [[jaccardPairs]] over a PRE-BUILT shingle table — `arrs` must carry
@@ -305,18 +300,14 @@ object Dedup {
           .select(col("doc_id"), col("r.shingle").as("shingle"), col("n_sh"))
       }
     // The candidate SELF-join duplicates its input subtree, so without a
-    // persist barrier the whole df-rank pipeline (df join + regroup + rank)
-    // executes twice — once per side. Persisting the exploded prefix (3
-    // narrow columns, ~prefix-volume rows) lets CacheManager substitute
-    // BOTH sides from one computation: measured on the 10× corpus as
-    // 8.3 s → 6.5 s single-rep and 8.3 s → 5.6 s best-of-reps (the
-    // PERF.md figure). The hash-order prefix is a row-local slice of the
-    // already-cached arrs — caching that would only duplicate arrs' blocks.
-    val prefixShared =
-      if (orderByDocFreq)
-        Helpers.releaseAfterFirstAction(prefix
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else prefix
+    // materialization barrier the whole df-rank pipeline (df join + regroup
+    // + rank) executes twice — once per side. Materializing the exploded
+    // prefix (3 narrow columns, ~prefix-volume rows) feeds BOTH sides from
+    // one computation: measured on the 10× corpus as 8.3 s → 6.5 s
+    // single-rep and 8.3 s → 5.6 s best-of-reps (the PERF.md figure). The
+    // hash-order prefix is a row-local slice of arrs — materializing that
+    // would only duplicate arrs' blocks.
+    val prefixShared = if (orderByDocFreq) prefix.localCheckpoint() else prefix
     // length filter (PPJoin): J >= t forces t·|A| <= |B| <= |A|/t
     val cand = prefixShared.as("a")
       .join(prefixShared.as("b"),
@@ -378,9 +369,7 @@ object Dedup {
   def minhashPairs(documents: DataFrame, threshold: Double = 0.5,
                    bands: Int = 16, rows: Int = 4,
                    sorted: Boolean = true): DataFrame =
-    minhashPairsPreShingled(
-      Helpers.releaseAfterFirstAction(shingleArrays48(documents)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+    minhashPairsPreShingled(shingleArrays48(documents).localCheckpoint(),
       threshold, bands, rows, sorted)
 
   /** [[minhashPairs]] over a PRE-BUILT 48-bit shingle table — `arrs` must
@@ -394,13 +383,10 @@ object Dedup {
     val k = bands * rows
     val coeffs = minhashCoeffs(k)
     val sh = shingles(arrs)
-    // persist the band-bucket frame: the candidate SELF-join would
+    // materialize the band-bucket frame: the candidate SELF-join would
     // otherwise run the k-min signature aggregate (k mins over the full
-    // shingle volume) once per side — same rationale and release scope as
-    // the jaccard prefix persist above
-    val buckets = Helpers.releaseAfterFirstAction(
-      minhashBuckets(sh, coeffs, bands, rows)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // shingle volume) once per side — the jaccard prefix rationale above
+    val buckets = minhashBuckets(sh, coeffs, bands, rows).localCheckpoint()
     val cand = buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
@@ -756,8 +742,8 @@ object Dedup {
     * set is small enough to broadcast, making this a map-side filter.
     */
   /** (doc_id, shingle-hash) rows via a typed flatMap, not the HOF-array +
-    * explode used by the persisted jaccard path: under explode WITHOUT a
-    * persist barrier, CollapseProject inlines the tokenization into the
+    * explode used by the materialized jaccard path: under explode WITHOUT a
+    * materialization barrier, CollapseProject inlines the tokenization into the
     * generator lambda and the regex re-runs per array element (interpreted
     * HOFs have no CSE) — measured 22s instead of ~2s at sf0.1. The
     * row-local pass is collapse-proof, still one narrow stage, and hashes
@@ -948,7 +934,7 @@ object Dedup {
 
   /** The exact decontamination leg over PRE-SHINGLED frames — shared by
     * [[decontaminate]] and [[decontaminateBloomReport]] so the report can
-    * persist one shingling of each corpus across both of its legs.
+    * materialize one shingling of each corpus across both of its legs.
     */
   private def exactSurvivors(train: DataFrame, trainSh: DataFrame,
                              benchSh: DataFrame): DataFrame = {
@@ -1094,7 +1080,7 @@ object Dedup {
   /** The Bloom decontamination leg over a PRE-SHINGLED train frame and a
     * PRE-BUILT filter — shared by [[decontaminateBloom]] and
     * [[decontaminateBloomReport]] so the report builds the filter (an eager
-    * driver aggregation) exactly once and reuses one persisted shingling.
+    * driver aggregation) exactly once and reuses one materialized shingling.
     */
   private def bloomSurvivors(train: DataFrame, trainSh: DataFrame,
                              bf: org.apache.spark.util.sketch.BloomFilter): DataFrame = {
@@ -1128,16 +1114,12 @@ object Dedup {
     // Round-13 (from round-12 review): composing the two public operators
     // shingled BOTH corpora twice — the exact leg and the Bloom leg each
     // re-ran the typed tokenize+hash pass independently (the report's
-    // dominant constant factor). Shingle each corpus ONCE, persisted and
-    // scoped: the benchmark shingles feed the eager filter build first
-    // (which materializes the cache) and then the exact leg's semi-join;
-    // the train shingles feed both legs inside the single report action.
-    // releaseAfterFirstAction is registered AFTER the filter build so the
-    // probe-action gotcha doesn't spend the cache on the build itself.
-    val tsh = Helpers.releaseAfterFirstAction(hashedShingles(train, n).persist())
-    val bsh = hashedShingles(benchmark, n).persist()
+    // dominant constant factor). Shingle each corpus ONCE, materialized:
+    // the benchmark shingles feed the eager filter build and the exact
+    // leg's semi-join; the train shingles feed both legs.
+    val tsh = hashedShingles(train, n).localCheckpoint()
+    val bsh = hashedShingles(benchmark, n).localCheckpoint()
     val bf = bsh.stat.bloomFilter("shingle", expectedShingles, fpp)
-    Helpers.releaseAfterFirstAction(bsh)
     val e = exactSurvivors(train, tsh, bsh).select(col("doc_id"), lit(1).as("e"))
     val b = bloomSurvivors(train, tsh, bf).select(col("doc_id"), lit(1).as("b"))
     e.join(b, Seq("doc_id"), "full_outer")
@@ -1232,9 +1214,8 @@ object Dedup {
     * keys; the oracle replays over the strings — collision-free on any
     * real vocabulary, the [[shingleArrays]] argument), candidates are
     * bounded by Σ_{df≤cap} df² (near-linear under the cap, never corpus²),
-    * and the weighted postings table is persisted once and released after
-    * the first action since three consumers read it (norms + both join
-    * sides).
+    * and the weighted postings table is materialized once since three
+    * consumers read it (norms + both join sides).
     *
     * Determinism: weights are round-9 decimals (the bm25 contract), dot
     * products and norm sums are exact DECIMAL arithmetic, the final
@@ -1317,19 +1298,18 @@ object Dedup {
     // sf0.1), and at scale a persisted token-granularity table is its own
     // liability. (The pre-shingled path re-derives it per consumer by a
     // row-local explode of the already-materialized arrays — same trade.)
-    // The weighted postings (w) below ARE persisted: three consumers and
-    // a shuffle+join pipeline behind them.
+    // The weighted postings (w) below ARE materialized: three consumers
+    // and a shuffle+join pipeline behind them.
     val dfT = tf.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
     val nd = documents.agg(count(lit(1)).as("_n"))
-    val w = Helpers.releaseAfterFirstAction(
-      tf.join(dfT, "sh")
-        .crossJoin(broadcast(nd))
-        .select(col("doc_id"), col("sh"), col("df"),
-          round(col("tf").cast("double") *
-            log(col("_n").cast("double") / col("df").cast("double")), 9)
-            .cast(dec).as("w"))
-        .persist())
+    val w = tf.join(dfT, "sh")
+      .crossJoin(broadcast(nd))
+      .select(col("doc_id"), col("sh"), col("df"),
+        round(col("tf").cast("double") *
+          log(col("_n").cast("double") / col("df").cast("double")), 9)
+          .cast(dec).as("w"))
+      .localCheckpoint()
     val norms = w.groupBy("doc_id")
       .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
     // The candidate self-join is the compute stage: each sh-group expands

@@ -976,7 +976,7 @@ object Graph {
     * its checkpointed output — the registered query does.
     */
   def modularity(edgeList: DataFrame, labels: DataFrame): DataFrame = {
-    val e = Helpers.releaseAfterFirstAction(canonicalEdges(edgeList).persist())
+    val e = canonicalEdges(edgeList).localCheckpoint()
     val lab = labels.select(col("node").cast("long").as("node"),
       col("community").cast("long").as("community"))
     val em = e
@@ -1567,13 +1567,12 @@ object Graph {
     val db = deg.select(col("node").as("b"), col("deg").as("db"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = Helpers.releaseAfterFirstAction(
-      e.join(da, "a").join(db, "b")
-        .select(
-          when(aFirst, col("a")).otherwise(col("b")).as("u"),
-          when(aFirst, col("b")).otherwise(col("a")).as("v"),
-          when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-        .persist())
+    val oriented = e.join(da, "a").join(db, "b")
+      .select(
+        when(aFirst, col("a")).otherwise(col("b")).as("u"),
+        when(aFirst, col("b")).otherwise(col("a")).as("v"),
+        when(aFirst, col("db")).otherwise(col("da")).as("dv"))
+      .localCheckpoint()
     // successor pairs of each center u, ordered by the SAME (degree, id)
     // order the orientation used — so the closing edge, when present, is
     // oriented exactly x→y and one inner equi-join finds it
@@ -1601,7 +1600,7 @@ object Graph {
     * E^{3/2} by the degree orientation, nothing collected.
     */
   def triangleCorners(edgeList: DataFrame): DataFrame = {
-    val e = Helpers.releaseAfterFirstAction(canonicalEdges(edgeList).persist())
+    val e = canonicalEdges(edgeList).localCheckpoint()
     cornersFrom(e, degreesOf(e))
   }
 
@@ -1624,7 +1623,7 @@ object Graph {
     */
   def triangleProfile(edgeList: DataFrame,
                       corners: Option[DataFrame] = None): DataFrame = {
-    val e = Helpers.releaseAfterFirstAction(canonicalEdges(edgeList).persist())
+    val e = canonicalEdges(edgeList).localCheckpoint()
     val deg = degreesOf(e)
     val tri = corners.getOrElse(cornersFrom(e, deg))
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
@@ -1657,21 +1656,16 @@ object Graph {
     */
   def edgeEmbeddedness(edgeList: DataFrame,
                        corners: Option[DataFrame] = None): DataFrame = {
-    // Degree table materialized EAGERLY over the cached canonical edges
-    // (round 18): the two aliased degree lookups below plan as two
-    // broadcast exchanges, and broadcast subtrees execute on concurrent
-    // threads BEFORE the main action materializes the edge cache — so
-    // each broadcast build recomputed the full canonicalEdges distinct +
-    // degree aggregate from scratch (the r18 stage probe put ~all of this
-    // query's summed task time in exactly those two 64-task broadcast
-    // stages). The checkpoint primes the edge cache once (its own single
-    // consumer — no race) and turns both broadcast builds into bounded
-    // block reads; e's cache is released after its second touching
-    // action (the primer, then the query's own), the checkpoint after
-    // its first (the query's).
-    val e = Helpers.releaseAfterActions(canonicalEdges(edgeList).persist(), 2)
-    val deg = Helpers.releaseCheckpointAfterFirstAction(
-      degreesOf(e).localCheckpoint())
+    // Edges and degree table materialized EAGERLY (round 18): the two
+    // aliased degree lookups below plan as two broadcast exchanges, and
+    // broadcast subtrees execute on concurrent threads at the start of the
+    // main action — over lazy inputs each broadcast build recomputed the
+    // full canonicalEdges distinct + degree aggregate from scratch (the
+    // r18 stage probe put ~all of this query's summed task time in exactly
+    // those two 64-task broadcast stages). Materialized, both broadcast
+    // builds are bounded block reads.
+    val e = canonicalEdges(edgeList).localCheckpoint()
+    val deg = degreesOf(e).localCheckpoint()
     def cedge(p: Column, q: Column): Column =
       struct(least(p, q).as("a"), greatest(p, q).as("b"))
     val common = corners.getOrElse(cornersFrom(e, deg))
@@ -1715,14 +1709,12 @@ object Graph {
     * — nothing collected, no driver loop.
     */
   def degreeAssortativity(edgeList: DataFrame): DataFrame = {
-    // same primed-degree shape as [[edgeEmbeddedness]] (round 18): the two
-    // aliased degree joins broadcast-build concurrently and each
-    // recomputed the canonical-edge distinct + degree aggregate before
-    // the main action could materialize the cache; the eager checkpoint
-    // computes that mass exactly once
-    val e = Helpers.releaseAfterActions(canonicalEdges(edgeList).persist(), 2)
-    val deg = Helpers.releaseCheckpointAfterFirstAction(
-      degreesOf(e).localCheckpoint())
+    // same materialized-degree shape as [[edgeEmbeddedness]] (round 18):
+    // the two aliased degree joins broadcast-build concurrently, and over
+    // lazy inputs each recomputed the canonical-edge distinct + degree
+    // aggregate; the eager checkpoints compute that mass exactly once
+    val e = canonicalEdges(edgeList).localCheckpoint()
+    val deg = degreesOf(e).localCheckpoint()
     val dec = DecimalType(38, 0)
     val x = col("da").cast(dec)
     val y = col("db").cast(dec)

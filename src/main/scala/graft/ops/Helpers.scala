@@ -1,10 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Shared expression helpers for deterministic, oracle-comparable output.
   *
@@ -172,114 +170,5 @@ object Helpers {
         monotonically_increasing_id().as(barrierCol))
       .filter(col(predCol) && col(barrierCol) >= 0)
       .select(kept.map(col): _*)
-  }
-
-  /** Scope a persisted intermediate to its first consuming action.
-    *
-    * An operator that persists a shared intermediate but returns a LAZY
-    * frame has no in-band unpersist point, and `DataFrame.persist` entries
-    * are held by the session's CacheManager forever (the driver-side
-    * ContextCleaner only reaps raw RDDs, not SQL cache entries) — so a
-    * long-lived session accumulates MEMORY_AND_DISK blocks per call. This
-    * registers a QueryExecutionListener that fires after the first
-    * completed action (success OR failure) whose analyzed plan contains the
-    * cached frame's plan, unpersists it, and deregisters itself — i.e. the
-    * cache lives exactly from first materialization to the end of the
-    * action that consumed it, which is the whole lifetime it is useful for
-    * in a compute-once operator (every consumer of the shared intermediate
-    * runs inside that one job tree).
-    *
-    * Residual: if the returned frame is NEVER consumed, the (empty,
-    * unmaterialized) cache registration and the listener remain until
-    * session close — bounded by abandoned calls, with no storage behind it.
-    * A SECOND action on the same returned frame recomputes without the
-    * cache: correct, just uncached — callers that iterate an operator's
-    * result should persist the RESULT, not rely on internal caches.
-    *
-    * Probe-action gotcha: the listener bus is async and release keys on
-    * the FIRST completed action embedding the cached plan — so a caller
-    * that probes the returned frame (`isEmpty`, `head`, a `count` for
-    * logging) before the real action spends the cache on the probe, and
-    * back-to-back calls whose identical plans dedupe in CacheManager can
-    * release early for the sibling. Both stay correct (recompute, not
-    * corruption); if a caller needs N guaranteed cached consumptions it
-    * should persist/unpersist explicitly at its own scope.
-    */
-  def releaseAfterFirstAction(cached: DataFrame): DataFrame =
-    releaseAfterActions(cached, 1)
-
-  /** [[releaseAfterFirstAction]] generalized to the nth touching action
-    * (round 18): an operator that PRIMES a persisted frame with its own
-    * internal eager materialization (e.g. a localCheckpoint of a derived
-    * table, taken precisely so concurrent broadcast-exchange threads do
-    * not race to recompute the shared input) consumes one action before
-    * the query's real action ever runs — releasing on the first touch
-    * would evict the cache between the primer and the consumer. The
-    * release fires after the nth completed action (success or failure)
-    * whose analyzed plan embeds the cached frame's plan.
-    */
-  def releaseAfterActions(cached: DataFrame, n: Int): DataFrame = {
-    require(n >= 1, s"need n >= 1, got $n")
-    val spark = cached.sparkSession
-    val target = cached.queryExecution.analyzed
-    val lm = spark.listenerManager
-    val listener = new QueryExecutionListener {
-      private val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      private def maybeRelease(qe: QueryExecution): Unit = {
-        // the consumer was built FROM the cached frame, so its analyzed plan
-        // embeds the cached plan as a subtree (cache substitution happens
-        // later, at physical planning)
-        val touches =
-          try qe.analyzed.exists(_.sameResult(target))
-          catch { case _: Throwable => false }
-        if (touches && seen.incrementAndGet() == n) {
-          cached.unpersist(blocking = false)
-          lm.unregister(this)
-        }
-      }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        maybeRelease(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        maybeRelease(qe)
-    }
-    lm.register(listener)
-    cached
-  }
-
-  /** Release a localCheckpoint's blocks after the first completed action
-    * that embeds it — the checkpoint analog of [[releaseAfterFirstAction]]
-    * for operators that return a LAZY frame built over an internal eager
-    * checkpoint and so have no in-band release point (round 18; previously
-    * such blocks waited on GC/ContextCleaner). Sharper caveat than the
-    * persist variant: a released localCheckpoint CANNOT be recomputed
-    * (lineage is truncated), so this must only wrap checkpoints whose
-    * single consuming action is the query's terminal action — never a
-    * frame a caller may run twice. Every registered query builds fresh
-    * frames per execution (`fn(spark, sfDir)`), so per-execution internal
-    * checkpoints satisfy this by construction.
-    */
-  def releaseCheckpointAfterFirstAction(ck: DataFrame): DataFrame = {
-    val spark = ck.sparkSession
-    val target = ck.queryExecution.analyzed
-    val lm = spark.listenerManager
-    val listener = new QueryExecutionListener {
-      private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      private def maybeRelease(qe: QueryExecution): Unit = {
-        val touches =
-          try qe.analyzed.exists(_.sameResult(target))
-          catch { case _: Throwable => false }
-        if (touches && done.compareAndSet(false, true)) {
-          try org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(ck)
-          catch { case _: Throwable => () }
-          lm.unregister(this)
-        }
-      }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        maybeRelease(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        maybeRelease(qe)
-    }
-    lm.register(listener)
-    ck
   }
 }

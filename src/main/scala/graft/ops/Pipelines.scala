@@ -99,17 +99,15 @@ object Pipelines {
     // The gated corpus feeds SEVERAL plan subtrees — the pair generator's
     // shingle-subset semi-join, both exact-verify sides inside it, the
     // survivor anti-join, and the packing tail — and the gate is a
-    // full-text regex pass, so without a persist barrier CacheManager
-    // re-runs it once per subtree (measured 4-5 gate evaluations per
-    // curation query at sf0.1). Persist once, scoped to the first action
-    // (the tfidf weighted-postings pattern): every consumer substitutes
-    // the cached gated rows and the corpus is gated exactly once per
-    // execution. At 100 TB this trades ~|gated| of spill-able storage
-    // for 3-4 full-corpus regex re-scans — the same trade the reference
-    // pipelines make by materializing their filtered corpus between
-    // stages.
-    val gated = Helpers.releaseAfterFirstAction(
-      gated0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // full-text regex pass, so without a materialization barrier it
+    // re-runs once per subtree (measured 4-5 gate evaluations per curation
+    // query at sf0.1). Materialized once (the tfidf weighted-postings
+    // pattern): every consumer reads the gated rows and the corpus is
+    // gated exactly once. At 100 TB this trades ~|gated| of spill-able
+    // storage for 3-4 full-corpus regex re-scans — the same trade the
+    // reference pipelines make by materializing their filtered corpus
+    // between stages.
+    val gated = gated0.localCheckpoint()
     // 2. near-dup dedup computed ON the gated corpus — one anti-join
     val deduped = Dedup.dedupSurvivors(gated, pairGenerator(gated))
     // 3. mixture  4. split  5. packing

@@ -248,46 +248,6 @@ object Search {
       .limit(k)
   }
 
-  /** Composition form of [[hybridRrf]]: IDENTICAL fusion, but fully lazy —
-    * the lexical leg is [[bm25Lazy]] and pool ranks are assigned by a
-    * `row_number` window over each BOUNDED pool instead of a driver-side
-    * collect, so building the query runs NO Spark job (the same contract as
-    * [[bm25Lazy]]). The window is partitioned by a literal over ≤ `poolK`
-    * post-limit rows — a bounded single-partition sort by construction, NOT
-    * an unpartitioned window over the corpus. Use this form inside composed
-    * pipelines; the standalone eager form stays the registered bench shape
-    * (its collected ranks become literals the optimizer folds).
-    * SearchSpec asserts the two forms row-identical.
-    */
-  def hybridRrfLazy(documents: DataFrame, queryTerms: Seq[String], k: Int = 15,
-                    poolK: Int = 50, c: Int = 60): DataFrame = {
-    require(poolK >= k, s"pool must cover the output: poolK=$poolK < k=$k")
-    import org.apache.spark.sql.expressions.Window
-    val one = Window.partitionBy(lit(0))
-    // same total order as the pool's orderBy → ranks equal the eager
-    // zipWithIndex assignment (both keys end in doc_id, so the order is total)
-    val lex = bm25Lazy(documents, queryTerms, poolK)
-      .select(col("doc_id"), row_number()
-        .over(one.orderBy(col("score").desc, col("doc_id")))
-        .cast("long").as("rank_lex"))
-    val quality = graft.ops.Text.qualityScore(documents)
-      .select(col("doc_id"), col("type_token_ratio"))
-      .orderBy(col("type_token_ratio").desc, col("doc_id"))
-      .limit(poolK)
-      .select(col("doc_id"), row_number()
-        .over(one.orderBy(col("type_token_ratio").desc, col("doc_id")))
-        .cast("long").as("rank_q"))
-    lex.join(quality, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        round(
-          coalesce(lit(1.0) / (lit(c) + col("rank_lex")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(c) + col("rank_q")), lit(0.0)), 6).as("rrf"),
-        coalesce(col("rank_lex"), lit(0L)).as("rank_lex"),
-        coalesce(col("rank_q"), lit(0L)).as("rank_q"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-      .limit(k)
-  }
-
   /** The DuckDB restatement of [[hybridRrf]] — built AROUND the generated
     * [[bm25OracleSql]] so the lexical leg cannot drift from the registered
     * `q_bm25` semantics.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,10 +38,15 @@ object Similarity {
     */
   val QuadraticAnchorDefaultMaxRows: Long = 10000L
 
-  private def guardQuadraticAnchor(e: DataFrame, op: String, alternative: String): Unit = {
-    val cap = e.sparkSession.conf.getOption("spark.graft.quadraticAnchorMaxRows")
+  private def guardQuadraticAnchor(e: DataFrame, op: String, alternative: String): Unit =
+    guardQuadraticAnchor(e.sparkSession, e.count(), op, alternative)
+
+  /** The row-cap check over an already-known input size `n` — for callers
+    * that have the count from a measurement they take anyway. */
+  private def guardQuadraticAnchor(spark: SparkSession, n: Long, op: String,
+                                   alternative: String): Unit = {
+    val cap = spark.conf.getOption("spark.graft.quadraticAnchorMaxRows")
       .map(_.toLong).getOrElse(QuadraticAnchorDefaultMaxRows)
-    val n = e.count()
     if (n > cap) throw new QuadraticAnchorException(
       s"$op is a fixture-scale EXACT oracle anchor with O(n²) pair work; input has " +
         s"$n rows > cap $cap. At scale use $alternative (same output shape, " +
@@ -1312,6 +1317,13 @@ object Similarity {
 
   // ---------------------------------------------------------------- HNSW
 
+  /** [[hnswGraph]]'s default level cap and exact-path layer size. */
+  val HnswDefaultMaxLevel: Int = 6
+  val HnswDefaultExactCap: Long = 4096L
+
+  /** The level multiplier mL = 1/ln(M) of [[hnswLevel]]. */
+  def hnswMl(m: Int): Double = 1.0 / math.log(m.toDouble)
+
   /** Deterministic HNSW level assignment (Malkov & Yashunin 2016,
     * arXiv:1603.09320 §4): level(v) = min(floor(−ln(u)·mL), maxLevel)
     * with mL = 1/ln(M), giving the paper's geometric layer sizes
@@ -1367,13 +1379,12 @@ object Similarity {
     * pre-filter stranded ids via the layer-membership minus
     * adjacency-key anti-join and handle them by brute-force fallback.
     */
-  def hnswGraph(embeddings: DataFrame, m: Int = 8, maxLevel: Int = 6,
-                exactCap: Long = 4096L,
+  def hnswGraph(embeddings: DataFrame, m: Int = 8, maxLevel: Int = HnswDefaultMaxLevel,
+                exactCap: Long = HnswDefaultExactCap,
                 nTables: Int = 8, bitsPerTable: Int = 4): DataFrame = {
     require(m >= 2 && maxLevel >= 1, s"need m >= 2, maxLevel >= 1, got $m/$maxLevel")
-    val mL = 1.0 / math.log(m.toDouble)
     val lvl = embeddings.select(col("vec_id"), col("embedding"))
-      .withColumn("level", hnswLevel(mL, maxLevel))
+      .withColumn("level", hnswLevel(hnswMl(m), maxLevel))
       .localCheckpoint()
     // ONE bounded collect (per-level histogram, ≤ maxLevel+1 rows) replaces
     // the lMax aggregate plus the per-layer membership count jobs (round 18
@@ -1400,6 +1411,9 @@ object Similarity {
     val exactL0 = (0 to lMax).find(l => nAtOrAbove(l) <= exactCap)
     val mmaxCol = when(col("level") === 0, lit(2 * m)).otherwise(lit(m))
     val fusedPart = exactL0.map { l0 =>
+      guardQuadraticAnchor(embeddings.sparkSession, nAtOrAbove(l0),
+        "hnswGraph's exact layers (q_hnsw_topk)",
+        "an exactCap within the cap (larger layers take the banded-LSH build)")
       val nBlocks = 32 // knnGraph's block-join width
       val mem = lvl.filter(col("level") >= l0)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("level"))
@@ -1826,9 +1840,7 @@ object Similarity {
     // clusterings, the two kNN graphs — is seeded-deterministic over the
     // capped probe set, so they are memoized through ProbeCache (shared
     // localCheckpoints, lineage cut): the pair frames feed the pair leg AND
-    // the keeplist clusterings within ONE call (the reason they were
-    // already checkpointed — a scoped persist would be spent by the
-    // clustering's first internal action), and repeated dashboard
+    // the keeplist clusterings within ONE call, and repeated dashboard
     // refreshes over the same corpus reuse all six artifacts instead of
     // re-running two label propagations and two quadratic probes. Block
     // residency is capped at one artifact set per distinct probe, released

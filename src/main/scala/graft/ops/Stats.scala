@@ -207,12 +207,12 @@ object Stats {
     * scan (the [[iqrOutliers]] shape, one level deeper because MAD is a
     * percentile OF a percentile-residual): median aggregate → deviation
     * join → MAD aggregate → flag join + combining count. The deviation
-    * frame is persisted (released after the first action) because both the
-    * MAD aggregate and the final count read it — without the barrier the
-    * median join would execute twice. No global sort at any scale; the
-    * per-group fence tables are free to broadcast or shuffle as the
-    * planner sizes them (high-cardinality groups must not be hint-pinned —
-    * the round-5 iqrOutliers lesson).
+    * frame is materialized because both the MAD aggregate and the final
+    * count read it — without the barrier the median join would execute
+    * twice. No global sort at any scale; the per-group fence tables are
+    * free to broadcast or shuffle as the planner sizes them
+    * (high-cardinality groups must not be hint-pinned — the round-5
+    * iqrOutliers lesson).
     *
     * Determinism: Spark `percentile` ↔ DuckDB `quantile_cont` is the
     * established exact pair; deviations and the fence product
@@ -225,11 +225,10 @@ object Stats {
     val v = col(valueCol)
     val med = df.groupBy(col(groupCol))
       .agg(expr(s"percentile($valueCol, 0.5)").as("med"))
-    val dev = Helpers.releaseAfterFirstAction(
-      df.select(col(groupCol), v)
-        .join(med, Seq(groupCol))
-        .withColumn("adev", abs(v - col("med")))
-        .persist())
+    val dev = df.select(col(groupCol), v)
+      .join(med, Seq(groupCol))
+      .withColumn("adev", abs(v - col("med")))
+      .localCheckpoint()
     val madAgg = dev.groupBy(col(groupCol))
       .agg(expr("percentile(adev, 0.5)").as("mad"))
     dev.join(madAgg, Seq(groupCol))
@@ -840,14 +839,7 @@ object Stats {
           "non-negative values; filter or clamp upstream", v0)))
     // ONE pass over the entity table; everything downstream (the mm/tot/
     // nn broadcast builds and the main path) reads the distinct-value
-    // aggregate. localCheckpoint, NOT persist+release-hook: Spark builds
-    // the broadcast inputs on parallel threads at execution start, and a
-    // cold (or hook-spent — the async-bus probe-action gotcha in
-    // Helpers.releaseAfterFirstAction's scaladoc) cache makes each thread
-    // recompute the entity aggregate (measured 2.7× the naive form at
-    // sf0.1). The checkpoint's blocks are reaped by the ContextCleaner
-    // once the returned plan is unreachable — RDD blocks, unlike
-    // SQL-cache entries, do not outlive their frame.
+    // aggregate.
     val perV = entities.select(guarded.as("_v"))
       .groupBy("_v").agg(count(lit(1)).as("_cnt"))
       .localCheckpoint()

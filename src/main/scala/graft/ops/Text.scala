@@ -434,11 +434,10 @@ object Text {
     */
   def keyTerms(documents: DataFrame, topK: Int = 3): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val tf = Helpers.releaseAfterFirstAction(
-      documents.select(col("doc_id"),
-          explode(regexp_extract_all(lower(col("text")), lit(wordRe), lit(0))).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .persist())
+    val tf = documents.select(col("doc_id"),
+        explode(regexp_extract_all(lower(col("text")), lit(wordRe), lit(0))).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      .localCheckpoint()
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = documents.agg(count(lit(1)).as("n"))
     val scored = tf.join(df, "term")
@@ -460,7 +459,7 @@ object Text {
     * vocabulary/tokenizer audit reads. `minCount` floors the bigram count
     * (PMI of rare pairs is noise).
     *
-    * Scale shape: one token scan persisted for its two consumers, unigram
+    * Scale shape: one token scan materialized for its two consumers, unigram
     * and bigram counts are map-side-combining aggregates, the two totals
     * ride as 1-row broadcasts, and the per-bigram probabilities join on
     * the token keys. Determinism: counts are exact longs; the PMI is one
@@ -471,11 +470,10 @@ object Text {
   def pmiCollocations(documents: DataFrame, minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val toks = col("_toks")
-    val base = Helpers.releaseAfterFirstAction(
-      documents
-        .withColumn("_toks", regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)))
-        .select(col("_toks"))
-        .persist())
+    val base = documents
+      .withColumn("_toks", regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)))
+      .select(col("_toks"))
+      .localCheckpoint()
     val uni = base.select(explode(toks).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cu"))
     val totalToks = uni.agg(coalesce(sum("cu"), lit(0L)).as("t"))
@@ -691,12 +689,12 @@ object Text {
     require(vocabSize > 0)
     val spark = documents.sparkSession
     import spark.implicits._
-    // ONE corpus tokenize, cached: the vocab-count job and the scoring pass
-    // both read `_toks` (same discipline as [[bigramSurprisal]])
+    // ONE corpus tokenize, materialized: the vocab-count job and the
+    // scoring pass both read `_toks` (same discipline as [[bigramSurprisal]])
     val base = documents
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     // two driver actions read cnt (the total and the vocab top-K) — persist
     // so the tokenize+aggregate lineage runs once, not twice
     val cnt = base.select(explode(col("_toks")).as("tok"))
@@ -711,12 +709,9 @@ object Text {
         cnt.orderBy(col("c").desc, col("tok")).limit(vocabSize)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     } finally cnt.unpersist()
-    if (total == 0.0) {
-      base.unpersist(blocking = false)
+    if (total == 0.0)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "mean_surprisal", "n_tokens")
-    }
     val bc = spark.sparkContext.broadcast(vocab)
-    Helpers.releaseAfterFirstAction(base)
     base.select(col("doc_id"), col("_toks")).as[(Long, Seq[String])]
       .flatMap { case (id, tsSeq) =>
         val ts = if (tsSeq == null) Array.empty[String] else tsSeq.toArray
@@ -762,15 +757,15 @@ object Text {
     require(lambda > 0.0 && lambda < 1.0, s"lambda must be in (0,1), got $lambda")
     val spark = documents.sparkSession
     import spark.implicits._
-    // ONE corpus tokenize, cached: the unigram-count job, the bigram-count
-    // job, and the scoring pass all read `_toks` from this frame. Without
-    // the persist each construction job re-ran regexp_extract_all over the
-    // full corpus (and scoring tokenized a third time Scala-side) — the
-    // tokenize was the dominant cost, 3×.
+    // ONE corpus tokenize, materialized: the unigram-count job, the
+    // bigram-count job, and the scoring pass all read `_toks` from this
+    // frame. Without it each construction job re-ran regexp_extract_all
+    // over the full corpus (and scoring tokenized a third time Scala-side)
+    // — the tokenize was the dominant cost, 3×.
     val base = documents
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val toks = base.select(explode(col("_toks")).as("tok"))
     val cnt = toks.groupBy("tok").agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -781,10 +776,8 @@ object Text {
         cnt.orderBy(col("c").desc, col("tok")).limit(vocabSize)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     } finally cnt.unpersist()
-    if (total == 0.0) {
-      base.unpersist(blocking = false)
+    if (total == 0.0)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "mean_surprisal", "n_tokens")
-    }
     val grams = filter(
       transform(col("_toks"), (_, i) => when(i <= size(col("_toks")) - 2,
         concat_ws(" ", element_at(col("_toks"), i + 1), element_at(col("_toks"), i + 2)))),
@@ -801,10 +794,6 @@ object Text {
     val bcB = spark.sparkContext.broadcast(bigMap)
     val lam = lambda
     val n = total
-    // the returned frame is LAZY — scope the tokenize cache to its first
-    // consuming action (registered AFTER the eager construction jobs so
-    // neither of them spends the release)
-    Helpers.releaseAfterFirstAction(base)
     // scoring reads the SAME `_toks` the counts were built from — no
     // third tokenize, and no Spark-regex-vs-Scala-regex consistency hazard
     base.select(col("doc_id"), col("_toks")).as[(Long, Seq[String])]
@@ -987,14 +976,13 @@ object Text {
     * Scale shape: the shuffle carries (xxhash64, doc_id) pairs — 8-byte
     * hashes, never passage text — through one distinct-count aggregate and
     * one join back; everything else is row-local. The chunk+hash pass is
-    * persisted because BOTH sides of the docfreq join read it (the same
-    * one-pass contract as jaccardPairs' shingle cache).
+    * materialized because BOTH sides of the docfreq join read it (the same
+    * one-pass contract as jaccardPairs' shingle table).
     */
   def duplicatePassageStats(documents: DataFrame, chunkTokens: Int = 32): DataFrame = {
-    val hashed = Helpers.releaseAfterFirstAction(
-      chunkDocuments(documents, chunkTokens, overlap = 0, sorted = false)
-        .select(col("doc_id"), xxhash64(col("chunk_text")).as("h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val hashed = chunkDocuments(documents, chunkTokens, overlap = 0, sorted = false)
+      .select(col("doc_id"), xxhash64(col("chunk_text")).as("h"))
+      .localCheckpoint()
     val df = hashed.groupBy("h")
       .agg(countDistinct("doc_id").as("docfreq"))
     hashed.join(df, "h")
@@ -1233,7 +1221,7 @@ object Text {
     * triples — never text — through one combining distinct-count
     * aggregate and one hash semi-join back; the island window partitions
     * per document, so no global sort exists at any corpus size. The gram
-    * pass is persisted because both sides of the shared-hash join read it
+    * pass is materialized because both sides of the shared-hash join read it
     * (the [[duplicatePassageStats]] one-pass contract). Hashes are
     * [[gramHash48]] (md5-derived), so the whole operator carries a full
     * DuckDB value oracle.
@@ -1245,22 +1233,21 @@ object Text {
     val spark = documents.sparkSession
     import spark.implicits._
     val tokenRe = "[a-z0-9]+".r
-    val grams = Helpers.releaseAfterFirstAction(
-      documents.select(col("doc_id"), lower(col("text")).as("t")).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          val toks = if (text == null) Array.empty[String]
-                     else tokenRe.findAllIn(text).toArray
-          if (toks.length < k) Iterator.empty
-          else {
-            val md = java.security.MessageDigest.getInstance("MD5")
-            Iterator.tabulate(toks.length - k + 1) { i =>
-              (id, (i + 1).toLong, // 1-based gram position
-                gramHash48Local(md, toks.slice(i, i + k).mkString(" ")))
-            }
+    val grams = documents.select(col("doc_id"), lower(col("text")).as("t")).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val toks = if (text == null) Array.empty[String]
+                   else tokenRe.findAllIn(text).toArray
+        if (toks.length < k) Iterator.empty
+        else {
+          val md = java.security.MessageDigest.getInstance("MD5")
+          Iterator.tabulate(toks.length - k + 1) { i =>
+            (id, (i + 1).toLong, // 1-based gram position
+              gramHash48Local(md, toks.slice(i, i + k).mkString(" ")))
           }
         }
-        .toDF("doc_id", "pos", "h")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      }
+      .toDF("doc_id", "pos", "h")
+      .localCheckpoint()
     val shared = grams.groupBy("h")
       .agg(countDistinct("doc_id").as("df"))
       .filter(col("df") >= 2)
@@ -1482,7 +1469,7 @@ object Text {
       .as("type_token_ratio")
     val base = documents.select(col("doc_id"), ttr,
         coalesce(size(toks).cast("long"), lit(0L)).as("n_tokens"))
-      .persist()
+      .localCheckpoint()
     // Bounded driver-side bucket prefix (≤ ~102 rows per level — the
     // maxDriverKeys discipline): best-first, whole buckets while they fit,
     // then at most one boundary bucket. The boundary bucket normally holds
@@ -1567,17 +1554,6 @@ object Text {
           else level += 1
       }
     }
-    // every driver-side probe above ran against the persisted base; hand
-    // the cache to the CONSUMER'S action now (round-10 review: releasing
-    // after the first internal collect meant pass 2 re-tokenized the
-    // corpus twice, defeating the documented one-scan design). Residual
-    // if the returned frame is NEVER consumed: unlike the usual
-    // releaseAfterFirstAction residual (empty registration), the probes
-    // above already MATERIALIZED this cache — an abandoned call holds the
-    // 3-column feature frame until session close. Callers that build-and-
-    // discard should unpersist explicitly; consumed frames self-release
-    // (spec-asserted).
-    Helpers.releaseAfterFirstAction(base)
     val full = keptPreds match {
       case Nil => base.filter(lit(false))
       case ps => base.filter(ps.reduce(_ || _)) // disjoint ≡ union, one scan
@@ -2054,9 +2030,9 @@ object Text {
     * aggregate it just produced — no extra exchange) → per-doc combining
     * count. Everything
     * is keyed by ngram or doc_id; nothing quadratic, no driver state. The
-    * distinct gram table feeds both join sides, so it is persisted and
-    * released after the first action (the [[graft.ops.Dedup]] prefix-table
-    * discipline — without the barrier the explode+distinct runs twice).
+    * distinct gram table feeds both join sides, so it is materialized
+    * (the [[graft.ops.Dedup]] prefix-table discipline — without the
+    * barrier the explode+distinct runs twice).
     * Documents with fewer than n tokens have no n-grams and no output row
     * (their novelty is undefined, not zero).
     */
@@ -2073,39 +2049,38 @@ object Text {
     val spark = documents.sparkSession
     import spark.implicits._
     val tokenRe = "[a-z0-9]+".r
-    val grams = Helpers.releaseAfterFirstAction(
-      documents.select(col("doc_id"), lower(col("text")).as("t"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
+    val grams = documents.select(col("doc_id"), lower(col("text")).as("t"))
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        it.flatMap { case (id, text) =>
+          if (text == null) Iterator.empty
+          else {
+            val toks = tokenRe.findAllIn(text).toArray
+            val m = toks.length - n + 1
+            if (m <= 0) Iterator.empty
             else {
-              val toks = tokenRe.findAllIn(text).toArray
-              val m = toks.length - n + 1
-              if (m <= 0) Iterator.empty
-              else {
-                val seen = new java.util.LinkedHashSet[java.lang.Long]()
-                var i = 0
-                while (i < m) {
-                  val sb = new java.lang.StringBuilder(toks(i))
-                  var j = 1
-                  while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-                  val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                  seen.add(org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-                    bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                    bytes.length, 42L))
-                  i += 1
-                }
-                val itr = seen.iterator()
-                new Iterator[(Long, Long)] {
-                  def hasNext: Boolean = itr.hasNext
-                  def next(): (Long, Long) = (id, itr.next())
-                }
+              val seen = new java.util.LinkedHashSet[java.lang.Long]()
+              var i = 0
+              while (i < m) {
+                val sb = new java.lang.StringBuilder(toks(i))
+                var j = 1
+                while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
+                val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+                seen.add(org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+                  bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
+                  bytes.length, 42L))
+                i += 1
+              }
+              val itr = seen.iterator()
+              new Iterator[(Long, Long)] {
+                def hasNext: Boolean = itr.hasNext
+                def next(): (Long, Long) = (id, itr.next())
               }
             }
           }
-        }.toDF("doc_id", "ngram")
-        .persist())
+        }
+      }.toDF("doc_id", "ngram")
+      .localCheckpoint()
     val firsts = grams.groupBy("ngram").agg(min("doc_id").as("first_doc"))
     grams.join(firsts, "ngram")
       .groupBy("doc_id")

@@ -86,10 +86,7 @@ object GraftSqlBridge {
   }
 
   /** Whether the session's shared CacheManager holds NO live SQL cache
-    * entries — the observability hook behind the scoped-persist contract
-    * (graft.ops.Helpers.releaseAfterFirstAction): specs assert an operator
-    * leaves no orphaned cache entry behind once its first consuming action
-    * completes.
+    * entries — specs assert an operator leaves no cache entry behind.
     */
   def sqlCacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
@@ -97,17 +94,6 @@ object GraftSqlBridge {
   /** Drop every SQL cache entry (test isolation for cache-hygiene specs). */
   def clearSqlCache(spark: SparkSession): Unit =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.clearCache()
-
-  /** Number of registered QueryExecutionListeners — cache-hygiene specs use
-    * this to pin the bounded residual of a never-consumed scoped-persist
-    * frame (exactly one pending release listener PER SCOPED PERSIST — an
-    * operator may legitimately hold several, e.g. Dedup.jaccardPairs holds
-    * two: shingle arrays + shared df-ranked prefix; Dedup.minhashPairs two:
-    * shingle arrays + band buckets) and its disappearance once the frame
-    * is finally consumed.
-    */
-  def queryListenerCount(spark: SparkSession): Int =
-    spark.listenerManager.listListeners().length
 
   /** Stable per-session identity as a plain String (holds no session
     * reference) — `SparkSession.sessionUUID` is `private[sql]`, and

@@ -955,34 +955,6 @@ object PerfProbe {
       spark.stop(); return
     }
 
-    // hnsw mode: `Test/runMain graft.PerfProbe hnsw` — graph build cost,
-    // warm search cost, and measured recall@k vs exact at the current SF
-    // (the floor behind q_hnsw_topk's declared 0.93)
-    if (args.headOption.contains("hnsw")) {
-      import graft.core.Tables
-      import graft.ops.Similarity
-      val emb = Tables.embeddings(spark, sfDir)
-      def t[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROBE hnsw $tag%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      val g = t("graph build")(Similarity.hnswGraph(emb, 8))
-      val exact = Similarity.cosineTopK(emb, 20, 5).select("qid", "cid")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      for ((h, b, ef) <- Seq((2, 3, 32), (2, 4, 32), (1, 4, 32), (2, 3, 64),
-                             (2, 4, 64), (3, 4, 32))) {
-        (1 to 2).foreach { _ =>
-          val got = t(s"search h=$h b=$b ef=$ef")(
-            Similarity.hnswTopK(emb, g, 20, 5, ef = ef, hopsPerLevel = h,
-              beamRounds = b).select("qid", "cid")
-              .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-          println(f"PROBE hnsw h=$h b=$b ef=$ef recall=${got.intersect(exact).size.toDouble / exact.size}%.4f")
-        }
-      }
-      spark.stop(); return
-    }
-
     // basket-graph mass decomposition: `Test/runMain graft.PerfProbe graphmass`
     if (args.headOption.contains("graphmass")) {
       import graft.core.Tables

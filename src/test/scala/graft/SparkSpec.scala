@@ -32,17 +32,4 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir: String = TestSpark.sfDir
-
-  /** Cache-hygiene helper shared by every scoped-persist spec: the release
-    * listener (Helpers.releaseAfterFirstAction) fires on the ASYNC listener
-    * bus, so specs must wait out the bus before asserting the session's SQL
-    * cache is empty. Returns whether it emptied within the timeout.
-    */
-  def awaitSqlCacheEmpty(timeoutMs: Long = 30000): Boolean = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!GraftSqlBridge.sqlCacheIsEmpty(spark) && System.currentTimeMillis() < deadline)
-      Thread.sleep(200)
-    GraftSqlBridge.sqlCacheIsEmpty(spark)
-  }
 }

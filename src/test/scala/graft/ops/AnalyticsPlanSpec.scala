@@ -39,8 +39,8 @@ class AnalyticsPlanSpec extends SparkSpec {
     assert(plan.collect { case j: CartesianProductExec => j }.isEmpty, plan.toString)
     assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.size <= 1,
       s"only the 1-row basket-total cross join may nested-loop:\n$plan")
-    // the dim join sits inside the scoped-persist subtree (InMemoryScan in
-    // the query's plan) — assert the broadcast on the derivation directly
+    // the dim join sits inside the materialized basket table (a checkpoint
+    // scan in the query's plan) — assert the broadcast on the derivation directly
     val bb = Affinity.brandBaskets(graft.core.Tables.lineitem(spark, sfDir),
       graft.core.Tables.part(spark, sfDir)).queryExecution.sparkPlan
     assert(bb.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,

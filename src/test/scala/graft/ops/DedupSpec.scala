@@ -255,8 +255,8 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.GraftSqlBridge
     GraftSqlBridge.clearSqlCache(spark) // isolate from any earlier suite's cache state
     val documents = Tables.documents(spark, sfDir)
-    // one consuming action per operator family that persists internally:
-    // the shared awaitSqlCacheEmpty helper asserts nothing is left behind
+    // one consuming action per operator family that materializes
+    // internally: nothing may be left behind in the SQL cache
     val consumers: Seq[(String, () => Unit)] = Seq(
       "jaccardPairs" -> (() => Dedup.jaccardPairs(documents, 0.5).count()),
       "minhashPairs" -> (() => Dedup.minhashPairs(documents, 0.5).count()),
@@ -266,64 +266,9 @@ class DedupSpec extends SparkSpec {
         Dedup.minhashPairs(_, 0.5, sorted = false)).count()))
     consumers.foreach { case (name, run) =>
       run()
-      assert(awaitSqlCacheEmpty(),
+      assert(GraftSqlBridge.sqlCacheIsEmpty(spark),
         s"$name left a persisted intermediate in the SQL cache after consumption")
     }
-  }
-
-  test("never-consumed scoped-persist frame: bounded residual, self-healing on late consumption") {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.clearSqlCache(spark)
-    assert(awaitSqlCacheEmpty())
-    val before = GraftSqlBridge.queryListenerCount(spark)
-    // storage DELTA, not global emptiness: earlier tests may legitimately
-    // hold a resident localCheckpoint (a distributed clusterPairs result's
-    // backing store) until the ContextCleaner GCs it — only NEW storage
-    // would indict the unconsumed frame
-    val storedBefore = spark.sparkContext.getRDDStorageInfo
-      .filter(i => i.isCached && i.memSize > 0).map(_.id).toSet
-    val documents = Tables.documents(spark, sfDir)
-    val abandoned = Dedup.jaccardPairs(documents, 0.5)
-    // building (never consuming) leaves the documented bounded residual:
-    // one pending release listener per scoped persist (jaccardPairs holds
-    // TWO — the shingle arrays and the shared df-ranked prefix) plus their
-    // UNMATERIALIZED cache registrations — no storage blocks behind them
-    assert(GraftSqlBridge.queryListenerCount(spark) == before + 2,
-      "exactly one release listener per scoped persist should be pending")
-    assert(!GraftSqlBridge.sqlCacheIsEmpty(spark),
-      "the persist registration exists until consumed (documented residual)")
-    val newStorage = spark.sparkContext.getRDDStorageInfo
-      .filter(i => i.isCached && i.memSize > 0).map(_.id).toSet -- storedBefore
-    assert(newStorage.isEmpty,
-      s"an unconsumed frame must not hold storage (new cached RDDs: $newStorage)")
-    // late consumption heals it: the listener fires, releases, deregisters
-    abandoned.count()
-    assert(awaitSqlCacheEmpty(), "late consumption must release the cache")
-    val deadline = System.currentTimeMillis() + 30000
-    while (GraftSqlBridge.queryListenerCount(spark) != before &&
-      System.currentTimeMillis() < deadline) Thread.sleep(200)
-    assert(GraftSqlBridge.queryListenerCount(spark) == before,
-      "the release listener must deregister itself after firing")
-
-    // sibling assertion for minhashPairs, which also holds TWO scoped
-    // persists when abandoned (shingle arrays + band buckets) — a leaked
-    // third persist or a dropped barrier would shift this delta
-    val storedBefore2 = spark.sparkContext.getRDDStorageInfo
-      .filter(i => i.isCached && i.memSize > 0).map(_.id).toSet
-    val abandonedMh = Dedup.minhashPairs(documents, 0.5, sorted = false)
-    assert(GraftSqlBridge.queryListenerCount(spark) == before + 2,
-      "minhashPairs: exactly one release listener per scoped persist (2)")
-    val newStorage2 = spark.sparkContext.getRDDStorageInfo
-      .filter(i => i.isCached && i.memSize > 0).map(_.id).toSet -- storedBefore2
-    assert(newStorage2.isEmpty,
-      s"an unconsumed minhashPairs frame must not hold storage ($newStorage2)")
-    abandonedMh.count()
-    assert(awaitSqlCacheEmpty(), "late consumption must release the cache")
-    val deadline2 = System.currentTimeMillis() + 30000
-    while (GraftSqlBridge.queryListenerCount(spark) != before &&
-      System.currentTimeMillis() < deadline2) Thread.sleep(200)
-    assert(GraftSqlBridge.queryListenerCount(spark) == before,
-      "minhashPairs release listeners must deregister after firing")
   }
 
   test("incrementalDedup: intra-batch min-id keepers, cross-corpus drops, novel content survives") {
@@ -493,7 +438,8 @@ class DedupSpec extends SparkSpec {
     // (guarded: df=1 shingles remain, norms stay valid)
     val capped = Dedup.tfidfCosinePairs(df, dfCap = 2, n = 3)
     assert(capped.collect().length == 1, "cap 2 keeps df=2 shingles")
-    assert(awaitSqlCacheEmpty(), "the postings persist must release")
+    assert(org.apache.spark.sql.GraftSqlBridge.sqlCacheIsEmpty(spark),
+      "the postings table must leave no SQL cache entry")
     intercept[IllegalArgumentException](Dedup.tfidfCosinePairs(df, threshold = 0.0))
     intercept[IllegalArgumentException](Dedup.tfidfCosinePairs(df, dfCap = 1))
   }

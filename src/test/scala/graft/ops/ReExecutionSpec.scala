@@ -1,0 +1,67 @@
+package graft.ops
+
+import graft.SparkSpec
+import graft.core.Tables
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Operators that materialize a shared intermediate return a frame that
+  * owns it: the frame runs any number of actions with identical rows, and
+  * neither building it nor running it leaves a SQL cache entry behind.
+  */
+class ReExecutionSpec extends SparkSpec {
+
+  private def docs(s: SparkSession): DataFrame = Tables.documents(s, sfDir)
+  private def edges(s: SparkSession): DataFrame = Graph.basketEdges(Tables.lineitem(s, sfDir))
+  private def baskets(s: SparkSession): DataFrame = Affinity.basketItems(Tables.lineitem(s, sfDir))
+
+  private val operators: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "Dedup.jaccardPairs" -> (s => Dedup.jaccardPairs(docs(s), 0.5)),
+    "Dedup.jaccardPairs(hash order)" -> (s =>
+      Dedup.jaccardPairs(docs(s), 0.5, orderByDocFreq = false)),
+    "Dedup.minhashPairs" -> (s => Dedup.minhashPairs(docs(s), 0.5)),
+    "Dedup.decontaminateBloomReport" -> { s =>
+      val d = docs(s)
+      Dedup.decontaminateBloomReport(d, d.filter(pmod(col("doc_id"), lit(50)) === 0))
+    },
+    "Dedup.tfidfCosinePairs" -> (s => Dedup.tfidfCosinePairs(docs(s))),
+    "Text.keyTerms" -> (s => Text.keyTerms(docs(s))),
+    "Text.pmiCollocations" -> (s => Text.pmiCollocations(docs(s), minCount = 2)),
+    "Text.unigramSurprisal" -> (s => Text.unigramSurprisal(docs(s), 100)),
+    "Text.bigramSurprisal" -> (s => Text.bigramSurprisal(docs(s))),
+    "Text.duplicatePassageStats" -> (s => Text.duplicatePassageStats(docs(s))),
+    "Text.duplicateRuns" -> (s => Text.duplicateRuns(docs(s))),
+    "Text.budgetSelect" -> (s => Text.budgetSelect(docs(s), 5000)),
+    "Text.ngramNovelty" -> (s => Text.ngramNovelty(docs(s))),
+    "Events.concurrentSessions" -> (s => Events.concurrentSessions(Tables.events(s, sfDir))),
+    "Pipelines.curateWith" -> (s => Pipelines.curateWith(docs(s),
+      Dedup.jaccardPairs(_, 0.5, sorted = false))),
+    "Stats.madOutliers" -> (s =>
+      Stats.madOutliers(Tables.orders(s, sfDir), "o_totalprice", "o_orderpriority")),
+    "Graph.modularity" -> { s =>
+      val e = edges(s)
+      Graph.modularity(e, Graph.communities(e, rounds = 4, sorted = false))
+    },
+    "Graph.triangleStats" -> (s => Graph.triangleStats(edges(s))),
+    "Graph.triangleCorners" -> (s => Graph.triangleCorners(edges(s))),
+    "Graph.triangleProfile" -> (s => Graph.triangleProfile(edges(s))),
+    "Graph.edgeEmbeddedness" -> (s => Graph.edgeEmbeddedness(edges(s))),
+    "Graph.degreeAssortativity" -> (s => Graph.degreeAssortativity(edges(s))),
+    "Affinity.associationRules" -> (s => Affinity.associationRules(baskets(s), minPairs = 1)),
+    "Affinity.itemNeighbors" -> (s =>
+      Affinity.itemNeighbors(baskets(s), topK = 3, minPairs = 1, pruneItems = false)))
+
+  operators.foreach { case (name, build) =>
+    test(s"$name: one built frame runs count, then collect twice, with identical rows") {
+      GraftSqlBridge.clearSqlCache(spark)
+      val df = build(spark)
+      assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: building left a SQL cache entry")
+      val n = df.count()
+      val first = df.collect().map(_.toString).sorted.toSeq
+      val second = df.collect().map(_.toString).sorted.toSeq
+      assert(first == second, s"$name: the second collect returned different rows")
+      assert(n == first.length, s"$name: count $n but collect returned ${first.length} rows")
+      assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: the actions left a SQL cache entry")
+    }
+  }
+}

@@ -157,33 +157,6 @@ class SearchSpec extends SparkSpec {
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
 
-  test("hybridRrfLazy: row-identical to the eager form") {
-    val d = Tables.documents(spark, sfDir)
-    val terms = Seq("join", "vector")
-    val eager = Search.hybridRrf(d, terms, k = 10, poolK = 20).collect().map(_.toSeq).toSeq
-    val lzy = Search.hybridRrfLazy(d, terms, k = 10, poolK = 20).collect().map(_.toSeq).toSeq
-    assert(eager == lzy)
-    assert(eager.nonEmpty)
-  }
-
-  test("hybridRrfLazy: building the frame runs no Spark job (everything-is-lazy contract)") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    val d = Tables.documents(spark, sfDir)
-    d.schema
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val df = Search.hybridRrfLazy(d, Seq("join", "vector"), k = 10, poolK = 20)
-      Thread.sleep(1000) // listener bus is async; give submissions time to surface
-      assert(counter.get() == 0,
-        s"hybridRrfLazy construction submitted ${counter.get()} job(s)")
-      assert(df.columns.toSeq == Seq("doc_id", "rrf", "rank_lex", "rank_q"))
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("ndcgReport: perfect ranking scores 1.0; no-match query scores 0 with n_rel 0") {
     import spark.implicits._
     // equal doc lengths, so the 2-term doc outranks the 1-term docs and

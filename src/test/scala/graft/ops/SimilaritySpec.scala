@@ -381,6 +381,12 @@ class SimilaritySpec extends SparkSpec {
       intercept[Similarity.QuadraticAnchorException] {
         Similarity.semanticDedupKeepList(e, 0.4).count()
       }
+      // hnswGraph's fused exact layers are the same block join: an exactCap
+      // above the row cap must not let a layer past the cap onto it
+      val exHnsw = intercept[Similarity.QuadraticAnchorException] {
+        Similarity.hnswGraph(e, 8)
+      }
+      assert(exHnsw.getMessage.contains("exactCap"))
       // raising the cap back re-enables the oracle run
       spark.conf.set(capKey, Similarity.QuadraticAnchorDefaultMaxRows.toString)
       assert(Similarity.knnGraph(e, k = 1).count() > 0)
@@ -539,14 +545,15 @@ class SimilaritySpec extends SparkSpec {
     // reference: the pre-r18 per-layer loop (exact path only — the fixture
     // corpus sits under exactCap at every layer, as the build's own path
     // decision requires for this comparison to cover the fused code)
-    val mL = 1.0 / math.log(m.toDouble)
     val lvl = e.select(col("vec_id"), col("embedding"))
-      .withColumn("level", Similarity.hnswLevelForTest(mL, 6))
+      .withColumn("level", Similarity.hnswLevelForTest(Similarity.hnswMl(m),
+        Similarity.HnswDefaultMaxLevel))
     val lMax = lvl.agg(max("level")).head().getInt(0)
     val reference = (0 to lMax).map { l =>
       val members = lvl.filter(col("level") >= l).select("vec_id", "embedding")
       val mmax = if (l == 0) 2 * m else m
-      assert(members.count() <= 4096L, "fixture layer must take the exact path")
+      assert(members.count() <= Similarity.HnswDefaultExactCap,
+        "fixture layer must take the exact path")
       val knn = Similarity.knnGraph(members, mmax)
       val undirected = knn.select(col("vec_id"), col("neighbor_id"), col("sim"))
         .unionByName(knn.select(col("neighbor_id").as("vec_id"),
