@@ -22,9 +22,6 @@ import graft.functions.VectorExpressions.{DotProduct, L2Norm, SortedIntersectSiz
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // preference path (c): whole-plan rewrite — θ range joins become binned
-    // equi joins when spark.graft.binnedRangeJoin.width is set
-    ext.injectOptimizerRule(_ => new graft.plans.BinnedRangeJoinRule)
     // preference path (c): declarative window top-k (row_number + filter)
     // plans through the bounded-heap TopKPerGroupExec
     ext.injectOptimizerRule(_ => new graft.plans.RowNumberTopKRule)

@@ -756,10 +756,7 @@ object Dedup {
     // lowercase INSIDE the flatMap with Locale.ROOT, not default-locale
     // String.toLowerCase: under a Turkish default JVM locale 'I' would
     // lower to dotless 'ı' (non-token) instead of 'i' (token), making the
-    // batch verdicts locale-dependent. The streaming contaminatedProbe
-    // lowers with Spark's lower(), which can differ only on non-ASCII case
-    // pairs — never producible as tokens by the ASCII-only regex — so the
-    // batch/stream verdict parity stays locale-independent either way.
+    // batch verdicts locale-dependent.
     df.select(col("doc_id"), col("text").as("t")).as[(Long, String)]
       .flatMap { case (id, raw) =>
         val text = if (raw == null) null else raw.toLowerCase(java.util.Locale.ROOT)
@@ -774,51 +771,6 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "shingle")
-  }
-
-  /** The benchmark's shingle Bloom filter, built once and SERIALIZED —
-    * the MAP-SIDE form of [[decontaminateBloom]]'s test, usable where a
-    * join cannot go (a streaming micro-batch filter). The bytes feed
-    * Spark's `might_contain` expression as a constant binary via
-    * [[contaminatedProbe]], so the probing stays IN-PLAN — no ScalaUDF
-    * node, no closure state (round 16; the previous form wrapped the
-    * broadcast filter in a udf, the last UDF in main code). Verdict
-    * parity with [[decontaminateBloom]] is exact by construction: same
-    * `hashedShingles`-built filter (`might_contain` deserializes the
-    * identical bit pattern `stat.bloomFilter` produced, and both probe
-    * paths run BloomFilterImpl.mightContainLong), so false positives —
-    * not just the no-false-negative guarantee — agree bit-for-bit.
-    */
-  private[graft] def contaminationFilterBytes(benchmark: DataFrame, n: Int = 3,
-                                              expectedShingles: Long = 1000000L,
-                                              fpp: Double = 0.001): Array[Byte] = {
-    val bf = hashedShingles(benchmark, n).stat.bloomFilter("shingle", expectedShingles, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** In-plan contamination predicate: does the token array share any
-    * word-n-gram with the serialized benchmark Bloom filter? Tokenization
-    * must match [[hashedShingles]] — pass
-    * `regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+', 0)` as a
-    * PRE-MATERIALIZED column (interpreted HOF lambdas have no CSE: an
-    * inline expression re-evaluates per array element — the
-    * [[graft.ops.Text.fingerprints]] lesson). `lower()` diverges from the
-    * batch flatMap's Locale.ROOT lowering only on non-ASCII case pairs,
-    * which the ASCII-only token regex can never turn into a token, so the
-    * gram streams are identical. The gram hash is [[Text.gramHash48]] —
-    * bit-identical to the batch side's `gramHash48Local`.
-    */
-  private[graft] def contaminatedProbe(toks: Column, bfBytes: Array[Byte],
-                                       n: Int = 3): Column = {
-    val grams = filter(
-      transform(toks, (_, i) => when(i <= size(toks) - n,
-        Text.gramHash48(concat_ws(" ",
-          (0 until n).map(j => element_at(toks, i + j + 1)): _*)))),
-      c => c.isNotNull)
-    exists(grams, g =>
-      org.apache.spark.sql.GraftSqlBridge.mightContain(lit(bfBytes), g))
   }
 
   /** Cross-document LINE dedup (the C4-style cleanup, finer-grained than

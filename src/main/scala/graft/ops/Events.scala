@@ -7,9 +7,7 @@ import Helpers._
 
 /** Event/time-series surface (SURVEY.md §2 group I): tumbling / sliding /
   * session windows and sessionization, written with the batch `window()` /
-  * `session_window()` API — the *same* expressions run under Structured
-  * Streaming (see graft.streaming.EventStreams); batch is the
-  * oracle-checkable form.
+  * `session_window()` API.
   *
   * Window starts are emitted as epoch seconds (`unix_timestamp`) rather than
   * timestamps so the oracle compare is immune to parquet timestamp-unit
@@ -414,7 +412,7 @@ object Events {
 
   /** Binned interval-overlap join: every (left, right) pair whose
     * [start_s, end_s] second-ranges overlap (touching counts, overlap 0) —
-    * the interval analog of [[graft.plans.BinnedRangeJoinRule]]'s
+    * the interval analog of [[Relational.binnedRangeJoin]]'s
     * point-in-range binning, and the standard distributed interval-join
     * shape: explode each interval onto the `binSec`-wide time bins it
     * covers, equi-join on the bin, verify the exact overlap predicate

@@ -308,8 +308,11 @@ object Graph {
     */
   def tradeRankOracleSql(iters: Int = 10, damping: Double = 0.85): String = {
     val d = damping.toString
+    // each round reads r{i-1} twice (dangling mass + contributions), so
+    // every round MUST be MATERIALIZED: DuckDB inlines plain CTEs per
+    // reference and the chain would otherwise expand 2^iters-fold
     val iterCtes = (1 to iters).map { i =>
-      s"""r$i AS (SELECT node,
+      s"""r$i AS MATERIALIZED (SELECT node,
          |  (CAST(1.0 AS DOUBLE) - $d) / n + $d * (COALESCE(c, CAST(0.0 AS DOUBLE)) + dm / n) AS rank
          |  FROM nodes CROSS JOIN nn
          |  CROSS JOIN (SELECT COALESCE(CAST(SUM(CAST(r.rank AS DECIMAL(28,18))) AS DOUBLE),
@@ -350,8 +353,9 @@ object Graph {
     val d = damping.toString
     val sExpr = "CASE WHEN node IN (SELECT node FROM seeds) " +
       "THEN CAST(1.0 AS DOUBLE) / nseeds ELSE CAST(0.0 AS DOUBLE) END"
+    // r{i-1} is read twice per round: MATERIALIZED, as in tradeRankOracleSql
     val iterCtes = (1 to iters).map { i =>
-      s"""r$i AS (SELECT sn.node,
+      s"""r$i AS MATERIALIZED (SELECT sn.node,
          |  (CAST(1.0 AS DOUBLE) - $d) * s + $d * (COALESCE(c, CAST(0.0 AS DOUBLE)) + dm * s) AS rank
          |  FROM (SELECT node, $sExpr AS s FROM nodes CROSS JOIN ns) sn
          |  CROSS JOIN (SELECT COALESCE(CAST(SUM(CAST(r.rank AS DECIMAL(28,18))) AS DOUBLE),

@@ -1751,18 +1751,8 @@ object Text {
     * thresholded at 0.5 on the ROUNDED score so both engines threshold
     * the identical value.
     */
-  /** The softsign squashing shared by the batch classifier and the
-    * streaming scorer — one definition so the two can never diverge. */
-  private[graft] def softsign(z: Column): Column =
-    lit(0.5) + lit(0.5) * z / (lit(1.0) + abs(z))
-
-  /** The classifier's feature/label frame and its trained 1-row weight
-    * frame (b, w1, w2, w3) — the training loop behind
-    * [[qualityClassifier]] (lazy plan) and
-    * [[qualityClassifierWeights]] (collected artifact).
-    */
-  private def trainQualityClassifier(documents: DataFrame, iters: Int,
-                                     lr: Double): (DataFrame, DataFrame) = {
+  def qualityClassifier(documents: DataFrame, iters: Int = 4,
+                        lr: Double = 0.5): DataFrame = {
     require(iters >= 1 && lr > 0, s"need iters >= 1 and lr > 0, got $iters/$lr")
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(28, 18)
@@ -1775,7 +1765,8 @@ object Text {
       .localCheckpoint()
     val z = col("b") + col("w1") * col("x1") +
       col("w2") * col("x2") + col("w3") * col("x3")
-    val err = softsign(z) - col("y")
+    val sigma = lit(0.5) + lit(0.5) * z / (lit(1.0) + abs(z))
+    val err = sigma - col("y")
     var w: DataFrame = documents.sparkSession.range(1)
       .select(lit(0.0).as("b"), lit(0.0).as("w1"),
         lit(0.0).as("w2"), lit(0.0).as("w3"))
@@ -1796,33 +1787,11 @@ object Text {
         (col("p2") - lit(lr) * col("g2") / col("n")).as("w2"),
         (col("p3") - lit(lr) * col("g3") / col("n")).as("w3"))
     }
-    (feat, w)
-  }
-
-  def qualityClassifier(documents: DataFrame, iters: Int = 4,
-                        lr: Double = 0.5): DataFrame = {
-    val (feat, w) = trainQualityClassifier(documents, iters, lr)
-    val z = col("b") + col("w1") * col("x1") +
-      col("w2") * col("x2") + col("w3") * col("x3")
     feat.crossJoin(broadcast(w))
       .select(col("doc_id"), col("y").cast("long").as("label"),
-        round(softsign(z), 6).as("score"))
+        round(sigma, 6).as("score"))
       .withColumn("pred", col("score") >= 0.5)
       .orderBy("doc_id")
-  }
-
-  /** The trained weight vector (b, w1, w2, w3) as a driver-side artifact
-    * — the train-batch half of the train-batch / score-stream deployment
-    * split ([[graft.streaming.DocumentStreams.scoreStream]] applies it to
-    * a live stream as literals). One 4-double collect: the bounded driver
-    * materialization discipline (this IS the model artifact a deployment
-    * persists).
-    */
-  def qualityClassifierWeights(documents: DataFrame, iters: Int = 4,
-                               lr: Double = 0.5): Array[Double] = {
-    val (_, w) = trainQualityClassifier(documents, iters, lr)
-    val r = w.head()
-    Array(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
   }
 
   /** Generated DuckDB oracle for [[qualityClassifier]]: the `iters`

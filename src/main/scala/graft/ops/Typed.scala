@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Typed (Dataset) co-processing surface — the `KeyValueGroupedDataset`
-  * APIs beyond the single-input aggregator ([[graft.functions.VecMeanAggregator]])
-  * and the streaming state functions ([[graft.streaming.EventStreams]]):
+  * APIs beyond the single-input aggregator ([[graft.functions.VecMeanAggregator]]):
   * `cogroup` merges TWO keyed inputs in one shuffle round with arbitrary
   * per-key logic — the escape hatch for merge semantics a join cannot
   * express (per-key interleaving, asymmetric retention, stateful zips).

@@ -15,13 +15,18 @@ import org.apache.spark.sql.types.LongType
   * preference path (c): a custom `LogicalPlan` + `SparkStrategy` +
   * `SparkPlan`, the whole-operator extension point.
   *
-  * Why Spark's built-ins aren't enough here: the declarative formulation
-  * (`row_number().over(Window.partitionBy(g).orderBy(o)) <= k`) plans as
-  * Exchange → **full Sort of every group** → WindowExec → Filter. All n
-  * rows per group are shuffled and sorted to keep k. The same asymmetry
-  * TakeOrderedAndProject exploits for global LIMIT (heap instead of sort)
-  * applies per group, but Catalyst has no per-group variant — so this node
-  * supplies one:
+  * Why Spark's built-in is not enough here: on Spark 4.1.2 the declarative
+  * formulation (`row_number().over(Window.partitionBy(g).orderBy(o)) <= k`)
+  * plans as Sort → `WindowGroupLimit` (partial) → Exchange → Sort →
+  * `WindowGroupLimit` (final) → WindowExec → Filter. The partial limit
+  * prunes to k per group BEFORE the exchange, but only after sorting every
+  * input row of the partition. The same asymmetry TakeOrderedAndProject
+  * exploits for global LIMIT (heap instead of sort) applies per group, so
+  * this node keeps a bounded heap and never sorts more than k·splits rows
+  * per group. Measured against `WindowGroupLimit` at sf0.1 (pyspark 4.1.2,
+  * `local[4]`, 4 shuffle partitions, median of 5 warm `collect()`s):
+  * the `q_topk_group_auto` shape 1023 → 746 ms, the `q_topk_group` shape
+  * 3267 → 3012 ms, top-5 in 20 large groups 1492 → 419 ms. The node:
   *
   *  - partial pass (map side): one bounded max-heap of size k per group per
   *    partition — O(rows · log k) time, O(groups_in_partition · k) memory,

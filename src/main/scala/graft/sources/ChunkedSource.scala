@@ -54,8 +54,7 @@ class ChunkedSource extends TableProvider {
                         properties: JMap[String, String]): Table =
     new ChunkedTable(
       properties.getOrDefault("numRows", "1000").toLong,
-      properties.getOrDefault("numChunks", "4").toInt,
-      properties.getOrDefault("chunksPerTrigger", "1").toInt)
+      properties.getOrDefault("numChunks", "4").toInt)
 }
 
 object ChunkedSource {
@@ -127,16 +126,15 @@ object ChunkedSource {
   }
 }
 
-private class ChunkedTable(numRows: Long, numChunks: Int, chunksPerTrigger: Int = 1)
+private class ChunkedTable(numRows: Long, numChunks: Int)
   extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"graft_chunked($numRows rows, $numChunks chunks)"
   override def schema(): StructType = ChunkedSource.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ChunkedScanBuilder(numRows, numChunks, chunksPerTrigger)
+    new ChunkedScanBuilder(numRows, numChunks)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new ChunkedWriteBuilder(info)
 }
@@ -146,7 +144,7 @@ private object AggSpec extends Enumeration {
   val CountRows, MinId, MaxId, MinChunk, MaxChunk = Value
 }
 
-private class ChunkedScanBuilder(numRows: Long, numChunks: Int, chunksPerTrigger: Int = 1)
+private class ChunkedScanBuilder(numRows: Long, numChunks: Int)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
@@ -229,7 +227,7 @@ private class ChunkedScanBuilder(numRows: Long, numChunks: Int, chunksPerTrigger
 
   override def build(): Scan =
     if (aggPushed) new ChunkedAggScan(numRows, numChunks, pushed, aggSpecs, aggByChunk)
-    else new ChunkedScan(numRows, numChunks, pushed, required, limit, chunksPerTrigger)
+    else new ChunkedScan(numRows, numChunks, pushed, required, limit)
 }
 
 /** Observability hook for the runtime-filtering specs: the scan instance
@@ -246,14 +244,11 @@ private[sources] object ChunkedRuntimeFilterProbe {
 
 private class ChunkedScan(numRows: Long, numChunks: Int,
                           filters: Array[Filter], required: StructType,
-                          limit: Int = Int.MaxValue, chunksPerTrigger: Int = 1)
+                          limit: Int = Int.MaxValue)
   extends Scan with Batch with SupportsRuntimeV2Filtering {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ChunkedMicroBatchStream(numRows, numChunks, chunksPerTrigger, filters, required, limit)
   override def description(): String =
     s"graft_chunked pushed=[${filters.mkString(",")}] columns=[${required.fieldNames.mkString(",")}]" +
       (if (limit != Int.MaxValue) s" limit=$limit" else "")
@@ -340,72 +335,6 @@ private class ChunkedScan(numRows: Long, numChunks: Int,
 }
 
 private case class ChunkPartition(chunk: Int, startId: Long, endId: Long) extends InputPartition
-
-/** Streaming (micro-batch) read path — the reference's consumption loop
-  * made a Structured Streaming source. bqfetch's main pattern IS
-  * micro-batching: `fetcher.chunks()` yields chunk descriptors and the
-  * caller fetches them one per iteration (bqfetch/bqfetch.py:232-265 +
-  * the per-chunk fetch at 267-310); this stream exposes exactly that —
-  * ONE OFFSET UNIT = ONE CHUNK, `chunksPerTrigger` chunks admitted per
-  * micro-batch — so a Spark pipeline can consume a chunked extract
-  * incrementally with checkpointed exactly-once progress instead of the
-  * reference's restart-from-scratch driver loop.
-  *
-  * `SupportsAdmissionControl.latestOffset(start, limit)` derives each
-  * batch's end from the CHECKPOINTED start (never from instance state), so
-  * a restarted query resumes at the committed chunk with a fresh instance
-  * — the offset log, not the JVM, is the source of truth. The stream is
-  * built through the same ScanBuilder as the batch path and reuses the
-  * batch readers verbatim (same ChunkPartition ranges): a chunk is a
-  * chunk, whichever engine mode consumes it. (Note: Spark's optimizer
-  * applies operator pushdown to BATCH DSv2 relations; streaming plans
-  * evaluate residual filters above the scan — correctness is identical,
-  * and the per-chunk admission bound is what limits a micro-batch's
-  * work.)
-  */
-private class ChunkedMicroBatchStream(numRows: Long, numChunks: Int, perTrigger: Int,
-                                      filters: Array[Filter], required: StructType,
-                                      limit: Int)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => StreamOffset, ReadLimit}
-  require(perTrigger > 0, s"chunksPerTrigger must be > 0, got $perTrigger")
-
-  private def off(n: Int) = ChunkStreamOffset(n)
-
-  override def initialOffset(): StreamOffset = off(0)
-  override def deserializeOffset(json: String): StreamOffset = off(json.trim.toInt)
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  // end = min(start + perTrigger, numChunks): admission control by chunk
-  // count, computed from the checkpointed start offset (restart-safe)
-  override def latestOffset(start: StreamOffset, limit: ReadLimit): StreamOffset =
-    off(math.min(start.asInstanceOf[ChunkStreamOffset].n + perTrigger, numChunks))
-  override def latestOffset(): StreamOffset =
-    throw new UnsupportedOperationException(
-      "admission-control variant latestOffset(start, limit) is the entry point")
-  override def reportLatestOffset(): StreamOffset = off(numChunks)
-
-  override def planInputPartitions(start: StreamOffset, end: StreamOffset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ChunkStreamOffset].n
-    val e = end.asInstanceOf[ChunkStreamOffset].n
-    val per = math.max(1L, math.ceil(numRows.toDouble / numChunks).toLong)
-    (s until e).map { c =>
-      ChunkPartition(c, c * per, math.min(numRows, (c + 1) * per))
-    }.toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChunkedReaderFactory(filters, required, limit)
-
-  override def commit(end: StreamOffset): Unit = () // progress lives in the offset log
-  override def stop(): Unit = ()
-}
-
-private case class ChunkStreamOffset(n: Int)
-  extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = n.toString
-}
 
 private class ChunkedReaderFactory(filters: Array[Filter], required: StructType,
                                    limit: Int = Int.MaxValue)

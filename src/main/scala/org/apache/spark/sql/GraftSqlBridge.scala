@@ -13,17 +13,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** `might_contain(bloom, value)` as a Column — the Bloom-probe
-    * expression Spark uses for its own runtime row-level filters
-    * (`BloomFilterMightContain`, codegen'd, deserializes the constant
-    * filter once per plan). It is not in the public FunctionRegistry, so
-    * in-plan Bloom probing (graft.ops.Dedup.contaminatedProbe) routes
-    * through this bridge instead of a ScalaUDF.
-    */
-  def mightContain(bloom: Column, value: Column): Column =
-    column(catalyst.expressions.BloomFilterMightContain(
-      expression(bloom), expression(value)))
-
   /** Wrap a Catalyst logical plan back into a public DataFrame — the hook a
     * custom whole-operator node (graft.plans.TopKPerGroupPlan) needs to
     * enter a query from the DataFrame API. Delegates to

@@ -658,130 +658,6 @@ object PerfProbe {
       spark.stop(); return
     }
 
-    // chunk-stream soak: `Test/runMain graft.PerfProbe chunkstream` — the
-    // sustained-rate posture for the DSv2 micro-batch read path (r10's
-    // ChunkedMicroBatchStream had specs but no rate datapoint next to the
-    // r9 streaming table). Drains a fixed chunked extract end-to-end at
-    // two admission settings — 1 chunk/trigger (the reference's
-    // one-chunk-per-iteration consumption loop, bqfetch.py:232-265) and 8
-    // (batched admission) — through a filter+projection to a noop sink,
-    // recording drain wall clock, sustained rows/s, and per-trigger
-    // latency (mean + p95 from the progress events). 96 chunks keeps every
-    // trigger inside the default 100-entry recentProgress window.
-    if (args.headOption.contains("chunkstream")) {
-      import org.apache.spark.sql.functions._
-      val numRows = sys.env.getOrElse("SPARK_GRAFT_CS_ROWS", "48000000").toLong
-      val numChunks = 96
-      Seq(1, 8).foreach { per =>
-        val ckpt = java.nio.file.Files.createTempDirectory(s"probe-chunkstream-$per-").toString
-        val df = spark.readStream.format("graft.sources.ChunkedSource")
-          .option("numRows", numRows.toString).option("numChunks", numChunks.toString)
-          .option("chunksPerTrigger", per.toString).load()
-          .filter(pmod(col("id"), lit(7L)) =!= 0)
-          .select(col("id"), col("chunk"))
-        val t0 = System.nanoTime()
-        val q = df.writeStream.format("noop").option("checkpointLocation", ckpt).start()
-        q.processAllAvailable()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val ps = q.recentProgress.toSeq
-        q.stop()
-        val trig = ps.filter(_.numInputRows > 0)
-        val rows = trig.map(_.numInputRows).sum
-        val durs = trig.map(p =>
-          Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)).sorted
-        val p95 = if (durs.nonEmpty) durs((durs.size * 95) / 100 min (durs.size - 1)) else 0L
-        println(f"PROBE chunkstream perTrigger=$per%-2d rows=$rows wall=$wall%.1fs " +
-          f"rows/s=${rows / wall}%.0f triggers=${trig.size} " +
-          f"meanTrig=${if (durs.nonEmpty) durs.sum / durs.size else 0}%dms p95Trig=${p95}%dms")
-        def rmRf(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rmRf)
-          f.delete(): Unit
-        }
-        rmRf(new java.io.File(ckpt))
-      }
-      spark.stop(); return
-    }
-
-    // streaming-throughput mode: `Test/runMain graft.PerfProbe streaming` —
-    // the first perf posture for the streaming surface (VERDICT r8 #5):
-    // every registered streaming transform driven by a `rate` source at a
-    // fixed offered load for ~15 s, recording processed rows/s (the
-    // sustained throughput if it keeps up with the offered rate — a
-    // THROUGHPUT CEILING otherwise), per-trigger batch duration, and the
-    // state store's row count + memory from the last progress (the
-    // bounded-state story made measurable). Event rows are synthetic from
-    // the rate stream (key cardinalities matching the fixture's shape);
-    // document rows carry a ~40-token synthetic text so the regex
-    // tokenization cost is real.
-    if (args.headOption.contains("streaming")) {
-      import graft.streaming.{DocumentStreams, EventStreams}
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      def rate(rps: Int): DataFrame =
-        spark.readStream.format("rate").option("rowsPerSecond", rps)
-          .option("rampUpTime", "0s").load()
-      def events(rps: Int): DataFrame = rate(rps).select(
-        col("value").as("event_id"), col("timestamp").as("ts"),
-        pmod(col("value"), lit(5000L)).as("user_id"),
-        element_at(array(lit("view"), lit("click"), lit("purchase")),
-          (pmod(col("value"), lit(3L)) + 1).cast("int")).as("event_type"),
-        pmod(col("value"), lit(100L)).cast("double").as("value"))
-      def docs(rps: Int): DataFrame = rate(rps).select(
-        col("value").as("doc_id"), col("timestamp").as("ingest_ts"),
-        expr("concat_ws(' ', transform(sequence(1, 40), " +
-          "i -> concat('tok', (value * i) % 997)))").as("text"),
-        concat(lit("src"), pmod(col("value"), lit(4L))).as("source"))
-      import spark.implicits._
-      val probes: Seq[(String, Int, () => DataFrame)] = Seq(
-        ("events.tumbling", 500000, () => EventStreams.tumbling(events(500000))),
-        ("events.sessions", 200000, () => EventStreams.sessions(events(200000))),
-        ("events.dedupWithinWm", 200000, () => EventStreams.dedupWithinWatermark(events(200000), "1 hour")),
-        ("events.streamJoin", 200000, () => EventStreams.purchasesWithRecentViews(events(200000))),
-        ("events.runningTotals", 200000, () =>
-          EventStreams.runningUserTotals(events(200000).as[EventStreams.EventRow]).toDF()),
-        ("events.spendAlerts", 200000, () =>
-          EventStreams.spendAlerts(events(200000).as[EventStreams.EventRow], 1e7).toDF()),
-        ("docs.curateStream", 50000, () => DocumentStreams.curateStream(docs(50000), "10 minutes")),
-        ("docs.sourceStats", 50000, () => DocumentStreams.sourceStatsStream(docs(50000))),
-        ("docs.heavyHitters", 20000, () =>
-          DocumentStreams.tokenHeavyHittersStream(docs(20000)).toDF()))
-      probes.foreach { case (name, rps, mk) =>
-        val ckpt = java.nio.file.Files.createTempDirectory(s"probe-$name-").toString
-        val q = mk().writeStream.format("noop")
-          .option("checkpointLocation", ckpt)
-          .outputMode(if (name.contains("running") || name.contains("Alerts") ||
-            name.contains("heavyHitters")) "update" else "append")
-          .start()
-        Thread.sleep(15000)
-        val ps = q.recentProgress.toSeq
-        q.stop()
-        // skip the first trigger (cold start); aggregate the rest
-        val warm = ps.drop(1).filter(_.numInputRows > 0)
-        if (warm.isEmpty) println(f"PROBE streaming $name%-22s NO WARM PROGRESS (${ps.size} triggers)")
-        else {
-          val rows = warm.map(_.numInputRows).sum
-          val procSec = warm.map(p =>
-            Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)).sum / 1e3
-          val proc = warm.map(_.processedRowsPerSecond).max
-          val last = warm.last
-          val st = Option(last.stateOperators).filter(_.nonEmpty)
-          val stateRows = st.map(_.map(_.numRowsTotal).sum).getOrElse(0L)
-          val stateMem = st.map(_.map(_.memoryUsedBytes).sum).getOrElse(0L)
-          println(f"PROBE streaming $name%-22s offered=$rps%d/s peakProc=${proc}%.0f/s " +
-            f"rows=$rows triggers=${warm.size} busy=${procSec}%.1fs " +
-            f"stateRows=$stateRows stateMB=${stateMem / 1e6}%.1f")
-        }
-        def rmRf(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rmRf)
-          f.delete(): Unit
-        }
-        rmRf(new java.io.File(ckpt))
-      }
-      spark.stop(); return
-    }
-
     // lsh-attribution mode: `Test/runMain graft.PerfProbe lshattrib` —
     // where the wall clock of the registered q_cosine_pairs_lsh goes at
     // the current SF, stage by stage: the aug+norm projection, the
