@@ -218,17 +218,6 @@ object Bench {
       c
     }
 
-    // Honest-warm mode (round 15, from the r14 verdict's memo caveat):
-    // SPARK_GRAFT_NO_MEMO=1 clears the ProbeCache before EVERY timed run,
-    // so no query's reps ever read an artifact built by an earlier query
-    // or pass — every row pays its own builds, and the capture measures
-    // the engine with the certify-once memo policy switched off. Reuse
-    // WITHIN one execution (an artifact built and read inside the same
-    // timed run) is untouched — that cost is inside the timing. The flag
-    // rides the artifact as "no_memo" so the two capture kinds can never
-    // be confused; PERF.md records both numbers per round.
-    val noMemo = sys.env.get("SPARK_GRAFT_NO_MEMO")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     // local-iteration filter (same contract as Verify): comma-separated
     // query names; unset = all. Official driver captures never set it.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
@@ -238,22 +227,10 @@ object Bench {
         .sortBy(_._1)
     // Per-query samples accumulate ACROSS passes; a query that errors is
     // recorded once and skipped in later passes (a deterministic failure
-    // re-thrown n times is noise, not information). The memoized flag
-    // brackets each timed run with the ProbeCache hit counter: a row whose
-    // pass-2+ runs were served memoized probe artifacts (fidelity
-    // dashboards, graph memos) reports the refresh cost as its min —
-    // correct per the dashboard contract, and machine-readable so a large
-    // max/median suspect ratio on such a row is self-explained.
+    // re-thrown n times is noise, not information).
     val samples = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
     val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val memoFlag = scala.collection.mutable.Set.empty[String]
-    // rows whose EVERY cache hit so far was a shared input table (shingle
-    // tables) — their timing is the full computation minus only the
-    // tokenize/shingle scan; a result-artifact hit removes a row from
-    // this set permanently
-    val inputOnlyFlag = scala.collection.mutable.Set.empty[String]
-    val resultHitFlag = scala.collection.mutable.Set.empty[String]
     // per-pass lineage: (calib_open, calib_close, load_open, load_close,
     // pass wall seconds, hot)
     final case class PassInfo(calib: Double, calibEnd: Double,
@@ -276,20 +253,7 @@ object Bench {
       plan.foreach { case (name, fn) =>
         if (!errs.contains(name)) {
           try {
-            // honest-warm mode: forget every cross-query artifact before
-            // the clock starts (safe here — no in-flight plans between
-            // queries reference cached frames)
-            if (noMemo) ops.ProbeCache.clear()
-            val hits0 = ops.ProbeCache.hits
-            val inputHits0 = ops.ProbeCache.inputHits
             val t = timeOnce(() => fn(spark, sfDir).count())
-            val dHits = ops.ProbeCache.hits - hits0
-            val dInput = ops.ProbeCache.inputHits - inputHits0
-            if (dHits > 0) {
-              memoFlag += name
-              if (dHits == dInput && !resultHitFlag(name)) inputOnlyFlag += name
-              else { resultHitFlag += name; inputOnlyFlag -= name }
-            }
             samples.getOrElseUpdate(name,
               scala.collection.mutable.ArrayBuffer.empty[Double]) += t
           } catch { case e: Throwable =>
@@ -312,14 +276,12 @@ object Bench {
       extra += 1
       runPass()
     }
-    val results: Seq[(String, Either[String, (Seq[Double], Boolean)])] =
+    val results: Seq[(String, Either[String, Seq[Double]])] =
       plan.map { case (name, _) =>
-        if (samples.get(name).exists(_.nonEmpty))
-          name -> Right((samples(name).toSeq, memoFlag.contains(name)))
+        if (samples.get(name).exists(_.nonEmpty)) name -> Right(samples(name).toSeq)
         else name -> Left(errs.getOrElse(name, "no sample recorded"))
       }
-    val ok = results.collect { case (k, Right((ts, _))) => k -> ((ts.head, ts.min, ts)) }
-    val memoized = results.collect { case (k, Right((_, true))) => k }
+    val ok = results.collect { case (k, Right(ts)) => k -> ((ts.head, ts.min, ts)) }
     // a query with at least one timed sample reports as timed — a pass-2+
     // failure on a query that succeeded earlier would be both a timing and
     // an error, so errors are exactly the Left rows
@@ -334,8 +296,8 @@ object Bench {
     // archaeology. The reported min is unaffected; the flag only says
     // "this row's reps disagreed enough that the min may not be typical".
     // Under interleaved passes the FIRST sample is excluded from the
-    // ratio: pass 1 is every query's true first run (JIT, codegen, memo
-    // builds), systematically slow, and separately visible in
+    // ratio: pass 1 is every query's true first run (JIT, codegen),
+    // systematically slow, and separately visible in
     // "first_runs" — flagging it as a stall would mark the whole registry
     // suspect on every capture.
     val suspectRatio = sys.env.getOrElse("SPARK_GRAFT_SUSPECT_RATIO", "3.0").toDouble
@@ -386,18 +348,13 @@ object Bench {
         s""""sec":${r3(p.sec)},"hot":${p.hot},"gc_sec":${r3(p.gcSec)}}"""
     }.mkString("[", ",", "]")
     val header = s""""n_queries":${results.size},"n_registry":${SparkEntry.queries.size},""" +
-      s""""no_memo":$noMemo,""" +
       s""""n_errors":${errsSeq.size},"reps":$reps,"cpus":$cpus,""" +
       s""""calib_sec":$calib,"calib_end_sec":$calibEnd,"calib_loaded":$calibLoadedAny,""" +
       s""""calib_hot":$calibLoadedAny,"calib_retries":$calibRetries,"calib_max":$calibMax,""" +
       s""""interleaved":true,"n_passes":${passes.size},"n_clean_passes":$nCleanPasses,""" +
       s""""n_extra_passes":$extra,"passes":$passesJson,""" +
       s""""n_warmup_errors":${warmupErrs.size},"warmup_errors":$warmupJson,""" +
-      s""""n_suspect":${suspects.size},"suspect":$suspectsJson,""" +
-      s""""n_memoized":${memoized.size},"memoized":${
-        memoized.sorted.map(k => s""""$k":true""").mkString("{", ",", "}")},""" +
-      s""""n_memoized_input_only":${inputOnlyFlag.size},"memoized_input_only":${
-        inputOnlyFlag.toSeq.sorted.map(k => s""""$k":true""").mkString("{", ",", "}")}$filterDesc"""
+      s""""n_suspect":${suspects.size},"suspect":$suspectsJson$filterDesc"""
     val shortLine = s"""{"metric":"total","value":$total,"unit":"sec","sf":${jstr(sfDir)},""" +
       s"""$header,"total_first_run":$totalFirst}"""
     val qs = ok.map { case (k, (_, mn, _)) => s""""$k":$mn""" }.mkString("{", ",", "}")
@@ -405,22 +362,19 @@ object Bench {
     val es = errsSeq.map { case (k, m) => s""""$k":${jstr(m)}""" }.mkString("{", ",", "}")
     val longLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""first_runs":$firsts,"errors":$es,"sf":${jstr(sfDir)},$header}"""
-    // Teardown BEFORE the summary lines (round-10 postmortem): releasing the
-    // probe checkpoints and stopping the session logs WARN MapPartitionsRDD
-    // lines, and anything printed after the summary can push it out of the
-    // driver's fixed tail window — BENCH_r10.json lost its headline value
-    // exactly that way. Silence the context first (nothing left to diagnose
-    // at this point), tear down, and only then emit the protocol lines as
-    // the absolute last output of the process.
+    // Teardown BEFORE the summary lines (round-10 postmortem): stopping the
+    // session logs WARN MapPartitionsRDD lines, and anything printed after
+    // the summary can push it out of a fixed-size tail capture of stdout —
+    // BENCH_r10.json lost its headline value exactly that way. Silence the
+    // context first (nothing left to diagnose at this point), tear down, and
+    // only then emit the protocol lines as the absolute last output of the
+    // process.
     spark.sparkContext.setLogLevel("OFF")
-    // explicit probe-artifact release at session teardown (no in-flight
-    // plans remain after the last timed rep)
-    ops.ProbeCache.clear()
     spark.stop()
     // COMPACT per-query line (round 18, VERDICT r17 #6): the long line's
     // queries map never survived the driver's tail window in r16/r17
     // (PERF_r16/r17 both ended with per_query: {}), because first_runs +
-    // memoized maps + passes push it to ~20 KB. This line carries ONLY the
+    // passes push it to ~20 KB. This line carries ONLY the
     // contract keys plus the per-query mins rounded to 1 ms (full precision
     // stays in the long line and the sidecar), ~6 KB, and is emitted as the
     // FINAL stdout line so a tail capture big enough to hold it parses a
@@ -433,10 +387,10 @@ object Bench {
     val compactLine = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":$qsCompact,"errors":$es,"sf":${jstr(sfDir)},""" +
       s""""n_queries":${results.size},"n_registry":${SparkEntry.queries.size},""" +
-      s""""no_memo":$noMemo,"n_errors":${errsSeq.size},"reps":$reps,"cpus":$cpus,""" +
+      s""""n_errors":${errsSeq.size},"reps":$reps,"cpus":$cpus,""" +
       s""""calib_sec":$calib,"calib_end_sec":$calibEnd,"calib_hot":$calibLoadedAny,""" +
       s""""n_passes":${passes.size},"n_clean_passes":$nCleanPasses,""" +
-      s""""n_memoized":${memoized.size},"compact":true$filterDesc}"""
+      s""""compact":true$filterDesc}"""
     writeSidecar(shortLine, longLine, compactLine)
     // short line, long per-query line, short line again (the pre-r18
     // protocol, unchanged), then the compact per-query line LAST

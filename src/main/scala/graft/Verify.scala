@@ -47,10 +47,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // explicit probe-artifact release at session teardown (no in-flight
-    // plans remain) — the cache otherwise holds its checkpoint blocks for
-    // the session lifetime by design
-    ops.ProbeCache.clear()
     spark.stop()
   }
 }

@@ -72,55 +72,6 @@ object Dedup {
   private[graft] def shingles(arrs: DataFrame): DataFrame =
     arrs.select(col("doc_id"), explode(col("sh")).as("shingle"))
 
-  /** [[shingleArrays]] extended with per-shingle term frequencies — the
-    * ONE corpus-snapshot shingle table the whole xxhash64 lexical pair
-    * family reads (round 15): `sh` is the sorted distinct hash array
-    * (exactly [[shingleArrays]]' output — the Jaccard/PPJoin and
-    * SortedIntersectSize precondition) and `tf[i]` the count of `sh[i]`'s
-    * windows, so [[tfidfCosinePairsPreShingled]] recovers its
-    * (doc_id, sh, tf) posting rows by a row-local explode instead of a
-    * second tokenization pass. Built once per snapshot and shared by
-    * every consumer (the decontamination family's docShingles precedent);
-    * docs with no shingles emit an empty-array row, which every consumer
-    * ignores identically.
-    */
-  private[graft] def shingleTfArrays(documents: DataFrame, n: Int = 3): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val tokenRe = wordRe.r
-    documents.select(col("doc_id"), lower(col("text")).as("t")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          if (text == null) (id, Array.empty[Long], Array.empty[Long])
-          else {
-            val toks = tokenRe.findAllIn(text).toArray
-            val m = toks.length - n + 1
-            val counts = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-            var i = 0
-            while (i < m) {
-              val sb = new java.lang.StringBuilder(toks(i))
-              var j = 1
-              while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-              val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-                bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                bytes.length, 42L)
-              counts.merge(h, 1L, (a, b) => a + b)
-              i += 1
-            }
-            val sh = new Array[Long](counts.size())
-            val keys = counts.keySet().iterator(); var k = 0
-            while (keys.hasNext) { sh(k) = keys.next(); k += 1 }
-            java.util.Arrays.sort(sh)
-            val tf = new Array[Long](sh.length)
-            k = 0
-            while (k < sh.length) { tf(k) = counts.get(sh(k)); k += 1 }
-            (id, sh, tf)
-          }
-        }
-      }.toDF("doc_id", "sh", "tf")
-  }
-
   /** [[shingleArrays]] over the md5-derived 48-bit PORTABLE hash family
     * ([[Text.gramHash48]]) instead of xxhash64 — same row-local
     * LinkedHashSet pass, but every hash is reproducible in ANSI SQL, so
@@ -236,22 +187,9 @@ object Dedup {
     */
   def jaccardPairs(documents: DataFrame, threshold: Double = 0.5,
                    orderByDocFreq: Boolean = true,
-                   sorted: Boolean = true): DataFrame =
+                   sorted: Boolean = true): DataFrame = {
     // one shingling pass, materialized: prefix generation and verify both read it
-    jaccardPairsPreShingled(shingleArrays(documents).localCheckpoint(),
-      threshold, orderByDocFreq, sorted)
-
-  /** [[jaccardPairs]] over a PRE-BUILT shingle table — `arrs` must carry
-    * `doc_id` plus `sh`, the sorted distinct xxhash64 shingle array
-    * ([[shingleArrays]] / [[shingleTfArrays]] output, typically the
-    * session's materialized corpus-snapshot table so repeated pair
-    * queries skip the tokenization pass; a subset corpus is the same
-    * table semi-joined on its doc_ids, shingling being row-local). The
-    * caller owns the table's lifecycle — nothing is persisted here.
-    */
-  def jaccardPairsPreShingled(arrs: DataFrame, threshold: Double = 0.5,
-                              orderByDocFreq: Boolean = true,
-                              sorted: Boolean = true): DataFrame = {
+    val arrs = shingleArrays(documents).localCheckpoint()
     // Prefix filtering is EXACT under any global total order of shingles.
     // Default df-ascending (rarest-first): keeps common shingles out of
     // prefixes so the candidate join stays near-linear — measured ~30%
@@ -368,20 +306,10 @@ object Dedup {
     */
   def minhashPairs(documents: DataFrame, threshold: Double = 0.5,
                    bands: Int = 16, rows: Int = 4,
-                   sorted: Boolean = true): DataFrame =
-    minhashPairsPreShingled(shingleArrays48(documents).localCheckpoint(),
-      threshold, bands, rows, sorted)
-
-  /** [[minhashPairs]] over a PRE-BUILT 48-bit shingle table — `arrs` must
-    * be [[shingleArrays48]] output (the md5-derived portable hash family
-    * the signature oracle replays), typically the session's materialized
-    * corpus-snapshot table. The caller owns the table's lifecycle.
-    */
-  def minhashPairsPreShingled(arrs: DataFrame, threshold: Double = 0.5,
-                              bands: Int = 16, rows: Int = 4,
-                              sorted: Boolean = true): DataFrame = {
+                   sorted: Boolean = true): DataFrame = {
     val k = bands * rows
     val coeffs = minhashCoeffs(k)
+    val arrs = shingleArrays48(documents).localCheckpoint()
     val sh = shingles(arrs)
     // materialize the band-bucket frame: the candidate SELF-join would
     // otherwise run the k-min signature aggregate (k mins over the full
@@ -496,18 +424,10 @@ object Dedup {
     * space); the prefix cap bounds the per-pair cost.
     */
   def fuzzyPairs(documents: DataFrame, jaccardThreshold: Double = 0.5,
-                 maxEdit: Int = 20, prefixLen: Int = 100): DataFrame =
-    fuzzyPairsOn(documents, jaccardPairs(documents, jaccardThreshold, sorted = false),
-      maxEdit, prefixLen)
-
-  /** [[fuzzyPairs]] with the Jaccard candidate stage supplied by the
-    * caller (e.g. [[jaccardPairsPreShingled]] over the session's shared
-    * shingle table) — the edit-distance verification is unchanged. */
-  def fuzzyPairsOn(documents: DataFrame, jaccardCandidates: DataFrame,
-                   maxEdit: Int = 20, prefixLen: Int = 100): DataFrame = {
+                 maxEdit: Int = 20, prefixLen: Int = 100): DataFrame = {
     val texts = documents.select(col("doc_id"),
       substring(lower(col("text")), 1, prefixLen).as("head"))
-    jaccardCandidates
+    jaccardPairs(documents, jaccardThreshold, sorted = false)
       .join(texts.select(col("doc_id").as("id_a"), col("head").as("head_a")), "id_a")
       .join(texts.select(col("doc_id").as("id_b"), col("head").as("head_b")), "id_b")
       .select(col("id_a"), col("id_b"), col("jaccard"),
@@ -869,21 +789,6 @@ object Dedup {
     exactSurvivors(train, hashedShingles(train, n), hashedShingles(benchmark, n))
       .orderBy("doc_id")
 
-  /** The (doc_id, shingle-hash) table the decontamination guards consume —
-    * exposed so a deployment (and the registry) can materialize ONE
-    * shingle table per corpus snapshot and feed [[decontaminate]],
-    * [[decontaminateFuzzy]] and [[contaminationBySource]] from it.
-    * Shingling is row-local, so a FILTERED benchmark subset of a
-    * pre-shingled corpus is identical to shingling the filtered corpus.
-    */
-  def docShingles(df: DataFrame, n: Int = 3): DataFrame = hashedShingles(df, n)
-
-  /** [[decontaminate]] over pre-shingled frames (the [[docShingles]]
-    * materialize-once path). */
-  def decontaminatePreShingled(train: DataFrame, trainSh: DataFrame,
-                               benchSh: DataFrame): DataFrame =
-    exactSurvivors(train, trainSh, benchSh).orderBy("doc_id")
-
   /** The exact decontamination leg over PRE-SHINGLED frames — shared by
     * [[decontaminate]] and [[decontaminateBloomReport]] so the report can
     * materialize one shingling of each corpus across both of its legs.
@@ -917,16 +822,9 @@ object Dedup {
     * its cheap-looking plan would not be doing the audit's work.
     */
   def contaminationBySource(train: DataFrame, benchmark: DataFrame,
-                            n: Int = 3): DataFrame =
-    contaminationBySourcePreShingled(train,
-      hashedShingles(train, n), hashedShingles(benchmark, n))
-
-  /** [[contaminationBySource]] over pre-shingled frames (the
-    * [[docShingles]] materialize-once path). */
-  def contaminationBySourcePreShingled(train: DataFrame, trainSh: DataFrame,
-                                       benchSh: DataFrame): DataFrame = {
-    val contaminated = trainSh
-      .join(benchSh.select("shingle").distinct(),
+                            n: Int = 3): DataFrame = {
+    val contaminated = hashedShingles(train, n)
+      .join(hashedShingles(benchmark, n).select("shingle").distinct(),
         Seq("shingle"), "left_semi")
       .select("doc_id").distinct()
       .withColumn("hit", lit(1L))
@@ -959,17 +857,9 @@ object Dedup {
     * hash-48 shingling and the containment rule in SQL.
     */
   def decontaminateFuzzy(train: DataFrame, benchmark: DataFrame,
-                         tau: Double = 0.5, n: Int = 3): DataFrame =
-    decontaminateFuzzyPreShingled(train,
-      hashedShingles(train, n), hashedShingles(benchmark, n), tau)
-
-  /** [[decontaminateFuzzy]] over pre-shingled frames (the [[docShingles]]
-    * materialize-once path). */
-  def decontaminateFuzzyPreShingled(train: DataFrame, trainSh: DataFrame,
-                                    benchShingles: DataFrame,
-                                    tau: Double = 0.5): DataFrame = {
-    val tsh = trainSh
-    val bsh = benchShingles
+                         tau: Double = 0.5, n: Int = 3): DataFrame = {
+    val tsh = hashedShingles(train, n)
+    val bsh = hashedShingles(benchmark, n)
       .select(col("doc_id").as("bid"), col("shingle"))
     // hashedShingles dedups per doc, so plain counts are distinct counts
     val bn = bsh.groupBy("bid").agg(count(lit(1)).as("bn"))
@@ -1177,6 +1067,9 @@ object Dedup {
   def tfidfCosinePairs(documents: DataFrame, threshold: Double = 0.4,
                        dfCap: Int = 1000, n: Int = 3): DataFrame = {
     require(n >= 1 && n <= 8, s"need 1 <= n <= 8, got $n")
+    require(threshold > 0 && threshold <= 1,
+      s"need 0 < threshold <= 1, got $threshold")
+    require(dfCap >= 2, s"need dfCap >= 2, got $dfCap")
     // term frequencies in ONE typed row-local pass (the [[shingleArrays]]
     // trade: an interpreted transform() HOF pays per-element lambda
     // overhead — measured 2× on this operator's hot path): each doc's
@@ -1221,37 +1114,13 @@ object Dedup {
           }
         }
       }.toDF("doc_id", "sh", "tf")
-    tfidfCosinePairsFromTf(documents, tf, threshold, dfCap)
-  }
-
-  /** [[tfidfCosinePairs]] over a PRE-BUILT [[shingleTfArrays]] table —
-    * the (doc_id, sh, tf) posting rows are recovered by a row-local
-    * explode of the shared arrays instead of a second tokenization pass.
-    * `documents` is still scanned once for the corpus count (docs with no
-    * shingles count toward n). */
-  def tfidfCosinePairsPreShingled(documents: DataFrame, shTf: DataFrame,
-                                  threshold: Double = 0.4,
-                                  dfCap: Int = 1000): DataFrame = {
-    val tf = shTf.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), explode(arrays_zip(col("sh"), col("tf"))).as("z"))
-      .select(col("doc_id"), col("z.sh").as("sh"), col("z.tf").as("tf"))
-    tfidfCosinePairsFromTf(documents, tf, threshold, dfCap)
-  }
-
-  private def tfidfCosinePairsFromTf(documents: DataFrame, tf: DataFrame,
-                                     threshold: Double, dfCap: Int): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"need 0 < threshold <= 1, got $threshold")
-    require(dfCap >= 2, s"need dfCap >= 2, got $dfCap")
     val dec = org.apache.spark.sql.types.DecimalType(18, 9)
     // tf feeds both the df aggregate and the weight join; it is NOT
     // persisted — measured: materializing the pass costs as much as the
     // second row-local tokenization it saves (1.98 s vs 1.74 s warm at
     // sf0.1), and at scale a persisted token-granularity table is its own
-    // liability. (The pre-shingled path re-derives it per consumer by a
-    // row-local explode of the already-materialized arrays — same trade.)
-    // The weighted postings (w) below ARE materialized: three consumers
-    // and a shuffle+join pipeline behind them.
+    // liability. The weighted postings (w) below ARE materialized: three
+    // consumers and a shuffle+join pipeline behind them.
     val dfT = tf.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
     val nd = documents.agg(count(lit(1)).as("_n"))

@@ -727,16 +727,8 @@ object Graph {
     */
   def basketProximityEdges(lineitem: DataFrame,
                            from: String = "1996-01-01",
-                           until: String = "1997-01-01"): DataFrame =
-    proximityEdges(basketEdges(lineitem, from, until))
-
-  /** [[basketProximityEdges]] from an already-derived co-occurrence pair
-    * frame (one row per co-occurrence, `src < dst`) — the overload the
-    * registry feeds from the shared basket-pair memo so the scan+join
-    * derivation is paid once per snapshot, not once per consumer.
-    */
-  def proximityEdges(pairs: DataFrame): DataFrame = {
-    val cnt = pairs
+                           until: String = "1997-01-01"): DataFrame = {
+    val cnt = basketEdges(lineitem, from, until)
       .groupBy(col("src").as("a"), col("dst").as("b"))
       .agg(count(lit(1)).as("cnt"))
     val mx = cnt.agg(max(col("cnt")).as("m"))
@@ -1596,8 +1588,7 @@ object Graph {
     * profiles consume: a pipeline that wants per-node counts
     * ([[triangleProfile]]) AND per-edge embeddedness
     * ([[edgeEmbeddedness]]) should materialize this frame once and pass
-    * it to both — the registered queries do exactly that through the
-    * probe cache.
+    * it to both.
     *
     * Scale shape: identical to [[triangleStats]] (same joins, no final
     * aggregate) — every step a keyed shuffle, wedge volume bounded
@@ -1616,11 +1607,11 @@ object Graph {
     * (lcc ≈ 0 at high degree).
     *
     * `corners` optionally supplies a pre-enumerated [[triangleCorners]]
-    * frame OF THE SAME edge list (the certify-once shape: enumerate
-    * triangles once, derive every profile); when absent the enumeration
-    * runs here. Scale shape: corner explode is row-local ×3, then one
-    * combining count keyed by node + one left join onto the degree frame
-    * — nothing beyond the enumeration itself.
+    * frame OF THE SAME edge list (enumerate triangles once, derive every
+    * profile); when absent the enumeration runs here. Scale shape: corner
+    * explode is row-local ×3, then one combining count keyed by node + one
+    * left join onto the degree frame — nothing beyond the enumeration
+    * itself.
     *
     * Determinism: counts are exact longs; lcc is one double expression
     * replayed identically by the oracle (round(·, 6) discipline).

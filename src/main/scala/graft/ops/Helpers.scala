@@ -90,7 +90,7 @@ object Helpers {
     val slots = df.sparkSession.sparkContext.defaultParallelism
     val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // Plans with no computable statistics — LogicalRDD leaves
-    // (localCheckpoint, ProbeCache results), streaming sources — report the
+    // (localCheckpoint results), streaming sources — report the
     // `spark.sql.defaultSizeInBytes` sentinel (Long.MaxValue unless
     // overridden), not a size. Round-12 (from round-11 review): without
     // this check the byData term saturated at the 32769 cap, so a TINY

@@ -672,52 +672,37 @@ object Similarity {
     scored.withColumn("crank", row_number().over(byVec))
   }
 
-  /** Memoized IVF index artifacts — the materialize-once production
-    * shape: a vector store trains the coarse quantizer and materializes
-    * the inverted (crank-1) assignment ONCE per corpus snapshot, then
-    * serves every query against them. The centroid table and assignment
-    * are ProbeCache'd (bench rows riding them self-describe
-    * `memoized: true`, builds visible in `first_runs`); everything
-    * query-side — ranking the QUERY vectors against the broadcast
-    * centroids, the probe join, the rerank window — stays honestly
-    * recomputed per call.
+  /** The IVF coarse quantizer: `nCells` centroids seeded from a
+    * deterministic corpus sample (first ids), then `kmeansIters` Lloyd
+    * refinements. `e` is the `(vec_id, v, nrm)` projection.
     */
-  private def ivfIndexCents(embeddings: DataFrame, nCells: Int,
-                            kmeansIters: Int): DataFrame =
-    ProbeCache(s"ivf.index.cents.$nCells.$kmeansIters", Seq(embeddings)) {
-      val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", norm(col("v")))
-      // seed centroids: deterministic corpus sample, then Lloyd refinement
-      var cents = e.orderBy("vec_id").limit(nCells)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-      for (_ <- 0 until kmeansIters) {
-        val assigned0 = rankCells(e, cents).filter(col("crank") === 1)
-          .select(col("vec_id"), col("v"), col("cent_id").as("cell"))
-        cents = lloydStep(assigned0)
-      }
-      cents
+  private def lloydCentroids(e: DataFrame, nCells: Int, kmeansIters: Int): DataFrame = {
+    var cents = e.orderBy("vec_id").limit(nCells)
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
+    for (_ <- 0 until kmeansIters) {
+      val assigned0 = rankCells(e, cents).filter(col("crank") === 1)
+        .select(col("vec_id"), col("v"), col("cent_id").as("cell"))
+      cents = lloydStep(assigned0)
     }
+    cents
+  }
 
-  private def ivfIndexAssigned(embeddings: DataFrame, nCells: Int,
-                               kmeansIters: Int): DataFrame =
-    ProbeCache(s"ivf.index.assigned.$nCells.$kmeansIters", Seq(embeddings)) {
-      val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", norm(col("v")))
-      rankCells(e, ivfIndexCents(embeddings, nCells, kmeansIters))
-        .filter(col("crank") === 1)
-        .select(col("vec_id"), col("v"), col("nrm"),
-          col("cent_id").as("cell"), col("csim"))
-    }
+  /** Every vector's nearest cell (crank 1) under `cents`. */
+  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+    rankCells(e, cents).filter(col("crank") === 1)
+      .select(col("vec_id"), col("v"), col("nrm"), col("cent_id").as("cell"), col("csim"))
 
   def ivfTopK(embeddings: DataFrame, nQueries: Int = 20, k: Int = 5,
               nCells: Int = 16, nProbe: Int = 4, kmeansIters: Int = 1): DataFrame = {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val cents = ivfIndexCents(embeddings, nCells, kmeansIters)
-    val assigned = ivfIndexAssigned(embeddings, nCells, kmeansIters)
+    // the iterative centroid plan feeds both the assignment and the probe
+    // ranking, so the frame owns one materialized copy
+    val cents = lloydCentroids(e, nCells, kmeansIters).localCheckpoint()
+    val assigned = assignCells(e, cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
     // query-time work: rank only the QUERY vectors against the broadcast
-    // centroid table — honest per call, cost nQueries × nCells
+    // centroid table, cost nQueries × nCells
     val probes = rankCells(e.filter(col("vec_id") < nQueries), cents)
       .filter(col("crank") <= nProbe)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
@@ -755,9 +740,11 @@ object Similarity {
     */
   def kmeansPrototypes(embeddings: DataFrame, nCells: Int = 16,
                        perCell: Int = 5, kmeansIters: Int = 1): DataFrame = {
-    // rides the SAME memoized IVF index artifacts as ivfTopK (shared
-    // Lloyd by construction — the oracle replay shares lloydReplayCtes)
-    val assigned = ivfIndexAssigned(embeddings, nCells, kmeansIters)
+    // the SAME Lloyd training as ivfTopK (the oracle replay shares
+    // lloydReplayCtes); the centroids are read once here
+    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .withColumn("nrm", norm(col("v")))
+    val assigned = assignCells(e, lloydCentroids(e, nCells, kmeansIters))
       .select(col("vec_id"), col("cell"), col("csim"))
     val wCell = Window.partitionBy("cell").orderBy(col("csim").desc, col("vec_id"))
     assigned
@@ -1361,8 +1348,7 @@ object Similarity {
     * path every pair family here takes — at 100 TB only layers 0..~2
     * exceed the cap, and their recall knobs are the shared LSH L/b
     * geometry). Insertion-order dependence disappears: the graph is a
-    * pure function of (corpus, M, seed), so index builds are replayable
-    * and the certify-once memo key is just the corpus snapshot.
+    * pure function of (corpus, M, seed), so index builds are replayable.
     *
     * Output: (level, vec_id, neighbor_id, sim) — sims exact cosine,
     * round(6); degree ≤ 2M at level 0, ≤ M above; every edge's reverse
@@ -1474,8 +1460,8 @@ object Similarity {
     // the index carries each neighbor's vector + norm (the standard
     // vector-store trade — HNSW stores vectors with the graph): a search
     // hop then scores candidates straight off the adjacency rows, with no
-    // corpus join per step. One corpus join here, at certify-once build
-    // time, pays for all of them.
+    // corpus join per step. One corpus join here, at build time, pays for
+    // all of them.
     val ev = embeddings.select(col("vec_id").as("neighbor_id"),
       asDouble(col("embedding")).as("nv"))
       .withColumn("nnrm", norm(col("nv")))
@@ -1614,14 +1600,10 @@ object Similarity {
       .orderBy("qid", "rn")
   }
 
-  /** The certify-once recall dashboard for [[hnswTopK]] — the
-    * [[annRecallReport]] pattern extended to the graph index: exact
-    * ground truth over the bounded query set (the SAME memoized artifact
-    * the lsh/ivf/pq report reads), the HNSW answer joined against it,
-    * and one row of literals + booleans a SQL oracle can pin. The graph
-    * build is the memoized artifact (build once, search many — the
-    * production shape); the SEARCH runs per refresh, so the dashboard's
-    * cost is the greedy descent itself.
+  /** The recall dashboard for [[hnswTopK]] — the [[annRecallReport]]
+    * pattern extended to the graph index: exact ground truth over the
+    * bounded query set, the HNSW answer joined against it, and one row of
+    * literals + booleans a SQL oracle can pin.
     *
     * `full_k_ok` additionally pins coverage: every query must surface a
     * full k results (a beam that dead-ends early would under-fill long
@@ -1630,11 +1612,8 @@ object Similarity {
   def hnswRecallReport(embeddings: DataFrame, nQueries: Int = 20, k: Int = 5,
                        m: Int = 8, ef: Int = 64,
                        recallFloor: Double = 0.93): DataFrame = {
-    val exact = ProbeCache(s"recall.exact_topk.$nQueries.$k", Seq(embeddings))(
-      cosineTopK(embeddings, nQueries, k)).select(col("qid"), col("cid"))
-    val graph = ProbeCache(s"hnsw.graph.$m", Seq(embeddings))(
-      hnswGraph(embeddings, m))
-    val got = hnswTopK(embeddings, graph, nQueries, k, ef)
+    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("cid"))
+    val got = hnswTopK(embeddings, hnswGraph(embeddings, m), nQueries, k, ef)
     val hits = exact.join(got.select(col("qid"), col("cid")),
         Seq("qid", "cid"), "left_semi")
       .groupBy("qid").agg(count(lit(1)).as("hits"))
@@ -1758,13 +1737,7 @@ object Similarity {
   def annRecallReport(embeddings: DataFrame, nQueries: Int = 20, k: Int = 5,
                       floors: Map[String, Double] = Map(
                         "lsh" -> 0.55, "ivf" -> 0.7, "pq" -> 0.45)): DataFrame = {
-    // every probe artifact (ground truth + the three method outputs) is
-    // seeded-deterministic over a bounded query set — memoize via
-    // ProbeCache so repeated dashboard refreshes over the same corpus skip
-    // the three index builds and the exact scan (the certify-once-per-
-    // index-build production shape)
-    val exact = ProbeCache(s"recall.exact_topk.$nQueries.$k", Seq(embeddings))(
-      cosineTopK(embeddings, nQueries, k)).select(col("qid"), col("cid"))
+    val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("cid"))
     def leg(name: String, method: DataFrame): DataFrame = {
       val hits = exact.join(method.select(col("qid"), col("cid")),
           Seq("qid", "cid"), "left_semi")
@@ -1778,12 +1751,9 @@ object Similarity {
           lit(k.toLong).as("k"), lit(floors(name)).as("recall_floor"),
           (col("recall") >= lit(floors(name))).as("recall_ok"))
     }
-    leg("lsh", ProbeCache(s"recall.lsh.$nQueries.$k", Seq(embeddings))(
-        annTopK(embeddings, nQueries, k)))
-      .unionByName(leg("ivf", ProbeCache(s"recall.ivf.$nQueries.$k", Seq(embeddings))(
-        ivfTopK(embeddings, nQueries, k))))
-      .unionByName(leg("pq", ProbeCache(s"recall.pq.$nQueries.$k", Seq(embeddings))(
-        pqTopK(embeddings, nQueries, k))))
+    leg("lsh", annTopK(embeddings, nQueries, k))
+      .unionByName(leg("ivf", ivfTopK(embeddings, nQueries, k)))
+      .unionByName(leg("pq", pqTopK(embeddings, nQueries, k)))
       .orderBy("method")
   }
 
@@ -1836,20 +1806,12 @@ object Similarity {
                         maxVectors: Long = 1000L): DataFrame = {
     val bounded = embeddings.filter(col("vec_id") < maxVectors)
     val aug = withSyntheticNearDups(bounded)
-    // every probe artifact — the two pair graphs, the two keep-list
-    // clusterings, the two kNN graphs — is seeded-deterministic over the
-    // capped probe set, so they are memoized through ProbeCache (shared
-    // localCheckpoints, lineage cut): the pair frames feed the pair leg AND
-    // the keeplist clusterings within ONE call, and repeated dashboard
-    // refreshes over the same corpus reuse all six artifacts instead of
-    // re-running two label propagations and two quadratic probes. Block
-    // residency is capped at one artifact set per distinct probe, released
-    // via ProbeCache.clear (previously each call's checkpoints waited on
-    // GC/ContextCleaner).
-    val exactPairs = ProbeCache("fid.exact_pairs.0.9", Seq(aug))(
-      cosineDupPairs(aug, 0.9, sorted = false))
-    val lshPairs = ProbeCache("fid.lsh_pairs.0.9.8x8", Seq(aug))(
-      cosinePairsLsh(aug, 0.9, nTables = 8, bitsPerTable = 8, sorted = false))
+    // each pair frame feeds the pair leg AND a keep-list clustering, whose
+    // label propagation runs eagerly at construction — the frame owns one
+    // materialized copy instead of running the quadratic probe twice
+    val exactPairs = cosineDupPairs(aug, 0.9, sorted = false).localCheckpoint()
+    val lshPairs = cosinePairsLsh(aug, 0.9, nTables = 8, bitsPerTable = 8,
+      sorted = false).localCheckpoint()
     // pair_graph (marker columns — a USING full-outer collapses the key
     // columns, so side-membership must ride its own flag)
     val exactP = exactPairs.select(col("id_a"), col("id_b"), lit(1).as("me"))
@@ -1857,20 +1819,15 @@ object Similarity {
     val pairLeg = lshP.join(exactP, Seq("id_a", "id_b"), "full_outer")
       .select(col("me").isNotNull.as("in_e"), col("ml").isNotNull.as("in_l"))
     // knn_top1
-    val e1 = ProbeCache("fid.knn_exact.1", Seq(bounded))(knnGraph(bounded, 1))
+    val e1 = knnGraph(bounded, 1)
       .select(col("vec_id"), col("neighbor_id").as("en"), col("sim").as("es"))
-    val l1 = ProbeCache("fid.knn_lsh.1", Seq(bounded))(knnGraphLsh(bounded, 1))
+    val l1 = knnGraphLsh(bounded, 1)
       .select(col("vec_id"), col("neighbor_id").as("ln"), col("sim").as("ls"))
     val knnLeg = e1.join(l1, Seq("vec_id"), "left")
-    // semantic_keeplist — clustered from the SAME memoized pair frames
-    // (the clustering itself is the expensive part: label propagation runs
-    // eager rounds at construction, so the memoization key must be checked
-    // BEFORE construction — ProbeCache's thunk does exactly that)
-    val exactK = ProbeCache("fid.keeplist_exact", Seq(aug, exactPairs))(
-        semanticDedupKeepList(aug, exactPairs))
+    // semantic_keeplist — clustered from the same pair frames
+    val exactK = semanticDedupKeepList(aug, exactPairs)
       .select(col("vec_id"), lit(1).as("ke"))
-    val lshK = ProbeCache("fid.keeplist_lsh", Seq(aug, lshPairs))(
-        semanticDedupKeepList(aug, lshPairs))
+    val lshK = semanticDedupKeepList(aug, lshPairs)
       .select(col("vec_id"), lit(1).as("kl"))
     val keepLeg = aug.select("vec_id")
       .join(exactK, Seq("vec_id"), "left").join(lshK, Seq("vec_id"), "left")

@@ -109,21 +109,4 @@ object GraftSqlBridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }
-
-  /** Whether `df` IS a materialized checkpoint shell — its analyzed plan is
-    * exactly one `LogicalRDD` whose backing RDD is persisted. Re-running
-    * `localCheckpoint()` on such a frame duplicates its blocks and strands
-    * the inner copy with no release path (round-14 ADVICE: the
-    * components/LPA memos wrapped already-checkpointed results);
-    * graft.ops.ProbeCache uses this to memoize the frame as-is instead.
-    * Deliberately narrow: any operator on top of a checkpoint (a sort, a
-    * project) makes the root a non-LogicalRDD node and the frame is
-    * checkpointed normally.
-    */
-  def isMaterializedCheckpointShell(df: Dataset[_]): Boolean =
-    df.queryExecution.analyzed match {
-      case lr: execution.LogicalRDD =>
-        lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      case _ => false
-    }
 }

@@ -146,26 +146,6 @@ object PerfProbe {
       spark.stop(); return
     }
 
-    // shared-shingle A/B: `Test/runMain graft.PerfProbe preshingle`
-    if (args.headOption.contains("preshingle")) {
-      import graft.core.Tables
-      import graft.ops.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val shTf = Dedup.shingleTfArrays(docs).localCheckpoint()
-      val sh48 = Dedup.shingleArrays48(docs).localCheckpoint()
-      def t(tag: String)(f: => Long): Unit = (1 to 3).foreach { _ =>
-        val t0 = System.nanoTime(); val n = f
-        println(f"PROBE pre $tag%-14s ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$n")
-      }
-      t("tfidf-self")(Dedup.tfidfCosinePairs(docs).count())
-      t("tfidf-pre")(Dedup.tfidfCosinePairsPreShingled(docs, shTf).count())
-      t("jaccard-self")(Dedup.jaccardPairs(docs, 0.5).count())
-      t("jaccard-pre")(Dedup.jaccardPairsPreShingled(shTf, 0.5).count())
-      t("minhash-self")(Dedup.minhashPairs(docs, 0.5).count())
-      t("minhash-pre")(Dedup.minhashPairsPreShingled(sh48, 0.5).count())
-      spark.stop(); return
-    }
-
     // louvain-coarsen attribution: `Test/runMain graft.PerfProbe louvain`
     if (args.headOption.contains("louvain")) {
       import graft.core.Tables
@@ -294,7 +274,7 @@ object PerfProbe {
           SparkEntry.queries(n)(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         }
-        setArm(true); run1() // untimed warmup: JIT, codegen, memo builds
+        setArm(true); run1() // untimed warmup: JIT, codegen
         for (flag <- Seq(true, false, false, true)) {
           setArm(flag)
           val t = run1()
@@ -377,7 +357,7 @@ object PerfProbe {
       // private listenerBus: drain by sleeping briefly after each action —
       // job/stage events for a completed action land within milliseconds
       names.foreach { n =>
-        SparkEntry.queries(n)(spark, sfDir).count() // warm (memo builds, JIT)
+        SparkEntry.queries(n)(spark, sfDir).count() // warm (codegen, JIT)
         Thread.sleep(300)
         jobs = 0; stages = 0; taskMs = 0L; inTimed = true
         val t0 = System.nanoTime()
@@ -391,7 +371,7 @@ object PerfProbe {
 
     // HNSW search grid: `Test/runMain graft.PerfProbe hnsw` — recall@k +
     // warm search time over (ef, hopsPerLevel, beamRounds), graph built
-    // once (the memoized certify-once artifact shape). The registered
+    // once and searched per grid cell. The registered
     // q_hnsw_topk params must be the cheapest cell holding recall ≥ 0.93.
     if (args.headOption.contains("hnsw")) {
       import graft.core.Tables

@@ -44,30 +44,6 @@ class DedupSpec extends SparkSpec {
     assert(a.nonEmpty)
   }
 
-  test("pre-shingled pair family over the shared table equals the standalone forms") {
-    // the round-15 shared corpus-snapshot shingle tables: every pair
-    // operator fed the pre-built table must be row-identical to its
-    // self-shingling form, on the full corpus AND on a semi-joined subset
-    // (row-local shingling makes the subset table exactly the subset's own)
-    val d = Tables.documents(spark, sfDir)
-    val shTf = Dedup.shingleTfArrays(d).localCheckpoint()
-    val sh48 = Dedup.shingleArrays48(d).localCheckpoint()
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit =
-      assert(a.collect().toSeq == b.collect().toSeq)
-    same(Dedup.jaccardPairsPreShingled(shTf, 0.5), Dedup.jaccardPairs(d, 0.5))
-    same(Dedup.minhashPairsPreShingled(sh48, 0.5), Dedup.minhashPairs(d, 0.5))
-    same(Dedup.tfidfCosinePairsPreShingled(d, shTf), Dedup.tfidfCosinePairs(d))
-    same(Dedup.fuzzyPairsOn(d, Dedup.jaccardPairsPreShingled(shTf, 0.5, sorted = false)),
-      Dedup.fuzzyPairs(d))
-    // gated subset: semi-join of the shared table == shingling the subset
-    val gated = d.filter(col("doc_id") % 3 =!= 0)
-    val sub = shTf.join(gated.select("doc_id"), Seq("doc_id"), "left_semi")
-    same(Dedup.jaccardPairsPreShingled(sub, 0.5), Dedup.jaccardPairs(gated, 0.5))
-    // the shared table's set column IS shingleArrays (sorted distinct)
-    assert(shTf.select("doc_id", "sh").collect().toSeq.sortBy(_.getLong(0)) ==
-      Dedup.shingleArrays(d).collect().toSeq.sortBy(_.getLong(0)))
-  }
-
   test("minhashPairs finds the same near-dup pairs as exact jaccardPairs on fixture docs") {
     val d = Tables.documents(spark, sfDir)
     val exact = Dedup.jaccardPairs(d, 0.5).select("id_a", "id_b").collect()

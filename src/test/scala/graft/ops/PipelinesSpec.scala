@@ -54,34 +54,6 @@ class PipelinesSpec extends SparkSpec {
     info(s"fixture: exact=${exactIds.size} lsh=${lshIds.size} identical=${exactIds == lshIds}")
   }
 
-  test("curation with shared-shingle-table generators equals the self-shingling pipelines") {
-    // the registered q_curation/q_curation_lsh/q_curation_gopher shapes:
-    // the pair generator reads the session's shared corpus shingle table
-    // semi-joined to the gated survivors — must be row-identical to the
-    // generator shingling the gated corpus itself
-    val docs = Tables.documents(spark, sfDir)
-    val rates = (10 to 19).map(i => s"src$i" -> 8).toMap
-    val shTf = Dedup.shingleTfArrays(docs).localCheckpoint()
-    val sh48 = Dedup.shingleArrays48(docs).localCheckpoint()
-    def sub(t: org.apache.spark.sql.DataFrame, g: org.apache.spark.sql.DataFrame) =
-      t.join(g.select("doc_id"), Seq("doc_id"), "left_semi")
-    assert(Pipelines.curateWith(docs,
-        g => Dedup.jaccardPairsPreShingled(sub(shTf, g), 0.5, sorted = false),
-        mixRates = rates).collect().toSeq ==
-      Pipelines.curate(docs, mixRates = rates).collect().toSeq)
-    assert(Pipelines.curateWith(docs,
-        g => Dedup.minhashPairsPreShingled(sub(sh48, g), 0.5, sorted = false),
-        mixRates = rates).collect().toSeq ==
-      Pipelines.curateWith(docs, Dedup.minhashPairs(_, 0.5, sorted = false),
-        mixRates = rates).collect().toSeq)
-    assert(Pipelines.curateWithGate(docs, Text.gopherKeep(),
-        g => Dedup.jaccardPairsPreShingled(sub(shTf, g), 0.5, sorted = false),
-        mixRates = rates).collect().toSeq ==
-      Pipelines.curateWithGate(docs, Text.gopherKeep(),
-        Dedup.jaccardPairs(_, 0.5, sorted = false),
-        mixRates = rates).collect().toSeq)
-  }
-
   test("curateWithGate(gopherKeep) equals manual gate + curate tail composition") {
     import graft.core.Tables
     val d = Tables.documents(spark, sfDir)

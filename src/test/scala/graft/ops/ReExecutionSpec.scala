@@ -1,19 +1,24 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import java.lang.ref.WeakReference
+
 /** Operators that materialize a shared intermediate return a frame that
-  * owns it: the frame runs any number of actions with identical rows, and
-  * neither building it nor running it leaves a SQL cache entry behind.
+  * owns it: the frame runs any number of actions with identical rows,
+  * neither building it nor running it leaves a SQL cache entry behind, and
+  * nothing but the frame keeps it alive.
   */
 class ReExecutionSpec extends SparkSpec {
 
   private def docs(s: SparkSession): DataFrame = Tables.documents(s, sfDir)
   private def edges(s: SparkSession): DataFrame = Graph.basketEdges(Tables.lineitem(s, sfDir))
   private def baskets(s: SparkSession): DataFrame = Affinity.basketItems(Tables.lineitem(s, sfDir))
+  private def emb(s: SparkSession): DataFrame = Tables.embeddings(s, sfDir)
 
   private val operators: Seq[(String, SparkSession => DataFrame)] = Seq(
     "Dedup.jaccardPairs" -> (s => Dedup.jaccardPairs(docs(s), 0.5)),
@@ -49,7 +54,16 @@ class ReExecutionSpec extends SparkSpec {
     "Graph.degreeAssortativity" -> (s => Graph.degreeAssortativity(edges(s))),
     "Affinity.associationRules" -> (s => Affinity.associationRules(baskets(s), minPairs = 1)),
     "Affinity.itemNeighbors" -> (s =>
-      Affinity.itemNeighbors(baskets(s), topK = 3, minPairs = 1, pruneItems = false)))
+      Affinity.itemNeighbors(baskets(s), topK = 3, minPairs = 1, pruneItems = false)),
+    "Graph.refineCommunities" -> { s =>
+      val e = edges(s)
+      Graph.refineCommunities(e, Graph.communities(e, rounds = 4, sorted = false), rounds = 2)
+    },
+    "Similarity.ivfTopK" -> (s => Similarity.ivfTopK(emb(s), 20, 5)),
+    "Similarity.kmeansPrototypes" -> (s => Similarity.kmeansPrototypes(emb(s))),
+    "Similarity.lshFidelityReport" -> (s => Similarity.lshFidelityReport(emb(s))),
+    "Similarity.annRecallReport" -> (s => Similarity.annRecallReport(emb(s), 20, 5)),
+    "q_curation_gopher" -> (s => SparkEntry.queries("q_curation_gopher")(s, sfDir)))
 
   operators.foreach { case (name, build) =>
     test(s"$name: one built frame runs count, then collect twice, with identical rows") {
@@ -63,5 +77,27 @@ class ReExecutionSpec extends SparkSpec {
       assert(n == first.length, s"$name: count $n but collect returned ${first.length} rows")
       assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: the actions left a SQL cache entry")
     }
+  }
+
+  // Builds and runs the query in its own session; returns weak references
+  // to the frame and to the RDDs behind its materialized intermediates, so
+  // no strong reference outlives this call.
+  private def runAndRelease(name: String): Seq[WeakReference[AnyRef]] = {
+    val df = SparkEntry.queries(name)(spark.newSession(), sfDir)
+    assert(df.collect().nonEmpty, s"$name returned no rows")
+    val rdds = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+    assert(rdds.nonEmpty, s"$name: expected a materialized intermediate in the plan")
+    (df +: rdds).map(new WeakReference[AnyRef](_))
+  }
+
+  test("nothing keeps a query's result or its intermediates alive after the caller drops it") {
+    val refs = runAndRelease("q_ivf_topk")
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (refs.exists(_.get != null) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    val live = refs.count(_.get != null)
+    assert(live == 0, s"$live of ${refs.size} objects still reachable after 60 s of GC")
   }
 }

@@ -139,36 +139,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("dashboard probe memoization: refreshes reuse artifacts bit-identically; clear releases") {
-    val e = Tables.embeddings(spark, sfDir)
-    ProbeCache.clear()
-    val first = Similarity.lshFidelityReport(e).collect().toSeq
-    val afterFirst = ProbeCache.size
-    assert(afterFirst >= 6, s"expected the six fidelity artifacts cached, got $afterFirst")
-    // a refresh over a semantically-equal input must hit every entry
-    // (no growth) and report BIT-IDENTICAL rows — and the hit counter the
-    // bench's `memoized` marker brackets must advance
-    val hits0 = ProbeCache.hits
-    val second = Similarity.lshFidelityReport(Tables.embeddings(spark, sfDir)).collect().toSeq
-    assert(ProbeCache.size == afterFirst, "refresh over same input must not rebuild artifacts")
-    assert(ProbeCache.hits > hits0, "a memoized refresh must register on the hit counter")
-    assert(second == first)
-    // a DIFFERENT probe parameterization (tighter cap → different bounded
-    // plan) must MISS — memoization never crosses input semantics
-    Similarity.lshFidelityReport(e, maxVectors = 100L).collect()
-    assert(ProbeCache.size > afterFirst, "different probe cap must rebuild, not reuse")
-    val recall = Similarity.annRecallReport(e, 20, 5).collect().toSeq
-    val afterRecall = ProbeCache.size
-    assert(Similarity.annRecallReport(e, 20, 5).collect().toSeq == recall)
-    assert(ProbeCache.size == afterRecall)
-    ProbeCache.clear()
-    assert(ProbeCache.size == 0)
-    // artifacts rebuild cleanly after a clear (released checkpoints are
-    // never referenced again)
-    assert(Similarity.lshFidelityReport(e).collect().toSeq == first)
-    ProbeCache.clear()
-  }
-
   test("pqTopK: recall@5 floor vs brute force; partitioning-invariant; coarser codes degrade") {
     val e = Tables.embeddings(spark, sfDir)
     val exact = Similarity.cosineTopK(e, nQueries = 20, k = 1).collect()
