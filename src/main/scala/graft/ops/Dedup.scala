@@ -438,21 +438,12 @@ object Dedup {
 
   /** Duplicate CLUSTERS: connected components over the near-dup pair graph,
     * labeled by the component's minimum doc_id — the end-product a dedup
-    * pipeline keys "keep one per cluster" on.
-    *
-    * Label propagation to fixpoint: every node starts as its own label;
-    * each round joins labels across edges (both directions) and takes the
-    * min. Rounds needed = graph diameter (near-dup components are tiny —
-    * chains of copies), each round one shuffle join; the driver only sees
-    * a changed-row count per round. This is the standard scalable
-    * connected-components on Spark (no GraphX dependency).
+    * pipeline keys "keep one per cluster" on. The components come from
+    * [[clusterPairs]] over the [[jaccardPairs]] graph.
     */
   def dupClusters(documents: DataFrame, threshold: Double = 0.5,
-                  maxIters: Int = 10,
-                  smallGraphEdgeCap: Long = 100000L,
                   sorted: Boolean = true): DataFrame =
-    clusterPairs(jaccardPairs(documents, threshold, sorted = false),
-      maxIters, smallGraphEdgeCap, sorted)
+    clusterPairs(jaccardPairs(documents, threshold, sorted = false), sorted)
 
   /** Leakage-safe train/validation split: the md5-bucket assignment of
     * [[Text.trainValSplit]] keyed by the NEAR-DUP CLUSTER root instead of
@@ -463,16 +454,14 @@ object Dedup {
     * contamination). Singletons (no near-dup) fall back to their own id,
     * so on a dup-free corpus this IS trainValSplit (spec-asserted).
     *
-    * Scale shape: [[dupClusters]]' bucketed LSH pair generation + label
-    * propagation, one left join back to the corpus, one row-local hash —
-    * nothing beyond the dedup pass a curation pipeline already runs.
+    * Scale shape: [[dupClusters]]' bucketed LSH pair generation + its
+    * connected components, one left join back to the corpus, one
+    * row-local hash — nothing beyond the dedup pass a curation pipeline
+    * already runs.
     */
   def clusterSafeSplit(documents: DataFrame, threshold: Double = 0.5,
-                       valHexDigits: String = "01234",
-                       maxIters: Int = 10,
-                       smallGraphEdgeCap: Long = 100000L): DataFrame = {
-    val clusters = dupClusters(documents, threshold, maxIters,
-      smallGraphEdgeCap, sorted = false)
+                       valHexDigits: String = "01234"): DataFrame = {
+    val clusters = dupClusters(documents, threshold, sorted = false)
     documents.select(col("doc_id"))
       .join(clusters, Seq("doc_id"), "left")
       .withColumn("cluster_root", coalesce(col("cluster_id"), col("doc_id")))
@@ -486,83 +475,35 @@ object Dedup {
     * [[dupClusters]], shared by any candidate generator (n-gram Jaccard,
     * embedding cosine, SimHash) so every dedup family gets the same
     * cluster semantics: component label = minimum member id.
+    *
+    * Up to [[SmallGraphEdgeCap]] edges the components come from a
+    * driver-side union-find over the collected pairs (near-dup graphs are
+    * tiny relative to the corpus: edges grow with duplicates, not rows).
+    * The cap bounds driver memory. Past it the pair graph goes to
+    * [[Graph.connectedComponents]], whose pointer-jumped min propagation
+    * needs O(log diameter) rounds. Both label a component by its minimum
+    * id; a self-pair (id_a = id_b) carries no edge past the cap.
     */
-  def clusterPairs(pairGraph: DataFrame,
-                   maxIters: Int = 10,
-                   smallGraphEdgeCap: Long = 100000L,
-                   sorted: Boolean = true): DataFrame = {
-    // localCheckpoint truncates lineage: each round's plan starts from the
-    // materialized previous labels instead of re-analyzing the whole
-    // iterative chain (which otherwise grows per round)
+  def clusterPairs(pairGraph: DataFrame, sorted: Boolean = true): DataFrame = {
     val pairs = pairGraph.select("id_a", "id_b").localCheckpoint()
-    val nEdges = pairs.count() // free — pairs just materialized
-    // SMALL-GRAPH FAST PATH: near-dup pair graphs are tiny relative to the
-    // corpus (the fixture's 1.5k-doc corpus yields ~25 edges; even a dirty
-    // 100 TB corpus yields edges ∝ duplicates, not rows). Below a bounded
-    // cap, driver-side union-find replaces 2-4 shuffle rounds of label
-    // propagation — the same explicitly-capped-driver-work pattern as
-    // maxDriverKeys and broadcast thresholds. Past the cap the distributed
-    // label-propagation loop below engages unchanged.
-    if (nEdges <= smallGraphEdgeCap) return smallGraphClusters(pairs)
-    // size the iteration's partitioning from the measured pair count
-    // (Helpers.iterParts — slot-ceilinged, not a literal 32): spinning 32
-    // shuffle partitions per round for a few hundred edges is pure
-    // scheduler overhead; on a large cluster the formula widens with both
-    // the pair graph and the scheduler slots
-    val nParts = Helpers.iterParts(pairs, nEdges)
-    val edges = pairs
-      .unionByName(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .repartition(nParts, col("id_a"))
-      .localCheckpoint()
-    // edges is now materialized (localCheckpoint is eager for Datasets) and
-    // lineage-truncated — the pairs checkpoint is fully superseded; release
-    // its blocks NOW instead of waiting for a GC-triggered ContextCleaner
-    // sweep (over an iterative session the un-released rounds otherwise
-    // accumulate as resident storage)
+    if (pairs.count() <= SmallGraphEdgeCap) return smallGraphClusters(pairs)
+    val out = Graph.connectedComponents(
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst")), sorted = false)
+      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
+    // the labels are checkpointed inside connectedComponents; the pairs
+    // checkpoint is superseded
     org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(pairs)
-    // seed labels with min(id, min neighbor) — one propagation round folded
-    // into initialization (cliques, the common near-dup shape, converge
-    // immediately; chains still iterate)
-    var labels = edges.groupBy(col("id_a").as("id"))
-      .agg(least(col("id_a"), min(col("id_b"))).as("label"))
-      .repartition(nParts, col("id"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val viaNeighbors = edges
-        .join(labels.select(col("id").as("id_b"), col("label").as("nl")), "id_b")
-        .groupBy(col("id_a").as("id")).agg(min("nl").as("nl"))
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("label").as("_old"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .localCheckpoint()
-      val changed = next.filter(col("label") =!= col("_old")).count()
-      // next is checkpointed (lineage-free) — the previous round's labels
-      // checkpoint is superseded; release it so resident storage stays at
-      // ONE labels generation regardless of round count
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(labels)
-      labels = next.select("id", "label")
-      converged = changed == 0
-      i += 1
-    }
-    // edges served its last join; only the final labels checkpoint (the
-    // returned frame's backing store) stays resident
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    // a silent stop mid-propagation would return WRONG cluster ids for any
-    // component with diameter > maxIters — fail loudly instead (rounds are
-    // cheap on the pair graph; callers raise maxIters, never ignore this)
-    if (!converged) throw new IllegalStateException(
-      s"dupClusters did not converge within $maxIters label-propagation rounds — " +
-        "a duplicate chain is longer than the iteration budget; raise maxIters")
-    val out = labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
     if (sorted) out.orderBy("doc_id") else out
   }
+
+  /** Edge count up to which [[clusterPairs]] collects the pair graph to
+    * the driver. */
+  private val SmallGraphEdgeCap = 100000L
 
   /** Driver-side union-find over a capped edge list — exact, deterministic
     * (cluster id = component minimum, independent of edge order), and free
     * of per-round shuffle barriers. Only reachable under
-    * `smallGraphEdgeCap` from [[dupClusters]].
+    * [[SmallGraphEdgeCap]] from [[clusterPairs]].
     */
   private def smallGraphClusters(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
@@ -641,7 +582,7 @@ object Dedup {
 
   /** Keep-list from PRECOMPUTED clusters: a pipeline that materializes
     * [[dupClusters]] (to keep cluster labels) and also needs the keep-list
-    * must not re-run shingling + pair generation + label propagation a
+    * must not re-run shingling + pair generation + connected components a
     * second time — pass the clusters in and this is one anti-join.
     */
   def dedupKeepList(documents: DataFrame, clusters: DataFrame): DataFrame = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Link-analysis surface: damped PageRank over an edge list — the graph
-  * primitive next to connected components ([[Dedup.clusterPairs]]). A
+  * primitive next to connected components ([[connectedComponents]]). A
   * curation pipeline uses it to propagate authority/quality through a
   * similarity or co-occurrence graph ([[Similarity.knnGraph]] edges, a
   * citation/link graph, the co-purchase graph the registered query builds).
@@ -46,6 +46,11 @@ object Graph {
     (edges, nParts)
   }
 
+  /** Rounds between the rank checkpoints of [[pageRank]] and
+    * [[personalizedPageRank]]; chosen in PERF_HISTORY r5 and its
+    * re-sweep (5 read the same as 3). */
+  private val RankCheckpointEvery = 3
+
   /** Damped PageRank, `iters` fixed synchronous iterations:
     * r⁰ = 1/n;  r^{t+1}(v) = (1−d)/n + d·(Σ_{u→v} r^t(u)/outdeg(u) + D^t/n)
     * where D^t is the total rank on DANGLING nodes (no out-edges) —
@@ -61,15 +66,14 @@ object Graph {
     * co-partitioned on src) + one aggregate keyed by dst — the same
     * two-exchange round as label propagation, with superseded checkpoint
     * blocks released each round so resident storage stays at one ranks
-    * generation ([[Dedup.clusterPairs]] hygiene). The node count and
+    * generation ([[connectedComponents]] hygiene). The node count and
     * out-degrees are computed once; `n` is a driver scalar (one
     * construction job, the documented [[Search.bm25]] trade).
     */
   def pageRank(edgeList: DataFrame, iters: Int = 10,
                damping: Double = 0.85, sorted: Boolean = true,
-               checkpointEvery: Int = 3,
                weightCol: Option[String] = None): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1 && checkpointEvery >= 1)
+    require(iters >= 1 && damping > 0 && damping < 1)
     // weighted form: contribution_u→v = r_u · w_uv / W_u with W_u the
     // weighted out-degree. The unweighted path runs THROUGH the weighted
     // arithmetic with w ≡ 1: r·1.0/W is bit-identical to r/W and
@@ -104,14 +108,14 @@ object Graph {
     // both constants derived with the same double ops the oracle writes:
     // 1/n and (1 - d)/n — identical IEEE sequences on both engines
     val teleport = (1.0 - damping) / n
-    // checkpoint every `checkpointEvery` rounds, not every round: each
+    // checkpoint every `RankCheckpointEvery` rounds, not every round: each
     // localCheckpoint is an eager job, and on a small graph those fixed
     // materializations dominate wall clock (measured 10 → ~4 jobs cutting
     // the registered query ~3×). Lineage depth between checkpoints stays
-    // bounded at `checkpointEvery` join+agg rounds. The FINAL iteration
+    // bounded at `RankCheckpointEvery` join+agg rounds. The FINAL iteration
     // always checkpoints so edges/nodes (released below) are never in the
     // returned frame's lineage; only that last checkpoint stays resident
-    // (the clusterPairs residency contract).
+    // (the connectedComponents residency contract).
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     var lastCkpt: Option[DataFrame] = None
     for (i <- 1 to iters) {
@@ -144,7 +148,7 @@ object Graph {
               (coalesce(col("csum").cast("double"), lit(0.0)) +
                 col("dmass") / lit(n))).as("rank"))
       }
-      if (i % checkpointEvery == 0 || i == iters) {
+      if (i % RankCheckpointEvery == 0 || i == iters) {
         val ck = plan.localCheckpoint()
         lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
         lastCkpt = Some(ck)
@@ -201,9 +205,8 @@ object Graph {
     */
   def personalizedPageRank(edgeList: DataFrame, seeds: DataFrame, iters: Int = 10,
                            damping: Double = 0.85, sorted: Boolean = true,
-                           checkpointEvery: Int = 3,
                            weightCol: Option[String] = None): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1 && checkpointEvery >= 1)
+    require(iters >= 1 && damping > 0 && damping < 1)
     val e0 = weightCol match {
       case Some(w) =>
         edgeList.select(col("src").cast("long"), col("dst").cast("long"),
@@ -266,7 +269,7 @@ object Graph {
               (coalesce(col("csum").cast("double"), lit(0.0)) +
                 col("dmass") * col("_s"))).as("rank"))
       }
-      if (i % checkpointEvery == 0 || i == iters) {
+      if (i % RankCheckpointEvery == 0 || i == iters) {
         val ck = plan.localCheckpoint()
         lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
         lastCkpt = Some(ck)
@@ -447,7 +450,7 @@ object Graph {
     * Scale shape: identical to [[pageRank]] — edges deduped,
     * lineage-truncated, hash-partitioned once; each half-step is one
     * co-partitioned join + one keyed aggregate; norms are 1-row
-    * broadcasts. Checkpoints default to EVERY iteration, not pageRank's
+    * broadcasts. Checkpoints run EVERY iteration, not pageRank's
     * batched 3: a HITS round embeds its predecessor ~4× (two score
     * subtrees × two norm broadcasts), so an un-truncated window of k
     * rounds executes ~4^k nested broadcast jobs — measured 2× wall at
@@ -457,9 +460,9 @@ object Graph {
     * costs nothing in the joins; the final output densifies with COALESCE
     * over the node set.
     */
-  def hits(edgeList: DataFrame, iters: Int = 10, sorted: Boolean = true,
-           checkpointEvery: Int = 1): DataFrame = {
-    require(iters >= 1 && checkpointEvery >= 1)
+  def hits(edgeList: DataFrame, iters: Int = 10,
+           sorted: Boolean = true): DataFrame = {
+    require(iters >= 1)
     val e0 = edgeList.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct()
     val (edges, nParts) = materializeEdges(e0, "src")
@@ -491,20 +494,12 @@ object Graph {
       val hPlan = uh.crossJoin(broadcast(nh))
         .select(col("node"), (col("uh") / col("nh")).as("h"))
       // only h feeds the next round — a is recomputed through h's plan, so
-      // the window checkpoint materializes ONE frame; the final iteration
+      // each round's checkpoint materializes ONE frame; the final iteration
       // checkpoints both (a is the other half of the output)
-      if (i == iters) {
-        val ckA = aPlan.localCheckpoint()
-        val ckH = hPlan.localCheckpoint()
-        lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-        lastCkpt = Seq(ckA, ckH)
-        auths = ckA; hubs = ckH
-      } else if (i % checkpointEvery == 0) {
-        val ckH = hPlan.localCheckpoint()
-        lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-        lastCkpt = Seq(ckH)
-        hubs = ckH
-      } else hubs = hPlan
+      if (i == iters) auths = aPlan.localCheckpoint()
+      hubs = hPlan.localCheckpoint()
+      lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
+      lastCkpt = if (i == iters) Seq(auths, hubs) else Seq(hubs)
     }
     org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
     org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(nodes)
@@ -781,9 +776,10 @@ object Graph {
     * Scale shape: each round is two semi-joins (edge endpoints against the
     * survivor set) + one map-side-combining degree aggregate — all keyed
     * shuffles on the edge partitioning established once up front; the
-    * driver sees one survivor COUNT per round (the [[Dedup.clusterPairs]]
-    * convergence-probe pattern) and the loop THROWS past `maxIters`
-    * rather than silently returning a non-fixpoint. Peel depth, not
+    * driver sees one survivor COUNT per round (the
+    * [[connectedComponents]] convergence-probe pattern) and the loop
+    * THROWS past `maxIters` rather than silently returning a
+    * non-fixpoint. Peel depth, not
     * diameter, bounds the rounds; the registered basket query converges
     * in 2-3 rounds at every fixture scale (measured), and the generated
     * oracle unrolls a fixed 10 — extra rounds past the fixpoint are
@@ -1584,11 +1580,8 @@ object Graph {
   /** The triangle LIST of the graph: one `(u, x, y)` row per triangle of
     * the canonical undirected edge set, each triangle exactly once (`u`
     * its (degree, id)-minimum corner; row order undefined — sort or
-    * canonicalize downstream). This is the shared enumeration the derived
-    * profiles consume: a pipeline that wants per-node counts
-    * ([[triangleProfile]]) AND per-edge embeddedness
-    * ([[edgeEmbeddedness]]) should materialize this frame once and pass
-    * it to both.
+    * canonicalize downstream). This is the enumeration the derived
+    * profiles ([[triangleProfile]], [[edgeEmbeddedness]]) run inside.
     *
     * Scale shape: identical to [[triangleStats]] (same joins, no final
     * aggregate) — every step a keyed shuffle, wedge volume bounded
@@ -1606,21 +1599,17 @@ object Graph {
     * find spam cliques (lcc ≈ 1 at moderate degree) and bridge/hub nodes
     * (lcc ≈ 0 at high degree).
     *
-    * `corners` optionally supplies a pre-enumerated [[triangleCorners]]
-    * frame OF THE SAME edge list (enumerate triangles once, derive every
-    * profile); when absent the enumeration runs here. Scale shape: corner
-    * explode is row-local ×3, then one combining count keyed by node + one
-    * left join onto the degree frame — nothing beyond the enumeration
-    * itself.
+    * Scale shape: the triangle enumeration, a row-local ×3 corner
+    * explode, then one combining count keyed by node + one left join
+    * onto the degree frame — nothing beyond the enumeration itself.
     *
     * Determinism: counts are exact longs; lcc is one double expression
     * replayed identically by the oracle (round(·, 6) discipline).
     */
-  def triangleProfile(edgeList: DataFrame,
-                      corners: Option[DataFrame] = None): DataFrame = {
+  def triangleProfile(edgeList: DataFrame): DataFrame = {
     val e = canonicalEdges(edgeList).localCheckpoint()
     val deg = degreesOf(e)
-    val tri = corners.getOrElse(cornersFrom(e, deg))
+    val tri = cornersFrom(e, deg)
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
     val d = col("deg").cast("double")
@@ -1647,10 +1636,8 @@ object Graph {
     * explode each triangle into its three canonicalized edges, one
     * combining count keyed by the pair, one left join back onto the edge
     * set (triangle-free edges keep count 0), two keyed degree joins.
-    * `corners` as in [[triangleProfile]].
     */
-  def edgeEmbeddedness(edgeList: DataFrame,
-                       corners: Option[DataFrame] = None): DataFrame = {
+  def edgeEmbeddedness(edgeList: DataFrame): DataFrame = {
     // Edges and degree table materialized EAGERLY (round 18): the two
     // aliased degree lookups below plan as two broadcast exchanges, and
     // broadcast subtrees execute on concurrent threads at the start of the
@@ -1663,7 +1650,7 @@ object Graph {
     val deg = degreesOf(e).localCheckpoint()
     def cedge(p: Column, q: Column): Column =
       struct(least(p, q).as("a"), greatest(p, q).as("b"))
-    val common = corners.getOrElse(cornersFrom(e, deg))
+    val common = cornersFrom(e, deg)
       .select(explode(array(
         cedge(col("u"), col("x")),
         cedge(col("u"), col("y")),

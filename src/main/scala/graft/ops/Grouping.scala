@@ -25,24 +25,15 @@ object Grouping {
       .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
 
-  /** Exact + approximate distinct counts side by side. The approx column is
-    * not oracle-comparable (HLL estimate); the exact one is. Registered
-    * query emits only the exact column; bench exercises the approx path.
-    */
+  /** Exact distinct customers per order status. */
   def distinctCounts(orders: DataFrame): DataFrame =
     orders.groupBy("o_orderstatus")
       .agg(countDistinct(col("o_custkey")).as("n_cust"))
       .orderBy("o_orderstatus")
 
-  def approxDistinctCounts(orders: DataFrame): DataFrame =
-    orders.groupBy("o_orderstatus")
-      .agg(approx_count_distinct(col("o_custkey"), 0.01).as("n_cust_approx"))
-      .orderBy("o_orderstatus")
-
-  /** The registered, oracle-anchored form of [[approxDistinctCounts]] (the
-    * q_hll_rollup exact-bound-report pattern): exact distinct count, the
-    * declared kσ·rsd relative-error bound, and whether the HLL++ estimate
-    * lands inside it. The estimate itself stays OUT of the output, so the
+  /** HLL++ distinct counts in the q_hll_rollup exact-bound-report
+    * pattern: exact distinct count, the declared kσ·rsd relative-error
+    * bound, and whether the HLL++ estimate lands inside it. The estimate itself stays OUT of the output, so the
     * DuckDB oracle pins the exact counts and `within_bound = TRUE` — an
     * out-of-bound sketch becomes a hash mismatch, not an unverifiable
     * rows-only row. One aggregate computes both counts side by side.
@@ -85,9 +76,9 @@ object Grouping {
       .orderBy("o_orderpriority")
 
   /** Exact interpolated percentiles per group (Spark `percentile` ==
-    * DuckDB `quantile_cont` semantics). The 100 TB variant swaps in
-    * `percentile_approx` (t-digest sketch, constant memory) — registered
-    * without an oracle since sketches are estimates.
+    * DuckDB `quantile_cont` semantics). The 100 TB variant is the
+    * `percentile_approx` t-digest sketch, checked by
+    * [[approxPercentileReport]].
     */
   def percentiles(orders: DataFrame): DataFrame =
     orders.groupBy("o_orderstatus")
@@ -96,19 +87,9 @@ object Grouping {
         round(expr("percentile(o_totalprice, 0.9)"), 4).as("p90"))
       .orderBy("o_orderstatus")
 
-  /** Sketch-based percentiles (t-digest `percentile_approx`) — the 100 TB
-    * path next to [[percentiles]]: constant memory per group regardless of
-    * row count. Estimate => rows-only check.
-    */
-  def approxPercentiles(orders: DataFrame): DataFrame =
-    orders.groupBy("o_orderstatus")
-      .agg(
-        round(expr("percentile_approx(o_totalprice, 0.5, 10000)"), 4).as("p50_approx"),
-        round(expr("percentile_approx(o_totalprice, 0.9, 10000)"), 4).as("p90_approx"))
-      .orderBy("o_orderstatus")
-
-  /** The registered, oracle-anchored form of [[approxPercentiles]]: exact
-    * interpolated percentiles next to RANK-accuracy checks on the t-digest
+  /** Sketch-based percentiles (t-digest `percentile_approx`, constant
+    * memory per group), oracle-anchored: exact interpolated percentiles
+    * next to RANK-accuracy checks on the t-digest
     * values. `percentile_approx(p, acc)` guarantees the returned element's
     * rank is within n/acc of the p-th rank; the check verifies the rank
     * INTERVAL of the approx value ([count(< v)+1, count(<= v)] — ties give

@@ -4,11 +4,10 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Multimodal-column plumbing (driver mandate: image/audio/video as opaque
-  * binary columns with typed metadata; decode/feature-extract/resize/
-  * frame-sample as batched partition-level transforms).
+/** Multimodal-column plumbing: image/audio/video as opaque binary columns
+  * with typed metadata; decode and feature extraction as batched
+  * partition-level transforms.
   *
   * All three media kinds decode through REAL codecs for public,
   * dependency-free formats: [[PpmCodec]] (binary PPM/P6 images, netpbm),
@@ -26,25 +25,11 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Typed metadata carried next to every opaque binary payload. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("content", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("n_channels", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("n_frames", IntegerType),
-      StructField("duration_ms", LongType))))))
-
   final case class MediaMeta(width: Int, height: Int, n_channels: Int,
                              sample_rate: Int, n_frames: Int, duration_ms: Long)
   final case class MediaRow(media_id: Long, kind: String, content: Array[Byte], meta: MediaMeta)
   final case class MediaFeatures(media_id: Long, kind: String, n_bytes: Long,
                                  content_hash: Long, features: Array[Float])
-  final case class FrameRow(media_id: Long, frame_idx: Int, frame_hash: Long)
 
   /** Real decoder for the binary PPM (P6) image format — public netpbm
     * spec, zero dependencies: header `P6 <w> <h> <maxval>` (whitespace
@@ -529,9 +514,8 @@ object Multimodal {
       out
     }
 
-    /** Stand-in for video frame decode: returns a per-frame hash for the
-      * sampled frame indices (a real codec would return pixel buffers).
-      */
+    /** 64-bit payload hash seeded by `frameIdx` ([[extractFeatures]]'
+      * `content_hash` is frame 0). */
     def frameHash(bytes: Array[Byte], frameIdx: Int): Long = {
       var h = 1125899906842597L ^ frameIdx.toLong
       var i = 0
@@ -645,31 +629,6 @@ object Multimodal {
         }
       }
     }.toDF()
-  }
-
-  /** Frame sampling: every `stride`-th frame of each video, exploded to one
-    * row per sampled frame — the shape a caption/filter model consumes.
-    */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int): Dataset[FrameRow] = {
-    import media.sparkSession.implicits._
-    media.filter(_.kind == "video").flatMap { r =>
-      (0 until r.meta.n_frames by stride).map(i =>
-        FrameRow(r.media_id, i, ByteStatCodec.frameHash(r.content, i)))
-    }
-  }
-
-  /** "Resize" metadata transform (pure column math — no decode needed):
-    * target dimensions preserving aspect ratio, as a pipeline would compute
-    * before batching the actual resize into the codec step.
-    */
-  def planResize(media: DataFrame, maxSide: Int): DataFrame = {
-    val scale = least(
-      lit(maxSide) / col("meta.width").cast("double"),
-      lit(maxSide) / col("meta.height").cast("double"), lit(1.0))
-    media.select(col("media_id"),
-      col("meta.width").as("width"), col("meta.height").as("height"),
-      ceil(col("meta.width") * scale).cast("int").as("target_width"),
-      ceil(col("meta.height") * scale).cast("int").as("target_height"))
   }
 
   final case class ImageHash(media_id: Long, ahash: Long)

@@ -444,14 +444,6 @@ object Similarity {
        |SELECT qid, cid, round(sim, 6) AS sim, CAST(rn AS BIGINT) AS rn FROM r
        |WHERE rn <= $k ORDER BY qid, rn""".stripMargin
 
-  /** Random-hyperplane signature: bit i = sign(v · plane_i). Vectors with
-    * small cosine distance agree on most bits (SimHash for embeddings).
-    */
-  def hyperplaneSignature(v: Column, nPlanes: Int, dim: Int): Column =
-    planes(nPlanes, dim).zipWithIndex.map { case (p, i) =>
-      when(dot(v, typedlit(p)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** Corpus-adaptive LSH signature width: the bits-per-table that keeps
     * bucket-join candidate volume near-LINEAR as the corpus grows past the
     * calibration size `nRef`. `b0` bits are calibrated for ~nRef vectors;
@@ -1051,12 +1043,9 @@ object Similarity {
     val ccEdges = edges
       .join(core.select(col("vec_id").as("id_a")), Seq("id_a"), "left_semi")
       .join(core.select(col("vec_id").as("id_b")), Seq("id_b"), "left_semi")
-    val comp =
-      if (ccEdges.isEmpty)
-        ccEdges.select(col("id_a").as("node"), col("id_a").as("comp")).limit(0)
-      else graft.ops.Graph.connectedComponents(
-        ccEdges.select(col("id_a").as("src"), col("id_b").as("dst")),
-        sorted = false)
+    val comp = graft.ops.Graph.connectedComponents(
+      ccEdges.select(col("id_a").as("src"), col("id_b").as("dst")),
+      sorted = false)
     val coreLab = core
       .join(comp.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("comp"), col("vec_id")).as("cluster_id"))
@@ -1807,7 +1796,7 @@ object Similarity {
     val bounded = embeddings.filter(col("vec_id") < maxVectors)
     val aug = withSyntheticNearDups(bounded)
     // each pair frame feeds the pair leg AND a keep-list clustering, whose
-    // label propagation runs eagerly at construction — the frame owns one
+    // connected components run eagerly at construction — the frame owns one
     // materialized copy instead of running the quadratic probe twice
     val exactPairs = cosineDupPairs(aug, 0.9, sorted = false).localCheckpoint()
     val lshPairs = cosinePairsLsh(aug, 0.9, nTables = 8, bitsPerTable = 8,

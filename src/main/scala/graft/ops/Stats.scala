@@ -633,8 +633,7 @@ object Stats {
     * quadratic form.
     */
   def paretoFrontier(df: DataFrame, xCol: String, yCol: String,
-                     buckets: Int = 10000,
-                     smallCutoff: Long = 65536L): DataFrame = {
+                     buckets: Int = 10000): DataFrame = {
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
     val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("x"), col(yCol).as("y"))
@@ -649,21 +648,6 @@ object Stats {
       .agg(max(struct(col("y"), col("n_rows"))).as("_m"))
       .select(col("x"), col("_m.y").as("y"), col("_m.n_rows").as("n_rows"))
       .localCheckpoint()
-    // MEASURED-bounded fast path (the budgetSelect boundary-bucket
-    // philosophy): the checkpoint count is free, and when the per-x table
-    // is provably ≤ smallCutoff rows the one-task running-max window over
-    // it is bounded by measurement, not hope — skipping the bucket-offset
-    // machinery's extra jobs. The hazard the bucketed path exists for is
-    // an UNBOUNDED distinct-x domain; past the cutoff it engages
-    // unchanged (equality across both paths spec-asserted).
-    if (perX.count() <= smallCutoff) {
-      val w = Window.orderBy(col("x").asc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      return perX.withColumn("_prevMax", max(col("y")).over(w))
-        .filter(col("_prevMax").isNull || col("y") > col("_prevMax"))
-        .select(col("x"), col("y"), col("n_rows"))
-        .orderBy("x")
-    }
     // bucket assignment: double cast is monotone (non-strictly) in x, and
     // the rule only needs monotonicity — ties at bucket edges stay exact
     // because the within-bucket window orders by true x
@@ -806,12 +790,12 @@ object Stats {
     * cumulative window, a single-task sort of the whole entity table):
     * the 3-row summary never needs per-entity ranks. Entities with equal
     * value contribute identically, so only (value, count) matters —
-    * one hash aggregate to the distinct-value table, a bucketed
-    * two-level prefix sum for each value group's exact cumulative-before
-    * (per-VALUE-RANGE-BUCKET windows partitioned by bucket + one window
-    * over the ≤ `buckets`-row bucket aggregate, all order-free exact
-    * decimal — the [[graft.ops.Text.budgetSelect]] bucket-threshold
-    * shape, fully in-engine), and a CLOSED-FORM split of each value
+    * one hash aggregate to the distinct-value table, each value group's
+    * exact cumulative-before from the bucketed prefix engine
+    * ([[prefixSumsAsc]]: per-VALUE-RANGE-BUCKET windows partitioned by
+    * bucket + one window over the ≤ `buckets`-row bucket aggregate, all
+    * order-free exact decimal; the descending prefix is the total minus
+    * the ascending inclusive one), and a CLOSED-FORM split of each value
     * group across the two thresholds: the k-th entity of a group has
     * share round((B + k·v)/tot, 9), monotone in k, so the class-A count
     * is the largest qualifying k — located by BINARY SEARCH on the exact
@@ -826,8 +810,7 @@ object Stats {
     */
   def abcClasses(entities: DataFrame, valueCol: String, idCol: String,
                  aShare: Double = 0.8, bShare: Double = 0.95,
-                 buckets: Int = 10000,
-                 smallCutoff: Long = 262144L): DataFrame = {
+                 buckets: Int = 10000): DataFrame = {
     require(aShare > 0 && aShare < bShare && bShare < 1,
       s"need 0 < aShare < bShare < 1, got $aShare/$bShare")
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
@@ -837,52 +820,26 @@ object Stats {
       .otherwise(raise_error(format_string(
         "abcClasses: negative value %s — ABC contribution analysis needs " +
           "non-negative values; filter or clamp upstream", v0)))
-    // ONE pass over the entity table; everything downstream (the mm/tot/
-    // nn broadcast builds and the main path) reads the distinct-value
-    // aggregate.
+    // ONE pass over the entity table; everything downstream (the bucket
+    // bounds, the tot/nn broadcast and the main path) reads the
+    // distinct-value aggregate.
     val perV = entities.select(guarded.as("_v"))
       .groupBy("_v").agg(count(lit(1)).as("_cnt"))
       .localCheckpoint()
-    val nonNull = perV.filter(col("_v").isNotNull)
     val grpTotal = (col("_v") * col("_cnt")).cast(dec38)
-    // ONE 1-row broadcast carries the total, the value range (bucket
-    // bounds — the double cast is monotone, and exactness never depends
-    // on it: the prefix sums below are exact decimals composed
-    // order-free) and the null-entity count, instead of three separate
-    // broadcast builds each costing a job over perV
+    // ONE 1-row broadcast carries the total and the null-entity count
     val stats = perV.agg(
       sum(when(col("_v").isNotNull, grpTotal)).cast(dec38).as("_tot"),
-      min(col("_v").cast("double")).as("_lo"),
-      max(col("_v").cast("double")).as("_hi"),
       coalesce(sum(when(col("_v").isNull, col("_cnt"))), lit(0L)).as("_nn"))
-    // MEASURED-small fast path (the paretoFrontier/prefixSumsAsc rule):
-    // the checkpoint count is free, and a <= smallCutoff-row one-task
-    // window over the DISTINCT-VALUE table is bounded by measurement —
-    // the bucket machinery exists for unbounded value domains
-    val withCum = if (perV.count() <= smallCutoff) {
-      val w = Window.orderBy(col("_v").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      nonNull.crossJoin(broadcast(stats))
-        .drop("_lo", "_hi")
-        .withColumn("_B",
-          coalesce(sum(grpTotal).over(w), lit(0).cast(dec38)).cast(dec38))
-    } else {
-      val width = greatest((col("_hi") - col("_lo")) / buckets, lit(1e-300))
-      val bucketed = nonNull.crossJoin(broadcast(stats))
-        .withColumn("_b", least(
-          floor((col("_hi") - col("_v").cast("double")) / width),
-          lit(buckets.toLong)).cast("long"))
-        .drop("_lo", "_hi")
-      val perBucket = bucketed.groupBy("_b").agg(sum(grpTotal).as("_bt"))
-      val wb = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = perBucket.withColumn("_off", sum(col("_bt")).over(wb))
-        .select(col("_b"), col("_off"))
-      val wi = Window.partitionBy("_b").orderBy(col("_v").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      bucketed.join(broadcast(offsets), "_b")
-        .withColumn("_B", (coalesce(col("_off"), lit(0).cast(dec38)) +
-          coalesce(sum(grpTotal).over(wi), lit(0).cast(dec38))).cast(dec38))
-    }
+    // value ranked ahead of the group (DESCENDING order) = total −
+    // (ascending exclusive prefix + own group total): exact in DECIMAL,
+    // so the ascending prefix engine serves the descending ranking
+    val withCum = prefixSumsAsc(
+        perV.filter(col("_v").isNotNull).withColumn("_gt", grpTotal),
+        Seq("_gt"), buckets)
+      .crossJoin(broadcast(stats))
+      .withColumn("_B",
+        (col("_tot") - (col("_pre_gt") + col("_gt"))).cast(dec38))
     // closed-form class split of one value group: share of the group's
     // k-th entity replayed EXACTLY as the ranked form computed it
     val totD = col("_tot").cast("double")
@@ -929,10 +886,10 @@ object Stats {
       sum(kDec(col("_kb") - col("_ka")) * col("_v")).cast(dec38).as("vb"),
       sum(col("_cnt") - col("_kb")).as("nc"),
       sum(kDec(col("_cnt") - col("_kb")) * col("_v")).cast(dec38).as("vc"))
-    // the 1-row stats broadcast is reused (same exchange as the bucket
-    // bounds), so the total and null count survive even an all-null or
-    // empty value table, where agg1's sums are null
-    agg1.crossJoin(broadcast(stats.select(col("_tot"), col("_nn"))))
+    // the 1-row stats broadcast is reused, so the total and null count
+    // survive even an all-null or empty value table, where agg1's sums
+    // are null
+    agg1.crossJoin(broadcast(stats))
       .select(col("_tot"), explode(array(
         struct(lit("A").as("c"), col("na").as("n"), col("va").as("v")),
         struct(lit("B").as("c"), col("nb").as("n"), col("vb").as("v")),
@@ -1287,16 +1244,12 @@ object Stats {
     * ASCENDING `_v` order, without a full-table window. `perV` must be
     * materialized (localCheckpoint) — the bucket-bound and bucket-offset
     * broadcast inputs build on parallel threads (the [[abcClasses]]
-    * finding). When the table is MEASURED ≤ `smallCutoff` rows, one
-    * bounded window replaces the bucket machinery (the
-    * [[paretoFrontier]] fast path). Sum columns must be longs; output
-    * adds `_pre<c>` per input column.
+    * finding). Sum columns must be longs or decimals (order-free exact
+    * sums); output adds `_pre<c>` per input column.
     */
   private def prefixSumsAsc(perV: DataFrame, sumCols: Seq[String],
                             buckets: Int = 10000,
-                            smallCutoff: Long = 262144L,
-                            partCols: Seq[String] = Nil,
-                            knownCount: Option[Long] = None): DataFrame = {
+                            partCols: Seq[String] = Nil): DataFrame = {
     // `partCols` (round 16, the grouped-test extension): prefix sums
     // restart per partition-key combination — every window below gains
     // the partition columns, the bucket bounds/offsets become per-group
@@ -1309,17 +1262,6 @@ object Stats {
     // column would blow the broadcast build; callers (mannWhitneyUBy /
     // ksTestBy) state the same bound on their byCol.
     val pc = partCols.map(col)
-    // `knownCount`: a caller that already counted the checkpointed table
-    // for its own sizing decision (spearmanCorr's broadcast test) passes
-    // the number in — the recount was one redundant scheduler job per
-    // call on a path the job probe reads as floor-bound
-    if (knownCount.getOrElse(perV.count()) <= smallCutoff) {
-      val w = Window.partitionBy(pc: _*).orderBy(col("_v").asc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      return sumCols.foldLeft(perV) { (d, c) =>
-        d.withColumn(s"_pre$c", coalesce(sum(col(c)).over(w), lit(0L)))
-      }
-    }
     val mmAggs = min(col("_v").cast("double")).as("_lo") ::
       max(col("_v").cast("double")).as("_hi") :: Nil
     val mm =
@@ -1380,11 +1322,10 @@ object Stats {
     * bucketed prefix engine, one 1-row combine.
     */
   def mannWhitneyU(df: DataFrame, groupFlag: Column, valueCol: String,
-                   zCrit: Double = 1.96, buckets: Int = 10000,
-                   smallCutoff: Long = 262144L): DataFrame = {
+                   zCrit: Double = 1.96, buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
     val pre = prefixSumsAsc(cohortCounts(df, groupFlag, valueCol),
-      Seq("_ca", "_cb"), buckets, smallCutoff)
+      Seq("_ca", "_cb"), buckets)
     val t = (col("_ca") + col("_cb")).cast(dec)
     val b = (col("_pre_ca") + col("_pre_cb")).cast(dec)
     val agg = pre.agg(
@@ -1471,11 +1412,10 @@ object Stats {
     * value aggregate, bucketed prefix sums, a 1-row max.
     */
   def ksTest(df: DataFrame, groupFlag: Column, valueCol: String,
-             cAlpha: Double = 1.358, buckets: Int = 10000,
-             smallCutoff: Long = 262144L): DataFrame = {
+             cAlpha: Double = 1.358, buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
     val pre = prefixSumsAsc(cohortCounts(df, groupFlag, valueCol),
-      Seq("_ca", "_cb"), buckets, smallCutoff)
+      Seq("_ca", "_cb"), buckets)
     val agg = pre.agg(
       coalesce(sum(col("_ca")), lit(0L)).as("n_a"),
       coalesce(sum(col("_cb")), lit(0L)).as("n_b"))
@@ -1551,15 +1491,14 @@ object Stats {
     */
   def mannWhitneyUBy(df: DataFrame, byCol: String, groupFlag: Column,
                      valueCol: String, zCrit: Double = 1.96,
-                     buckets: Int = 10000,
-                     smallCutoff: Long = 262144L): DataFrame = {
+                     buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
     val perV = df.filter(col(valueCol).isNotNull && col(byCol).isNotNull)
       .groupBy(col(byCol).as("_g"), col(valueCol).as("_v"))
       .agg(sum(when(groupFlag, 1L).otherwise(0L)).as("_ca"),
         sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb"))
       .localCheckpoint()
-    val pre = prefixSumsAsc(perV, Seq("_ca", "_cb"), buckets, smallCutoff,
+    val pre = prefixSumsAsc(perV, Seq("_ca", "_cb"), buckets,
       partCols = Seq("_g"))
     val t = (col("_ca") + col("_cb")).cast(dec)
     val b = (col("_pre_ca") + col("_pre_cb")).cast(dec)
@@ -1644,15 +1583,14 @@ object Stats {
     */
   def ksTestBy(df: DataFrame, byCol: String, groupFlag: Column,
                valueCol: String, cAlpha: Double = 1.358,
-               buckets: Int = 10000,
-               smallCutoff: Long = 262144L): DataFrame = {
+               buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
     val perV = df.filter(col(valueCol).isNotNull && col(byCol).isNotNull)
       .groupBy(col(byCol).as("_g"), col(valueCol).as("_v"))
       .agg(sum(when(groupFlag, 1L).otherwise(0L)).as("_ca"),
         sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb"))
       .localCheckpoint()
-    val pre = prefixSumsAsc(perV, Seq("_ca", "_cb"), buckets, smallCutoff,
+    val pre = prefixSumsAsc(perV, Seq("_ca", "_cb"), buckets,
       partCols = Seq("_g"))
     val agg = pre.groupBy("_g").agg(
       coalesce(sum(col("_ca")), lit(0L)).as("n_a"),
@@ -1729,15 +1667,14 @@ object Stats {
     */
   def kruskalWallis(df: DataFrame, groupCol: String, valueCol: String,
                     z95: Double = 1.6448536269514722,
-                    buckets: Int = 10000,
-                    smallCutoff: Long = 262144L): DataFrame = {
+                    buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
     val perGV = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("_g"), col(valueCol).as("_v"))
       .agg(count(lit(1)).as("_c"))
       .localCheckpoint()
     val perV = perGV.groupBy("_v").agg(sum("_c").as("_t")).localCheckpoint()
-    val pre = prefixSumsAsc(perV, Seq("_t"), buckets, smallCutoff)
+    val pre = prefixSumsAsc(perV, Seq("_t"), buckets)
     val r2term = col("_c").cast(dec) *
       (lit(2).cast(dec) * col("_pre_t").cast(dec) +
         col("_t").cast(dec) + lit(1).cast(dec))
@@ -1822,6 +1759,10 @@ object Stats {
        |                FALSE) AS significant
        |FROM hh""".stripMargin
 
+  /** Distinct x values up to which [[spearmanCorr]] broadcasts its rank
+    * table into the fact-side join. */
+  private val RankBroadcastRows = 262144L
+
   /** Spearman rank correlation between two numeric columns — the
     * monotone-association readout (is doc length associated with quality
     * score? quantity with price?): Pearson correlation over tie-averaged
@@ -1852,8 +1793,7 @@ object Stats {
     * the rank attach broadcasts.
     */
   def spearmanCorr(df: DataFrame, xCol: String, yCol: String,
-                   zCrit: Double = 1.96, buckets: Int = 10000,
-                   smallCutoff: Long = 262144L): DataFrame = {
+                   zCrit: Double = 1.96, buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
     // NOT checkpointed: the two consumers (x aggregate, y aggregate)
     // each re-run a cheap narrow scan — materializing the whole fact
@@ -1865,20 +1805,15 @@ object Stats {
       col("_t").cast(dec) + lit(1).cast(dec))
     val perX = rows.groupBy(col("_x").as("_v")).agg(count(lit(1)).as("_t"))
       .localCheckpoint()
-    // ONE count of the checkpointed x-value table serves both sizing
-    // decisions below (the broadcast test here and the prefix engine's
-    // small-path cutoff via knownCount) — the second count was a
-    // redundant scheduler job on a floor-bound row (20 jobs measured)
-    val nX = perX.count()
-    val rx0 = prefixSumsAsc(perX, Seq("_t"), buckets, smallCutoff,
-      knownCount = Some(nX))
+    val rx0 = prefixSumsAsc(perX, Seq("_t"), buckets)
       .select(col("_v").as("_x"), col("_t").cast(dec).as("_tx"),
         r2Expr.as("_r2x"))
     // a MEASURED-small rank table broadcasts (the checkpoint count is
-    // free), so the fact side never shuffles for its rank lookup; a
+    // free), so the fact side never shuffles for its rank lookup; AQE
+    // could only demote this join after shuffling the fact side. A
     // high-cardinality x domain keeps the hash join (still one fewer
     // fact shuffle than the symmetric form)
-    val rx = if (nX <= smallCutoff) broadcast(rx0) else rx0
+    val rx = if (perX.count() <= RankBroadcastRows) broadcast(rx0) else rx0
     // x moments reduce over the x VALUE table — never the fact
     val xm = rx0.agg(
       coalesce(sum(col("_tx") * col("_r2x")), lit(0).cast(dec)).as("_sx"),
@@ -1891,7 +1826,7 @@ object Stats {
       .agg(count(lit(1)).as("_t"),
         sum(col("_r2x")).cast(dec).as("_sxr"))
       .localCheckpoint()
-    val preY = prefixSumsAsc(perY, Seq("_t"), buckets, smallCutoff)
+    val preY = prefixSumsAsc(perY, Seq("_t"), buckets)
       .withColumn("_r2y", r2Expr)
     val agg = preY.agg(
       coalesce(sum(col("_t")), lit(0L)).as("n"),

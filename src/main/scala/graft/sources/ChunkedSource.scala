@@ -473,7 +473,6 @@ object ChunkedSink {
     store.getOrDefault(target, Vector.empty)
   def exists(target: String): Boolean = store.containsKey(target)
   def drop(target: String): Unit = store.remove(target)
-  def clearAll(): Unit = store.clear()
 
   private[sources] def publish(target: String, rows: Vector[SinkRow],
                                truncate: Boolean): Unit =

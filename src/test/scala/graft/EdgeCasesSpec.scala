@@ -169,6 +169,7 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Text.diversityFit(emptyDocs).collect().isEmpty)
     val emptyEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Graph.pageRank(emptyEdges, iters = 2).collect().isEmpty)
+    assert(Graph.connectedComponents(emptyEdges).collect().isEmpty)
     val emptyEmb = Seq.empty[(Long, Array[Double], Int)]
       .toDF("vec_id", "embedding", "label")
     assert(Similarity.knnGraph(emptyEmb, 3).collect().isEmpty)

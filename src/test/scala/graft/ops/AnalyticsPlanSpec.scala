@@ -108,10 +108,9 @@ class AnalyticsPlanSpec extends SparkSpec {
     // the round-15 bucket-threshold rewrites: per-entity/per-pair windows
     // must be PARTITIONED (parallel); exactly one unpartitioned window is
     // allowed and it must sit on a BOUNDED input — the ≤buckets-row
-    // bucket aggregate (q_abc), or the counted-≤cutoff per-x checkpoint
-    // (q_pareto's measured-small path)
-    def bucketAggPin(name: String,
-                     plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    // bucket aggregate
+    for (name <- Seq("q_abc", "q_pareto")) {
+      val plan = planOf(name)
       val unpart = plan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       }
@@ -126,27 +125,6 @@ class AnalyticsPlanSpec extends SparkSpec {
       assert(feedsFromBucketAgg,
         s"$name: the unpartitioned window must read the per-bucket aggregate:\n${unpart.head}")
     }
-    // at fixture scale both registered queries take the measured-small
-    // path: one window, reading the checkpointed distinct-value table
-    // (bounded by the count that chose the path), never a raw scan
-    for (name <- Seq("q_abc", "q_pareto")) {
-      val plan = planOf(name)
-      val windows = plan.collect { case w: WindowExec => w }
-      assert(windows.size == 1, s"$name: one bounded window:\n$plan")
-      assert(windows.head.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.isEmpty, s"$name's window must read the checkpointed value table, not a scan:\n$plan")
-    }
-    // the forced-bucketed builds (the 100 TB path) keep the bucket pin
-    bucketAggPin("q_pareto(bucketed)", Stats.paretoFrontier(
-      graft.core.Tables.part(spark, sfDir), "p_retailprice", "p_size",
-      smallCutoff = 0L).queryExecution.sparkPlan)
-    import org.apache.spark.sql.functions.{col => c2, lit => l2, sum => sum2}
-    bucketAggPin("q_abc(bucketed)", Stats.abcClasses(
-      graft.core.Tables.lineitem(spark, sfDir).groupBy("l_partkey").agg(
-        sum2((c2("l_extendedprice") * (l2(1.0) - c2("l_discount")))
-          .cast(org.apache.spark.sql.types.DecimalType(20, 6))).as("revenue")),
-      "revenue", "l_partkey", smallCutoff = 0L).queryExecution.sparkPlan)
   }
 
   test("q_collocations / q_cms_rollup / q_split_safe: no cartesian product anywhere") {

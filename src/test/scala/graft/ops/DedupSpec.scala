@@ -71,29 +71,18 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dupClusters: distributed label propagation converges on a long duplicate chain") {
-    // a chain a~b~c~d~e~f where only ADJACENT docs are near-dups: doc i
-    // covers words [3i, 3i+12), so neighbors share 9 words (7 of 13
-    // 3-gram shingles, J≈0.54) while grand-neighbors share 6 (4 of 16,
-    // J=0.25 — below threshold). Collapsing the chain to one cluster then
-    // requires multi-round propagation, not the min(id, neighbors)
-    // seeding shortcut.
-    val base = (0 to 27).map(i => s"w$i")
-    val chain = (0 to 5).map { i =>
-      (i * 10 + 1).toLong -> base.slice(3 * i, 3 * i + 12).mkString(" ")
-    }
-    val d = docs(chain: _*)
-    // verify the chain shape: adjacent pairs only
-    val pairs = Dedup.jaccardPairs(d, 0.4).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == (0 to 4).map(i => ((i * 10 + 1).toLong, (i * 10 + 11).toLong)).toSet)
-    // distributed path (cap disabled) must collapse the whole chain to min id
-    val out = Dedup.dupClusters(d, 0.4, smallGraphEdgeCap = -1L).collect()
+    // past the driver union-find's edge cap: 100 000 disjoint pairs plus a
+    // 30-link chain 1~2~…~31. The chain minimum sits at one end, so plain
+    // propagation would need ~30 rounds; every chain node must still get
+    // the chain minimum
+    val disjoint = spark.range(100000L).select(
+      (col("id") * 2 + 1000L).as("id_a"), (col("id") * 2 + 1001L).as("id_b"))
+    val chain = spark.range(1L, 31L).select(col("id").as("id_a"),
+      (col("id") + 1).as("id_b"))
+    val out = Dedup.clusterPairs(disjoint.unionByName(chain))
+      .filter(col("doc_id") <= 31L).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(out.values.toSet == Set(1L))
-    assert(out.keySet == chain.map(_._1).toSet)
-    // and an insufficient iteration budget fails loudly, never silently
-    intercept[IllegalStateException](
-      Dedup.dupClusters(d, 0.4, maxIters = 1, smallGraphEdgeCap = -1L).collect())
+    assert(out == (1L to 31L).map(_ -> 1L).toMap)
   }
 
   test("simhash: identical texts get identical fingerprints; near-identical are close") {
@@ -119,7 +108,8 @@ class DedupSpec extends SparkSpec {
     val documents = Tables.documents(spark, sfDir)
     val fast = Dedup.dupClusters(documents, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val distributed = Dedup.dupClusters(documents, 0.5, smallGraphEdgeCap = -1L)
+    val distributed = Graph.connectedComponents(Dedup.jaccardPairs(documents, 0.5)
+        .select(col("id_a").as("src"), col("id_b").as("dst")))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(fast.nonEmpty && fast.sameElements(distributed))
   }

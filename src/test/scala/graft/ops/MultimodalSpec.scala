@@ -216,27 +216,6 @@ class MultimodalSpec extends SparkSpec {
     assert(r.getDouble(3) == mean(0) && r.getDouble(4) == mean(1) && r.getDouble(5) == mean(2))
   }
 
-  test("sampleFrames: every stride-th frame of videos only") {
-    val ds = media(
-      row(1L, "video", Array[Byte](5, 5), frames = 10),
-      row(2L, "image", Array[Byte](5, 5), frames = 10))
-    val out = sampleFrames(ds, stride = 3).collect()
-    assert(out.map(_.media_id).toSet == Set(1L))
-    assert(out.map(_.frame_idx).sorted.toSeq == Seq(0, 3, 6, 9))
-    // per-frame hashes differ (frame index folded into the stub decode)
-    assert(out.map(_.frame_hash).distinct.length == 4)
-  }
-
-  test("planResize: preserves aspect ratio, never upscales") {
-    import spark.implicits._
-    val df = media(row(1L, "image", Array[Byte](0), w = 4000, h = 2000),
-      row(2L, "image", Array[Byte](0), w = 100, h = 50)).toDF()
-    val out = planResize(df, maxSide = 1000).collect()
-      .map(r => (r.getLong(0), (r.getInt(3), r.getInt(4)))).toMap
-    assert(out(1L) == ((1000, 500)))
-    assert(out(2L) == ((100, 50))) // already small: untouched
-  }
-
   test("aHash64: hand-computed bits — uniform image hashes 0, bright blocks set their bits") {
     // uniform gray: every block mean equals the global mean, strict > sets
     // no bit

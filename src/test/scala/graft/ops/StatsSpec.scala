@@ -269,14 +269,9 @@ class StatsSpec extends SparkSpec {
     import spark2.implicits._
     def sameAs(df: org.apache.spark.sql.DataFrame, xc: String, yc: String,
                buckets: Int): Unit = {
-      // cutoff 0 forces the bucketed path; the default takes the
-      // measured-small single-window path — both must equal the naive form
-      val fast = Stats.paretoFrontier(df, xc, yc, buckets, smallCutoff = 0L)
-        .collect().toSeq
-      val small = Stats.paretoFrontier(df, xc, yc, buckets).collect().toSeq
+      val fast = Stats.paretoFrontier(df, xc, yc, buckets).collect().toSeq
       val naive = Stats.paretoFrontierNaive(df, xc, yc).collect().toSeq
       assert(fast == naive, s"buckets=$buckets fast=$fast naive=$naive")
-      assert(small == naive, s"small-path mismatch: $small vs $naive")
       // definitional check: nothing in the output is dominated, nothing
       // outside it is non-dominated
       val pts = df.filter(col(xc).isNotNull && col(yc).isNotNull)
@@ -305,14 +300,9 @@ class StatsSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     def sameAs(df: org.apache.spark.sql.DataFrame, buckets: Int): Unit = {
-      // cutoff 0 forces the bucketed path; the default takes the
-      // measured-small single-window path — both must equal the naive form
-      val fast = Stats.abcClasses(df, "v", "id", buckets = buckets,
-        smallCutoff = 0L).collect().toSeq
-      val small = Stats.abcClasses(df, "v", "id", buckets = buckets).collect().toSeq
+      val fast = Stats.abcClasses(df, "v", "id", buckets = buckets).collect().toSeq
       val naive = Stats.abcClassesNaive(df, "v", "id").collect().toSeq
       assert(fast == naive, s"buckets=$buckets\nfast=$fast\nnaive=$naive")
-      assert(small == naive, s"small-path mismatch: $small vs $naive")
     }
     val rnd = new scala.util.Random(13)
     // heavy ties ACROSS the class boundaries: few distinct values, many
@@ -367,11 +357,12 @@ class StatsSpec extends SparkSpec {
     val r2 = Stats.mannWhitneyU(d2, col("g"), "v").collect().head
     assert(r2.getAs[Double]("u_a") == 1.0 && r2.getAs[Double]("z") == -1.0)
     assert(!r2.getAs[Boolean]("significant"))
-    // bucketed path (cutoff 0) equals the measured-small path
+    // one bucket (one within-bucket window) equals the default bucket
+    // composition
     val rnd = new scala.util.Random(17)
     val big = Seq.fill(2000)((rnd.nextBoolean(), rnd.nextInt(300))).toDF("g", "v")
       .repartition(7)
-    assert(Stats.mannWhitneyU(big, col("g"), "v", smallCutoff = 0L).collect().toSeq ==
+    assert(Stats.mannWhitneyU(big, col("g"), "v", buckets = 1).collect().toSeq ==
       Stats.mannWhitneyU(big, col("g"), "v").collect().toSeq)
     // degenerate: empty cohort and all-tied values -> null z, false flag
     val oneSide = Seq((true, 1), (true, 2)).toDF("g", "v")
@@ -412,10 +403,10 @@ class StatsSpec extends SparkSpec {
     // the single-cohort slice is the degenerate row: null z / d, false flag
     val s4 = mwBy.find(key(_) == "s4").get
     assert(s4.isNullAt(s4.fieldIndex("z")) && !s4.getAs[Boolean]("significant"))
-    // forced-bucketed partitioned engine equals the measured-small path
-    assert(Stats.mannWhitneyUBy(df, "dim", col("g"), "v", smallCutoff = 0L)
+    // the partitioned engine is bucket-count invariant
+    assert(Stats.mannWhitneyUBy(df, "dim", col("g"), "v", buckets = 1)
       .collect().toSeq == mwBy.toSeq)
-    assert(Stats.ksTestBy(df, "dim", col("g"), "v", smallCutoff = 0L)
+    assert(Stats.ksTestBy(df, "dim", col("g"), "v", buckets = 1)
       .collect().toSeq == ksBy.toSeq)
   }
 
@@ -444,11 +435,11 @@ class StatsSpec extends SparkSpec {
     val r4 = Stats.kruskalWallis(tied, "g", "v").collect().head
     assert(r4.isNullAt(r4.fieldIndex("h")) && !r4.getAs[Boolean]("significant"))
     // two-group KW ≡ the Mann-Whitney decision on the same data (H = z²
-    // asymptotically; here just path-check the bucketed engine)
+    // asymptotically; here just check bucket-count invariance)
     val rnd = new scala.util.Random(29)
     val big = Seq.fill(2500)((Seq("a", "b", "c")(rnd.nextInt(3)), rnd.nextInt(200)))
       .toDF("g", "v").repartition(7)
-    assert(Stats.kruskalWallis(big, "g", "v", smallCutoff = 0L).collect().toSeq ==
+    assert(Stats.kruskalWallis(big, "g", "v", buckets = 1).collect().toSeq ==
       Stats.kruskalWallis(big, "g", "v").collect().toSeq)
   }
 
@@ -474,12 +465,12 @@ class StatsSpec extends SparkSpec {
     val const = (1 to 5).map(i => (i, 7)).toDF("x", "y")
     val rc = Stats.spearmanCorr(const, "x", "y").collect().head
     assert(rc.isNullAt(rc.fieldIndex("rho")) && !rc.getAs[Boolean]("significant"))
-    // independent noise: |rho| small, path equality bucketed ≡ small
+    // independent noise: |rho| small, one bucket ≡ the default buckets
     val rnd = new scala.util.Random(31)
     val big = Seq.fill(3000)((rnd.nextInt(500), rnd.nextInt(500))).toDF("x", "y")
       .repartition(5)
     val a = Stats.spearmanCorr(big, "x", "y").collect().toSeq
-    assert(Stats.spearmanCorr(big, "x", "y", smallCutoff = 0L).collect().toSeq == a)
+    assert(Stats.spearmanCorr(big, "x", "y", buckets = 1).collect().toSeq == a)
     assert(math.abs(a.head.getAs[Double]("rho")) < 0.1)
   }
 
@@ -497,11 +488,11 @@ class StatsSpec extends SparkSpec {
     val d2 = ((1 to 5).map(i => (true, i)) ++ (1 to 5).map(i => (false, i))).toDF("g", "v")
     val r2 = Stats.ksTest(d2, col("g"), "v").collect().head
     assert(r2.getAs[Double]("d") == 0.0 && !r2.getAs[Boolean]("significant"))
-    // null values drop on both engines' semantics; path equality
+    // null values drop on both engines' semantics; one bucket ≡ default
     val rnd = new scala.util.Random(19)
     val big = (Seq.fill(2000)((rnd.nextBoolean(), Some(rnd.nextInt(300)))) ++
       Seq((true, Option.empty[Int]))).toDF("g", "v").repartition(5)
-    assert(Stats.ksTest(big, col("g"), "v", smallCutoff = 0L).collect().toSeq ==
+    assert(Stats.ksTest(big, col("g"), "v", buckets = 1).collect().toSeq ==
       Stats.ksTest(big, col("g"), "v").collect().toSeq)
   }
 
