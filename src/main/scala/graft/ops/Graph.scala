@@ -48,39 +48,22 @@ object Graph {
 
   /** Rounds between the rank checkpoints of [[pageRank]] and
     * [[personalizedPageRank]]; chosen in PERF_HISTORY r5 and its
-    * re-sweep (5 read the same as 3). */
+    * re-sweep (5 read the same as 3). Each checkpoint is an eager job, and
+    * on a small graph those fixed materializations dominate wall clock
+    * (measured 10 → ~4 jobs cutting the registered query ~3×). */
   private val RankCheckpointEvery = 3
 
-  /** Damped PageRank, `iters` fixed synchronous iterations:
-    * r⁰ = 1/n;  r^{t+1}(v) = (1−d)/n + d·(Σ_{u→v} r^t(u)/outdeg(u) + D^t/n)
-    * where D^t is the total rank on DANGLING nodes (no out-edges) —
-    * the standard lost-mass redistribution, so ranks stay a probability
-    * vector on arbitrary directed graphs. Dangling nodes are detected
-    * once at construction; when there are none (every symmetric graph,
-    * e.g. the registered co-purchase query) the correction term is
-    * omitted ENTIRELY, leaving those plans — and their oracle
-    * arithmetic — exactly as before.
-    *
-    * Scale shape: edges are deduped, lineage-truncated (localCheckpoint)
-    * and hash-partitioned once; each iteration is one join (edges ⋈ ranks,
-    * co-partitioned on src) + one aggregate keyed by dst — the same
-    * two-exchange round as label propagation, with superseded checkpoint
-    * blocks released each round so resident storage stays at one ranks
-    * generation ([[connectedComponents]] hygiene). The node count and
-    * out-degrees are computed once; `n` is a driver scalar (one
-    * construction job, the documented [[Search.bm25]] trade).
+  /** What [[pageRank]] and [[personalizedPageRank]] share, each frame
+    * materialized once. Weighted input is normalized by summing duplicate
+    * (src, dst) weights (long-exact); unweighted input runs THROUGH the
+    * weighted arithmetic with w ≡ 1 — r·1.0/W is bit-identical to r/W and
+    * sum(1.0) to count, so the unweighted oracle is untouched. Dangling
+    * nodes (no out-edges) are detected once with one cheap key-only
+    * anti-join job; a symmetric graph has none and its rounds omit the
+    * correction term entirely.
     */
-  def pageRank(edgeList: DataFrame, iters: Int = 10,
-               damping: Double = 0.85, sorted: Boolean = true,
-               weightCol: Option[String] = None): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1)
-    // weighted form: contribution_u→v = r_u · w_uv / W_u with W_u the
-    // weighted out-degree. The unweighted path runs THROUGH the weighted
-    // arithmetic with w ≡ 1: r·1.0/W is bit-identical to r/W and
-    // sum(1.0) to count, so the unweighted oracle is untouched. Weighted
-    // input is normalized by summing duplicate (src, dst) weights
-    // (long-exact).
-    val e0 = weightCol match {
+  private final class RankGraph(edgeList: DataFrame, weightCol: Option[String]) {
+    private val e0 = weightCol match {
       case Some(w) =>
         edgeList.select(col("src").cast("long"), col("dst").cast("long"),
             col(w).cast("long").as("w"))
@@ -90,74 +73,84 @@ object Graph {
           .distinct()
           .withColumn("w", lit(1L))
     }
-    val (edges, nParts) = materializeEdges(e0, "src")
-    val outdeg = edges.groupBy("src")
+    private val (edges, nParts) = materializeEdges(e0, "src")
+    private val outdeg = edges.groupBy("src")
       .agg(sum("w").cast("double").as("outdeg"))
-    val nodes = edges.select(col("src").as("node"))
+    val nodes: DataFrame = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
       .repartition(nParts, col("node"))
       .localCheckpoint()
-    val n = nodes.count().toDouble // construction job (see scaladoc)
-    // dangling detection — one cheap key-only anti-join job; a symmetric
-    // graph has none and skips the per-iteration correction entirely
-    val dangling = nodes
+    private val dangling = nodes
       .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
       .localCheckpoint()
-    val hasDangling = dangling.limit(1).count() > 0
+    val hasDangling: Boolean = dangling.limit(1).count() > 0
+
+    /** (node, csum): the exact-decimal Σ_{u→v} r(u)·w/W(u) — the only
+      * order-sensitive reduction of a round. */
+    def contribs(ranks: DataFrame): DataFrame = edges
+      .join(ranks.select(col("node").as("src"), col("rank")), "src")
+      .join(outdeg, "src")
+      .select(col("dst").as("node"),
+        (col("rank") * col("w").cast("double") / col("outdeg"))
+          .cast(DecimalType(28, 18)).as("c"))
+      .groupBy("node")
+      .agg(sum("c").as("csum"))
+
+    /** The 1-row (dmass): exact-decimal rank sum over the dangling nodes,
+      * crossed in as a broadcast (the dispersion/scalar-subquery BNLJ
+      * pattern). */
+    def danglingMass(ranks: DataFrame): DataFrame =
+      ranks.join(dangling, Seq("node"), "left_semi")
+        .agg(coalesce(sum(col("rank").cast(DecimalType(28, 18))), lit(0))
+          .cast("double").as("dmass"))
+
+    def release(): Unit =
+      Seq(edges, nodes, dangling).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
+  }
+
+  /** Damped PageRank, `iters` fixed synchronous iterations:
+    * r⁰ = 1/n;  r^{t+1}(v) = (1−d)/n + d·(Σ_{u→v} r^t(u)/outdeg(u) + D^t/n)
+    * where D^t is the total rank on DANGLING nodes (no out-edges) —
+    * the standard lost-mass redistribution, so ranks stay a probability
+    * vector on arbitrary directed graphs. When there are none (every
+    * symmetric graph, e.g. the registered co-purchase query) the
+    * correction term is omitted ENTIRELY, leaving those plans — and their
+    * oracle arithmetic — exactly as before. Weighted form: contribution
+    * r_u · w_uv / W_u with W_u the weighted out-degree ([[RankGraph]]).
+    *
+    * Scale shape: edges are deduped, lineage-truncated (localCheckpoint)
+    * and hash-partitioned once; each iteration is one join (edges ⋈ ranks,
+    * co-partitioned on src) + one aggregate keyed by dst — the same
+    * two-exchange round as label propagation, run by [[Rounds]] at a
+    * cadence of [[RankCheckpointEvery]]. The node count and out-degrees are
+    * computed once; `n` is a driver scalar (one construction job, the
+    * documented [[Search.bm25]] trade).
+    */
+  def pageRank(edgeList: DataFrame, iters: Int = 10,
+               damping: Double = 0.85, sorted: Boolean = true,
+               weightCol: Option[String] = None): DataFrame = {
+    require(iters >= 1 && damping > 0 && damping < 1)
+    val g = new RankGraph(edgeList, weightCol)
+    val n = g.nodes.count().toDouble // construction job (see scaladoc)
     // both constants derived with the same double ops the oracle writes:
     // 1/n and (1 - d)/n — identical IEEE sequences on both engines
     val teleport = (1.0 - damping) / n
-    // checkpoint every `RankCheckpointEvery` rounds, not every round: each
-    // localCheckpoint is an eager job, and on a small graph those fixed
-    // materializations dominate wall clock (measured 10 → ~4 jobs cutting
-    // the registered query ~3×). Lineage depth between checkpoints stays
-    // bounded at `RankCheckpointEvery` join+agg rounds. The FINAL iteration
-    // always checkpoints so edges/nodes (released below) are never in the
-    // returned frame's lineage; only that last checkpoint stays resident
-    // (the connectedComponents residency contract).
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var lastCkpt: Option[DataFrame] = None
-    for (i <- 1 to iters) {
-      val contribs = edges
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .join(outdeg, "src")
-        .select(col("dst").as("node"),
-          (col("rank") * col("w").cast("double") / col("outdeg"))
-            .cast(DecimalType(28, 18)).as("c"))
-        .groupBy("node")
-        .agg(sum("c").as("csum"))
-      val plan = if (!hasDangling) {
-        nodes
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(teleport) + lit(damping) *
-              coalesce(col("csum").cast("double"), lit(0.0))).as("rank"))
-      } else {
-        // lost-mass term: exact-decimal sum of dangling ranks, spread
-        // uniformly — a 1-row broadcast, the dispersion/scalar-subquery
-        // BNLJ pattern
-        val dangMass = ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("rank").cast(DecimalType(28, 18))), lit(0))
-            .cast("double").as("dmass"))
-        nodes
-          .join(contribs, Seq("node"), "left")
-          .crossJoin(broadcast(dangMass))
+    val ranks = Rounds.run(g.nodes.withColumn("rank", lit(1.0 / n)), iters,
+        RankCheckpointEvery) { (r, _) =>
+      val base = g.nodes.join(g.contribs(r), Seq("node"), "left")
+      if (!g.hasDangling)
+        base.select(col("node"),
+          (lit(teleport) + lit(damping) *
+            coalesce(col("csum").cast("double"), lit(0.0))).as("rank"))
+      else
+        base.crossJoin(broadcast(g.danglingMass(r)))
           .select(col("node"),
             (lit(teleport) + lit(damping) *
               (coalesce(col("csum").cast("double"), lit(0.0)) +
                 col("dmass") / lit(n))).as("rank"))
-      }
-      if (i % RankCheckpointEvery == 0 || i == iters) {
-        val ck = plan.localCheckpoint()
-        lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-        lastCkpt = Some(ck)
-        ranks = ck
-      } else ranks = plan
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(nodes)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(dangling)
+    g.release()
     // the two engines' DECIMAL(28,18) casts round their last place
     // differently, leaving a bounded ~1e-18 absolute drift after any
     // number of iterations (each round re-quantizes, so it never
@@ -199,42 +192,23 @@ object Graph {
     * with s(v) = 1/|S| on seeds, 0 elsewhere; dangling mass D teleports
     * to the seeds too (the standard PPR convention — total mass stays 1).
     * Same determinism discipline as [[pageRank]] (decimal-exact
-    * contribution and dangling sums, per-iteration requantization), same
-    * checkpoint/partitioning hygiene, and the same generated-oracle
-    * pattern ([[seededTradeRankOracleSql]]).
+    * contribution and dangling sums, per-iteration requantization), the
+    * same [[RankGraph]] setup and [[Rounds]] cadence, and the same
+    * generated-oracle pattern ([[seededTradeRankOracleSql]]). Each keeps
+    * its own update expression: (1−d)/n and (1−d)·s(v) round differently
+    * in IEEE double, and each oracle replays its own.
     */
   def personalizedPageRank(edgeList: DataFrame, seeds: DataFrame, iters: Int = 10,
                            damping: Double = 0.85, sorted: Boolean = true,
                            weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
-    val e0 = weightCol match {
-      case Some(w) =>
-        edgeList.select(col("src").cast("long"), col("dst").cast("long"),
-            col(w).cast("long").as("w"))
-          .groupBy("src", "dst").agg(sum("w").as("w"))
-      case None =>
-        edgeList.select(col("src").cast("long"), col("dst").cast("long"))
-          .distinct()
-          .withColumn("w", lit(1L))
-    }
-    val (edges, nParts) = materializeEdges(e0, "src")
-    val outdeg = edges.groupBy("src")
-      .agg(sum("w").cast("double").as("outdeg"))
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .repartition(nParts, col("node"))
-      .localCheckpoint()
+    val g = new RankGraph(edgeList, weightCol)
     // seed indicator restricted to graph nodes; |S| counts members only
-    val seedNodes = nodes.join(
+    val seedNodes = g.nodes.join(
       seeds.select(col("node").cast("long")).distinct(), Seq("node"), "left_semi")
       .localCheckpoint()
     val nSeeds = seedNodes.count().toDouble
     require(nSeeds > 0, "personalizedPageRank needs at least one seed present in the graph")
-    val dangling = nodes
-      .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-      .localCheckpoint()
-    val hasDangling = dangling.limit(1).count() > 0
     val seedMass = 1.0 / nSeeds
     // s(v) as a column: 1/|S| on seeds else 0 — one broadcastable
     // key-only semi side per iteration plan, not a per-node literal
@@ -243,42 +217,21 @@ object Graph {
         .withColumn("_s",
           when(col("_isSeed"), lit(seedMass)).otherwise(lit(0.0)))
         .drop("_isSeed")
-    var ranks = withSeedCol(nodes).select(col("node"), col("_s").as("rank"))
-    var lastCkpt: Option[DataFrame] = None
-    for (i <- 1 to iters) {
-      val contribs = edges
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .join(outdeg, "src")
-        .select(col("dst").as("node"),
-          (col("rank") * col("w").cast("double") / col("outdeg"))
-            .cast(DecimalType(28, 18)).as("c"))
-        .groupBy("node")
-        .agg(sum("c").as("csum"))
-      val base = withSeedCol(nodes.join(contribs, Seq("node"), "left"))
-      val plan = if (!hasDangling) {
+    val init = withSeedCol(g.nodes).select(col("node"), col("_s").as("rank"))
+    val ranks = Rounds.run(init, iters, RankCheckpointEvery) { (r, _) =>
+      val base = withSeedCol(g.nodes.join(g.contribs(r), Seq("node"), "left"))
+      if (!g.hasDangling)
         base.select(col("node"),
           ((lit(1.0) - lit(damping)) * col("_s") + lit(damping) *
             coalesce(col("csum").cast("double"), lit(0.0))).as("rank"))
-      } else {
-        val dangMass = ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("rank").cast(DecimalType(28, 18))), lit(0))
-            .cast("double").as("dmass"))
-        base.crossJoin(broadcast(dangMass))
+      else
+        base.crossJoin(broadcast(g.danglingMass(r)))
           .select(col("node"),
             ((lit(1.0) - lit(damping)) * col("_s") + lit(damping) *
               (coalesce(col("csum").cast("double"), lit(0.0)) +
                 col("dmass") * col("_s"))).as("rank"))
-      }
-      if (i % RankCheckpointEvery == 0 || i == iters) {
-        val ck = plan.localCheckpoint()
-        lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-        lastCkpt = Some(ck)
-        ranks = ck
-      } else ranks = plan
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(nodes)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(dangling)
+    g.release()
     org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(seedNodes)
     val out = ranks.select(col("node"), round(col("rank"), 9).as("rank"))
     if (sorted) out.orderBy(col("rank").desc, col("node")) else out
@@ -455,10 +408,10 @@ object Graph {
     * subtrees × two norm broadcasts), so an un-truncated window of k
     * rounds executes ~4^k nested broadcast jobs — measured 2× wall at
     * k=3 vs k=1 on the fixture graph — where pageRank's factor is ≤2 and
-    * batching wins instead. Score frames stay node-sparse: a node with no
-    * in-edges simply never appears in the authority frame (≡ score 0) and
-    * costs nothing in the joins; the final output densifies with COALESCE
-    * over the node set.
+    * batching wins instead ([[Rounds]] at a cadence of 1). Score frames
+    * stay node-sparse: a node with no in-edges simply never gets an
+    * authority (≡ score 0) and costs nothing in the joins; the final
+    * output densifies with COALESCE.
     */
   def hits(edgeList: DataFrame, iters: Int = 10,
            sorted: Boolean = true): DataFrame = {
@@ -472,14 +425,18 @@ object Graph {
       .repartition(nParts, col("node"))
       .localCheckpoint()
     val dec = DecimalType(28, 18)
-    var hubs = nodes.withColumn("h", lit(1.0))
-    var auths: DataFrame = nodes.withColumn("a", lit(0.0))
-    var lastCkpt: Seq[DataFrame] = Nil
-    for (i <- 1 to iters) {
+    // one round state (node, a, h): only h feeds the next round (a is
+    // recomputed through h's plan), and the last round's a is the other
+    // half of the output, so each round's ONE checkpoint holds both score
+    // frames, full-outer-joined on node. A node with no in-edges has a
+    // null a (≡ 0) and one with no out-edges a null h, which never meets
+    // an edge's src.
+    val init = nodes.select(col("node"), lit(0.0).as("a"), lit(1.0).as("h"))
+    val scores = Rounds.run(init, iters) { (st, _) =>
       // ua/uh each feed two consumers (their norm and their normalized
       // projection) inside ONE plan — ReuseExchange dedupes the shared
       // join+agg shuffle, so no explicit persist is needed at any scale
-      val ua = edges.join(hubs.select(col("node").as("src"), col("h")), "src")
+      val ua = edges.join(st.select(col("node").as("src"), col("h")), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("h").cast(dec)).cast("double").as("ua"))
       val na = ua.agg(
@@ -493,23 +450,13 @@ object Graph {
         sqrt(sum((col("uh") * col("uh")).cast(dec)).cast("double")).as("nh"))
       val hPlan = uh.crossJoin(broadcast(nh))
         .select(col("node"), (col("uh") / col("nh")).as("h"))
-      // only h feeds the next round — a is recomputed through h's plan, so
-      // each round's checkpoint materializes ONE frame; the final iteration
-      // checkpoints both (a is the other half of the output)
-      if (i == iters) auths = aPlan.localCheckpoint()
-      hubs = hPlan.localCheckpoint()
-      lastCkpt.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-      lastCkpt = if (i == iters) Seq(auths, hubs) else Seq(hubs)
+      aPlan.join(hPlan, Seq("node"), "full_outer")
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(nodes)
-    // densify: every node has at least one edge, so it appears in the
-    // authority frame (in-edges) or the hub frame (out-edges) — a full
-    // outer join of the two CHECKPOINTED score frames covers the node set
-    // without re-reading the released node/edge blocks; same 9-decimal
-    // emission as pageRank
-    val out = auths
-      .join(hubs, Seq("node"), "full_outer")
+    Seq(edges, nodes).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
+    // densify: every node has at least one edge, so it has an authority
+    // (in-edges) or a hub score (out-edges) in the last round's state;
+    // same 9-decimal emission as pageRank
+    val out = scores
       .select(col("node"),
         round(coalesce(col("a"), lit(0.0)), 9).as("authority"),
         round(coalesce(col("h"), lit(0.0)), 9).as("hub"))
@@ -602,35 +549,61 @@ object Graph {
     * is "not near", so operator and oracle both run exactly H relaxation
     * rounds and agree by construction.
     *
-    * Scale shape: each round is two co-partitioned edge⋈dist joins (one
-    * per direction) + one map-side-combining MIN aggregate; the dist
-    * frame stays frontier-sparse (only reached nodes exist), superseded
-    * checkpoints released each round.
+    * It IS [[shortestPaths]] over unit weights (`dist + w` with w = 1 is
+    * `dist + 1`, and the cheapest of duplicate unit edges is the distinct
+    * edge), and delegates to it.
     */
   def hopDistance(edgeList: DataFrame, seeds: DataFrame, maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val e0 = canonicalEdges(edgeList)
-    val (edges, _) = materializeEdges(e0, "a")
-    val nodes = edges.select(col("a").as("node"))
-      .union(edges.select(col("b").as("node"))).distinct()
-    var dist = nodes
-      .join(seeds.select(col("node").cast("long")).distinct(), Seq("node"), "left_semi")
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    for (_ <- 1 to maxHops) {
-      val viaA = edges.join(dist.select(col("node").as("a"), col("dist")), "a")
-        .select(col("b").as("node"), (col("dist") + 1).as("dist"))
-      val viaB = edges.join(dist.select(col("node").as("b"), col("dist")), "b")
-        .select(col("a").as("node"), (col("dist") + 1).as("dist"))
-      val next = dist.unionByName(viaA).unionByName(viaB)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(dist)
-      dist = next
-    }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    dist.orderBy("node")
+    shortestPaths(edgeList.withColumn("w", lit(1L)), seeds, maxHops)
   }
+
+  /** The `WITH items` CTE every basket-graph oracle starts from: one
+    * ship-date window's distinct (order, part) items ([[basketEdges]]). */
+  private def basketItemsCte(from: String, until: String): String =
+    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
+       |               WHERE l_shipdate >= TIMESTAMP '$from'
+       |                 AND l_shipdate < TIMESTAMP '$until')""".stripMargin
+
+  /** [[basketItemsCte]] plus `e(a, b)`, the distinct canonical basket
+    * edges ([[canonicalEdges]] of [[basketEdges]]). */
+  private def basketEdgeCtes(from: String, until: String): String =
+    s"""${basketItemsCte(from, until)},
+       |e AS MATERIALIZED (
+       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
+       |  JOIN items y ON x.ok = y.ok AND x.p < y.p)""".stripMargin
+
+  /** The CTEs c1..c`rounds` of synchronous label propagation over `nbr`
+    * from `c0`, as chained MATERIALIZED CTEs, the arg-max replayed as
+    * `ROW_NUMBER() OVER (ORDER BY count DESC, label)` — [[communities]]'
+    * rounds in the oracles that build on its labeling. */
+  private def lpaRoundCtes(rounds: Int): String =
+    (1 to rounds).map { i =>
+      s"""c$i AS MATERIALIZED (
+         |  SELECT node, community FROM (
+         |    SELECT node, community,
+         |           ROW_NUMBER() OVER (PARTITION BY node
+         |                              ORDER BY cnt DESC, community) AS rn
+         |    FROM (SELECT n.node, l.community, COUNT(*) AS cnt
+         |          FROM nbr n JOIN c${i - 1} l ON n.nb = l.node
+         |          GROUP BY n.node, l.community))
+         |  WHERE rn = 1)""".stripMargin
+    }.mkString(",\n")
+
+  /** The CTEs d1..d`rounds` of synchronous min-plus relaxation from `d0`
+    * over `e(a, b)` in both directions, each hop costing `w` — the
+    * [[shortestPaths]] rounds, with `w = "1"` the [[hopDistance]] ones. */
+  private def relaxCtes(rounds: Int, w: String): String =
+    (1 to rounds).map { i =>
+      s"""d$i AS MATERIALIZED (
+         |  SELECT node, MIN(dist) AS dist FROM (
+         |    SELECT node, dist FROM d${i - 1}
+         |    UNION ALL
+         |    SELECT e.b AS node, d.dist + $w AS dist FROM e JOIN d${i - 1} d ON e.a = d.node
+         |    UNION ALL
+         |    SELECT e.a AS node, d.dist + $w AS dist FROM e JOIN d${i - 1} d ON e.b = d.node)
+         |  GROUP BY node)""".stripMargin
+    }.mkString(",\n")
 
   /** Generated DuckDB oracle for [[hopDistance]] over [[basketEdges]]
     * with one brand's parts as seeds — the `maxHops` relaxation rounds
@@ -639,27 +612,12 @@ object Graph {
   def hopDistanceOracleSql(brand: String, maxHops: Int = 4,
                            from: String = "1996-01-01",
                            until: String = "1997-01-01"): String = {
-    val iterCtes = (1 to maxHops).map { i =>
-      s"""d$i AS MATERIALIZED (
-         |  SELECT node, MIN(dist) AS dist FROM (
-         |    SELECT node, dist FROM d${i - 1}
-         |    UNION ALL
-         |    SELECT e.b AS node, d.dist + 1 AS dist FROM e JOIN d${i - 1} d ON e.a = d.node
-         |    UNION ALL
-         |    SELECT e.a AS node, d.dist + 1 AS dist FROM e JOIN d${i - 1} d ON e.b = d.node)
-         |  GROUP BY node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |nodes AS (SELECT a AS node FROM e UNION SELECT b FROM e),
        |d0 AS MATERIALIZED (
        |  SELECT node, CAST(0 AS BIGINT) AS dist FROM nodes
        |  WHERE node IN (SELECT p_partkey FROM part WHERE p_brand = '$brand')),
-       |$iterCtes
+       |${relaxCtes(maxHops, "1")}
        |SELECT node, dist FROM d$maxHops ORDER BY node""".stripMargin
   }
 
@@ -676,10 +634,10 @@ object Graph {
     * (a double weight would make tie-breaking float-order-dependent).
     * Duplicate/opposite-direction input edges keep the cheapest weight.
     *
-    * Scale shape: identical to [[hopDistance]] — per round two
-    * co-partitioned edge⋈dist joins + one map-side-combining MIN
-    * aggregate, frontier-sparse dist frame, superseded checkpoints
-    * released each round.
+    * Scale shape: per round two co-partitioned edge⋈dist joins (one per
+    * direction) + one map-side-combining MIN aggregate; the dist frame
+    * stays frontier-sparse (only reached nodes exist); [[Rounds]] runs
+    * the rounds.
     */
   def shortestPaths(weightedEdges: DataFrame, seeds: DataFrame,
                     rounds: Int = 4): DataFrame = {
@@ -693,22 +651,19 @@ object Graph {
     val (edges, _) = materializeEdges(e0, "a")
     val nodes = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
-    var dist = nodes
+    val seeded = nodes
       .join(seeds.select(col("node").cast("long")).distinct(), Seq("node"), "left_semi")
       .withColumn("dist", lit(0L))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val viaA = edges.join(dist.select(col("node").as("a"), col("dist")), "a")
+    val dist = Rounds.run(seeded, rounds) { (d, _) =>
+      val viaA = edges.join(d.select(col("node").as("a"), col("dist")), "a")
         .select(col("b").as("node"), (col("dist") + col("w")).as("dist"))
-      val viaB = edges.join(dist.select(col("node").as("b"), col("dist")), "b")
+      val viaB = edges.join(d.select(col("node").as("b"), col("dist")), "b")
         .select(col("a").as("node"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(viaA).unionByName(viaB)
+      d.unionByName(viaA).unionByName(viaB)
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(dist)
-      dist = next
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
+    Seq(seeded, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     dist.orderBy("node")
   }
 
@@ -739,19 +694,7 @@ object Graph {
   def shortestPathsOracleSql(brand: String, rounds: Int = 4,
                              from: String = "1996-01-01",
                              until: String = "1997-01-01"): String = {
-    val iterCtes = (1 to rounds).map { i =>
-      s"""d$i AS MATERIALIZED (
-         |  SELECT node, MIN(dist) AS dist FROM (
-         |    SELECT node, dist FROM d${i - 1}
-         |    UNION ALL
-         |    SELECT e.b AS node, d.dist + e.w AS dist FROM e JOIN d${i - 1} d ON e.a = d.node
-         |    UNION ALL
-         |    SELECT e.a AS node, d.dist + e.w AS dist FROM e JOIN d${i - 1} d ON e.b = d.node)
-         |  GROUP BY node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
+    s"""${basketItemsCte(from, until)},
        |ep AS MATERIALIZED (
        |  SELECT x.p AS a, y.p AS b, CAST(COUNT(*) AS BIGINT) AS cnt FROM items x
        |  JOIN items y ON x.ok = y.ok AND x.p < y.p GROUP BY 1, 2),
@@ -761,7 +704,7 @@ object Graph {
        |d0 AS MATERIALIZED (
        |  SELECT node, CAST(0 AS BIGINT) AS dist FROM nodes
        |  WHERE node IN (SELECT p_partkey FROM part WHERE p_brand = '$brand')),
-       |$iterCtes
+       |${relaxCtes(rounds, "e.w")}
        |SELECT node, dist FROM d$rounds ORDER BY node""".stripMargin
   }
 
@@ -776,14 +719,13 @@ object Graph {
     * Scale shape: each round is two semi-joins (edge endpoints against the
     * survivor set) + one map-side-combining degree aggregate — all keyed
     * shuffles on the edge partitioning established once up front; the
-    * driver sees one survivor COUNT per round (the
-    * [[connectedComponents]] convergence-probe pattern) and the loop
-    * THROWS past `maxIters` rather than silently returning a
-    * non-fixpoint. Peel depth, not
-    * diameter, bounds the rounds; the registered basket query converges
-    * in 2-3 rounds at every fixture scale (measured), and the generated
-    * oracle unrolls a fixed 10 — extra rounds past the fixpoint are
-    * no-ops, so the two agree whenever the operator converges within the
+    * driver sees one survivor COUNT per round (the [[Rounds.fixpoint]]
+    * probe, shared with [[connectedComponents]]) and the kernel THROWS
+    * past `maxIters` rather than silently returning a non-fixpoint. Peel
+    * depth, not diameter, bounds the rounds; the registered basket query
+    * converges in 2-3 rounds at every fixture scale (measured), and the
+    * generated oracle unrolls a fixed 10 — extra rounds past the fixpoint
+    * are no-ops, so the two agree whenever the operator converges within the
     * unrolled rounds. Registered `maxIters` must therefore equal the
     * oracle's `rounds` (the registration pins both to 10): with a larger
     * maxIters, a corpus converging in rounds 11..maxIters would succeed
@@ -793,35 +735,23 @@ object Graph {
     require(k >= 1 && maxIters >= 1, s"need k >= 1 and maxIters >= 1, got $k/$maxIters")
     val e0 = canonicalEdges(edgeList)
     val (edges, _) = materializeEdges(e0, "a")
-    var survivors: DataFrame = edges.select(col("a").as("node"))
+    val all = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .withColumn("deg", lit(-1L)) // placeholder; replaced by round 1
       .localCheckpoint()
-    var nAlive = survivors.count()
-    var rounds = 0
-    var converged = false
-    while (!converged) {
-      if (rounds >= maxIters)
-        throw new IllegalStateException(
-          s"kCore(k=$k) did not converge in $maxIters peel rounds")
+    val core = Rounds.fixpoint(s"kCore(k=$k)", all, maxIters,
+        initProbe = Some(all.count()))(_.count()) { survivors =>
       val aliveKeys = survivors.select("node")
       val live = edges
         .join(aliveKeys.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(aliveKeys.select(col("node").as("b")), Seq("b"), "left_semi")
-      val next = live.select(col("a").as("node"))
+      live.select(col("a").as("node"))
         .unionByName(live.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-        .localCheckpoint()
-      val nNext = next.count()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(survivors)
-      survivors = next
-      converged = nNext == nAlive
-      nAlive = nNext
-      rounds += 1
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    survivors.orderBy("node")
+    Seq(all, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
+    core.orderBy("node")
   }
 
   /** Generated DuckDB oracle for [[kCore]] over [[basketEdges]]: `rounds`
@@ -841,12 +771,7 @@ object Graph {
          |    WHERE a IN (SELECT node FROM a${i - 1}) AND b IN (SELECT node FROM a${i - 1}))
          |  GROUP BY node HAVING COUNT(*) >= $k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |a0 AS MATERIALIZED (SELECT a AS node FROM e UNION SELECT b FROM e),
        |$iterCtes
        |SELECT node, deg FROM a$rounds ORDER BY node""".stripMargin
@@ -868,8 +793,7 @@ object Graph {
     * per direction of the undirected canonical edge set) + one combining
     * (node, label) count + one per-node arg-max folded into a single
     * `min(struct(-count, label))` aggregate — NO window sort anywhere;
-    * label frames are lineage-truncated per round with superseded
-    * checkpoint blocks released ([[pageRank]] hygiene). Label volume per
+    * [[Rounds]] runs the rounds at a cadence of 2. Label volume per
     * round is exactly one row per (node, distinct-neighbor-label) pair,
     * bounded by the edge count — linear at any scale.
     */
@@ -878,7 +802,7 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e0 = canonicalEdges(edgeList)
     val (edges, _) = materializeEdges(e0, "a")
-    var labels = edges.select(col("a").as("node"))
+    val own = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .withColumn("community", col("node"))
       .localCheckpoint()
@@ -886,29 +810,21 @@ object Graph {
     // labeling TWICE (viaA + viaB), so a 2-round window executes 2² = 4
     // copies of the last checkpoint — the pageRank cadence trade (its
     // nesting factor is also ≤2), NOT the HITS one (×4 nesting forces
-    // per-round checkpoints there). The final round always checkpoints
-    // so the released edges never sit in the returned lineage.
-    var lastCkpt = labels
-    for (i <- 1 to rounds) {
+    // per-round checkpoints there)
+    val labels = Rounds.run(own, rounds, every = 2) { (lab, _) =>
       val viaA = edges
-        .join(labels.select(col("node").as("a"), col("community")), "a")
+        .join(lab.select(col("node").as("a"), col("community")), "a")
         .select(col("b").as("node"), col("community"))
       val viaB = edges
-        .join(labels.select(col("node").as("b"), col("community")), "b")
+        .join(lab.select(col("node").as("b"), col("community")), "b")
         .select(col("a").as("node"), col("community"))
-      val next = viaA.unionByName(viaB)
+      viaA.unionByName(viaB)
         .groupBy("node", "community").agg(count(lit(1)).as("c"))
         .groupBy("node")
         .agg(min(struct((-col("c")).as("nc"), col("community").as("lab"))).as("m"))
         .select(col("node"), col("m.lab").as("community"))
-      if (i % 2 == 0 || i == rounds) {
-        val ck = next.localCheckpoint()
-        org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(lastCkpt)
-        lastCkpt = ck
-        labels = ck
-      } else labels = next
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
+    Seq(own, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     if (sorted) labels.orderBy("node") else labels
   }
 
@@ -920,27 +836,11 @@ object Graph {
   def communitiesBasketOracleSql(rounds: Int = 4,
                                  from: String = "1996-01-01",
                                  until: String = "1997-01-01"): String = {
-    val iterCtes = (1 to rounds).map { i =>
-      s"""c$i AS MATERIALIZED (
-         |  SELECT node, community FROM (
-         |    SELECT node, community,
-         |           ROW_NUMBER() OVER (PARTITION BY node
-         |                              ORDER BY cnt DESC, community) AS rn
-         |    FROM (SELECT n.node, l.community, COUNT(*) AS cnt
-         |          FROM nbr n JOIN c${i - 1} l ON n.nb = l.node
-         |          GROUP BY n.node, l.community))
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |nbr AS MATERIALIZED (
        |  SELECT a AS node, b AS nb FROM e UNION ALL SELECT b, a FROM e),
        |c0 AS MATERIALIZED (SELECT DISTINCT node, node AS community FROM nbr),
-       |$iterCtes
+       |${lpaRoundCtes(rounds)}
        |SELECT node, community FROM c$rounds ORDER BY node""".stripMargin
   }
 
@@ -1002,27 +902,11 @@ object Graph {
   def modularityBasketOracleSql(rounds: Int = 4,
                                 from: String = "1996-01-01",
                                 until: String = "1997-01-01"): String = {
-    val iterCtes = (1 to rounds).map { i =>
-      s"""c$i AS MATERIALIZED (
-         |  SELECT node, community FROM (
-         |    SELECT node, community,
-         |           ROW_NUMBER() OVER (PARTITION BY node
-         |                              ORDER BY cnt DESC, community) AS rn
-         |    FROM (SELECT n.node, l.community, COUNT(*) AS cnt
-         |          FROM nbr n JOIN c${i - 1} l ON n.nb = l.node
-         |          GROUP BY n.node, l.community))
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |nbr AS MATERIALIZED (
        |  SELECT a AS node, b AS nb FROM e UNION ALL SELECT b, a FROM e),
        |c0 AS MATERIALIZED (SELECT DISTINCT node, node AS community FROM nbr),
-       |$iterCtes,
+       |${lpaRoundCtes(rounds)},
        |lab AS MATERIALIZED (SELECT node, community FROM c$rounds),
        |em AS (SELECT CAST(COUNT(*) AS BIGINT) AS m,
        |              CAST(SUM(CASE WHEN la.community = lb.community
@@ -1069,12 +953,13 @@ object Graph {
     * direction is preserved because any positive-gain 2-swap has a
     * positive-gain smaller-id half.
     *
-    * Scale shape per round: one nbr⋈labels join + count aggregate for
-    * k_{v,c}, one degree⋈labels aggregate for d_c, a keyed candidate join
-    * and one min(struct) argmax — all keyed shuffles at the slot-derived
-    * width; labels checkpointed per round, superseded checkpoints
-    * released ([[communities]] hygiene). m, deg are computed once from
-    * the checkpointed edge set.
+    * The rounds are [[localMoves]] over unit weights (Σw over 1s is the
+    * neighbor count k_{v,c}) — the move round [[louvainCoarsen]] runs on
+    * the weighted coarse graph. Scale shape per round: one nbr⋈labels
+    * join + aggregate for k_{v,c}, one degree⋈labels aggregate for d_c, a
+    * keyed candidate join and one min(struct) argmax — all keyed shuffles
+    * at the slot-derived width. m, deg are computed once from the
+    * checkpointed edge set.
     */
   def refineCommunities(edgeList: DataFrame, labels: DataFrame,
                         rounds: Int = 2, sorted: Boolean = true): DataFrame = {
@@ -1084,17 +969,32 @@ object Graph {
     val m = edges.count() // one job over already-checkpointed blocks
     val nbr = edges.select(col("a").as("node"), col("b").as("nb"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nb")))
+      .withColumn("w", lit(1L))
     val deg = nbr.groupBy("node").agg(count(lit(1)).as("deg")).localCheckpoint()
+    val lab = labels.select(col("node").cast("long").as("node"),
+      col("community").cast("long").as("community")).localCheckpoint()
+    val moved = localMoves(nbr, deg, lab, m, rounds)
+    Seq(lab, deg, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
+    if (sorted) moved.orderBy("node") else moved
+  }
+
+  /** `rounds` synchronous local-move rounds over a weighted neighbor
+    * relation — the move round of [[refineCommunities]] (unit weights) and
+    * [[louvainCoarsen]] (coarse-graph weights), with the former's exact
+    * integer score, swap guard and (stay, smallest-id) tie order. `nbr` is
+    * (node, nb, w) with every undirected edge in both directions, `deg`
+    * (node, deg) the weighted degree, `m` the total edge weight.
+    */
+  private def localMoves(nbr: DataFrame, deg: DataFrame, init: DataFrame,
+                         m: Long, rounds: Int): DataFrame = {
     val dec = DecimalType(38, 0)
     val twoM = lit(m).cast(dec) * lit(2)
-    var lab = labels.select(col("node").cast("long").as("node"),
-      col("community").cast("long").as("community")).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    Rounds.run(init, rounds) { (lab, _) =>
       val dc = lab.join(deg, "node")
         .groupBy("community").agg(sum(col("deg")).as("d"))
       val k = nbr
         .join(lab.select(col("node").as("nb"), col("community").as("c")), "nb")
-        .groupBy("node", "c").agg(count(lit(1)).as("k"))
+        .groupBy("node", "c").agg(sum(col("w")).as("k"))
       // the current community rides the candidate set with k >= 0 (a node
       // may have no remaining neighbor in it), via a max-merge of a 0-row
       val cand = k
@@ -1112,17 +1012,11 @@ object Graph {
               when(col("c") === col("community"), col("deg"))
                 .otherwise(lit(0L)).cast(dec))).as("score"),
           when(col("c") === col("community"), 0).otherwise(1).as("not_cur"))
-      val next = scored.groupBy("node")
+      scored.groupBy("node")
         .agg(min(struct((-col("score")).as("ns"), col("not_cur").as("nc"),
           col("c").as("lab"))).as("m"))
         .select(col("node"), col("m.lab").as("community"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(lab)
-      lab = next
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(deg)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    if (sorted) lab.orderBy("node") else lab
   }
 
   /** Generated DuckDB oracle for [[refineCommunities]] over the
@@ -1134,17 +1028,6 @@ object Graph {
   def louvainBasketOracleSql(lpaRounds: Int = 4, moveRounds: Int = 2,
                              from: String = "1996-01-01",
                              until: String = "1997-01-01"): String = {
-    val lpaCtes = (1 to lpaRounds).map { i =>
-      s"""c$i AS MATERIALIZED (
-         |  SELECT node, community FROM (
-         |    SELECT node, community,
-         |           ROW_NUMBER() OVER (PARTITION BY node
-         |                              ORDER BY cnt DESC, community) AS rn
-         |    FROM (SELECT n.node, l.community, COUNT(*) AS cnt
-         |          FROM nbr n JOIN c${i - 1} l ON n.nb = l.node
-         |          GROUP BY n.node, l.community))
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
     val moveCtes = (1 to moveRounds).map { i =>
       val prev = if (i == 1) s"c$lpaRounds" else s"l${i - 1}"
       s"""dc$i AS (SELECT l.community, SUM(CAST(d.deg AS HUGEINT)) AS d
@@ -1176,19 +1059,14 @@ object Graph {
          |             ORDER BY score DESC, not_cur ASC, c ASC) AS rn
          |    FROM sc$i) WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |nbr AS MATERIALIZED (
        |  SELECT a AS node, b AS nb FROM e UNION ALL SELECT b, a FROM e),
        |deg AS MATERIALIZED (
        |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM nbr GROUP BY node),
        |mm AS (SELECT CAST(COUNT(*) AS HUGEINT) AS m FROM e),
        |c0 AS MATERIALIZED (SELECT DISTINCT node, node AS community FROM nbr),
-       |$lpaCtes,
+       |${lpaRoundCtes(lpaRounds)},
        |$moveCtes
        |SELECT node, community FROM l$moveRounds ORDER BY node""".stripMargin
   }
@@ -1208,8 +1086,8 @@ object Graph {
     *
     * Weighted gain arithmetic stays exact: k_{V,C} = Σ edge weights from
     * supernode V to community C, deg_V the weighted degree (self-loops
-    * count twice), all integers in DECIMAL(38,0); the swap guard and
-    * (stay, smallest-id) tie order are [[refineCommunities]]'s verbatim.
+    * count twice), all integers in DECIMAL(38,0); the move round is
+    * [[refineCommunities]]' own ([[localMoves]]).
     *
     * Scale shape: the coarse graph is |communities|-sized — the
     * coarsening aggregate over the edge table is the only full-scale
@@ -1246,42 +1124,9 @@ object Graph {
         .select(col("a").as("node"), (col("w") * 2).as("w")))
       .groupBy("node").agg(sum("w").as("deg"))
       .localCheckpoint()
-    val dec = DecimalType(38, 0)
-    val twoM = lit(m).cast(dec) * lit(2)
     // every supernode starts as its own community (standard Louvain)
-    var clab = deg.select(col("node"), col("node").as("community"))
-    var clabCkpted = false
-    for (_ <- 1 to rounds) {
-      val dc = clab.join(deg, "node")
-        .groupBy("community").agg(sum(col("deg")).as("d"))
-      val k = nbr
-        .join(clab.select(col("node").as("nb"), col("community").as("c")), "nb")
-        .groupBy("node", "c").agg(sum(col("w")).as("k"))
-      val cand = k
-        .unionByName(clab.select(col("node"), col("community").as("c"),
-          lit(0L).as("k")))
-        .groupBy("node", "c").agg(max(col("k")).as("k"))
-      val scored = cand
-        .join(clab, "node")
-        .filter(col("c") <= col("community")) // swap guard: stay or move down
-        .join(deg, "node")
-        .join(dc.select(col("community").as("c"), col("d")), "c")
-        .select(col("node"), col("c"),
-          (twoM * col("k").cast(dec) -
-            col("deg").cast(dec) * (col("d").cast(dec) -
-              when(col("c") === col("community"), col("deg"))
-                .otherwise(lit(0L)).cast(dec))).as("score"),
-          when(col("c") === col("community"), 0).otherwise(1).as("not_cur"))
-      val next = scored.groupBy("node")
-        .agg(min(struct((-col("score")).as("ns"), col("not_cur").as("nc"),
-          col("c").as("lab"))).as("m"))
-        .select(col("node"), col("m.lab").as("community"))
-        .localCheckpoint()
-      if (clabCkpted)
-        org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(clab)
-      clab = next
-      clabCkpted = true
-    }
+    val clab = localMoves(nbr, deg, deg.select(col("node"), col("node").as("community")),
+      m, rounds)
     // map original nodes through their level-1 community to its final one.
     // LEFT join (r16, from the r15 ADVICE): the coarse graph only contains
     // communities with at least one incident edge in edgeList, so a label
@@ -1395,54 +1240,40 @@ object Graph {
     * Scale shape per round: two co-partitioned edge⋈label joins + one
     * map-side-combining MIN aggregate + one label⋈label self-join keyed
     * on the label value — all keyed shuffles at the slot-derived width
-    * ([[materializeEdges]]), superseded checkpoints released each round.
-    * `maxIters` is a safety fence, not a semantic knob: the operator
-    * THROWS if the fixpoint is not reached rather than returning a
-    * partial labeling (2·log₂(n) pointer-jumped rounds cover any graph;
-    * 64 covers n = 2⁶⁴ nodes).
+    * ([[materializeEdges]]), run by [[Rounds.fixpoint]] with Σ labels as
+    * its probe. `maxIters` is a safety fence, not a semantic knob: the
+    * operator THROWS (IllegalStateException, as [[kCore]] does) if the
+    * fixpoint is not reached rather than returning a partial labeling
+    * (2·log₂(n) pointer-jumped rounds cover any graph; 64 covers n = 2⁶⁴
+    * nodes).
     */
   def connectedComponents(edgeList: DataFrame, maxIters: Int = 64,
                           sorted: Boolean = true): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val e0 = canonicalEdges(edgeList)
     val (edges, _) = materializeEdges(e0, "a")
-    var labels = edges.select(col("a").as("node"))
+    val own = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .withColumn("comp", col("node"))
       .localCheckpoint()
-    var prevSum: Option[java.math.BigDecimal] = None
-    var converged = false
-    var iters = 0
-    while (!converged && iters < maxIters) {
-      val viaA = edges.join(labels.select(col("node").as("a"), col("comp")), "a")
+    val labels = Rounds.fixpoint("connectedComponents", own, maxIters)(
+        _.agg(sum(col("comp").cast(DecimalType(38, 0)))).head.getDecimal(0)) { lab =>
+      val viaA = edges.join(lab.select(col("node").as("a"), col("comp")), "a")
         .select(col("b").as("node"), col("comp"))
-      val viaB = edges.join(labels.select(col("node").as("b"), col("comp")), "b")
+      val viaB = edges.join(lab.select(col("node").as("b"), col("comp")), "b")
         .select(col("a").as("node"), col("comp"))
-      val relaxed = labels.unionByName(viaA).unionByName(viaB)
+      val relaxed = lab.unionByName(viaA).unionByName(viaB)
         .groupBy("node").agg(min("comp").as("comp"))
       // pointer jump: adopt the current label OF the label node. Every
       // label value is itself a node (labels only ever take node ids), so
       // the left join always hits; coalesce is belt-and-braces for the
       // self-labeled roots.
-      val jumped = relaxed
+      relaxed
         .join(relaxed.select(col("node").as("comp"), col("comp").as("jump")),
           Seq("comp"), "left")
         .select(col("node"), coalesce(col("jump"), col("comp")).as("comp"))
-        .localCheckpoint()
-      val s = jumped
-        .agg(sum(col("comp").cast(DecimalType(38, 0))).as("s"))
-        .head.getDecimal(0)
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(labels)
-      labels = jumped
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      iters += 1
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
-    require(converged,
-      s"connectedComponents did not converge within $maxIters rounds — " +
-        "pointer-jumped min propagation needs ~log2(diameter) rounds; " +
-        "raise maxIters only if the graph genuinely has 2^64-scale chains")
+    Seq(own, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     if (sorted) labels.orderBy("node") else labels
   }
 
@@ -1722,12 +1553,7 @@ object Graph {
     * spec-equivalent to), both-direction `nbr` and `deg`.
     */
   private def triBasketCtes(from: String, until: String): String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |tri AS MATERIALIZED (
        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
        |  FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
@@ -1825,8 +1651,9 @@ object Graph {
         .localCheckpoint()
       org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(sk)
       sk = skNext
+      // no seeds (an empty graph) sums to null: coalesce to 0
       val est = sk.join(broadcast(seeds), "node")
-        .agg(sum(expr("hll_sketch_estimate(sk)")).as("est"))
+        .agg(coalesce(sum(expr("hll_sketch_estimate(sk)")), lit(0L)).as("est"))
         .head.getAs[Number]("est").doubleValue()
       val grown = ball.unionByName(
         ball.join(nbr, ball("reached") === nbr("node"))
@@ -1870,12 +1697,7 @@ object Graph {
          |         CAST($bound AS DOUBLE) AS rel_err_bound,
          |         TRUE AS within_bound""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |nbr AS MATERIALIZED (
        |  SELECT a AS node, b AS nb FROM e UNION ALL SELECT b, a FROM e),
        |seeds AS MATERIALIZED (
@@ -1893,12 +1715,7 @@ object Graph {
     * double sequence, replayed operation-for-operation). */
   def assortativityBasketOracleSql(from: String = "1996-01-01",
                                    until: String = "1997-01-01"): String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-       |               WHERE l_shipdate >= TIMESTAMP '$from'
-       |                 AND l_shipdate < TIMESTAMP '$until'),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT x.p AS a, y.p AS b FROM items x
-       |  JOIN items y ON x.ok = y.ok AND x.p < y.p),
+    s"""${basketEdgeCtes(from, until)},
        |nbr AS (SELECT a AS node, b AS nb FROM e UNION ALL SELECT b, a FROM e),
        |deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM nbr GROUP BY node),
        |s AS (SELECT CAST(COUNT(*) AS BIGINT) AS m,

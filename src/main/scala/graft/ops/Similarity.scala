@@ -1490,6 +1490,8 @@ object Similarity {
                nQueries: Int = 20, k: Int = 5, ef: Int = 64,
                hopsPerLevel: Int = 1, beamRounds: Int = 4): DataFrame = {
     require(k >= 1 && ef >= k, s"need ef >= k >= 1, got ef=$ef k=$k")
+    require(hopsPerLevel >= 0 && beamRounds >= 1,
+      s"need hopsPerLevel >= 0 and beamRounds >= 1, got $hopsPerLevel/$beamRounds")
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
     // the bounded query frame is read exactly once (the entry cursor
@@ -1534,7 +1536,7 @@ object Similarity {
     // cursor: (qid, cid, sim, qv, qn), one row per query. The entry
     // point is a single corpus row, so the initial scores come from one
     // broadcast of that row against the query table — not a corpus join.
-    var cur = q.crossJoin(broadcast(e.filter(col("vec_id") === entry)
+    val entryCur = q.crossJoin(broadcast(e.filter(col("vec_id") === entry)
         .select(col("vec_id").as("cid"), col("v"), col("nrm"))))
       .select(col("qid"), col("cid"),
         (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("sim"),
@@ -1549,38 +1551,34 @@ object Similarity {
         col("qv").as("qv"), col("qn").as("qn"))).as("b"))
       .select(col("qid"), col("b.c").as("cid"), (-col("b.ns")).as("sim"),
         col("b.qv").as("qv"), col("b.qn").as("qn"))
-    // checkpoint per hop: each hop's plan embeds the cursor TWICE (the
-    // stay-option union + the broadcast frontier), so un-checkpointed
-    // hops nest the previous hop's three broadcast builds exponentially
-    // — measured SLOWER than paying one eager checkpoint job per hop on
-    // the nQueries-row cursor (the HITS nesting-factor lesson: cadence
-    // follows the plan's self-embedding count, not job-count intuition)
-    for (l <- lMax to 1 by -1; _ <- 1 to hopsPerLevel) {
-      val stepped = best(cur.unionByName(hop(cur, l)))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(cur)
-      cur = stepped
-    }
-    // base-layer beam: candidate set capped at ef per query per round.
-    // Dedup via ONE (qid, cid) aggregate — re-scoring an already-seen
-    // candidate recomputes the same sim, so max() folds the visited set
-    // in without the two extra shuffles an anti-join/except would plan.
-    var beam = cur
-    for (_ <- 1 to beamRounds) {
-      val expanded = hop(beam, 0)
+    // base-layer beam round: candidate set capped at ef per query. Dedup
+    // via ONE (qid, cid) aggregate — re-scoring an already-seen candidate
+    // recomputes the same sim, so max() folds the visited set in without
+    // the two extra shuffles an anti-join/except would plan. max(qv)/
+    // max(qn) are constant-folds, not choices: every row of a (qid, cid)
+    // group carries the same query vector, so the aggregate just keeps
+    // qv/qn on the frame without a re-attach join.
+    def widen(beam: DataFrame): DataFrame = {
       val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
-      // max(qv)/max(qn) are constant-folds, not choices: every row of a
-      // (qid, cid) group carries the same query vector, so the aggregate
-      // just keeps qv/qn on the frame without a re-attach join
-      val next = beam.unionByName(expanded)
+      beam.unionByName(hop(beam, 0))
         .groupBy("qid", "cid").agg(max("sim").as("sim"),
           max("qv").as("qv"), max("qn").as("qn"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= ef).drop("rn")
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(beam)
-      beam = next
     }
+    // the greedy hops (layers lMax..1, `hopsPerLevel` each), then the beam
+    // rounds, each checkpointed: each hop's plan embeds the cursor TWICE
+    // (the stay-option union + the broadcast frontier), so un-checkpointed
+    // hops nest the previous hop's three broadcast builds exponentially —
+    // measured SLOWER than paying one eager checkpoint job per hop on the
+    // nQueries-row cursor (the HITS nesting-factor lesson: cadence follows
+    // the plan's self-embedding count, not job-count intuition)
+    val greedyHops = lMax * hopsPerLevel
+    val beam = Rounds.run(entryCur, greedyHops + beamRounds) { (cur, i) =>
+      if (i <= greedyHops) best(cur.unionByName(hop(cur, lMax - (i - 1) / hopsPerLevel)))
+      else widen(cur)
+    }
+    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(entryCur)
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
     beam.filter(col("cid") =!= col("qid"))
       .withColumn("rn", row_number().over(w).cast("long"))

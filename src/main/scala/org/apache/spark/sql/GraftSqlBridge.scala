@@ -96,13 +96,13 @@ object GraftSqlBridge {
     *
     * `Dataset.unpersist` cannot do this — checkpoint blocks live on the
     * internal RDD wrapped in the plan's `LogicalRDD`, not in the
-    * CacheManager. Iterative operators (graft.ops.Dedup.clusterPairs)
-    * checkpoint every round; without an explicit release each round's
-    * blocks survive until JVM garbage collection triggers the
-    * ContextCleaner — unbounded resident storage over a long-running
-    * session. ONLY call this on checkpoints that are fully superseded:
-    * a localCheckpoint has no lineage, so a released RDD that is
-    * referenced again cannot be recomputed and the job fails.
+    * CacheManager. The iterative kernels checkpoint round after round
+    * (graft.ops.Rounds, which releases each superseded round); without an
+    * explicit release each round's blocks survive until JVM garbage
+    * collection triggers the ContextCleaner — unbounded resident storage
+    * over a long-running session. ONLY call this on checkpoints that are
+    * fully superseded: a localCheckpoint has no lineage, so a released
+    * RDD that is referenced again cannot be recomputed and the job fails.
     */
   def releaseLocalCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {

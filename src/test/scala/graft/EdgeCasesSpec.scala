@@ -200,5 +200,10 @@ class EdgeCasesSpec extends SparkSpec {
     val docs = Seq((1L, "t", "s", 5L), (2L, "u", "s", 9L))
       .toDF("doc_id", "text", "source", "n_chars")
     assert(Text.prioritySample(docs, 100).collect().length == 2)
+    // HyperANF report over no edges: no seeds, so every hop reads zero
+    // pairs inside the bound (the seed-summed estimate is 0, not null)
+    val anf = Graph.neighborhoodReport(Seq.empty[(Long, Long)].toDF("src", "dst"), hops = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(4)))
+    assert(anf.toSeq == Seq((1L, 0L, 0L, true), (2L, 0L, 0L, true)))
   }
 }

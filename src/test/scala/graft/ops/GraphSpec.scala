@@ -526,7 +526,7 @@ class GraphSpec extends SparkSpec {
     assert(out.size == 64 && out.values.forall(_ == 0L))
     // and the safety fence THROWS (never a partial labeling) when capped
     // below what convergence + the one confirmation round need
-    intercept[IllegalArgumentException](
+    intercept[IllegalStateException](
       Graph.connectedComponents(path, maxIters = 2))
   }
 

@@ -55,27 +55,84 @@ class ReExecutionSpec extends SparkSpec {
     "Affinity.associationRules" -> (s => Affinity.associationRules(baskets(s), minPairs = 1)),
     "Affinity.itemNeighbors" -> (s =>
       Affinity.itemNeighbors(baskets(s), topK = 3, minPairs = 1, pruneItems = false)),
-    "Graph.refineCommunities" -> { s =>
-      val e = edges(s)
-      Graph.refineCommunities(e, Graph.communities(e, rounds = 4, sorted = false), rounds = 2)
-    },
     "Similarity.ivfTopK" -> (s => Similarity.ivfTopK(emb(s), 20, 5)),
     "Similarity.kmeansPrototypes" -> (s => Similarity.kmeansPrototypes(emb(s))),
     "Similarity.lshFidelityReport" -> (s => Similarity.lshFidelityReport(emb(s))),
     "Similarity.annRecallReport" -> (s => Similarity.annRecallReport(emb(s), 20, 5)),
     "q_curation_gopher" -> (s => SparkEntry.queries("q_curation_gopher")(s, sfDir)))
 
+  private def trade(s: SparkSession): DataFrame = Graph.tradeEdges(Tables.lineitem(s, sfDir),
+    Tables.orders(s, sfDir), Tables.customer(s, sfDir), Tables.supplier(s, sfDir))
+  private def brandSeeds(s: SparkSession): DataFrame = Tables.part(s, sfDir)
+    .filter(col("p_brand") === "Brand#1").select(col("p_partkey").as("node"))
+
+  // The kernels Rounds drives. Each entry prepares the kernel's inputs
+  // (materializing any checkpointed ones) and returns the build, so the
+  // residency check below sees only what the kernel itself leaves behind.
+  private val kernels: Seq[(String, SparkSession => () => DataFrame)] = Seq(
+    "Graph.pageRank" -> { s => val e = trade(s); () => Graph.pageRank(e, weightCol = Some("w")) },
+    "Graph.personalizedPageRank" -> { s =>
+      val e = trade(s)
+      val seeds = e.select(col("src").as("node")).distinct().orderBy("node").limit(2)
+      () => Graph.personalizedPageRank(e, seeds, iters = 5, weightCol = Some("w"))
+    },
+    "Graph.hits" -> { s => val e = trade(s); () => Graph.hits(e, iters = 3) },
+    "Graph.hopDistance" -> { s =>
+      val (e, seeds) = (edges(s), brandSeeds(s)); () => Graph.hopDistance(e, seeds)
+    },
+    "Graph.shortestPaths" -> { s =>
+      val (e, seeds) = (Graph.basketProximityEdges(Tables.lineitem(s, sfDir)), brandSeeds(s))
+      () => Graph.shortestPaths(e, seeds)
+    },
+    "Graph.kCore" -> { s => val e = edges(s); () => Graph.kCore(e, k = 2) },
+    "Graph.communities" -> { s => val e = edges(s); () => Graph.communities(e) },
+    "Graph.connectedComponents" -> { s => val e = edges(s); () => Graph.connectedComponents(e) },
+    "Graph.refineCommunities" -> { s =>
+      val e = edges(s)
+      val labels = Graph.communities(e, rounds = 4, sorted = false)
+      () => Graph.refineCommunities(e, labels, rounds = 2)
+    },
+    "Graph.louvainCoarsen" -> { s =>
+      val e = edges(s)
+      val labels = Graph.refineCommunities(e, Graph.communities(e, sorted = false), sorted = false)
+      () => Graph.louvainCoarsen(e, labels)
+    },
+    "Similarity.hnswTopK" -> { s =>
+      val e = emb(s)
+      val graph = Similarity.hnswGraph(e, 8)
+      () => Similarity.hnswTopK(e, graph, 20, 5)
+    })
+
+  private def reExecutes(name: String, build: () => DataFrame, checkResidency: Boolean): Unit = {
+    GraftSqlBridge.clearSqlCache(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = build()
+    if (checkResidency) {
+      // the round driver's contract: every checkpoint the build made is in
+      // the returned frame's plan or already released
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val inPlan = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+      assert(added == inPlan,
+        s"$name: the build left persisted RDDs ${added.toSeq.sorted} but its plan reads ${inPlan.toSeq.sorted}")
+    }
+    assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: building left a SQL cache entry")
+    val n = df.count()
+    val first = df.collect().map(_.toString).sorted.toSeq
+    val second = df.collect().map(_.toString).sorted.toSeq
+    assert(first == second, s"$name: the second collect returned different rows")
+    assert(n == first.length, s"$name: count $n but collect returned ${first.length} rows")
+    assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: the actions left a SQL cache entry")
+  }
+
   operators.foreach { case (name, build) =>
     test(s"$name: one built frame runs count, then collect twice, with identical rows") {
-      GraftSqlBridge.clearSqlCache(spark)
-      val df = build(spark)
-      assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: building left a SQL cache entry")
-      val n = df.count()
-      val first = df.collect().map(_.toString).sorted.toSeq
-      val second = df.collect().map(_.toString).sorted.toSeq
-      assert(first == second, s"$name: the second collect returned different rows")
-      assert(n == first.length, s"$name: count $n but collect returned ${first.length} rows")
-      assert(GraftSqlBridge.sqlCacheIsEmpty(spark), s"$name: the actions left a SQL cache entry")
+      reExecutes(name, () => build(spark), checkResidency = false)
+    }
+  }
+
+  kernels.foreach { case (name, prepare) =>
+    test(s"$name: one built frame runs count, then collect twice, with identical rows") {
+      reExecutes(name, prepare(spark), checkResidency = true)
     }
   }
 
