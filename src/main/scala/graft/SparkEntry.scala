@@ -33,10 +33,14 @@ object SparkEntry {
     Graph.tradeEdges(Tables.lineitem(s, dir), Tables.orders(s, dir),
       Tables.customer(s, dir), Tables.supplier(s, dir))
   // Louvain level 1 over one edge frame: the 4-round LPA labeling refined
-  // by 2 local-move rounds (q_louvain, q_louvain_multilevel)
-  private def louvainLabels(edges: DataFrame): DataFrame =
-    Graph.refineCommunities(edges, Graph.communities(edges, rounds = 4, sorted = false),
-      rounds = 2, sorted = false)
+  // by 2 local-move rounds (q_louvain, q_louvain_multilevel); the LPA
+  // labels are released once refineCommunities has copied them
+  private def louvainLabels(edges: DataFrame): DataFrame = {
+    val lpa = Graph.communities(edges, rounds = 4, sorted = false)
+    val refined = Graph.refineCommunities(edges, lpa, rounds = 2, sorted = false)
+    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(lpa)
+    refined
+  }
   private val ndcgQuerySets =
     Seq(Seq("join", "vector"), Seq("dup", "spark"), Seq("the", "data"))
   private def brandSeedsOf(s: SparkSession, dir: String): DataFrame =

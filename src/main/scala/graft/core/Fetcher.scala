@@ -131,10 +131,11 @@ final class ChunkedFetcher(df: DataFrame, maxDriverKeys: Int = 100000) {
   /** All chunks as one DataFrame — the reference's full-table loop
     * (main.py:17-18: for chunk in chunks: fetch) collapses to a union of
     * filtered scans. Kept for parity; [[fetchAllPartitioned]] is the scale
-    * form.
+    * form. No chunks (an empty table) fetch no rows: an empty frame with
+    * the table's schema.
     */
   def fetchAll(chunksSeq: Seq[FetchingChunk[Any]]): DataFrame =
-    chunksSeq.map(fetch(_)).reduce(_ unionByName _)
+    chunksSeq.map(fetch(_)).reduceOption(_ unionByName _).getOrElse(df.limit(0))
 
   /** The scale path: no driver-side keys at all — hash-partition the scan
     * by the chunk column into n "chunks" (= partitions). Equivalent work

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders (see TESTDATA.md / FIXTURES.md).
   *
@@ -16,32 +18,22 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Catalog-style resolution memo (round 10): `spark.read.parquet` re-runs
-  // file listing + footer schema inference on EVERY call — measured at
-  // 70-90 ms per table on this host (PerfProbe `floor`) — and Tables.load
-  // runs once per table per query per bench rep, so at 177 registered
-  // queries the re-resolution alone is ~15-25 s of headline bench total.
-  // A real deployment resolves a table ONCE into a catalog (metastore /
-  // temp view) and reuses the relation across queries; this memo is that
-  // catalog analog for the fixture loader. Fixture dirs are immutable by
-  // contract (TESTDATA.md), so a cached listing snapshot cannot go stale.
-  // Retention is keyed PER SESSION (round-11, from round-10 review): the
-  // previous single last-session-wins slot meant two concurrently active
-  // sessions (parallel suites using newSession) ping-ponged the memo and
-  // silently lost all resolution caching. Round-12 (from round-11 review):
-  // the per-session keying must NOT be a WeakHashMap keyed by the session —
-  // the cached DataFrames strongly reference their SparkSession, so a
-  // value→key chain kept every weak key reachable forever and the map grew
-  // with every session ever created. Instead the key is `sessionUUID` (a
-  // plain String holding no session reference) and retention is explicitly
-  // bounded two ways:
-  //   - stopped sessions are swept on every access (an `isStopped` flag
-  //     read per resident entry — entries are capped, so O(8) per load);
-  //   - the map is a small access-ordered LRU over sessions (parallel
-  //     suites run a handful of concurrent sessions; the 178-session
-  //     churn of a full test run retains only the live tail).
-  // Only resolution is cached — no data is persisted; every query still
-  // scans.
+  // Resolution has two layers.
+  //   - The catalog (process-wide, schema): `spark.read.parquet` infers a
+  //     file's schema with its own Spark job reading the footer, about
+  //     75 ms per table. The catalog keeps the raw inferred schema per
+  //     fixture file, keyed by the file's identity (qualified path, length,
+  //     modification time) plus the session confs that change parquet
+  //     inference, so a new session's first load only lists the file. At
+  //     most one entry per path; a changed identity replaces it.
+  //   - The memo (per session, frame): the resolved DataFrame, so every
+  //     query of a session reads the same relation. It is keyed by
+  //     `sessionUUID`, a String holding no session reference (the frames
+  //     reference their session, so a session-keyed WeakHashMap could never
+  //     clear), stopped sessions are swept on every access, and the map is
+  //     a small access-ordered LRU over live sessions.
+  // Only metadata is kept: every query still lists its file and scans it,
+  // and no plan or frame crosses sessions.
   private val maxSessions = 8
   private val memo =
     new java.util.LinkedHashMap[String,
@@ -83,7 +75,37 @@ object Tables {
     frames.getOrElseUpdate((dir, name), resolve(spark, dir, name))
   }
 
+  // Parquet schema inference reads these session confs, so their values
+  // are part of a catalog entry's identity.
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+  private type FileIdentity = (Long, Long, Seq[Option[String]]) // length, mtime, confs
+  private val catalog =
+    new java.util.concurrent.ConcurrentHashMap[String, (FileIdentity, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per file
+    * identity and inference confs. Inference runs outside any lock: a
+    * first-load race infers twice and keeps either (equal) result.
+    */
+  private def rawSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val status = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val file = status.getPath.toString
+    val identity =
+      (status.getLen, status.getModificationTime, inferenceConfs.map(spark.conf.getOption))
+    val hit = catalog.get(file)
+    if (hit != null && hit._1 == identity) hit._2
+    else {
+      val schema = spark.read.parquet(path).schema
+      catalog.put(file, (identity, schema))
+      schema
+    }
+  }
+
   private def resolve(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    def read(): DataFrame = spark.read.schema(rawSchema(spark, path)).parquet(path)
     if (name == "events") {
       // The events fixture's `ts` physical type has drifted across fixture
       // regenerations (TIMESTAMP(NANOS) through round 6, TIMESTAMP(MICROS,
@@ -103,7 +125,7 @@ object Tables {
       // named test instead of every events consumer.
       if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = read()
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       raw.schema("ts").dataType match {
@@ -113,7 +135,7 @@ object Tables {
         case other => throw new IllegalStateException(
           s"events.ts loaded as unsupported dtype $other — extend Tables.load for this fixture era")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read()
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

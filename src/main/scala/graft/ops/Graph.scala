@@ -1420,7 +1420,10 @@ object Graph {
     */
   def triangleCorners(edgeList: DataFrame): DataFrame = {
     val e = canonicalEdges(edgeList).localCheckpoint()
-    cornersFrom(e, degreesOf(e))
+    val corners = cornersFrom(e, degreesOf(e))
+    // cornersFrom checkpointed the oriented edges the result reads
+    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(e)
+    corners
   }
 
   /** Per-node triangle profile: `(node, deg, n_tri, lcc)` — undirected

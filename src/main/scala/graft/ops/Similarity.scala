@@ -1600,7 +1600,10 @@ object Similarity {
                        m: Int = 8, ef: Int = 64,
                        recallFloor: Double = 0.93): DataFrame = {
     val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("cid"))
-    val got = hnswTopK(embeddings, hnswGraph(embeddings, m), nQueries, k, ef)
+    val graph = hnswGraph(embeddings, m)
+    val got = hnswTopK(embeddings, graph, nQueries, k, ef)
+    // hnswTopK returns a checkpoint of its beam, which no longer reads the index
+    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(graph)
     val hits = exact.join(got.select(col("qid"), col("cid")),
         Seq("qid", "cid"), "left_semi")
       .groupBy("qid").agg(count(lit(1)).as("hits"))

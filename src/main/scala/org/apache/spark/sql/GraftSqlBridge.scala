@@ -84,6 +84,13 @@ object GraftSqlBridge {
   def clearSqlCache(spark: SparkSession): Unit =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.clearCache()
 
+  /** Block until the listener bus has delivered every event posted so far
+    * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`), so a listener
+    * has seen every job started before the call — specs count jobs with it.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Stable per-session identity as a plain String (holds no session
     * reference) — `SparkSession.sessionUUID` is `private[sql]`, and
     * graft.core.Tables needs it as a retention key that cannot itself keep

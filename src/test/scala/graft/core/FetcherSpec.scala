@@ -24,6 +24,24 @@ class FetcherSpec extends SparkSpec {
     assert(refetched.except(orig).isEmpty && orig.except(refetched).isEmpty)
   }
 
+  test("chunks + fetchAll of an empty table: no chunks, an empty frame with its schema") {
+    val empty = Tables.orders(spark, sfDir).filter(lit(false))
+    val fetcher = new ChunkedFetcher(empty)
+    val chunks = fetcher.chunks("o_custkey", byNbChunks = Some(4))
+    assert(chunks.isEmpty)
+    val all = fetcher.fetchAll(chunks)
+    assert(all.schema == empty.schema)
+    assert(all.count() == 0)
+  }
+
+  test("fetch(chunk) builds without a Spark job once the table is loaded") {
+    val fetcher = ChunkedFetcher(spark, sfDir, "orders")
+    val chunk = fetcher.chunks("o_custkey", byNbChunks = Some(4)).head
+    val (jobs, df) = jobsDuring(fetcher.fetch(chunk))
+    assert(jobs == 0, s"building one chunk's fetch ran $jobs job(s)")
+    assert(df.count() > 0)
+  }
+
   test("fetch of a single chunk returns exactly that chunk's rows") {
     val fetcher = ChunkedFetcher(spark, sfDir, "orders")
     val chunk = fetcher.chunks("o_custkey", byNbChunks = Some(5)).head

@@ -125,6 +125,42 @@ class FixturesSpec extends SparkSpec {
     churned.foreach(_ => ()) // keep the sessions reachable through the assertions above
   }
 
+  test("a fresh session loads every table without a Spark job once one session has") {
+    val loaded = Tables.all.map(Tables.load(spark, sfDir, _).schema)
+    val fresh = spark.newSession()
+    val (jobs, frames) = jobsDuring(Tables.all.map(Tables.load(fresh, sfDir, _)))
+    assert(jobs == 0, s"a fresh session's loads of ${Tables.all.size} known tables ran $jobs job(s)")
+    assert(frames.map(_.schema) == loaded)
+    assert(frames.forall(_.sparkSession eq fresh))
+  }
+
+  test("a fixture file replaced in place resolves to its new schema in a fresh session") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val tmp = Files.createTempDirectory("graft-tables")
+    val file = tmp.resolve("region.parquet")
+    try {
+      Files.copy(Paths.get(sfDir, "region.parquet"), file)
+      val before = Tables.load(spark.newSession(), tmp.toString, "region")
+      assert(before.columns.toSeq == Seq("r_regionkey", "r_name"))
+      Files.copy(Paths.get(sfDir, "nation.parquet"), file, StandardCopyOption.REPLACE_EXISTING)
+      val after = Tables.load(spark.newSession(), tmp.toString, "region")
+      assert(after.columns.toSeq == Seq("n_nationkey", "n_name", "n_regionkey"))
+      assert(after.count() == Tables.nation(spark, sfDir).count())
+    } finally {
+      Files.deleteIfExists(file)
+      Files.deleteIfExists(tmp)
+    }
+  }
+
+  test("events loads with a TimestampType ts in a fresh session") {
+    val first = Tables.events(spark, sfDir)
+    val fresh = Tables.events(spark.newSession(), sfDir)
+    assert(fresh.schema("ts").dataType == TimestampType)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "ts").orderBy("event_id").collect().toSeq
+    assert(rows(fresh) == rows(first))
+  }
+
   test("fixture row counts scale as documented (sf0.001 baseline)") {
     // sf multipliers apply to the fact/extension tables; dims stay fixed.
     val base = TestSpark.sfDir

@@ -48,7 +48,6 @@ class ReExecutionSpec extends SparkSpec {
       Graph.modularity(e, Graph.communities(e, rounds = 4, sorted = false))
     },
     "Graph.triangleStats" -> (s => Graph.triangleStats(edges(s))),
-    "Graph.triangleCorners" -> (s => Graph.triangleCorners(edges(s))),
     "Graph.triangleProfile" -> (s => Graph.triangleProfile(edges(s))),
     "Graph.edgeEmbeddedness" -> (s => Graph.edgeEmbeddedness(edges(s))),
     "Graph.degreeAssortativity" -> (s => Graph.degreeAssortativity(edges(s))),
@@ -66,9 +65,10 @@ class ReExecutionSpec extends SparkSpec {
   private def brandSeeds(s: SparkSession): DataFrame = Tables.part(s, sfDir)
     .filter(col("p_brand") === "Brand#1").select(col("p_partkey").as("node"))
 
-  // The kernels Rounds drives. Each entry prepares the kernel's inputs
+  // The kernels Rounds drives, and the builds that release the checkpoints
+  // of the operators they compose. Each entry prepares the build's inputs
   // (materializing any checkpointed ones) and returns the build, so the
-  // residency check below sees only what the kernel itself leaves behind.
+  // residency check below sees only what the build itself leaves behind.
   private val kernels: Seq[(String, SparkSession => () => DataFrame)] = Seq(
     "Graph.pageRank" -> { s => val e = trade(s); () => Graph.pageRank(e, weightCol = Some("w")) },
     "Graph.personalizedPageRank" -> { s =>
@@ -101,7 +101,12 @@ class ReExecutionSpec extends SparkSpec {
       val e = emb(s)
       val graph = Similarity.hnswGraph(e, 8)
       () => Similarity.hnswTopK(e, graph, 20, 5)
-    })
+    },
+    "Graph.triangleCorners" -> { s => val e = edges(s); () => Graph.triangleCorners(e) },
+    "Similarity.hnswRecallReport" -> { s =>
+      val e = emb(s); () => Similarity.hnswRecallReport(e, 20, 5)
+    },
+    "q_louvain" -> { s => () => SparkEntry.queries("q_louvain")(s, sfDir) })
 
   private def reExecutes(name: String, build: () => DataFrame, checkResidency: Boolean): Unit = {
     GraftSqlBridge.clearSqlCache(spark)

@@ -108,23 +108,12 @@ class SearchSpec extends SparkSpec {
   }
 
   test("bm25Lazy: building the frame runs no Spark job (everything-is-lazy contract)") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    // load the table BEFORE arming the listener: spark.read.parquet may run
-    // its own footer/schema job, which is table loading, not the operator
+    // load the table BEFORE counting: a first load may run its own
+    // footer/schema job, which is table loading, not the operator
     val d = Tables.documents(spark, sfDir)
-    d.schema
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val df = Search.bm25Lazy(d, terms, 10)
-      Thread.sleep(1000) // listener bus is async; give submissions time to surface
-      assert(counter.get() == 0,
-        s"bm25Lazy construction submitted ${counter.get()} job(s)")
-      assert(df.columns.toSeq == Seq("doc_id", "score", "n_terms"))
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (jobs, df) = jobsDuring(Search.bm25Lazy(d, terms, 10))
+    assert(jobs == 0, s"bm25Lazy construction submitted $jobs job(s)")
+    assert(df.columns.toSeq == Seq("doc_id", "score", "n_terms"))
   }
 
   test("non-token query terms are rejected") {
