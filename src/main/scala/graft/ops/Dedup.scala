@@ -439,11 +439,16 @@ object Dedup {
   /** Duplicate CLUSTERS: connected components over the near-dup pair graph,
     * labeled by the component's minimum doc_id — the end-product a dedup
     * pipeline keys "keep one per cluster" on. The components come from
-    * [[clusterPairs]] over the [[jaccardPairs]] graph.
+    * [[clusterPairs]] over the [[jaccardPairs]] graph, whose checkpoints
+    * are released once [[clusterPairs]] has copied the pairs.
     */
   def dupClusters(documents: DataFrame, threshold: Double = 0.5,
-                  sorted: Boolean = true): DataFrame =
-    clusterPairs(jaccardPairs(documents, threshold, sorted = false), sorted)
+                  sorted: Boolean = true): DataFrame = {
+    val pairs = jaccardPairs(documents, threshold, sorted = false)
+    val out = clusterPairs(pairs, sorted)
+    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpointsExcept(pairs, documents, out)
+    out
+  }
 
   /** Leakage-safe train/validation split: the md5-bucket assignment of
     * [[Text.trainValSplit]] keyed by the NEAR-DUP CLUSTER root instead of
@@ -562,8 +567,13 @@ object Dedup {
     * non-keeper list; no projection to ids, no join back, no output sort
     * (the caller orders its own final result).
     */
-  def dedupSurvivors(documents: DataFrame, threshold: Double = 0.5): DataFrame =
-    dedupSurvivors(documents, jaccardPairs(documents, threshold, sorted = false))
+  def dedupSurvivors(documents: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val pairs = jaccardPairs(documents, threshold, sorted = false)
+    val out = dedupSurvivors(documents, pairs)
+    // the pair graph's own checkpoints are superseded by clusterPairs' copy
+    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpointsExcept(pairs, documents, out)
+    out
+  }
 
   /** Survivors from an ARBITRARY near-dup pair graph (`id_a`/`id_b`) — the
     * pluggable form: pass [[minhashPairs]] output and the same anti-join

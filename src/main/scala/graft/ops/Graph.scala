@@ -21,31 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Graph {
 
-  /** Derive an edge frame ONCE and hand back (edges, nParts): the
-    * derivation is localCheckpointed at its natural width, counted (a
-    * cheap job over the just-cached blocks), re-shuffled to the iteration
-    * width [[Helpers.iterParts]] derives from that count, checkpointed at
-    * that width, and the first checkpoint released.
-    *
-    * Round 10 shipped count-then-checkpoint on the assumption that the
-    * count job and the repartition job shared e0's shuffle map outputs —
-    * they don't: separate Dataset actions compile to independent physical
-    * plans with fresh shuffle IDs, so an expensive derivation (tradeEdges:
-    * three joins + an aggregate) executed TWICE. Derive-once instead pays
-    * one transient second copy of the (projected, deduped) edge set and
-    * one narrow re-shuffle of already-materialized rows — strictly cheaper
-    * than re-deriving at any scale where the derivation is more than a
-    * scan.
-    */
-  private def materializeEdges(e0: DataFrame, partKey: String): (DataFrame, Int) = {
-    val first = e0.localCheckpoint()
-    val nEdges = first.count()
-    val nParts = Helpers.iterParts(first, nEdges)
-    val edges = first.repartition(nParts, col(partKey)).localCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(first)
-    (edges, nParts)
-  }
-
   /** Rounds between the rank checkpoints of [[pageRank]] and
     * [[personalizedPageRank]]; chosen in PERF_HISTORY r5 and its
     * re-sweep (5 read the same as 3). Each checkpoint is an eager job, and
@@ -63,7 +38,7 @@ object Graph {
     * correction term entirely.
     */
   private final class RankGraph(edgeList: DataFrame, weightCol: Option[String]) {
-    private val e0 = weightCol match {
+    private val edges = (weightCol match {
       case Some(w) =>
         edgeList.select(col("src").cast("long"), col("dst").cast("long"),
             col(w).cast("long").as("w"))
@@ -72,14 +47,12 @@ object Graph {
         edgeList.select(col("src").cast("long"), col("dst").cast("long"))
           .distinct()
           .withColumn("w", lit(1L))
-    }
-    private val (edges, nParts) = materializeEdges(e0, "src")
+    }).localCheckpoint()
     private val outdeg = edges.groupBy("src")
       .agg(sum("w").cast("double").as("outdeg"))
     val nodes: DataFrame = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
-      .repartition(nParts, col("node"))
       .localCheckpoint()
     private val dangling = nodes
       .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
@@ -119,13 +92,13 @@ object Graph {
     * oracle arithmetic — exactly as before. Weighted form: contribution
     * r_u · w_uv / W_u with W_u the weighted out-degree ([[RankGraph]]).
     *
-    * Scale shape: edges are deduped, lineage-truncated (localCheckpoint)
-    * and hash-partitioned once; each iteration is one join (edges ⋈ ranks,
-    * co-partitioned on src) + one aggregate keyed by dst — the same
-    * two-exchange round as label propagation, run by [[Rounds]] at a
-    * cadence of [[RankCheckpointEvery]]. The node count and out-degrees are
-    * computed once; `n` is a driver scalar (one construction job, the
-    * documented [[Search.bm25]] trade).
+    * Scale shape: edges are deduped and lineage-truncated
+    * (localCheckpoint) once; each iteration is one join (edges ⋈ ranks on
+    * src) + one aggregate keyed by dst — the same keyed-shuffle round as
+    * label propagation, run by [[Rounds]] at a cadence of
+    * [[RankCheckpointEvery]]. The node count and out-degrees are computed
+    * once; `n` is a driver scalar (one construction job, the documented
+    * [[Search.bm25]] trade).
     */
   def pageRank(edgeList: DataFrame, iters: Int = 10,
                damping: Double = 0.85, sorted: Boolean = true,
@@ -400,15 +373,15 @@ object Graph {
     * partitioning and replayable in ANSI SQL ([[hitsOracleSql]], the
     * iteration-unrolled pattern).
     *
-    * Scale shape: identical to [[pageRank]] — edges deduped,
-    * lineage-truncated, hash-partitioned once; each half-step is one
-    * co-partitioned join + one keyed aggregate; norms are 1-row
-    * broadcasts. Checkpoints run EVERY iteration, not pageRank's
-    * batched 3: a HITS round embeds its predecessor ~4× (two score
-    * subtrees × two norm broadcasts), so an un-truncated window of k
-    * rounds executes ~4^k nested broadcast jobs — measured 2× wall at
-    * k=3 vs k=1 on the fixture graph — where pageRank's factor is ≤2 and
-    * batching wins instead ([[Rounds]] at a cadence of 1). Score frames
+    * Scale shape: identical to [[pageRank]] — edges deduped and
+    * lineage-truncated once; each half-step is one keyed join + one keyed
+    * aggregate; norms are 1-row broadcasts. Checkpoints run EVERY
+    * iteration, not pageRank's batched 3: a HITS round embeds its
+    * predecessor ~4× (two score subtrees × two norm broadcasts), so an
+    * un-truncated window of k rounds executes ~4^k nested broadcast
+    * jobs — measured 2× wall at k=3 vs k=1 on the fixture graph — where
+    * pageRank's factor is ≤2 and batching wins instead ([[Rounds]] at a
+    * cadence of 1). Score frames
     * stay node-sparse: a node with no in-edges simply never gets an
     * authority (≡ score 0) and costs nothing in the joins; the final
     * output densifies with COALESCE.
@@ -416,13 +389,12 @@ object Graph {
   def hits(edgeList: DataFrame, iters: Int = 10,
            sorted: Boolean = true): DataFrame = {
     require(iters >= 1)
-    val e0 = edgeList.select(col("src").cast("long"), col("dst").cast("long"))
+    val edges = edgeList.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct()
-    val (edges, nParts) = materializeEdges(e0, "src")
+      .localCheckpoint()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
-      .repartition(nParts, col("node"))
       .localCheckpoint()
     val dec = DecimalType(28, 18)
     // one round state (node, a, h): only h feeds the next round (a is
@@ -634,7 +606,7 @@ object Graph {
     * (a double weight would make tie-breaking float-order-dependent).
     * Duplicate/opposite-direction input edges keep the cheapest weight.
     *
-    * Scale shape: per round two co-partitioned edge⋈dist joins (one per
+    * Scale shape: per round two keyed edge⋈dist joins (one per
     * direction) + one map-side-combining MIN aggregate; the dist frame
     * stays frontier-sparse (only reached nodes exist); [[Rounds]] runs
     * the rounds.
@@ -642,13 +614,13 @@ object Graph {
   def shortestPaths(weightedEdges: DataFrame, seeds: DataFrame,
                     rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e0 = weightedEdges.select(
+    val edges = weightedEdges.select(
         least(col("src").cast("long"), col("dst").cast("long")).as("a"),
         greatest(col("src").cast("long"), col("dst").cast("long")).as("b"),
         col("w").cast("long").as("w"))
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(min("w").as("w"))
-    val (edges, _) = materializeEdges(e0, "a")
+      .localCheckpoint()
     val nodes = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
     val seeded = nodes
@@ -733,8 +705,7 @@ object Graph {
     */
   def kCore(edgeList: DataFrame, k: Int, maxIters: Int = 20): DataFrame = {
     require(k >= 1 && maxIters >= 1, s"need k >= 1 and maxIters >= 1, got $k/$maxIters")
-    val e0 = canonicalEdges(edgeList)
-    val (edges, _) = materializeEdges(e0, "a")
+    val edges = canonicalEdges(edgeList).localCheckpoint()
     val all = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .withColumn("deg", lit(-1L)) // placeholder; replaced by round 1
@@ -789,7 +760,7 @@ object Graph {
     * operator and oracle agree by construction). Output: `(node,
     * community)` where the community id is the surviving label.
     *
-    * Scale shape: each round is two co-partitioned edge⋈label joins (one
+    * Scale shape: each round is two keyed edge⋈label joins (one
     * per direction of the undirected canonical edge set) + one combining
     * (node, label) count + one per-node arg-max folded into a single
     * `min(struct(-count, label))` aggregate — NO window sort anywhere;
@@ -800,8 +771,7 @@ object Graph {
   def communities(edgeList: DataFrame, rounds: Int = 4,
                   sorted: Boolean = true): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e0 = canonicalEdges(edgeList)
-    val (edges, _) = materializeEdges(e0, "a")
+    val edges = canonicalEdges(edgeList).localCheckpoint()
     val own = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .withColumn("community", col("node"))
@@ -957,15 +927,13 @@ object Graph {
     * neighbor count k_{v,c}) — the move round [[louvainCoarsen]] runs on
     * the weighted coarse graph. Scale shape per round: one nbr⋈labels
     * join + aggregate for k_{v,c}, one degree⋈labels aggregate for d_c, a
-    * keyed candidate join and one min(struct) argmax — all keyed shuffles
-    * at the slot-derived width. m, deg are computed once from the
-    * checkpointed edge set.
+    * keyed candidate join and one min(struct) argmax. m, deg are computed
+    * once from the checkpointed edge set.
     */
   def refineCommunities(edgeList: DataFrame, labels: DataFrame,
                         rounds: Int = 2, sorted: Boolean = true): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e0 = canonicalEdges(edgeList)
-    val (edges, _) = materializeEdges(e0, "a")
+    val edges = canonicalEdges(edgeList).localCheckpoint()
     val m = edges.count() // one job over already-checkpointed blocks
     val nbr = edges.select(col("a").as("node"), col("b").as("nb"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nb")))
@@ -1237,21 +1205,20 @@ object Graph {
     * component; that constant is a node whose own label is itself and is
     * ≤ the component minimum's label — i.e. the minimum.
     *
-    * Scale shape per round: two co-partitioned edge⋈label joins + one
+    * Scale shape per round: two keyed edge⋈label joins + one
     * map-side-combining MIN aggregate + one label⋈label self-join keyed
-    * on the label value — all keyed shuffles at the slot-derived width
-    * ([[materializeEdges]]), run by [[Rounds.fixpoint]] with Σ labels as
-    * its probe. `maxIters` is a safety fence, not a semantic knob: the
-    * operator THROWS (IllegalStateException, as [[kCore]] does) if the
-    * fixpoint is not reached rather than returning a partial labeling
+    * on the label value, over the once-checkpointed edge set, run by
+    * [[Rounds.fixpoint]] with Σ labels as its probe. `maxIters` is a
+    * safety fence, not a semantic knob: the operator THROWS
+    * (IllegalStateException, as [[kCore]] does) if the fixpoint is not
+    * reached rather than returning a partial labeling
     * (2·log₂(n) pointer-jumped rounds cover any graph; 64 covers n = 2⁶⁴
     * nodes).
     */
   def connectedComponents(edgeList: DataFrame, maxIters: Int = 64,
                           sorted: Boolean = true): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val e0 = canonicalEdges(edgeList)
-    val (edges, _) = materializeEdges(e0, "a")
+    val edges = canonicalEdges(edgeList).localCheckpoint()
     val own = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .withColumn("comp", col("node"))
@@ -1633,8 +1600,7 @@ object Graph {
     require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
     val spark = edgeList.sparkSession
     import spark.implicits._
-    val e0 = canonicalEdges(edgeList)
-    val (edges, _) = materializeEdges(e0, "a")
+    val edges = canonicalEdges(edgeList).localCheckpoint()
     val nbr = edges.select(col("a").as("node"), col("b").as("nb"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nb")))
     val nodes = nbr.select("node").distinct()

@@ -113,24 +113,6 @@ object Helpers {
     }
   }
 
-  /** Partition count for an ITERATIVE op's working set, sized from the
-    * measured row count: ~`rowsPerPart` rows per task, floored at 1 (a
-    * fixture-scale graph on 32 shuffle partitions pays pure scheduler
-    * overhead × iterations), and ceilinged at the session's scheduler
-    * slots — NOT a literal 32. Round-9 review: `min(32, …)` hard-coded
-    * this host's core count, so on a 1000-executor cluster a billion-edge
-    * iteration would still run on 32 partitions; clamping to
-    * `defaultParallelism` (min 32 so small-session tests keep today's
-    * behavior) lets the partitioning actually scale with the cluster.
-    * The ceiling exists because each iteration is a full shuffle of the
-    * working set: width beyond the slot count buys nothing per round but
-    * multiplies per-task overhead by the iteration count.
-    */
-  def iterParts(df: DataFrame, nRows: Long, rowsPerPart: Long = 100000L): Int = {
-    val slots = math.max(df.sparkSession.sparkContext.defaultParallelism, 32)
-    math.max(1, math.min(slots.toLong, nRows / rowsPerPart + 1).toInt)
-  }
-
   /** Filter by an expensive predicate evaluated EXACTLY ONCE per row.
     *
     * `df.filter(pred)` hands Catalyst a conjunction it will split into

@@ -1308,13 +1308,7 @@ object Similarity {
     * PURE FUNCTION of the corpus: rebuildable, spec-able, no RNG state
     * shipped between executors.
     */
-  /** Test-only accessor for [[hnswLevel]] (the fused-build parity spec
-    * replays the pre-r18 per-layer reference loop and needs the identical
-    * level assignment). */
-  private[graft] def hnswLevelForTest(mL: Double, maxLevel: Int): Column =
-    hnswLevel(mL, maxLevel)
-
-  private def hnswLevel(mL: Double, maxLevel: Int): Column = {
+  private[graft] def hnswLevel(mL: Double, maxLevel: Int): Column = {
     val u = (pmod(xxhash64(col("vec_id"), lit(0x9e51L)), lit(1L << 31)) + 1)
       .cast("double") / lit((1L << 31).toDouble)
     least(floor(-log(u) * mL), lit(maxLevel.toLong)).cast("int")
@@ -2074,20 +2068,4 @@ object Similarity {
        |SELECT qid, cid, CAST(ham AS BIGINT) AS hamming, round(sim, 6) AS sim,
        |       CAST(rn AS BIGINT) AS rn
        |FROM rk WHERE rn <= $k ORDER BY qid, rn""".stripMargin
-
-  /** Pairwise formulation of [[labelCohesion]] — quadratic per label; kept
-    * ONLY as the scalatest oracle for the closed form at fixture scale.
-    */
-  private[graft] def labelCohesionPairwise(embeddings: DataFrame): DataFrame = {
-    val e = embeddings.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val a = e.select(col("label"), col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
-    val b = e.select(col("label").as("lb"), col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, col("label") === col("lb") && col("id_a") < col("id_b"))
-      .select(col("label"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .groupBy("label")
-      .agg(round(avg(col("sim")), 6).as("mean_sim"), count(lit(1)).as("n_pairs"))
-      .orderBy("label")
-  }
 }

@@ -677,21 +677,6 @@ object Stats {
       .orderBy("x")
   }
 
-  /** The naive single-window skyline — the obviously-correct form
-    * [[paretoFrontier]]'s bucketed plan is spec-checked against. */
-  private[graft] def paretoFrontierNaive(df: DataFrame, xCol: String,
-                                         yCol: String): DataFrame = {
-    val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .groupBy(col(xCol).as("x"), col(yCol).as("y"))
-      .agg(count(lit(1)).as("n_rows"))
-    val w = Window.orderBy(col("x").asc, col("y").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    pts.withColumn("_prevMax", max(col("y")).over(w))
-      .filter(col("_prevMax").isNull || col("y") > col("_prevMax"))
-      .select(col("x"), col("y"), col("n_rows"))
-      .orderBy("x")
-  }
-
   /** Generated DuckDB oracle for [[paretoFrontier]] — the definitional
     * quadratic NOT EXISTS over distinct pairs (quadratic is fine for an
     * oracle; the operator's window form is the scale path). */
@@ -903,33 +888,6 @@ object Stats {
         round(coalesce(col("r.v"), lit(0).cast(dec38)).cast("double")
           / col("_tot").cast("double"), 6).as("class_share"))
       .filter(col("n_entities") > 0)
-      .orderBy("abc_class")
-  }
-
-  /** The ranked single-window form — the obviously-correct shape
-    * [[abcClasses]]' bucket-threshold plan is spec-checked against (and
-    * the shape the oracle replays). */
-  private[graft] def abcClassesNaive(entities: DataFrame, valueCol: String,
-                                     idCol: String, aShare: Double = 0.8,
-                                     bShare: Double = 0.95): DataFrame = {
-    val v = col(valueCol).cast(DecimalType(20, 6))
-    val tot = entities.agg(sum(v).as("_tot"))
-    val ranked = entities.select(col(idCol), col(valueCol))
-      .withColumn("_v", v)
-      .withColumn("_cum", sum(col("_v")).over(
-        Window.orderBy(col(valueCol).desc, col(idCol))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .crossJoin(broadcast(tot))
-      .withColumn("_share",
-        round(col("_cum").cast("double") / col("_tot").cast("double"), 9))
-      .withColumn("abc_class",
-        when(col("_share") <= aShare, "A")
-          .when(col("_share") <= bShare, "B").otherwise("C"))
-    ranked.groupBy("abc_class")
-      .agg(count(lit(1)).as("n_entities"),
-        round(sum(col("_v")).cast("double"), 2).as("class_value"),
-        round(sum(col("_v")).cast("double")
-          / max(col("_tot")).cast("double"), 6).as("class_share"))
       .orderBy("abc_class")
   }
 

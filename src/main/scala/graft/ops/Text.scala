@@ -667,6 +667,26 @@ object Text {
       |       TRUE AS all_in_range, TRUE AS mean_in_band
       |FROM documents""".stripMargin
 
+  /** (N, top-K vocabulary) of a checkpointed `_toks` frame, shared by the
+    * two surprisal operators. N = Σ size(_toks) over non-null `_toks` is
+    * read from the checkpoint itself (the in-plan total [[heavyHitters]]
+    * builds), so the token-count aggregate feeds ONE driver action: the
+    * `vocabSize` most frequent tokens, ties by token. A token-less corpus
+    * (N = 0) runs no vocabulary job and scores nothing.
+    */
+  private def tokenVocab(base: DataFrame, vocabSize: Int): (Double, Map[String, Long]) = {
+    val totalRow = base.filter(col("_toks").isNotNull)
+      .agg(sum(size(col("_toks")))).head()
+    // sum over no rows is null; a corpus of empty token arrays sums to 0
+    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
+    if (total == 0L) (0.0, Map.empty)
+    else (total.toDouble,
+      base.select(explode(col("_toks")).as("tok"))
+        .groupBy("tok").agg(count(lit(1)).as("c"))
+        .orderBy(col("c").desc, col("tok")).limit(vocabSize)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+  }
+
   /** Unigram surprisal scoring (the CCNet-style quality signal): each
     * document's mean −ln p(token) under the corpus unigram distribution,
     * with the vocabulary capped at the `vocabSize` most frequent tokens
@@ -689,26 +709,13 @@ object Text {
     require(vocabSize > 0)
     val spark = documents.sparkSession
     import spark.implicits._
-    // ONE corpus tokenize, materialized: the vocab-count job and the
-    // scoring pass both read `_toks` (same discipline as [[bigramSurprisal]])
+    // ONE corpus tokenize, materialized: the total, the vocab-count job and
+    // the scoring pass all read `_toks` (same discipline as [[bigramSurprisal]])
     val base = documents
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks"))
       .localCheckpoint()
-    // two driver actions read cnt (the total and the vocab top-K) — persist
-    // so the tokenize+aggregate lineage runs once, not twice
-    val cnt = base.select(explode(col("_toks")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (total, vocab) = try {
-      val totalRow = cnt.agg(sum("c")).head()
-      // sum over an EMPTY aggregate is null: a token-less corpus scores
-      // nothing rather than NPE-ing on the driver
-      if (totalRow.isNullAt(0)) (0.0, Map.empty[String, Long])
-      else (totalRow.getLong(0).toDouble,
-        cnt.orderBy(col("c").desc, col("tok")).limit(vocabSize)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    } finally cnt.unpersist()
+    val (total, vocab) = tokenVocab(base, vocabSize)
     if (total == 0.0)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "mean_surprisal", "n_tokens")
     val bc = spark.sparkContext.broadcast(vocab)
@@ -757,8 +764,8 @@ object Text {
     require(lambda > 0.0 && lambda < 1.0, s"lambda must be in (0,1), got $lambda")
     val spark = documents.sparkSession
     import spark.implicits._
-    // ONE corpus tokenize, materialized: the unigram-count job, the
-    // bigram-count job, and the scoring pass all read `_toks` from this
+    // ONE corpus tokenize, materialized: the total, the unigram-count job,
+    // the bigram-count job, and the scoring pass all read `_toks` from this
     // frame. Without it each construction job re-ran regexp_extract_all
     // over the full corpus (and scoring tokenized a third time Scala-side)
     // — the tokenize was the dominant cost, 3×.
@@ -766,16 +773,7 @@ object Text {
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks"))
       .localCheckpoint()
-    val toks = base.select(explode(col("_toks")).as("tok"))
-    val cnt = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (total, vocab) = try {
-      val totalRow = cnt.agg(sum("c")).head()
-      if (totalRow.isNullAt(0)) (0.0, Map.empty[String, Long])
-      else (totalRow.getLong(0).toDouble,
-        cnt.orderBy(col("c").desc, col("tok")).limit(vocabSize)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    } finally cnt.unpersist()
+    val (total, vocab) = tokenVocab(base, vocabSize)
     if (total == 0.0)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "mean_surprisal", "n_tokens")
     val grams = filter(

@@ -116,4 +116,17 @@ object GraftSqlBridge {
       case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** Release the checkpoints `df`'s plan reads that no frame in `keep`
+    * reads — for a consumer that has materialized a producer's output:
+    * the producer's own intermediates go, while any checkpoint the caller
+    * passed in (and still reads through `keep`) stays.
+    */
+  def releaseLocalCheckpointsExcept(df: Dataset[_], keep: Dataset[_]*): Unit = {
+    def rdds(d: Dataset[_]) = d.queryExecution.analyzed.collect {
+      case lr: execution.LogicalRDD => lr.rdd
+    }
+    val kept = keep.flatMap(rdds).map(_.id).toSet
+    rdds(df).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
+  }
 }

@@ -43,109 +43,6 @@ object PerfProbe {
       ts
     }
 
-    // abc A/B mode: `Test/runMain graft.PerfProbe abc` — bucketed
-    // closed-form abcClasses vs the naive ranked window on the q_abc
-    // entity frame (round-15 rewrite attribution)
-    if (args.headOption.contains("abc")) {
-      import graft.core.Tables
-      import graft.ops.Stats
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      def entities = Tables.lineitem(spark, sfDir).groupBy("l_partkey").agg(
-        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast(DecimalType(20, 6))).as("revenue"))
-      def t(tag: String)(f: => Long): Unit = (1 to 3).foreach { _ =>
-        val t0 = System.nanoTime(); val n = f
-        println(f"PROBE abc $tag%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$n")
-      }
-      t("entities")(entities.count())
-      t("naive")(Stats.abcClassesNaive(entities, "revenue", "l_partkey").count())
-      t("bucketed")(Stats.abcClasses(entities, "revenue", "l_partkey").count())
-      val entCk = entities.localCheckpoint()
-      t("bucketed-ck")(Stats.abcClasses(entCk, "revenue", "l_partkey").count())
-      t("naive-ck")(Stats.abcClassesNaive(entCk, "revenue", "l_partkey").count())
-      // stage attribution: how much is the perV aggregate vs the rest
-      val perV = entities.select(col("revenue").cast(DecimalType(20, 6)).as("_v"))
-        .groupBy("_v").agg(count(lit(1)).as("_cnt"))
-      t("perV")(perV.count())
-      val ck = perV.localCheckpoint()
-      t("perVck-reread")(ck.count())
-      // downstream chain over the materialized table
-      val dec38 = DecimalType(38, 6)
-      val grpTotal = (col("_v") * col("_cnt")).cast(dec38)
-      val tot = ck.agg(sum(grpTotal).cast(dec38).as("_tot"))
-      t("tot")(tot.count())
-      val mm = ck.agg(min(col("_v").cast("double")).as("_lo"),
-        max(col("_v").cast("double")).as("_hi"))
-      val width = greatest((col("_hi") - col("_lo")) / 10000, lit(1e-300))
-      val bucketed = ck.crossJoin(broadcast(mm))
-        .withColumn("_b", least(floor((col("_hi") - col("_v").cast("double")) / width),
-          lit(10000L)).cast("long"))
-        .drop("_lo", "_hi")
-      t("bucketed")(bucketed.count())
-      val perBucket = bucketed.groupBy("_b").agg(sum(grpTotal).as("_bt"))
-      t("perBucket")(perBucket.count())
-      import org.apache.spark.sql.expressions.Window
-      val wb = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = perBucket.withColumn("_off", sum(col("_bt")).over(wb))
-        .select(col("_b"), col("_off"))
-      val wi = Window.partitionBy("_b").orderBy(col("_v").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val withCum = bucketed.join(broadcast(offsets), "_b")
-        .withColumn("_B", (coalesce(col("_off"), lit(0).cast(dec38)) +
-          coalesce(sum(grpTotal).over(wi), lit(0).cast(dec38))).cast(dec38))
-        .crossJoin(broadcast(tot))
-      t("withCum")(withCum.count())
-      import org.apache.spark.sql.Column
-      val totD = col("_tot").cast("double")
-      def sOf(k: Column): Column =
-        round((col("_B") + k.cast(DecimalType(20, 0)) * col("_v"))
-          .cast("double") / totD, 9)
-      def kMax(share: Double): Column = {
-        val est = floor((lit(share + 5e-10) * totD - col("_B").cast("double"))
-          / col("_v").cast("double"))
-        val lo = greatest(lit(0L), least(est - 4, col("_cnt")))
-        val hi = least(col("_cnt"), greatest(est + 4, lit(0L)))
-        when(col("_tot") <= 0, lit(0L))
-          .when(col("_v") === 0,
-            when(sOf(lit(0L)) <= share, col("_cnt")).otherwise(lit(0L)))
-          .otherwise(aggregate(sequence(lo, hi), lit(0L),
-            (acc, k) => when(k === 0 || sOf(k) <= share, greatest(acc, k))
-              .otherwise(acc)))
-      }
-      val scored = withCum.select(col("_v"), col("_cnt"), col("_tot"),
-        kMax(0.8).as("_ka"), kMax(0.95).as("_kb"))
-      t("scored")(scored.count())
-      val kDec = (c: Column) => c.cast(DecimalType(20, 0))
-      val agg1 = scored.agg(
-        sum("_ka").as("na"), sum(kDec(col("_ka")) * col("_v")).cast(dec38).as("va"),
-        sum(col("_kb") - col("_ka")).as("nb"),
-        sum(kDec(col("_kb") - col("_ka")) * col("_v")).cast(dec38).as("vb"),
-        sum(col("_cnt") - col("_kb")).as("nc"),
-        sum(kDec(col("_cnt") - col("_kb")) * col("_v")).cast(dec38).as("vc"),
-        max("_tot").as("_tot"))
-      t("agg1")(agg1.count())
-      // full tail: nn + explode + filter + orderBy, from the checkpointed perV
-      val nn = ck.filter(col("_v").isNull)
-        .agg(coalesce(sum("_cnt"), lit(0L)).as("_nn"))
-      val out = agg1.crossJoin(broadcast(nn))
-        .select(col("_tot"), explode(array(
-          struct(lit("A").as("c"), col("na").as("n"), col("va").as("v")),
-          struct(lit("B").as("c"), col("nb").as("n"), col("vb").as("v")),
-          struct(lit("C").as("c"), (col("nc") + col("_nn")).as("n"),
-            col("vc").as("v")))).as("r"))
-        .select(col("r.c").as("abc_class"),
-          coalesce(col("r.n"), lit(0L)).as("n_entities"),
-          round(coalesce(col("r.v"), lit(0).cast(dec38)).cast("double"), 2)
-            .as("class_value"),
-          round(coalesce(col("r.v"), lit(0).cast(dec38)).cast("double")
-            / col("_tot").cast("double"), 6).as("class_share"))
-        .filter(col("n_entities") > 0)
-        .orderBy("abc_class")
-      t("fulltail")(out.count())
-      spark.stop(); return
-    }
-
     // louvain-coarsen attribution: `Test/runMain graft.PerfProbe louvain`
     if (args.headOption.contains("louvain")) {
       import graft.core.Tables
@@ -193,107 +90,6 @@ object PerfProbe {
         recallOf(s"ann nT=$nt bpt=$bpt", Similarity.annTopK(emb, 20, 5, nt, bpt))
       for (np <- Seq(1, 2, 4, 8))
         recallOf(s"ivf nCells=16 nProbe=$np", Similarity.ivfTopK(emb, 20, 5, 16, np))
-      spark.stop(); return
-    }
-
-    // Within-session constraint-propagation A/B:
-    // `Test/runMain graft.PerfProbe cpab q1,q2,...` — alternating
-    // ON/OFF/ON/OFF passes over the named queries inside ONE session, so
-    // host drift between separate captures cannot alias the comparison
-    // (the round-17 conf-forensics instrument: two interleaved subset
-    // captures said 0.891 median for the combo, two adjacent full
-    // captures said 1.067 — both cross-session, both suspect).
-    if (args.headOption.contains("cpab")) {
-      // args: cpab <queries|ALL> [confKeys] [onVals] [offVals] [nPasses]
-      // — default A/Bs constraint propagation; any runtime SQL conf works
-      // the same way. confKeys/onVals/offVals are comma-lists so a conf
-      // PAIR can be A/B'd as a unit. Passes alternate OFF-first (the
-      // session warms monotonically across passes — JIT, code cache — so
-      // the arm that runs FIRST is disadvantaged; putting the candidate
-      // OFF arm first biases AGAINST the status quo ante, and a win that
-      // survives that bias is real). Pass 1 is untimed warmup when
-      // nPasses >= 5.
-      val names =
-        if (args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
-        else args(1).split(',').toSeq.sorted
-      val confKeys = (if (args.length > 2) args(2)
-        else "spark.sql.constraintPropagation.enabled").split(',').toSeq
-      val onVals = (if (args.length > 3) args(3) else "true").split(',').toSeq
-      val offVals = (if (args.length > 4) args(4) else "false").split(',').toSeq
-      val nPasses = if (args.length > 5) args(5).toInt else 4
-      require(confKeys.size == onVals.size && confKeys.size == offVals.size)
-      val on = scala.collection.mutable.Map.empty[String, Double]
-      val off = scala.collection.mutable.Map.empty[String, Double]
-      for (pass <- 1 to nPasses) {
-        val flag = pass % 2 == 1 // odd = ON arm (status quo), even = OFF
-        confKeys.indices.foreach { i =>
-          spark.conf.set(confKeys(i), if (flag) onVals(i) else offVals(i)) }
-        val warmup = nPasses >= 5 && pass == 1
-        val sink = if (flag) on else off
-        names.foreach { n =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir).count()
-          val t = (System.nanoTime() - t0) / 1e9
-          if (!warmup) sink(n) = math.min(sink.getOrElse(n, Double.MaxValue), t)
-        }
-        println(f"PROBE cpab pass=$pass on=$flag warmup=$warmup " +
-          f"total=${names.flatMap(sink.get).sum}%.2f")
-      }
-      val ratios = names.map(n => off(n) / on(n)).sorted
-      println(f"PROBE cpab median off/on = ${ratios(ratios.size / 2)}%.3f " +
-        f"p25=${ratios(ratios.size / 4)}%.3f p75=${ratios(3 * ratios.size / 4)}%.3f " +
-        f"totalOn=${names.map(on).sum}%.2f totalOff=${names.map(off).sum}%.2f")
-      spark.stop(); return
-    }
-
-    // `Test/runMain graft.PerfProbe abba <queries|ALL> <confKeys> <onVals>
-    // <offVals>` — the drift-proof conf A/B. The pass-level cpab mode
-    // above proved inconclusive for full-registry decisions: one JVM
-    // running 245 queries keeps JIT-warming for 5+ full passes (~6% per
-    // pass), so whichever arm runs later wins at the pass level. Here the
-    // alternation is PER QUERY: each query runs ON,OFF,OFF,ON
-    // back-to-back (plus one untimed ON warmup), min per arm — the warm
-    // trend inside one query's five adjacent runs is negligible and the
-    // ABBA order cancels what remains. Reports per-query ratios and the
-    // biggest movers both ways.
-    if (args.headOption.contains("abba")) {
-      val names =
-        if (args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
-        else args(1).split(',').toSeq.sorted
-      val confKeys = args(2).split(',').toSeq
-      val onVals = args(3).split(',').toSeq
-      val offVals = args(4).split(',').toSeq
-      require(confKeys.size == onVals.size && confKeys.size == offVals.size)
-      def setArm(flag: Boolean): Unit = confKeys.indices.foreach { i =>
-        spark.conf.set(confKeys(i), if (flag) onVals(i) else offVals(i)) }
-      val on = scala.collection.mutable.Map.empty[String, Double]
-      val off = scala.collection.mutable.Map.empty[String, Double]
-      names.foreach { n =>
-        def run1(): Double = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        setArm(true); run1() // untimed warmup: JIT, codegen
-        for (flag <- Seq(true, false, false, true)) {
-          setArm(flag)
-          val t = run1()
-          val sink = if (flag) on else off
-          sink(n) = math.min(sink.getOrElse(n, Double.MaxValue), t)
-        }
-        println(f"PROBE abba $n%-26s on=${on(n)}%.3f off=${off(n)}%.3f ratio=${off(n) / on(n)}%.3f")
-      }
-      val ratios = names.map(n => off(n) / on(n)).sorted
-      println(f"PROBE abba median off/on = ${ratios(ratios.size / 2)}%.3f " +
-        f"p25=${ratios(ratios.size / 4)}%.3f p75=${ratios(3 * ratios.size / 4)}%.3f " +
-        f"totalOn=${names.map(on).sum}%.2f totalOff=${names.map(off).sum}%.2f")
-      val movers = names.sortBy(n => off(n) - on(n))
-      println("PROBE abba top regressions (off-on):")
-      movers.takeRight(8).reverse.foreach(n =>
-        println(f"  +${off(n) - on(n)}%.3f $n on=${on(n)}%.3f"))
-      println("PROBE abba top improvements (off-on):")
-      movers.take(8).foreach(n =>
-        println(f"  ${off(n) - on(n)}%.3f $n on=${on(n)}%.3f"))
       spark.stop(); return
     }
 
@@ -638,54 +434,6 @@ object PerfProbe {
       spark.stop(); return
     }
 
-    // lsh-attribution mode: `Test/runMain graft.PerfProbe lshattrib` —
-    // where the wall clock of the registered q_cosine_pairs_lsh goes at
-    // the current SF, stage by stage: the aug+norm projection, the
-    // signature pass (per-vector cost grows as L·b under scaledBits +
-    // scaledTables — the VERDICT r8 "attribute the 18.8×/10× ratio"
-    // item), the bucket-join candidate volume (Σ C(s,2) — the rows the
-    // equi-join materializes), the distinct candidate pairs, and the full
-    // verified pipeline. Run at sf0.1, /tmp/sf1x and /tmp/sf10x: the
-    // three scale points separate signature cost (linear in n·L·b) from
-    // candidate cost (~n^1.22 by the ρ-exponent math).
-    if (args.headOption.contains("lshattrib")) {
-      import graft.core.Tables
-      import graft.ops.Similarity
-      import org.apache.spark.sql.functions._
-      val emb = Tables.embeddings(spark, sfDir)
-      val aug = Similarity.withSyntheticNearDups(emb)
-      val n = aug.count()
-      val b = Similarity.scaledBits(8, 1024L, n)
-      val l = Similarity.scaledTables(8, 0.9, 8, b)
-      println(f"PROBE lshattrib n=$n b=$b L=$l planeDots/vec=${l * b}")
-      def t(label: String)(f: => Long): Unit = {
-        val ts = (1 to 2).map { _ =>
-          val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e9, r)
-        }
-        println(f"PROBE lshattrib $label%-22s ${ts.map(x => f"${x._1}%.2f").mkString(" ")}s rows=${ts.head._2}")
-      }
-      val e = aug.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
-      t("proj+norm")(e.count())
-      t("signatures")(Similarity.lshSignatures(e, l, b, 64).count())
-      t("candidate volume")(Similarity.lshSignatures(e, l, b, 64)
-        .groupBy("tbl", "bucket").agg(count(lit(1)).as("s"))
-        .agg(coalesce(sum(expr("s * (s - 1) DIV 2")), lit(0L)).as("vol"))
-        .select("vol").collect().head.getLong(0))
-      t("distinct candidates") {
-        val sigs = Similarity.lshSignatures(e, l, b, 64)
-          .withColumnRenamed("sig_id", "vec_id")
-        sigs.as("x").join(sigs.as("y"),
-            col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
-              col("x.vec_id") < col("y.vec_id"))
-          .select(col("x.vec_id"), col("y.vec_id")).distinct().count()
-      }
-      t("full cosinePairsLsh")(
-        Similarity.cosinePairsLsh(aug, 0.9, nTables = l, bitsPerTable = b,
-          sorted = false).count())
-      spark.stop(); return
-    }
-
     // floor mode: `Test/runMain graft.PerfProbe floor` — decompose the
     // ~0.27 s/query bench floor (round-10 closing posture: with 177
     // registered queries the floor is the dominant headline term). Times,
@@ -714,100 +462,6 @@ object PerfProbe {
       report("q_scan_filter_bench", rep(20)(filt(spark, sfDir).count()))
       val join = SparkEntry.queries("q_join_star")
       report("q_join_star_bench", rep(20)(join(spark, sfDir).count()))
-      spark.stop(); return
-    }
-
-    // c4 A/B mode: `Test/runMain graft.PerfProbe c4ab` — the round-12
-    // VERDICT's optional item: do higher-order array functions (split →
-    // transform → filter → array_join) beat the typed .map (object
-    // deserialization, but single-pass imperative line loop)?
-    //
-    // FORCING: both plans are reduced through a checksum aggregate over
-    // every output column, NOT count() — under count() Catalyst prunes a
-    // pure projection entirely (the HOF leg would time the bare scan while
-    // the typed leg, opaque to pruning, does real work — the round-13
-    // contamination-audit lesson applied retroactively to this probe).
-    if (args.headOption.contains("c4ab")) {
-      import graft.core.Tables
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(spark, sfDir)
-      val minWords = 5
-      val minKeptLines = 3
-      // typed-map leg: the SHIPPED implementation (Text.c4Clean reverted to
-      // the typed map in r13 after the honest checksum-forced A/B), inlined
-      // WITHOUT its orderBy so neither leg pays a global sort the other
-      // doesn't
-      val terminal = "[.!?\"]\\z".r
-      def typedLeg(): org.apache.spark.sql.DataFrame = {
-        val spark2 = spark
-        import spark2.implicits._
-        docs.select(col("doc_id"), col("text")).as[(Long, String)]
-          .map { case (id, raw) =>
-            val text = if (raw == null) "" else raw
-            val lines = text.split("\n", -1)
-            val nLines = lines.length.toLong
-            val lowerAll = text.toLowerCase
-            if (lowerAll.contains("lorem ipsum") || lowerAll.contains("{"))
-              (id, "", nLines, 0L, false)
-            else {
-              val kept = lines.iterator
-                .map(_.replaceAll("^[ \\t\\n\\f\\r]+|[ \\t\\n\\f\\r]+\\z", ""))
-                .filter { t =>
-                  terminal.findFirstIn(t).isDefined &&
-                    t.split("[ \\t\\n\\f\\r]+").length >= minWords &&
-                    !t.toLowerCase.contains("javascript")
-                }
-                .toArray
-              (id, kept.mkString("\n"), nLines, kept.length.toLong,
-                kept.length >= 3)
-            }
-          }
-          .toDF("doc_id", "clean_text", "n_lines", "n_kept", "page_kept")
-      }
-      // HOF leg: the round-12 higher-order-function formulation, inlined
-      // (split → transform-trim → filter gates → array_join), no orderBy —
-      // since d1b1730 reverted the operator to the typed map, calling the
-      // registered q_c4_clean here would compare the typed map against
-      // itself (round-14 ADVICE #1)
-      def hofLeg(): org.apache.spark.sql.DataFrame = {
-        val raw = coalesce(col("text"), lit(""))
-        val lowerAll = lower(raw)
-        val pageOk = !(lowerAll.contains("lorem ipsum") || lowerAll.contains("{"))
-        val lines = split(raw, "\n", -1)
-        val kept = filter(
-          transform(lines, l =>
-            regexp_replace(l, "^[ \\t\\n\\f\\r]+|[ \\t\\n\\f\\r]+\\z", "")),
-          t => t.rlike("[.!?\"]\\z") &&
-            size(split(t, "[ \\t\\n\\f\\r]+", -1)) >= minWords &&
-            !lower(t).contains("javascript"))
-        docs.select(
-          col("doc_id"),
-          when(!pageOk, lit("")).otherwise(array_join(kept, "\n")).as("clean_text"),
-          size(lines).cast("long").as("n_lines"),
-          when(!pageOk, lit(0L)).otherwise(size(kept).cast("long")).as("n_kept"),
-          (pageOk && size(kept) >= minKeptLines).as("page_kept"))
-      }
-      def force(df: org.apache.spark.sql.DataFrame): Unit = {
-        val all = struct(df.columns.map(col).toIndexedSeq: _*)
-        df.select(sum(xxhash64(all)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h"))
-          .collect(): Unit
-      }
-      def rep(n: Int)(f: => Unit): Seq[Double] =
-        (1 to n).map { _ => val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-      // legs agree before they race: a perf A/B over divergent outputs
-      // proves nothing
-      def checksum(df: org.apache.spark.sql.DataFrame): Any = {
-        val all = struct(df.columns.map(col).toIndexedSeq: _*)
-        df.select(sum(xxhash64(all)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h")).head.get(0)
-      }
-      val (cm, ch) = (checksum(typedLeg()), checksum(hofLeg()))
-      println(s"PROBE c4ab checksums_equal=${cm == ch} typed=$cm hof=$ch")
-      val tMap = rep(7)(force(typedLeg()))
-      val tHof = rep(7)(force(hofLeg()))
-      println(f"PROBE c4ab typed_map min=${tMap.min}%.3f med=${tMap.sorted.apply(3)}%.3f")
-      println(f"PROBE c4ab hof_codegen min=${tHof.min}%.3f med=${tHof.sorted.apply(3)}%.3f")
       spark.stop(); return
     }
 

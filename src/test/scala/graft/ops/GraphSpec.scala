@@ -108,19 +108,6 @@ class GraphSpec extends SparkSpec {
     intercept[IllegalArgumentException](Graph.pageRank(edges((1L, 2L)), damping = 1.0))
   }
 
-  test("iterParts: floors at 1, scales with rows, ceilings at scheduler slots (not a literal 32)") {
-    val df = spark.range(1).toDF()
-    val slots = math.max(spark.sparkContext.defaultParallelism, 32)
-    assert(Helpers.iterParts(df, 0L) == 1)
-    assert(Helpers.iterParts(df, 99999L) == 1)
-    assert(Helpers.iterParts(df, 250000L) == 3)
-    // the ceiling is DERIVED from the session's slots — at 100 TB on a
-    // large cluster the same call widens with defaultParallelism instead
-    // of stopping at this host's core count
-    assert(Helpers.iterParts(df, 100000L * slots * 10) == slots)
-    assert(Helpers.iterParts(df, Long.MaxValue / 4) == slots)
-  }
-
   test("hits: directed star — center is the pure hub, leaves the pure authorities") {
     val out = Graph.hits(edges((0L, 1L), (0L, 2L), (0L, 3L)), iters = 5)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap

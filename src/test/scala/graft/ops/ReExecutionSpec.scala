@@ -103,6 +103,8 @@ class ReExecutionSpec extends SparkSpec {
       () => Similarity.hnswTopK(e, graph, 20, 5)
     },
     "Graph.triangleCorners" -> { s => val e = edges(s); () => Graph.triangleCorners(e) },
+    "Graph.neighborhoodReport" -> { s => val e = edges(s); () => Graph.neighborhoodReport(e) },
+    "Dedup.dupClusters" -> { s => val d = docs(s); () => Dedup.dupClusters(d, 0.5) },
     "Similarity.hnswRecallReport" -> { s =>
       val e = emb(s); () => Similarity.hnswRecallReport(e, 20, 5)
     },

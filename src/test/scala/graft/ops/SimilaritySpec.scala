@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.core.Tables
+import graft.functions.VectorExpressions.{vec_dot, vec_norm}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -247,11 +249,27 @@ class SimilaritySpec extends SparkSpec {
       s"LSH kept ${(lshKept -- exactKept).size} extra survivors")
   }
 
+  /** Pairwise formulation of `Similarity.labelCohesion` — quadratic per
+    * label; the reference its closed form is checked against. */
+  private def labelCohesionPairwise(embeddings: DataFrame): DataFrame = {
+    val e = embeddings.select(col("vec_id"), col("label"),
+        col("embedding").cast("array<double>").as("v"))
+      .withColumn("nrm", vec_norm(col("v")))
+    val a = e.select(col("label"), col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
+    val b = e.select(col("label").as("lb"), col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
+    a.join(b, col("label") === col("lb") && col("id_a") < col("id_b"))
+      .select(col("label"),
+        (vec_dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
+      .groupBy("label")
+      .agg(round(avg(col("sim")), 6).as("mean_sim"), count(lit(1)).as("n_pairs"))
+      .orderBy("label")
+  }
+
   test("labelCohesion: closed form matches the pairwise formulation") {
     val e = Tables.embeddings(spark, sfDir)
     val closed = Similarity.labelCohesion(e).collect()
       .map(r => (r.getInt(0), (r.getDouble(1), r.getLong(2)))).toMap
-    val pairwise = Similarity.labelCohesionPairwise(e).collect()
+    val pairwise = labelCohesionPairwise(e).collect()
       .map(r => (r.getInt(0), (r.getDouble(1), r.getLong(2)))).toMap
     assert(closed.keySet == pairwise.keySet)
     closed.foreach { case (label, (sim, nPairs)) =>
@@ -516,7 +534,7 @@ class SimilaritySpec extends SparkSpec {
     // corpus sits under exactCap at every layer, as the build's own path
     // decision requires for this comparison to cover the fused code)
     val lvl = e.select(col("vec_id"), col("embedding"))
-      .withColumn("level", Similarity.hnswLevelForTest(Similarity.hnswMl(m),
+      .withColumn("level", Similarity.hnswLevel(Similarity.hnswMl(m),
         Similarity.HnswDefaultMaxLevel))
     val lMax = lvl.agg(max("level")).head().getInt(0)
     val reference = (0 to lMax).map { l =>

@@ -1,7 +1,10 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 class StatsSpec extends SparkSpec {
 
@@ -264,13 +267,28 @@ class StatsSpec extends SparkSpec {
     assert(out.toSeq == Seq((1.0, 1, 1L), (2.0, 3, 2L)))
   }
 
+  /** The naive single-window skyline — the obviously-correct form
+    * `Stats.paretoFrontier`'s bucketed plan is spec-checked against. */
+  private def paretoFrontierNaive(df: DataFrame, xCol: String,
+                                  yCol: String): DataFrame = {
+    val pts = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+      .groupBy(col(xCol).as("x"), col(yCol).as("y"))
+      .agg(count(lit(1)).as("n_rows"))
+    val w = Window.orderBy(col("x").asc, col("y").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    pts.withColumn("_prevMax", max(col("y")).over(w))
+      .filter(col("_prevMax").isNull || col("y") > col("_prevMax"))
+      .select(col("x"), col("y"), col("n_rows"))
+      .orderBy("x")
+  }
+
   test("paretoFrontier: bucketed plan ≡ naive window ≡ NOT EXISTS on multi-partition fixtures") {
     val spark2 = spark
     import spark2.implicits._
     def sameAs(df: org.apache.spark.sql.DataFrame, xc: String, yc: String,
                buckets: Int): Unit = {
       val fast = Stats.paretoFrontier(df, xc, yc, buckets).collect().toSeq
-      val naive = Stats.paretoFrontierNaive(df, xc, yc).collect().toSeq
+      val naive = paretoFrontierNaive(df, xc, yc).collect().toSeq
       assert(fast == naive, s"buckets=$buckets fast=$fast naive=$naive")
       // definitional check: nothing in the output is dominated, nothing
       // outside it is non-dominated
@@ -296,12 +314,38 @@ class StatsSpec extends SparkSpec {
     sameAs(Seq((1.0, Some(1)), (0.5, None), (2.0, Some(3))).toDF("x", "y"), "x", "y", 16)
   }
 
+  /** The ranked single-window form — the obviously-correct shape
+    * `Stats.abcClasses`' bucket-threshold plan (at its default 0.8 / 0.95
+    * shares) is spec-checked against, and the shape the oracle replays. */
+  private def abcClassesNaive(entities: DataFrame, valueCol: String,
+                              idCol: String): DataFrame = {
+    val v = col(valueCol).cast(DecimalType(20, 6))
+    val tot = entities.agg(sum(v).as("_tot"))
+    val ranked = entities.select(col(idCol), col(valueCol))
+      .withColumn("_v", v)
+      .withColumn("_cum", sum(col("_v")).over(
+        Window.orderBy(col(valueCol).desc, col(idCol))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .crossJoin(broadcast(tot))
+      .withColumn("_share",
+        round(col("_cum").cast("double") / col("_tot").cast("double"), 9))
+      .withColumn("abc_class",
+        when(col("_share") <= 0.8, "A")
+          .when(col("_share") <= 0.95, "B").otherwise("C"))
+    ranked.groupBy("abc_class")
+      .agg(count(lit(1)).as("n_entities"),
+        round(sum(col("_v")).cast("double"), 2).as("class_value"),
+        round(sum(col("_v")).cast("double")
+          / max(col("_tot")).cast("double"), 6).as("class_share"))
+      .orderBy("abc_class")
+  }
+
   test("abcClasses: bucket-threshold closed form ≡ naive ranked window, degenerate shapes included") {
     val spark2 = spark
     import spark2.implicits._
     def sameAs(df: org.apache.spark.sql.DataFrame, buckets: Int): Unit = {
       val fast = Stats.abcClasses(df, "v", "id", buckets = buckets).collect().toSeq
-      val naive = Stats.abcClassesNaive(df, "v", "id").collect().toSeq
+      val naive = abcClassesNaive(df, "v", "id").collect().toSeq
       assert(fast == naive, s"buckets=$buckets\nfast=$fast\nnaive=$naive")
     }
     val rnd = new scala.util.Random(13)
