@@ -89,54 +89,35 @@ object Bench {
           require(i > 0, s"SPARK_GRAFT_CONF entry without '=': $kv")
           kv.take(i) -> kv.drop(i + 1)
         }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // legacy nanos-era fixture support; Tables.load adapts per era
-      .config("spark.ui.enabled", "false")
-      // The round-16 AQE coalescing tune (parallelismFirst=false + 8 MB
-      // advisory) was REVERTED to defaults in round 17. It was adopted on
-      // a thrash-era A/B (see the codegen cache note below); re-screened
-      // with the query-level ABBA instrument AFTER the codegen fix it
-      // reads median 0.999 but TOTAL 87.9 (tuned) vs 83.1 s (defaults) —
-      // the tune's tail savings (~0.1 s × a few rows) no longer exist
-      // once stages stop paying a Janino compile, while its cost — less
-      // reduce-side parallelism on the heavy shuffle rows — remains
-      // (q_spearman −0.89, q_tfidf_pairs −0.81, q_sole_blame −0.77,
-      // q_min_cost_supplier −0.59 s with defaults). AQE itself stays ON
-      // (AQE-off measured +22 s in r16: graph/iterative rows regress).
-      // constraintPropagation-off was screened and REJECTED (round 17):
-      // the pass-level instrument read 0.933 for it, but that instrument
-      // is warm-order-biased (see PERF.md "the instrument problem"); the
-      // query-level ABBA re-measurement over the full registry read
-      // median 1.009 — neutral. Kept at default. Kryo (alternating-
-      // session pairs 0.967/1.063/1.191) and shuffle-compression-off
-      // (1.08) were screened and rejected the same round.
-      // Codegen class cache sized to the registry (round 17). The default
-      // `spark.sql.codegen.cache.maxEntries` is 100, and this registry
-      // generates ~4.5k unique codegen units per full pass — the cache
-      // thrashed, so EVERY pass re-ran Janino on ~2.8k units (~40 s of
-      // serial driver-side compile per pass, measured via
-      // CodegenMetrics.METRIC_COMPILATION_TIME in `PerfProbe passes`:
-      // pass 1 = 4493 compiles, passes 2-4 = 2778/2777/2778 at cache=100)
-      // AND every pass's generated classes were fresh to the JIT, which is
-      // why sessions kept "warming" for 5+ full passes and defeated every
-      // pass-level A/B. With the cache sized above the registry's working
-      // set, warm passes compile ~nothing and reuse JIT-hot classes. This
-      // is an honest fixed-capacity sizing (a production session running
-      // a 245-query workload would be configured the same way); it is a
-      // STATIC conf, so it must be set here at session build.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // maxPartitionBytes=1MB was screened and REJECTED (round 17): the
-      // pass-level instrument first read 0.902 for it, but every fixture
-      // file is ONE parquet row group, so a smaller split cannot
-      // parallelize any decode — it only adds empty tasks. The query-level
-      // ABBA re-measurement (each query ON,OFF,OFF,ON back-to-back, drift
-      // cancels) read median 1.012: the "win" was warm-order bias in the
-      // pass-level A/B (the candidate arm always ran on the warmer later
-      // passes). Kept at default.
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    // Session.builder holds the deployed confs; the notes below record
+    // the confs screened for Bench and left at their defaults.
+    // The round-16 AQE coalescing tune (parallelismFirst=false + 8 MB
+    // advisory) was REVERTED to defaults in round 17. It was adopted on
+    // a thrash-era A/B (see the codegen cache note in Session); re-screened
+    // with the query-level ABBA instrument AFTER the codegen fix it
+    // reads median 0.999 but TOTAL 87.9 (tuned) vs 83.1 s (defaults) —
+    // the tune's tail savings (~0.1 s × a few rows) no longer exist
+    // once stages stop paying a Janino compile, while its cost — less
+    // reduce-side parallelism on the heavy shuffle rows — remains
+    // (q_spearman −0.89, q_tfidf_pairs −0.81, q_sole_blame −0.77,
+    // q_min_cost_supplier −0.59 s with defaults). AQE itself stays ON
+    // (AQE-off measured +22 s in r16: graph/iterative rows regress).
+    // constraintPropagation-off was screened and REJECTED (round 17):
+    // the pass-level instrument read 0.933 for it, but that instrument
+    // is warm-order-biased (see PERF.md "the instrument problem"); the
+    // query-level ABBA re-measurement over the full registry read
+    // median 1.009 — neutral. Kept at default. Kryo (alternating-
+    // session pairs 0.967/1.063/1.191) and shuffle-compression-off
+    // (1.08) were screened and rejected the same round.
+    // maxPartitionBytes=1MB was screened and REJECTED (round 17): the
+    // pass-level instrument first read 0.902 for it, but every fixture
+    // file is ONE parquet row group, so a smaller split cannot
+    // parallelize any decode — it only adds empty tasks. The query-level
+    // ABBA re-measurement (each query ON,OFF,OFF,ON back-to-back, drift
+    // cancels) read median 1.012: the "win" was warm-order bias in the
+    // pass-level A/B (the candidate arm always ran on the warmer later
+    // passes). Kept at default.
+    val spark = extraConf.foldLeft(Session.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session once (JIT/codegen/classloading, parquet reader and

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -109,7 +110,18 @@ object Pipelines {
     // between stages.
     val gated = gated0.localCheckpoint()
     // 2. near-dup dedup computed ON the gated corpus — one anti-join
-    val deduped = Dedup.dedupSurvivors(gated, pairGenerator(gated))
+    val sc = gated.sparkSession.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = pairGenerator(gated)
+    val made = sc.getPersistentRDDs.keySet -- before
+    val deduped = Dedup.dedupSurvivors(gated, pairs)
+    // clusterPairs has copied the pairs, so the checkpoints the generator
+    // made for them are superseded. One a caller's generator closes over
+    // existed before the call and stays, as does any the gated corpus or
+    // the survivors still read.
+    def rdds(df: DataFrame) = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+    val kept = (rdds(gated) ++ rdds(deduped)).map(_.id).toSet
+    rdds(pairs).filter(r => made(r.id) && !kept(r.id)).foreach(_.unpersist(blocking = false))
     // 3. mixture  4. split  5. packing
     val mixed = deduped.filter(Text.mixKeep(mixRates))
     val w = Window.partitionBy("source").orderBy("doc_id")

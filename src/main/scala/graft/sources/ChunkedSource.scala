@@ -319,10 +319,7 @@ private class ChunkedScan(numRows: Long, numChunks: Int,
     * only if the runtime key sets admit at least one of its rows.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val per = math.max(1L, math.ceil(numRows.toDouble / numChunks).toLong)
-    val planned = (0 until numChunks).map { c =>
-      ChunkPartition(c, c * per, math.min(numRows, (c + 1) * per))
-    }.filter { p =>
+    val planned = ChunkPartition.plan(numRows, numChunks).filter { p =>
       runtimeChunks.forall(_.contains(p.chunk)) &&
         runtimeIds.forall(_.exists(id => id >= p.startId && id < p.endId))
     }
@@ -334,18 +331,15 @@ private class ChunkedScan(numRows: Long, numChunks: Int,
     new ChunkedReaderFactory(filters, required, limit)
 }
 
-private case class ChunkPartition(chunk: Int, startId: Long, endId: Long) extends InputPartition
+private case class ChunkPartition(chunk: Int, startId: Long, endId: Long) extends InputPartition {
 
-private class ChunkedReaderFactory(filters: Array[Filter], required: StructType,
-                                   limit: Int = Int.MaxValue)
-  extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ChunkPartition]
-    // fold pushed id predicates into the range bounds — server-side
-    // filtering: rejected ids are never generated, let alone returned
-    var lo = p.startId
-    var hi = p.endId
+  /** This chunk's id range `[lo, hi)` with the pushed id predicates folded
+    * in — server-side filtering: rejected ids are never generated, let
+    * alone returned.
+    */
+  def idBounds(filters: Array[Filter]): (Long, Long) = {
+    var lo = startId
+    var hi = endId
     filters.foreach {
       case EqualTo("id", v: Long)            => lo = math.max(lo, v); hi = math.min(hi, v + 1)
       case GreaterThan("id", v: Long)        => lo = math.max(lo, v + 1)
@@ -354,9 +348,28 @@ private class ChunkedReaderFactory(filters: Array[Filter], required: StructType,
       case LessThanOrEqual("id", v: Long)    => hi = math.min(hi, v + 1)
       case _ =>
     }
+    (lo, hi)
+  }
+}
+
+private object ChunkPartition {
+  /** The chunk plan both scans share: contiguous id ranges over `[0, numRows)`. */
+  def plan(numRows: Long, numChunks: Int): Seq[ChunkPartition] = {
+    val per = math.max(1L, math.ceil(numRows.toDouble / numChunks).toLong)
+    (0 until numChunks).map(c => ChunkPartition(c, c * per, math.min(numRows, (c + 1) * per)))
+  }
+}
+
+private class ChunkedReaderFactory(filters: Array[Filter], required: StructType,
+                                   limit: Int = Int.MaxValue)
+  extends PartitionReaderFactory {
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[ChunkPartition]
+    val (lo, folded) = p.idBounds(filters)
     // partial limit: this partition never generates more than `limit` rows
     // (applied after filter folding — the bound is on ROWS RETURNED)
-    if (limit != Int.MaxValue) hi = math.min(hi, lo + limit)
+    val hi = if (limit != Int.MaxValue) math.min(folded, lo + limit) else folded
     val fields = required.fieldNames
     new PartitionReader[InternalRow] {
       private var id = lo - 1
@@ -399,12 +412,8 @@ private class ChunkedAggScan(numRows: Long, numChunks: Int, filters: Array[Filte
     s"graft_chunked AGGPUSHED=[${specs.mkString(",")}] groupByChunk=$byChunk " +
       s"pushed=[${filters.mkString(",")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val per = math.max(1L, math.ceil(numRows.toDouble / numChunks).toLong)
-    (0 until numChunks).map { c =>
-      ChunkPartition(c, c * per, math.min(numRows, (c + 1) * per)): InputPartition
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    ChunkPartition.plan(numRows, numChunks).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ChunkedAggReaderFactory(filters, specs, byChunk)
@@ -416,16 +425,7 @@ private class ChunkedAggReaderFactory(filters: Array[Filter],
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChunkPartition]
-    var lo = p.startId
-    var hi = p.endId
-    filters.foreach {
-      case EqualTo("id", v: Long)            => lo = math.max(lo, v); hi = math.min(hi, v + 1)
-      case GreaterThan("id", v: Long)        => lo = math.max(lo, v + 1)
-      case GreaterThanOrEqual("id", v: Long) => lo = math.max(lo, v)
-      case LessThan("id", v: Long)           => hi = math.min(hi, v)
-      case LessThanOrEqual("id", v: Long)    => hi = math.min(hi, v + 1)
-      case _ =>
-    }
+    val (lo, hi) = p.idBounds(filters)
     // one pre-aggregated row per non-empty chunk; empty chunks emit
     // nothing (Spark's final merge yields count=0 / null min-max globally)
     val empty = hi <= lo

@@ -2,13 +2,16 @@ package graft
 
 /** Registry-wide guards: every registered query must run and produce rows on
   * the smallest fixture (an empty result would silently weaken the driver's
-  * rows-only check), and every oracle key must reference a real query.
+  * hash check), and each record's name is unique and its oracle non-blank.
   */
 class RegistrySpec extends SparkSpec {
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracles without queries: $extra")
+  test("registry names are unique and every oracle is non-blank") {
+    // a duplicated record would vanish silently from the name-keyed maps
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"names registered more than once: $dups")
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
   }
 
   test("every registered query returns rows at sf0.001") {

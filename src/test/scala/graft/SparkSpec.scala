@@ -7,23 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // legacy nanos-era fixture support; Tables.load adapts per era
-      .config("spark.ui.enabled", "false")
-      // Codegen class cache sized to the suite (round 18, from the round-17
-      // bench find): the 523-test suite generates thousands of unique
-      // codegen units in ONE shared session against a default cache of 100
-      // entries, so the suite re-ran Janino continuously and no generated
-      // class ever went JIT-hot — the same thrash mechanism measured in the
-      // bench (2.8k recompiles/pass at cache=100, ~0 at 10000). VERDICT r17
-      // #2 requires the suite to finish inside the driver's window; this is
-      // the largest single lever and changes no test semantics.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val s = Session.builder("4").appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -39,8 +39,6 @@ class ReExecutionSpec extends SparkSpec {
     "Text.budgetSelect" -> (s => Text.budgetSelect(docs(s), 5000)),
     "Text.ngramNovelty" -> (s => Text.ngramNovelty(docs(s))),
     "Events.concurrentSessions" -> (s => Events.concurrentSessions(Tables.events(s, sfDir))),
-    "Pipelines.curateWith" -> (s => Pipelines.curateWith(docs(s),
-      Dedup.jaccardPairs(_, 0.5, sorted = false))),
     "Stats.madOutliers" -> (s =>
       Stats.madOutliers(Tables.orders(s, sfDir), "o_totalprice", "o_orderpriority")),
     "Graph.modularity" -> { s =>
@@ -57,8 +55,7 @@ class ReExecutionSpec extends SparkSpec {
     "Similarity.ivfTopK" -> (s => Similarity.ivfTopK(emb(s), 20, 5)),
     "Similarity.kmeansPrototypes" -> (s => Similarity.kmeansPrototypes(emb(s))),
     "Similarity.lshFidelityReport" -> (s => Similarity.lshFidelityReport(emb(s))),
-    "Similarity.annRecallReport" -> (s => Similarity.annRecallReport(emb(s), 20, 5)),
-    "q_curation_gopher" -> (s => SparkEntry.queries("q_curation_gopher")(s, sfDir)))
+    "Similarity.annRecallReport" -> (s => Similarity.annRecallReport(emb(s), 20, 5)))
 
   private def trade(s: SparkSession): DataFrame = Graph.tradeEdges(Tables.lineitem(s, sfDir),
     Tables.orders(s, sfDir), Tables.customer(s, sfDir), Tables.supplier(s, sfDir))
@@ -108,6 +105,10 @@ class ReExecutionSpec extends SparkSpec {
     "Similarity.hnswRecallReport" -> { s =>
       val e = emb(s); () => Similarity.hnswRecallReport(e, 20, 5)
     },
+    "Pipelines.curateWith" -> { s =>
+      val d = docs(s); () => Pipelines.curateWith(d, Dedup.jaccardPairs(_, 0.5, sorted = false))
+    },
+    "q_curation_gopher" -> { s => () => SparkEntry.queries("q_curation_gopher")(s, sfDir) },
     "q_louvain" -> { s => () => SparkEntry.queries("q_louvain")(s, sfDir) })
 
   private def reExecutes(name: String, build: () => DataFrame, checkResidency: Boolean): Unit = {
