@@ -37,11 +37,9 @@ object SparkEntry {
   // Louvain level 1 over one edge frame: the 4-round LPA labeling refined
   // by 2 local-move rounds (q_louvain, q_louvain_multilevel); the LPA
   // labels are released once refineCommunities has copied them
-  private def louvainLabels(edges: DataFrame): DataFrame = {
-    val lpa = Graph.communities(edges, rounds = 4, sorted = false)
-    val refined = Graph.refineCommunities(edges, lpa, rounds = 2, sorted = false)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(lpa)
-    refined
+  private def louvainLabels(edges: DataFrame): DataFrame = Checkpoints.owned {
+    Graph.refineCommunities(edges, Graph.communities(edges, rounds = 4, sorted = false),
+      rounds = 2, sorted = false)
   }
   private val ndcgQuerySets =
     Seq(Seq("join", "vector"), Seq("dup", "spark"), Seq("the", "data"))
@@ -2782,7 +2780,10 @@ object SparkEntry {
          ORDER BY purchase_id"""),
   )
 
+  // each build runs in its own checkpoint scope: it leaves resident only
+  // the checkpoints its result reads
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.build).toMap
+    registry.map(q => q.name -> ((s: SparkSession, dir: String) =>
+      Checkpoints.owned(q.build(s, dir)))).toMap
   lazy val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 }

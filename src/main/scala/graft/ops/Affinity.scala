@@ -103,7 +103,7 @@ object Affinity {
     require(minPairs >= 1, s"minPairs must be >= 1, got $minPairs")
     // read three times (basket count, item supports, pair generation) —
     // one scan
-    val b = baskets.select("basket", "item").distinct().localCheckpoint()
+    val b = Checkpoints(baskets.select("basket", "item").distinct())
     val nBaskets = b.agg(countDistinct("basket").as("n"))
     val joined = countedPairs(b, minPairs, pruneItems)
     val fwd = joined.select(col("x").as("antecedent"), col("y").as("consequent"),
@@ -130,7 +130,7 @@ object Affinity {
   def itemNeighbors(baskets: DataFrame, topK: Int = 5, minPairs: Long = 2L,
                     pruneItems: Boolean = true): DataFrame = {
     require(topK >= 1 && minPairs >= 1, s"need topK/minPairs >= 1, got $topK/$minPairs")
-    val b = baskets.select("basket", "item").distinct().localCheckpoint()
+    val b = Checkpoints(baskets.select("basket", "item").distinct())
     val joined = countedPairs(b, minPairs, pruneItems)
     def cosine(cp: Column, ca: Column, cb: Column): Column =
       round(cp.cast("double") / sqrt(ca.cast("double") * cb.cast("double")), 6)

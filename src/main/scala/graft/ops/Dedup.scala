@@ -189,7 +189,7 @@ object Dedup {
                    orderByDocFreq: Boolean = true,
                    sorted: Boolean = true): DataFrame = {
     // one shingling pass, materialized: prefix generation and verify both read it
-    val arrs = shingleArrays(documents).localCheckpoint()
+    val arrs = Checkpoints(shingleArrays(documents))
     // Prefix filtering is EXACT under any global total order of shingles.
     // Default df-ascending (rarest-first): keeps common shingles out of
     // prefixes so the candidate join stays near-linear — measured ~30%
@@ -245,7 +245,7 @@ object Dedup {
     // single-rep and 8.3 s → 5.6 s best-of-reps (the PERF.md figure). The
     // hash-order prefix is a row-local slice of arrs — materializing that
     // would only duplicate arrs' blocks.
-    val prefixShared = if (orderByDocFreq) prefix.localCheckpoint() else prefix
+    val prefixShared = if (orderByDocFreq) Checkpoints(prefix) else prefix
     // length filter (PPJoin): J >= t forces t·|A| <= |B| <= |A|/t
     val cand = prefixShared.as("a")
       .join(prefixShared.as("b"),
@@ -309,12 +309,12 @@ object Dedup {
                    sorted: Boolean = true): DataFrame = {
     val k = bands * rows
     val coeffs = minhashCoeffs(k)
-    val arrs = shingleArrays48(documents).localCheckpoint()
+    val arrs = Checkpoints(shingleArrays48(documents))
     val sh = shingles(arrs)
     // materialize the band-bucket frame: the candidate SELF-join would
     // otherwise run the k-min signature aggregate (k mins over the full
     // shingle volume) once per side — the jaccard prefix rationale above
-    val buckets = minhashBuckets(sh, coeffs, bands, rows).localCheckpoint()
+    val buckets = Checkpoints(minhashBuckets(sh, coeffs, bands, rows))
     val cand = buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
@@ -443,11 +443,8 @@ object Dedup {
     * are released once [[clusterPairs]] has copied the pairs.
     */
   def dupClusters(documents: DataFrame, threshold: Double = 0.5,
-                  sorted: Boolean = true): DataFrame = {
-    val pairs = jaccardPairs(documents, threshold, sorted = false)
-    val out = clusterPairs(pairs, sorted)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpointsExcept(pairs, documents, out)
-    out
+                  sorted: Boolean = true): DataFrame = Checkpoints.owned {
+    clusterPairs(jaccardPairs(documents, threshold, sorted = false), sorted)
   }
 
   /** Leakage-safe train/validation split: the md5-bucket assignment of
@@ -489,16 +486,18 @@ object Dedup {
     * needs O(log diameter) rounds. Both label a component by its minimum
     * id; a self-pair (id_a = id_b) carries no edge past the cap.
     */
-  def clusterPairs(pairGraph: DataFrame, sorted: Boolean = true): DataFrame = {
-    val pairs = pairGraph.select("id_a", "id_b").localCheckpoint()
-    if (pairs.count() <= SmallGraphEdgeCap) return smallGraphClusters(pairs)
-    val out = Graph.connectedComponents(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")), sorted = false)
-      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-    // the labels are checkpointed inside connectedComponents; the pairs
-    // checkpoint is superseded
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(pairs)
-    if (sorted) out.orderBy("doc_id") else out
+  def clusterPairs(pairGraph: DataFrame,
+                   sorted: Boolean = true): DataFrame = Checkpoints.owned {
+    // the pairs checkpoint is superseded by either path's copy: the
+    // collected edges or connectedComponents' checkpointed labels
+    val pairs = Checkpoints(pairGraph.select("id_a", "id_b"))
+    if (pairs.count() <= SmallGraphEdgeCap) smallGraphClusters(pairs)
+    else {
+      val out = Graph.connectedComponents(
+          pairs.select(col("id_a").as("src"), col("id_b").as("dst")), sorted = false)
+        .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
+      if (sorted) out.orderBy("doc_id") else out
+    }
   }
 
   /** Edge count up to which [[clusterPairs]] collects the pair graph to
@@ -514,9 +513,6 @@ object Dedup {
     val spark = pairs.sparkSession
     import spark.implicits._
     val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-    // the collected array is all this path needs — release the pairs
-    // checkpoint blocks (the returned frame is built from driver data)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(pairs)
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var root = x
@@ -567,12 +563,10 @@ object Dedup {
     * non-keeper list; no projection to ids, no join back, no output sort
     * (the caller orders its own final result).
     */
-  def dedupSurvivors(documents: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val pairs = jaccardPairs(documents, threshold, sorted = false)
-    val out = dedupSurvivors(documents, pairs)
+  def dedupSurvivors(documents: DataFrame,
+                     threshold: Double = 0.5): DataFrame = Checkpoints.owned {
     // the pair graph's own checkpoints are superseded by clusterPairs' copy
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpointsExcept(pairs, documents, out)
-    out
+    dedupSurvivors(documents, jaccardPairs(documents, threshold, sorted = false))
   }
 
   /** Survivors from an ARBITRARY near-dup pair graph (`id_a`/`id_b`) — the
@@ -910,8 +904,8 @@ object Dedup {
     // dominant constant factor). Shingle each corpus ONCE, materialized:
     // the benchmark shingles feed the eager filter build and the exact
     // leg's semi-join; the train shingles feed both legs.
-    val tsh = hashedShingles(train, n).localCheckpoint()
-    val bsh = hashedShingles(benchmark, n).localCheckpoint()
+    val tsh = Checkpoints(hashedShingles(train, n))
+    val bsh = Checkpoints(hashedShingles(benchmark, n))
     val bf = bsh.stat.bloomFilter("shingle", expectedShingles, fpp)
     val e = exactSurvivors(train, tsh, bsh).select(col("doc_id"), lit(1).as("e"))
     val b = bloomSurvivors(train, tsh, bf).select(col("doc_id"), lit(1).as("b"))
@@ -1075,13 +1069,12 @@ object Dedup {
     val dfT = tf.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
     val nd = documents.agg(count(lit(1)).as("_n"))
-    val w = tf.join(dfT, "sh")
+    val w = Checkpoints(tf.join(dfT, "sh")
       .crossJoin(broadcast(nd))
       .select(col("doc_id"), col("sh"), col("df"),
         round(col("tf").cast("double") *
           log(col("_n").cast("double") / col("df").cast("double")), 9)
-          .cast(dec).as("w"))
-      .localCheckpoint()
+          .cast(dec).as("w")))
     val norms = w.groupBy("doc_id")
       .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
     // The candidate self-join is the compute stage: each sh-group expands

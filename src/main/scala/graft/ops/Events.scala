@@ -495,7 +495,7 @@ object Events {
     */
   def concurrentSessions(events: DataFrame, gapSec: Long = 1800,
                          binSec: Long = 3600): DataFrame = {
-    val sess = sessionIntervals(events, gapSec).localCheckpoint()
+    val sess = Checkpoints(sessionIntervals(events, gapSec))
     overlapJoin(sess, sess, binSec,
       joinCond = Some((a, b) => a.getField("user_id") < b.getField("user_id")))
       .groupBy(col("a_user_id").as("user_a"), col("b_user_id").as("user_b"))

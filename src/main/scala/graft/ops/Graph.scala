@@ -38,7 +38,7 @@ object Graph {
     * correction term entirely.
     */
   private final class RankGraph(edgeList: DataFrame, weightCol: Option[String]) {
-    private val edges = (weightCol match {
+    private val edges = Checkpoints((weightCol match {
       case Some(w) =>
         edgeList.select(col("src").cast("long"), col("dst").cast("long"),
             col(w).cast("long").as("w"))
@@ -47,16 +47,14 @@ object Graph {
         edgeList.select(col("src").cast("long"), col("dst").cast("long"))
           .distinct()
           .withColumn("w", lit(1L))
-    }).localCheckpoint()
+    }))
     private val outdeg = edges.groupBy("src")
       .agg(sum("w").cast("double").as("outdeg"))
-    val nodes: DataFrame = edges.select(col("src").as("node"))
+    val nodes: DataFrame = Checkpoints(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    private val dangling = nodes
-      .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-      .localCheckpoint()
+      .distinct())
+    private val dangling = Checkpoints(nodes
+      .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_anti"))
     val hasDangling: Boolean = dangling.limit(1).count() > 0
 
     /** (node, csum): the exact-decimal Σ_{u→v} r(u)·w/W(u) — the only
@@ -77,9 +75,6 @@ object Graph {
       ranks.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("rank").cast(DecimalType(28, 18))), lit(0))
           .cast("double").as("dmass"))
-
-    def release(): Unit =
-      Seq(edges, nodes, dangling).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
   }
 
   /** Damped PageRank, `iters` fixed synchronous iterations:
@@ -102,7 +97,7 @@ object Graph {
     */
   def pageRank(edgeList: DataFrame, iters: Int = 10,
                damping: Double = 0.85, sorted: Boolean = true,
-               weightCol: Option[String] = None): DataFrame = {
+               weightCol: Option[String] = None): DataFrame = Checkpoints.owned {
     require(iters >= 1 && damping > 0 && damping < 1)
     val g = new RankGraph(edgeList, weightCol)
     val n = g.nodes.count().toDouble // construction job (see scaladoc)
@@ -123,7 +118,6 @@ object Graph {
               (coalesce(col("csum").cast("double"), lit(0.0)) +
                 col("dmass") / lit(n))).as("rank"))
     }
-    g.release()
     // the two engines' DECIMAL(28,18) casts round their last place
     // differently, leaving a bounded ~1e-18 absolute drift after any
     // number of iterations (each round re-quantizes, so it never
@@ -173,13 +167,12 @@ object Graph {
     */
   def personalizedPageRank(edgeList: DataFrame, seeds: DataFrame, iters: Int = 10,
                            damping: Double = 0.85, sorted: Boolean = true,
-                           weightCol: Option[String] = None): DataFrame = {
+                           weightCol: Option[String] = None): DataFrame = Checkpoints.owned {
     require(iters >= 1 && damping > 0 && damping < 1)
     val g = new RankGraph(edgeList, weightCol)
     // seed indicator restricted to graph nodes; |S| counts members only
-    val seedNodes = g.nodes.join(
-      seeds.select(col("node").cast("long")).distinct(), Seq("node"), "left_semi")
-      .localCheckpoint()
+    val seedNodes = Checkpoints(g.nodes.join(
+      seeds.select(col("node").cast("long")).distinct(), Seq("node"), "left_semi"))
     val nSeeds = seedNodes.count().toDouble
     require(nSeeds > 0, "personalizedPageRank needs at least one seed present in the graph")
     val seedMass = 1.0 / nSeeds
@@ -204,8 +197,6 @@ object Graph {
               (coalesce(col("csum").cast("double"), lit(0.0)) +
                 col("dmass") * col("_s"))).as("rank"))
     }
-    g.release()
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(seedNodes)
     val out = ranks.select(col("node"), round(col("rank"), 9).as("rank"))
     if (sorted) out.orderBy(col("rank").desc, col("node")) else out
   }
@@ -387,15 +378,13 @@ object Graph {
     * output densifies with COALESCE.
     */
   def hits(edgeList: DataFrame, iters: Int = 10,
-           sorted: Boolean = true): DataFrame = {
+           sorted: Boolean = true): DataFrame = Checkpoints.owned {
     require(iters >= 1)
-    val edges = edgeList.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("node"))
+    val edges = Checkpoints(edgeList.select(col("src").cast("long"), col("dst").cast("long"))
+      .distinct())
+    val nodes = Checkpoints(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val dec = DecimalType(28, 18)
     // one round state (node, a, h): only h feeds the next round (a is
     // recomputed through h's plan), and the last round's a is the other
@@ -424,7 +413,6 @@ object Graph {
         .select(col("node"), (col("uh") / col("nh")).as("h"))
       aPlan.join(hPlan, Seq("node"), "full_outer")
     }
-    Seq(edges, nodes).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     // densify: every node has at least one edge, so it has an authority
     // (in-edges) or a hub score (out-edges) in the last round's state;
     // same 9-decimal emission as pageRank
@@ -612,21 +600,19 @@ object Graph {
     * the rounds.
     */
   def shortestPaths(weightedEdges: DataFrame, seeds: DataFrame,
-                    rounds: Int = 4): DataFrame = {
+                    rounds: Int = 4): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = weightedEdges.select(
+    val edges = Checkpoints(weightedEdges.select(
         least(col("src").cast("long"), col("dst").cast("long")).as("a"),
         greatest(col("src").cast("long"), col("dst").cast("long")).as("b"),
         col("w").cast("long").as("w"))
       .filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(min("w").as("w"))
-      .localCheckpoint()
+      .groupBy("a", "b").agg(min("w").as("w")))
     val nodes = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
-    val seeded = nodes
+    val seeded = Checkpoints(nodes
       .join(seeds.select(col("node").cast("long")).distinct(), Seq("node"), "left_semi")
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
+      .withColumn("dist", lit(0L)))
     val dist = Rounds.run(seeded, rounds) { (d, _) =>
       val viaA = edges.join(d.select(col("node").as("a"), col("dist")), "a")
         .select(col("b").as("node"), (col("dist") + col("w")).as("dist"))
@@ -635,7 +621,6 @@ object Graph {
       d.unionByName(viaA).unionByName(viaB)
         .groupBy("node").agg(min("dist").as("dist"))
     }
-    Seq(seeded, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     dist.orderBy("node")
   }
 
@@ -703,13 +688,12 @@ object Graph {
     * maxIters, a corpus converging in rounds 11..maxIters would succeed
     * here while the oracle silently returned a non-fixpoint.
     */
-  def kCore(edgeList: DataFrame, k: Int, maxIters: Int = 20): DataFrame = {
+  def kCore(edgeList: DataFrame, k: Int, maxIters: Int = 20): DataFrame = Checkpoints.owned {
     require(k >= 1 && maxIters >= 1, s"need k >= 1 and maxIters >= 1, got $k/$maxIters")
-    val edges = canonicalEdges(edgeList).localCheckpoint()
-    val all = edges.select(col("a").as("node"))
+    val edges = Checkpoints(canonicalEdges(edgeList))
+    val all = Checkpoints(edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
-      .withColumn("deg", lit(-1L)) // placeholder; replaced by round 1
-      .localCheckpoint()
+      .withColumn("deg", lit(-1L))) // placeholder; replaced by round 1
     val core = Rounds.fixpoint(s"kCore(k=$k)", all, maxIters,
         initProbe = Some(all.count()))(_.count()) { survivors =>
       val aliveKeys = survivors.select("node")
@@ -721,7 +705,6 @@ object Graph {
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
     }
-    Seq(all, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     core.orderBy("node")
   }
 
@@ -769,13 +752,12 @@ object Graph {
     * bounded by the edge count — linear at any scale.
     */
   def communities(edgeList: DataFrame, rounds: Int = 4,
-                  sorted: Boolean = true): DataFrame = {
+                  sorted: Boolean = true): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = canonicalEdges(edgeList).localCheckpoint()
-    val own = edges.select(col("a").as("node"))
+    val edges = Checkpoints(canonicalEdges(edgeList))
+    val own = Checkpoints(edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
-      .withColumn("community", col("node"))
-      .localCheckpoint()
+      .withColumn("community", col("node")))
     // checkpoint every 2 rounds (r16): an LPA round embeds the previous
     // labeling TWICE (viaA + viaB), so a 2-round window executes 2² = 4
     // copies of the last checkpoint — the pageRank cadence trade (its
@@ -794,7 +776,6 @@ object Graph {
         .agg(min(struct((-col("c")).as("nc"), col("community").as("lab"))).as("m"))
         .select(col("node"), col("m.lab").as("community"))
     }
-    Seq(own, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     if (sorted) labels.orderBy("node") else labels
   }
 
@@ -838,7 +819,7 @@ object Graph {
     * its checkpointed output — the registered query does.
     */
   def modularity(edgeList: DataFrame, labels: DataFrame): DataFrame = {
-    val e = canonicalEdges(edgeList).localCheckpoint()
+    val e = Checkpoints(canonicalEdges(edgeList))
     val lab = labels.select(col("node").cast("long").as("node"),
       col("community").cast("long").as("community"))
     val em = e
@@ -931,18 +912,17 @@ object Graph {
     * once from the checkpointed edge set.
     */
   def refineCommunities(edgeList: DataFrame, labels: DataFrame,
-                        rounds: Int = 2, sorted: Boolean = true): DataFrame = {
+                        rounds: Int = 2, sorted: Boolean = true): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = canonicalEdges(edgeList).localCheckpoint()
+    val edges = Checkpoints(canonicalEdges(edgeList))
     val m = edges.count() // one job over already-checkpointed blocks
     val nbr = edges.select(col("a").as("node"), col("b").as("nb"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nb")))
       .withColumn("w", lit(1L))
-    val deg = nbr.groupBy("node").agg(count(lit(1)).as("deg")).localCheckpoint()
-    val lab = labels.select(col("node").cast("long").as("node"),
-      col("community").cast("long").as("community")).localCheckpoint()
+    val deg = Checkpoints(nbr.groupBy("node").agg(count(lit(1)).as("deg")))
+    val lab = Checkpoints(labels.select(col("node").cast("long").as("node"),
+      col("community").cast("long").as("community")))
     val moved = localMoves(nbr, deg, lab, m, rounds)
-    Seq(lab, deg, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     if (sorted) moved.orderBy("node") else moved
   }
 
@@ -1063,22 +1043,21 @@ object Graph {
     * original node → final coarse community.
     */
   def louvainCoarsen(edgeList: DataFrame, labels: DataFrame,
-                     rounds: Int = 2, sorted: Boolean = true): DataFrame = {
+                     rounds: Int = 2, sorted: Boolean = true): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val lab = labels.select(col("node").cast("long").as("node"),
-      col("community").cast("long").as("community")).localCheckpoint()
+    val lab = Checkpoints(labels.select(col("node").cast("long").as("node"),
+      col("community").cast("long").as("community")))
     // coarsen: (community(a), community(b)) with multiplicity; canonical
     // least/greatest keeps one row per unordered super-pair, self-loops
     // carry the intra-community edge mass. The ONLY full-scale pass —
     // canonical edges are consumed exactly once, so they are not
     // re-materialized (m comes from the coarse table: Σw ≡ |E|).
-    val ce = canonicalEdges(edgeList)
+    val ce = Checkpoints(canonicalEdges(edgeList)
       .join(lab.select(col("node").as("a"), col("community").as("_ca")), "a")
       .join(lab.select(col("node").as("b"), col("community").as("_cb")), "b")
       .select(least(col("_ca"), col("_cb")).as("a"),
         greatest(col("_ca"), col("_cb")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+      .groupBy("a", "b").agg(count(lit(1)).as("w")))
     val m = ce.agg(coalesce(sum("w"), lit(0L)).as("m")).head().getLong(0)
     // nbr/clab0 are narrow projections of checkpointed frames — their
     // re-evaluation per consumer is a block read, not a recompute, so
@@ -1087,11 +1066,10 @@ object Graph {
     val nbr = cross.select(col("a").as("node"), col("b").as("nb"), col("w"))
       .unionByName(cross.select(col("b").as("node"), col("a").as("nb"), col("w")))
     // weighted degree: cross edges once per direction, self-loops twice
-    val deg = nbr.select(col("node"), col("w"))
+    val deg = Checkpoints(nbr.select(col("node"), col("w"))
       .unionByName(ce.filter(col("a") === col("b"))
         .select(col("a").as("node"), (col("w") * 2).as("w")))
-      .groupBy("node").agg(sum("w").as("deg"))
-      .localCheckpoint()
+      .groupBy("node").agg(sum("w").as("deg")))
     // every supernode starts as its own community (standard Louvain)
     val clab = localMoves(nbr, deg, deg.select(col("node"), col("node").as("community")),
       m, rounds)
@@ -1102,12 +1080,9 @@ object Graph {
     // has no clab row — an inner join silently dropped such nodes from
     // the output. An edgeless community can never gain from a move, so
     // its final community IS its level-1 id: coalesce to _cn.
-    val out = lab.select(col("node"), col("community").as("_cn"))
+    val out = Checkpoints(lab.select(col("node"), col("community").as("_cn"))
       .join(clab.select(col("node").as("_cn"), col("community")), Seq("_cn"), "left")
-      .select(col("node"), coalesce(col("community"), col("_cn")).as("community"))
-      .localCheckpoint()
-    Seq(lab, clab, ce, deg).foreach(
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
+      .select(col("node"), coalesce(col("community"), col("_cn")).as("community")))
     if (sorted) out.orderBy("node") else out
   }
 
@@ -1216,13 +1191,12 @@ object Graph {
     * nodes).
     */
   def connectedComponents(edgeList: DataFrame, maxIters: Int = 64,
-                          sorted: Boolean = true): DataFrame = {
+                          sorted: Boolean = true): DataFrame = Checkpoints.owned {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val edges = canonicalEdges(edgeList).localCheckpoint()
-    val own = edges.select(col("a").as("node"))
+    val edges = Checkpoints(canonicalEdges(edgeList))
+    val own = Checkpoints(edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
-      .withColumn("comp", col("node"))
-      .localCheckpoint()
+      .withColumn("comp", col("node")))
     val labels = Rounds.fixpoint("connectedComponents", own, maxIters)(
         _.agg(sum(col("comp").cast(DecimalType(38, 0)))).head.getDecimal(0)) { lab =>
       val viaA = edges.join(lab.select(col("node").as("a"), col("comp")), "a")
@@ -1240,7 +1214,6 @@ object Graph {
           Seq("comp"), "left")
         .select(col("node"), coalesce(col("jump"), col("comp")).as("comp"))
     }
-    Seq(own, edges).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
     if (sorted) labels.orderBy("node") else labels
   }
 
@@ -1316,7 +1289,7 @@ object Graph {
     * identically (round(·, 6) discipline).
     */
   def triangleStats(edgeList: DataFrame): DataFrame = {
-    val e = canonicalEdges(edgeList).localCheckpoint()
+    val e = Checkpoints(canonicalEdges(edgeList))
     val nEdges = e.count() // free — e just materialized
     val deg = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node")))
@@ -1357,12 +1330,11 @@ object Graph {
     val db = deg.select(col("node").as("b"), col("deg").as("db"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = e.join(da, "a").join(db, "b")
+    val oriented = Checkpoints(e.join(da, "a").join(db, "b")
       .select(
         when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("v"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint()
+        when(aFirst, col("db")).otherwise(col("da")).as("dv")))
     // successor pairs of each center u, ordered by the SAME (degree, id)
     // order the orientation used — so the closing edge, when present, is
     // oriented exactly x→y and one inner equi-join finds it
@@ -1385,12 +1357,9 @@ object Graph {
     * aggregate) — every step a keyed shuffle, wedge volume bounded
     * E^{3/2} by the degree orientation, nothing collected.
     */
-  def triangleCorners(edgeList: DataFrame): DataFrame = {
-    val e = canonicalEdges(edgeList).localCheckpoint()
-    val corners = cornersFrom(e, degreesOf(e))
-    // cornersFrom checkpointed the oriented edges the result reads
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(e)
-    corners
+  def triangleCorners(edgeList: DataFrame): DataFrame = Checkpoints.owned {
+    val e = Checkpoints(canonicalEdges(edgeList))
+    cornersFrom(e, degreesOf(e))
   }
 
   /** Per-node triangle profile: `(node, deg, n_tri, lcc)` — undirected
@@ -1408,7 +1377,7 @@ object Graph {
     * replayed identically by the oracle (round(·, 6) discipline).
     */
   def triangleProfile(edgeList: DataFrame): DataFrame = {
-    val e = canonicalEdges(edgeList).localCheckpoint()
+    val e = Checkpoints(canonicalEdges(edgeList))
     val deg = degreesOf(e)
     val tri = cornersFrom(e, deg)
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
@@ -1447,8 +1416,8 @@ object Graph {
     // r18 stage probe put ~all of this query's summed task time in exactly
     // those two 64-task broadcast stages). Materialized, both broadcast
     // builds are bounded block reads.
-    val e = canonicalEdges(edgeList).localCheckpoint()
-    val deg = degreesOf(e).localCheckpoint()
+    val e = Checkpoints(canonicalEdges(edgeList))
+    val deg = Checkpoints(degreesOf(e))
     def cedge(p: Column, q: Column): Column =
       struct(least(p, q).as("a"), greatest(p, q).as("b"))
     val common = cornersFrom(e, deg)
@@ -1496,8 +1465,8 @@ object Graph {
     // the two aliased degree joins broadcast-build concurrently, and over
     // lazy inputs each recomputed the canonical-edge distinct + degree
     // aggregate; the eager checkpoints compute that mass exactly once
-    val e = canonicalEdges(edgeList).localCheckpoint()
-    val deg = degreesOf(e).localCheckpoint()
+    val e = Checkpoints(canonicalEdges(edgeList))
+    val deg = Checkpoints(degreesOf(e))
     val dec = DecimalType(38, 0)
     val x = col("da").cast(dec)
     val y = col("db").cast(dec)
@@ -1595,49 +1564,43 @@ object Graph {
     * convergence-sum discipline).
     */
   def neighborhoodReport(edgeList: DataFrame, hops: Int = 3, lgK: Int = 10,
-                         kSigma: Double = 3.0, nSeeds: Int = 64): DataFrame = {
+                         kSigma: Double = 3.0, nSeeds: Int = 64): DataFrame = Checkpoints.owned {
     require(hops >= 1 && hops <= 16, s"hops must be in [1,16], got $hops")
     require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
     val spark = edgeList.sparkSession
     import spark.implicits._
-    val edges = canonicalEdges(edgeList).localCheckpoint()
+    val edges = Checkpoints(canonicalEdges(edgeList))
     val nbr = edges.select(col("a").as("node"), col("b").as("nb"))
       .unionByName(edges.select(col("b").as("node"), col("a").as("nb")))
     val nodes = nbr.select("node").distinct()
-    val seeds = nodes.orderBy("node").limit(nSeeds).localCheckpoint()
+    val seeds = Checkpoints(nodes.orderBy("node").limit(nSeeds))
     val nSeedsActual = seeds.count()
-    var sk = nodes.groupBy("node")
-      .agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk")).localCheckpoint()
-    var ball = seeds.select(col("node").as("seed"), col("node").as("reached"))
-      .localCheckpoint()
+    var sk = Checkpoints(nodes.groupBy("node")
+      .agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk")))
+    var ball = Checkpoints(seeds.select(col("node").as("seed"), col("node").as("reached")))
     val bound = Sketches.relErrBound(lgK, kSigma)
     val rows = (1 to hops).map { h =>
       val viaNbr = nbr
         .join(sk.withColumnRenamed("node", "nb"), "nb")
         .select(col("node"), col("sk"))
-      val skNext = viaNbr.unionByName(sk.select("node", "sk"))
-        .groupBy("node").agg(expr("hll_union_agg(sk)").as("sk"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(sk)
+      val skNext = Checkpoints(viaNbr.unionByName(sk.select("node", "sk"))
+        .groupBy("node").agg(expr("hll_union_agg(sk)").as("sk")))
+      Checkpoints.release(sk)
       sk = skNext
       // no seeds (an empty graph) sums to null: coalesce to 0
       val est = sk.join(broadcast(seeds), "node")
         .agg(coalesce(sum(expr("hll_sketch_estimate(sk)")), lit(0L)).as("est"))
         .head.getAs[Number]("est").doubleValue()
-      val grown = ball.unionByName(
+      val grown = Checkpoints(ball.unionByName(
         ball.join(nbr, ball("reached") === nbr("node"))
           .select(col("seed"), col("nb").as("reached")))
-        .distinct().localCheckpoint()
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(ball)
+        .distinct())
+      Checkpoints.release(ball)
       ball = grown
       val exact = ball.count()
       (h.toLong, nSeedsActual, exact, bound,
         math.abs(est - exact.toDouble) <= bound * exact.toDouble)
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(sk)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(ball)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(seeds)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(edges)
     rows.toDF("h", "n_seeds", "n_reach_exact", "rel_err_bound", "within_bound")
       .orderBy("h")
   }
@@ -1820,7 +1783,7 @@ object Graph {
     * Brandes' δ never credits the source itself.
     */
   def betweennessSampled(edgeList: DataFrame, nSeeds: Int = 8,
-                         maxHops: Int = 3, topK: Int = 20): DataFrame = {
+                         maxHops: Int = 3, topK: Int = 20): DataFrame = Checkpoints.owned {
     require(nSeeds >= 1 && maxHops >= 1 && topK >= 1)
     val sigmaT = DecimalType(38, 0)
     val deltaT = DecimalType(28, 12)
@@ -1828,34 +1791,29 @@ object Graph {
     // localCheckpoint (not a released persist): the BFS runs 2·maxHops
     // actions against this frame — a release-after-first-action cache
     // would recompute the union for every level
-    val nbr = e.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
+    val nbr = Checkpoints(e.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(e.select(col("b").as("u"), col("a").as("v"))))
     val seeds = nbr.select(col("u").as("node")).distinct()
       .orderBy("node").limit(nSeeds)
     // forward: levels(d) = (seed, node, sigma) first reached at hop d
-    val l0 = seeds.select(col("node").as("seed"), col("node"),
-      lit(1).cast(sigmaT).as("sigma")).localCheckpoint()
+    val l0 = Checkpoints(seeds.select(col("node").as("seed"), col("node"),
+      lit(1).cast(sigmaT).as("sigma")))
     val levels = scala.collection.mutable.ArrayBuffer[DataFrame](l0)
-    val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var visited = l0.select("seed", "node")
     for (_ <- 1 to maxHops) {
-      val nxt = levels.last.join(nbr, col("node") === col("u"))
+      val nxt = Checkpoints(levels.last.join(nbr, col("node") === col("u"))
         .select(col("seed"), col("v").as("node"), col("sigma"))
         .join(visited.select(col("seed").as("_s"), col("node").as("_n")),
           col("seed") === col("_s") && col("node") === col("_n"), "left_anti")
-        .groupBy("seed", "node").agg(sum("sigma").cast(sigmaT).as("sigma"))
-        .localCheckpoint()
+        .groupBy("seed", "node").agg(sum("sigma").cast(sigmaT).as("sigma")))
       levels += nxt
-      visited = visited.unionByName(nxt.select("seed", "node")).localCheckpoint()
-      ckpts += visited
+      visited = Checkpoints(visited.unionByName(nxt.select("seed", "node")))
     }
     // backward: deepest level has delta 0; each level pulls from the one
     // below it through the edge table
-    var below = levels(maxHops)
+    var below = Checkpoints(levels(maxHops)
       .select(col("seed"), col("node"), col("sigma"),
-        lit(0).cast(deltaT).as("delta"))
-      .localCheckpoint()
+        lit(0).cast(deltaT).as("delta")))
     val deltas = scala.collection.mutable.ArrayBuffer[DataFrame]()
     if (maxHops >= 1) deltas += below // level maxHops (delta 0 rows count too)
     // stop at d = 1: level 0 is the seeds themselves, whose self-deltas are
@@ -1870,11 +1828,10 @@ object Graph {
           round(col("sigma").cast("double") / col("_sw").cast("double")
             * (lit(1.0) + col("_dw").cast("double")), 12).cast(deltaT).as("_t"))
         .groupBy("seed", "node").agg(sum("_t").cast(deltaT).as("delta"))
-      val lvl = levels(d).select(col("seed"), col("node"), col("sigma"))
+      val lvl = Checkpoints(levels(d).select(col("seed"), col("node"), col("sigma"))
         .join(contrib, Seq("seed", "node"), "left")
         .select(col("seed"), col("node"), col("sigma"),
-          coalesce(col("delta"), lit(0).cast(deltaT)).as("delta"))
-        .localCheckpoint()
+          coalesce(col("delta"), lit(0).cast(deltaT)).as("delta")))
       deltas += lvl
       below = lvl
     }
@@ -1889,17 +1846,10 @@ object Graph {
     val top = bw.orderBy(col("_b").desc, col("node")).limit(topK)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("_b").desc, col("node"))
-    val out = top.withColumn("rn", row_number().over(w).cast("long"))
+    Checkpoints(top.withColumn("rn", row_number().over(w).cast("long"))
       .select(col("node"), round(col("_b").cast("double"), 6).as("betweenness"),
         col("rn"))
-      .orderBy("rn")
-      .localCheckpoint()
-    // the output is materialized: release every intermediate checkpoint
-    // (levels, visited snapshots, per-level deltas) and the edge table
-    (levels ++ deltas ++ ckpts).foreach(
-      org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(nbr)
-    out
+      .orderBy("rn"))
   }
 
   /** Generated DuckDB oracle for [[betweennessSampled]]: the BFS levels
@@ -1956,34 +1906,28 @@ object Graph {
     * terms per seed, order-free).
     */
   def harmonicCloseness(edgeList: DataFrame, nSeeds: Int = 8,
-                        maxHops: Int = 3): DataFrame = {
+                        maxHops: Int = 3): DataFrame = Checkpoints.owned {
     require(nSeeds >= 1 && maxHops >= 1)
     val e = canonicalEdges(edgeList)
-    val nbr = e.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
+    val nbr = Checkpoints(e.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(e.select(col("b").as("u"), col("a").as("v"))))
     val seeds = nbr.select(col("u").as("node")).distinct()
       .orderBy("node").limit(nSeeds)
-    var frontier = seeds.select(col("node").as("seed"), col("node"))
-      .localCheckpoint()
+    var frontier = Checkpoints(seeds.select(col("node").as("seed"), col("node")))
     var visited = frontier
     val perLevel = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](frontier)
     for (d <- 1 to maxHops) {
-      val nxt = frontier.join(nbr, col("node") === col("u"))
+      val nxt = Checkpoints(frontier.join(nbr, col("node") === col("u"))
         .select(col("seed"), col("v").as("node")).distinct()
         .join(visited.select(col("seed").as("_s"), col("node").as("_n")),
-          col("seed") === col("_s") && col("node") === col("_n"), "left_anti")
-        .localCheckpoint()
+          col("seed") === col("_s") && col("node") === col("_n"), "left_anti"))
       perLevel += nxt.groupBy("seed")
         .agg(count(lit(1)).as("_c")).withColumn("_d", lit(d))
       frontier = nxt
-      visited = visited.unionByName(nxt).localCheckpoint()
-      ckpts += nxt
-      ckpts += visited
+      visited = Checkpoints(visited.unionByName(nxt))
     }
     val levels = perLevel.reduce(_.unionByName(_))
-    val out = seeds.select(col("node").as("seed"))
+    Checkpoints(seeds.select(col("node").as("seed"))
       .join(
         levels.groupBy("seed").agg(
           sum("_c").as("n_reached"),
@@ -1994,11 +1938,7 @@ object Graph {
         coalesce(col("n_reached"), lit(0L)).as("n_reached"),
         round(coalesce(col("_h").cast("double"), lit(0.0)), 6)
           .as("harmonic_closeness"))
-      .orderBy("seed")
-      .localCheckpoint()
-    ckpts.foreach(org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint)
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(nbr)
-    out
+      .orderBy("seed"))
   }
 
   /** Generated DuckDB oracle for [[harmonicCloseness]] — unrolled BFS

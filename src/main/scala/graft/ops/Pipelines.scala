@@ -1,15 +1,17 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation — the composite a training-data pipeline
   * actually runs, built entirely from the library's own operators so the
-  * whole flow stays one declarative plan (Catalyst sees every stage;
-  * nothing materializes between steps except the dedup pair graph, which
-  * [[Dedup.dupClusters]] checkpoints by design):
+  * whole flow stays one declarative plan (Catalyst sees every stage).
+  * Two things materialize: the gated corpus, checkpointed once because
+  * every later stage reads it, and the dedup pair graph, which
+  * [[Dedup.clusterPairs]] checkpoints by design. The returned frame reads
+  * the gated corpus; the pair stage's checkpoints that it does not read
+  * are released when the build returns ([[Checkpoints]]). The stages:
   *
   *   1. quality gate   — [[Text.qualityScore]] thresholds (Gopher-style)
   *   2. near-dup dedup — [[Dedup.dedupKeepList]] (prefix-filtered Jaccard →
@@ -96,7 +98,7 @@ object Pipelines {
                          pairGenerator: DataFrame => DataFrame,
                          mixRates: Map[String, Int],
                          valHexDigits: String,
-                         budgetTokens: Int): DataFrame = {
+                         budgetTokens: Int): DataFrame = Checkpoints.owned {
     // The gated corpus feeds SEVERAL plan subtrees — the pair generator's
     // shingle-subset semi-join, both exact-verify sides inside it, the
     // survivor anti-join, and the packing tail — and the gate is a
@@ -108,20 +110,12 @@ object Pipelines {
     // storage for 3-4 full-corpus regex re-scans — the same trade the
     // reference pipelines make by materializing their filtered corpus
     // between stages.
-    val gated = gated0.localCheckpoint()
-    // 2. near-dup dedup computed ON the gated corpus — one anti-join
-    val sc = gated.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val pairs = pairGenerator(gated)
-    val made = sc.getPersistentRDDs.keySet -- before
-    val deduped = Dedup.dedupSurvivors(gated, pairs)
-    // clusterPairs has copied the pairs, so the checkpoints the generator
-    // made for them are superseded. One a caller's generator closes over
-    // existed before the call and stays, as does any the gated corpus or
-    // the survivors still read.
-    def rdds(df: DataFrame) = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
-    val kept = (rdds(gated) ++ rdds(deduped)).map(_.id).toSet
-    rdds(pairs).filter(r => made(r.id) && !kept(r.id)).foreach(_.unpersist(blocking = false))
+    val gated = Checkpoints(gated0)
+    // 2. near-dup dedup computed ON the gated corpus — one anti-join.
+    // clusterPairs copies the pairs, so this scope releases the
+    // checkpoints the generator made for them; one a caller's generator
+    // closes over was made outside the scope and stays.
+    val deduped = Dedup.dedupSurvivors(gated, pairGenerator(gated))
     // 3. mixture  4. split  5. packing
     val mixed = deduped.filter(Text.mixKeep(mixRates))
     val w = Window.partitionBy("source").orderBy("doc_id")

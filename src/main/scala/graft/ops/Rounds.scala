@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.DataFrame
 
 /** The round driver of the iterative kernels: the ONE owner of round
   * state's lifetime. A kernel hands it an initial frame and a `step`
@@ -13,10 +13,13 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
   *     CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND);
   *   - releases each checkpoint it made once a later one supersedes it,
   *     so resident storage stays at one state generation.
-  * The caller releases what it made itself (edges, nodes, the initial
-  * state) and owns the returned checkpoint. The cadence `every` is the
-  * one per-kernel tuning knob: it trades one eager checkpoint job per
-  * `every` rounds against plans that nest `every` rounds of lineage.
+  * Every checkpoint it makes is recorded in the caller's
+  * [[Checkpoints.owned]] scope, which owns the returned one with the
+  * caller's own frames (edges, nodes, the initial state): it releases
+  * what the kernel's result does not read, and all of them when
+  * [[fixpoint]] throws. The cadence `every` is the one per-kernel tuning
+  * knob: it trades one eager checkpoint job per `every` rounds against
+  * plans that nest `every` rounds of lineage.
   */
 private[ops] object Rounds {
 
@@ -41,11 +44,8 @@ private[ops] object Rounds {
       prev = Some(p)
       same
     })
-    if (!converged) {
-      GraftSqlBridge.releaseLocalCheckpoint(out)
-      throw new IllegalStateException(
-        s"$kernel did not converge within $maxIters rounds")
-    }
+    if (!converged)
+      throw new IllegalStateException(s"$kernel did not converge within $maxIters rounds")
     out
   }
 
@@ -61,8 +61,8 @@ private[ops] object Rounds {
       i += 1
       val next = step(state, i)
       if (i % every == 0 || i == rounds) {
-        val ck = next.localCheckpoint()
-        ckpt.foreach(GraftSqlBridge.releaseLocalCheckpoint)
+        val ck = Checkpoints(next)
+        ckpt.foreach(Checkpoints.release)
         ckpt = Some(ck)
         state = ck
         stop = done(ck)

@@ -690,7 +690,7 @@ object Similarity {
       .withColumn("nrm", norm(col("v")))
     // the iterative centroid plan feeds both the assignment and the probe
     // ranking, so the frame owns one materialized copy
-    val cents = lloydCentroids(e, nCells, kmeansIters).localCheckpoint()
+    val cents = Checkpoints(lloydCentroids(e, nCells, kmeansIters))
     val assigned = assignCells(e, cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
     // query-time work: rank only the QUERY vectors against the broadcast
@@ -1026,19 +1026,18 @@ object Similarity {
     // the checkpoint it was paying anyway; for any other caller it makes
     // the ε-graph contract (one undirected edge per neighbor pair, no
     // self-edges) structural instead of implicit.
-    val edges = pairs.select(
+    val edges = Checkpoints(pairs.select(
         least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
-      .distinct().localCheckpoint()
+      .distinct())
     val directed = edges.select(col("id_a").as("vec_id"), col("id_b").as("nb"))
       .unionByName(edges.select(col("id_b").as("vec_id"), col("id_a").as("nb")))
     val deg = directed.groupBy("vec_id").agg(count(lit(1)).as("_deg"))
-    val pts = embeddings.select("vec_id")
+    val pts = Checkpoints(embeddings.select("vec_id")
       .join(deg, Seq("vec_id"), "left")
       .withColumn("_core",
-        coalesce(col("_deg"), lit(0L)) >= lit((minPts - 1).toLong))
-      .localCheckpoint()
+        coalesce(col("_deg"), lit(0L)) >= lit((minPts - 1).toLong)))
     val core = pts.filter(col("_core")).select("vec_id")
     val ccEdges = edges
       .join(core.select(col("vec_id").as("id_a")), Seq("id_a"), "left_semi")
@@ -1190,8 +1189,10 @@ object Similarity {
     * chosen for the low fixture threshold, where candidate selectivity is
     * necessarily poor (see [[cosineDupPairs]]); at a real near-dup threshold
     * (s ≥ 0.8, p ≥ 0.80) raise b to 8-12 for bucket selectivity and L for
-    * recall — that regime is where LSH pays. Approximate → registered
-    * rows-only; recall vs [[cosineDupPairs]] is asserted in SimilaritySpec.
+    * recall — that regime is where LSH pays. Approximate but seeded: its
+    * registered query hash-matches [[cosinePairsLshOracleSql]], which
+    * replays the same hyperplanes; recall vs [[cosineDupPairs]] is
+    * asserted in SimilaritySpec.
     */
   def cosinePairsLsh(embeddings: DataFrame, threshold: Double,
                      nTables: Int = 24, bitsPerTable: Int = 2, dim: Int = 64,
@@ -1262,7 +1263,8 @@ object Similarity {
     * recall math is shared), exact cosine + per-node top-k run on
     * candidates only. A node's emitted neighbors are a subset of its exact
     * top candidates with EXACT similarities; recall vs [[knnGraph]] is
-    * asserted in SimilaritySpec (rows-only by declared LSH-recall policy).
+    * asserted in SimilaritySpec, and the registered query hash-matches
+    * [[knnGraphLshOracleSql]], which replays the same hyperplanes.
     * Nodes whose buckets collide with nothing emit no rows — at corpus
     * scale raise L for recall, b for bucket selectivity.
     */
@@ -1350,11 +1352,10 @@ object Similarity {
     */
   def hnswGraph(embeddings: DataFrame, m: Int = 8, maxLevel: Int = HnswDefaultMaxLevel,
                 exactCap: Long = HnswDefaultExactCap,
-                nTables: Int = 8, bitsPerTable: Int = 4): DataFrame = {
+                nTables: Int = 8, bitsPerTable: Int = 4): DataFrame = Checkpoints.owned {
     require(m >= 2 && maxLevel >= 1, s"need m >= 2, maxLevel >= 1, got $m/$maxLevel")
-    val lvl = embeddings.select(col("vec_id"), col("embedding"))
-      .withColumn("level", hnswLevel(hnswMl(m), maxLevel))
-      .localCheckpoint()
+    val lvl = Checkpoints(embeddings.select(col("vec_id"), col("embedding"))
+      .withColumn("level", hnswLevel(hnswMl(m), maxLevel)))
     // ONE bounded collect (per-level histogram, ≤ maxLevel+1 rows) replaces
     // the lMax aggregate plus the per-layer membership count jobs (round 18
     // job-floor trim): every layer's member count is a suffix sum of the
@@ -1448,13 +1449,10 @@ object Similarity {
     val ev = embeddings.select(col("vec_id").as("neighbor_id"),
       asDouble(col("embedding")).as("nv"))
       .withColumn("nnrm", norm(col("nv")))
-    val out = layers.reduce(_ unionByName _)
+    Checkpoints(layers.reduce(_ unionByName _)
       .join(ev, "neighbor_id")
       .select(col("level"), col("vec_id"), col("neighbor_id"), col("sim"),
-        col("nv"), col("nnrm"))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(lvl)
-    out
+        col("nv"), col("nnrm")))
   }
 
   /** Greedy HNSW search over a [[hnswGraph]] — batch form: ALL queries
@@ -1482,7 +1480,7 @@ object Similarity {
     */
   def hnswTopK(embeddings: DataFrame, graph: DataFrame,
                nQueries: Int = 20, k: Int = 5, ef: Int = 64,
-               hopsPerLevel: Int = 1, beamRounds: Int = 4): DataFrame = {
+               hopsPerLevel: Int = 1, beamRounds: Int = 4): DataFrame = Checkpoints.owned {
     require(k >= 1 && ef >= k, s"need ef >= k >= 1, got ef=$ef k=$k")
     require(hopsPerLevel >= 0 && beamRounds >= 1,
       s"need hopsPerLevel >= 0 and beamRounds >= 1, got $hopsPerLevel/$beamRounds")
@@ -1530,12 +1528,11 @@ object Similarity {
     // cursor: (qid, cid, sim, qv, qn), one row per query. The entry
     // point is a single corpus row, so the initial scores come from one
     // broadcast of that row against the query table — not a corpus join.
-    val entryCur = q.crossJoin(broadcast(e.filter(col("vec_id") === entry)
+    val entryCur = Checkpoints(q.crossJoin(broadcast(e.filter(col("vec_id") === entry)
         .select(col("vec_id").as("cid"), col("v"), col("nrm"))))
       .select(col("qid"), col("cid"),
         (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("sim"),
-        col("qv"), col("qn"))
-      .localCheckpoint()
+        col("qv"), col("qn")))
     // qv/qn ride the argmin struct behind the (ns, c) key: within one
     // qid group every row carries the SAME qv/qn, so they can never
     // influence the comparison — they are along for the ride, not keys.
@@ -1572,7 +1569,6 @@ object Similarity {
       if (i <= greedyHops) best(cur.unionByName(hop(cur, lMax - (i - 1) / hopsPerLevel)))
       else widen(cur)
     }
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(entryCur)
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
     beam.filter(col("cid") =!= col("qid"))
       .withColumn("rn", row_number().over(w).cast("long"))
@@ -1592,12 +1588,11 @@ object Similarity {
     */
   def hnswRecallReport(embeddings: DataFrame, nQueries: Int = 20, k: Int = 5,
                        m: Int = 8, ef: Int = 64,
-                       recallFloor: Double = 0.93): DataFrame = {
+                       recallFloor: Double = 0.93): DataFrame = Checkpoints.owned {
     val exact = cosineTopK(embeddings, nQueries, k).select(col("qid"), col("cid"))
-    val graph = hnswGraph(embeddings, m)
-    val got = hnswTopK(embeddings, graph, nQueries, k, ef)
-    // hnswTopK returns a checkpoint of its beam, which no longer reads the index
-    org.apache.spark.sql.GraftSqlBridge.releaseLocalCheckpoint(graph)
+    // hnswTopK returns a checkpoint of its beam, which no longer reads the
+    // index, so this scope releases the index
+    val got = hnswTopK(embeddings, hnswGraph(embeddings, m), nQueries, k, ef)
     val hits = exact.join(got.select(col("qid"), col("cid")),
         Seq("qid", "cid"), "left_semi")
       .groupBy("qid").agg(count(lit(1)).as("hits"))
@@ -1711,9 +1706,10 @@ object Similarity {
     * booleans are stable and the DuckDB oracle pins (method, n_queries, k,
     * floor, TRUE) — a recall regression in ANY method turns its row red in
     * the correctness gate, which is exactly the monitor an ANN deployment
-    * runs after each index rebuild. The per-method top-k outputs stay
-    * registered as their own rows-only queries (their candidate sets are
-    * sketch-dependent by design). Measured recall@5 over 20 queries:
+    * runs after each index rebuild. The per-method top-k outputs are
+    * registered as their own queries, whose oracles replay each seeded
+    * construction (their candidate sets are sketch-dependent by design,
+    * so only this report pins recall). Measured recall@5 over 20 queries:
     * lsh 0.73/0.68, ivf 0.85/0.83, pq 0.59/0.56 at sf0.001/sf0.01 — the
     * default floors sit ≥0.1 under the lower measurement so a fixture
     * regeneration cannot flip a boolean without a REAL recall collapse.
@@ -1769,8 +1765,8 @@ object Similarity {
     *    so survivors ⊇ exact survivors; recall = dropped-set agreement.
     *
     * All columns are literals or booleans, so the DuckDB oracle pins all
-    * six checks — the remaining rows-only LSH queries each have their
-    * guarantee driver-visible through this row. Measured at
+    * six checks — the LSH queries' oracles replay their hyperplanes, so
+    * their recall guarantees are driver-visible through this row. Measured at
     * sf0.001/sf0.01: pair_graph 0.994/1.000 (0 false positives),
     * knn_top1 0.686/0.704, keeplist dropped-agreement 0.994/1.000
     * (0 violations) — floors sit well under the lower measurement.
@@ -1793,9 +1789,9 @@ object Similarity {
     // each pair frame feeds the pair leg AND a keep-list clustering, whose
     // connected components run eagerly at construction — the frame owns one
     // materialized copy instead of running the quadratic probe twice
-    val exactPairs = cosineDupPairs(aug, 0.9, sorted = false).localCheckpoint()
-    val lshPairs = cosinePairsLsh(aug, 0.9, nTables = 8, bitsPerTable = 8,
-      sorted = false).localCheckpoint()
+    val exactPairs = Checkpoints(cosineDupPairs(aug, 0.9, sorted = false))
+    val lshPairs = Checkpoints(cosinePairsLsh(aug, 0.9, nTables = 8, bitsPerTable = 8,
+      sorted = false))
     // pair_graph (marker columns — a USING full-outer collapses the key
     // columns, so side-membership must ride its own flag)
     val exactP = exactPairs.select(col("id_a"), col("id_b"), lit(1).as("me"))

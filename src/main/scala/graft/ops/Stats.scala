@@ -225,10 +225,9 @@ object Stats {
     val v = col(valueCol)
     val med = df.groupBy(col(groupCol))
       .agg(expr(s"percentile($valueCol, 0.5)").as("med"))
-    val dev = df.select(col(groupCol), v)
+    val dev = Checkpoints(df.select(col(groupCol), v)
       .join(med, Seq(groupCol))
-      .withColumn("adev", abs(v - col("med")))
-      .localCheckpoint()
+      .withColumn("adev", abs(v - col("med"))))
     val madAgg = dev.groupBy(col(groupCol))
       .agg(expr("percentile(adev, 0.5)").as("mad"))
     dev.join(madAgg, Seq(groupCol))
@@ -644,10 +643,9 @@ object Stats {
     // broadcast inputs build on parallel threads at execution start, and
     // each would otherwise recompute the full-scan pair aggregate (the
     // abcClasses finding — see that operator's perV note)
-    val perX = pts.groupBy("x")
+    val perX = Checkpoints(pts.groupBy("x")
       .agg(max(struct(col("y"), col("n_rows"))).as("_m"))
-      .select(col("x"), col("_m.y").as("y"), col("_m.n_rows").as("n_rows"))
-      .localCheckpoint()
+      .select(col("x"), col("_m.y").as("y"), col("_m.n_rows").as("n_rows")))
     // bucket assignment: double cast is monotone (non-strictly) in x, and
     // the rule only needs monotonicity — ties at bucket edges stay exact
     // because the within-bucket window orders by true x
@@ -808,9 +806,8 @@ object Stats {
     // ONE pass over the entity table; everything downstream (the bucket
     // bounds, the tot/nn broadcast and the main path) reads the
     // distinct-value aggregate.
-    val perV = entities.select(guarded.as("_v"))
-      .groupBy("_v").agg(count(lit(1)).as("_cnt"))
-      .localCheckpoint()
+    val perV = Checkpoints(entities.select(guarded.as("_v"))
+      .groupBy("_v").agg(count(lit(1)).as("_cnt")))
     val grpTotal = (col("_v") * col("_cnt")).cast(dec38)
     // ONE 1-row broadcast carries the total and the null-entity count
     val stats = perV.agg(
@@ -1256,11 +1253,10 @@ object Stats {
     */
   private def cohortCounts(df: DataFrame, groupFlag: Column,
                            valueCol: String): DataFrame =
-    df.filter(col(valueCol).isNotNull)
+    Checkpoints(df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("_v"))
       .agg(sum(when(groupFlag, 1L).otherwise(0L)).as("_ca"),
-        sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb"))
-      .localCheckpoint()
+        sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb")))
 
   /** Mann-Whitney U (Wilcoxon rank-sum), normal approximation with the
     * standard tie correction — the nonparametric A/B readout on a numeric
@@ -1451,11 +1447,10 @@ object Stats {
                      valueCol: String, zCrit: Double = 1.96,
                      buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
-    val perV = df.filter(col(valueCol).isNotNull && col(byCol).isNotNull)
+    val perV = Checkpoints(df.filter(col(valueCol).isNotNull && col(byCol).isNotNull)
       .groupBy(col(byCol).as("_g"), col(valueCol).as("_v"))
       .agg(sum(when(groupFlag, 1L).otherwise(0L)).as("_ca"),
-        sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb"))
-      .localCheckpoint()
+        sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb")))
     val pre = prefixSumsAsc(perV, Seq("_ca", "_cb"), buckets,
       partCols = Seq("_g"))
     val t = (col("_ca") + col("_cb")).cast(dec)
@@ -1543,11 +1538,10 @@ object Stats {
                valueCol: String, cAlpha: Double = 1.358,
                buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
-    val perV = df.filter(col(valueCol).isNotNull && col(byCol).isNotNull)
+    val perV = Checkpoints(df.filter(col(valueCol).isNotNull && col(byCol).isNotNull)
       .groupBy(col(byCol).as("_g"), col(valueCol).as("_v"))
       .agg(sum(when(groupFlag, 1L).otherwise(0L)).as("_ca"),
-        sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb"))
-      .localCheckpoint()
+        sum(when(!groupFlag, 1L).otherwise(0L)).as("_cb")))
     val pre = prefixSumsAsc(perV, Seq("_ca", "_cb"), buckets,
       partCols = Seq("_g"))
     val agg = pre.groupBy("_g").agg(
@@ -1627,11 +1621,10 @@ object Stats {
                     z95: Double = 1.6448536269514722,
                     buckets: Int = 10000): DataFrame = {
     val dec = DecimalType(38, 0)
-    val perGV = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
+    val perGV = Checkpoints(df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("_g"), col(valueCol).as("_v"))
-      .agg(count(lit(1)).as("_c"))
-      .localCheckpoint()
-    val perV = perGV.groupBy("_v").agg(sum("_c").as("_t")).localCheckpoint()
+      .agg(count(lit(1)).as("_c")))
+    val perV = Checkpoints(perGV.groupBy("_v").agg(sum("_c").as("_t")))
     val pre = prefixSumsAsc(perV, Seq("_t"), buckets)
     val r2term = col("_c").cast(dec) *
       (lit(2).cast(dec) * col("_pre_t").cast(dec) +
@@ -1761,8 +1754,7 @@ object Stats {
       .select(col(xCol).as("_x"), col(yCol).as("_y"))
     val r2Expr = (lit(2).cast(dec) * col("_pre_t").cast(dec) +
       col("_t").cast(dec) + lit(1).cast(dec))
-    val perX = rows.groupBy(col("_x").as("_v")).agg(count(lit(1)).as("_t"))
-      .localCheckpoint()
+    val perX = Checkpoints(rows.groupBy(col("_x").as("_v")).agg(count(lit(1)).as("_t")))
     val rx0 = prefixSumsAsc(perX, Seq("_t"), buckets)
       .select(col("_v").as("_x"), col("_t").cast(dec).as("_tx"),
         r2Expr.as("_r2x"))
@@ -1779,11 +1771,10 @@ object Stats {
         lit(0).cast(dec)).as("_sxx"))
     // ONE fact aggregate: the y distinct-value table fused with the
     // per-y x-rank sum that carries the cross moment
-    val perY = rows.join(rx, "_x")
+    val perY = Checkpoints(rows.join(rx, "_x")
       .groupBy(col("_y").as("_v"))
       .agg(count(lit(1)).as("_t"),
-        sum(col("_r2x")).cast(dec).as("_sxr"))
-      .localCheckpoint()
+        sum(col("_r2x")).cast(dec).as("_sxr")))
     val preY = prefixSumsAsc(perY, Seq("_t"), buckets)
       .withColumn("_r2y", r2Expr)
     val agg = preY.agg(
@@ -1869,12 +1860,11 @@ object Stats {
   def chiSquareIndependence(df: DataFrame, aCol: String, bCol: String,
                             maxCells: Long = 100000L): DataFrame = {
     require(maxCells >= 1, s"need maxCells >= 1, got $maxCells")
-    val cells = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    val cells = Checkpoints(df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("string").as("_a"), col(bCol).cast("string").as("_b"))
-      .agg(count(lit(1)).as("_o"))
-      .localCheckpoint()
-    val rowT = cells.groupBy("_a").agg(sum("_o").as("_ra")).localCheckpoint()
-    val colT = cells.groupBy("_b").agg(sum("_o").as("_cb")).localCheckpoint()
+      .agg(count(lit(1)).as("_o")))
+    val rowT = Checkpoints(cells.groupBy("_a").agg(sum("_o").as("_ra")))
+    val colT = Checkpoints(cells.groupBy("_b").agg(sum("_o").as("_cb")))
     // the FULL marginal grid, not just observed cells: an expected-but-
     // never-observed combination contributes (0 - e)^2/e = e, and perfect
     // association is invisible without it (chi-squared = 0 cells matter)

@@ -434,10 +434,9 @@ object Text {
     */
   def keyTerms(documents: DataFrame, topK: Int = 3): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val tf = documents.select(col("doc_id"),
+    val tf = Checkpoints(documents.select(col("doc_id"),
         explode(regexp_extract_all(lower(col("text")), lit(wordRe), lit(0))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = documents.agg(count(lit(1)).as("n"))
     val scored = tf.join(df, "term")
@@ -470,10 +469,9 @@ object Text {
   def pmiCollocations(documents: DataFrame, minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val toks = col("_toks")
-    val base = documents
+    val base = Checkpoints(documents
       .withColumn("_toks", regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)))
-      .select(col("_toks"))
-      .localCheckpoint()
+      .select(col("_toks")))
     val uni = base.select(explode(toks).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cu"))
     val totalToks = uni.agg(coalesce(sum("cu"), lit(0L)).as("t"))
@@ -711,10 +709,9 @@ object Text {
     import spark.implicits._
     // ONE corpus tokenize, materialized: the total, the vocab-count job and
     // the scoring pass all read `_toks` (same discipline as [[bigramSurprisal]])
-    val base = documents
+    val base = Checkpoints(documents
       .select(col("doc_id"),
-        regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks"))
-      .localCheckpoint()
+        regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks")))
     val (total, vocab) = tokenVocab(base, vocabSize)
     if (total == 0.0)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "mean_surprisal", "n_tokens")
@@ -769,10 +766,9 @@ object Text {
     // frame. Without it each construction job re-ran regexp_extract_all
     // over the full corpus (and scoring tokenized a third time Scala-side)
     // — the tokenize was the dominant cost, 3×.
-    val base = documents
+    val base = Checkpoints(documents
       .select(col("doc_id"),
-        regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks"))
-      .localCheckpoint()
+        regexp_extract_all(lower(col("text")), lit(wordRe), lit(0)).as("_toks")))
     val (total, vocab) = tokenVocab(base, vocabSize)
     if (total == 0.0)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "mean_surprisal", "n_tokens")
@@ -978,9 +974,8 @@ object Text {
     * one-pass contract as jaccardPairs' shingle table).
     */
   def duplicatePassageStats(documents: DataFrame, chunkTokens: Int = 32): DataFrame = {
-    val hashed = chunkDocuments(documents, chunkTokens, overlap = 0, sorted = false)
-      .select(col("doc_id"), xxhash64(col("chunk_text")).as("h"))
-      .localCheckpoint()
+    val hashed = Checkpoints(chunkDocuments(documents, chunkTokens, overlap = 0, sorted = false)
+      .select(col("doc_id"), xxhash64(col("chunk_text")).as("h")))
     val df = hashed.groupBy("h")
       .agg(countDistinct("doc_id").as("docfreq"))
     hashed.join(df, "h")
@@ -1231,7 +1226,8 @@ object Text {
     val spark = documents.sparkSession
     import spark.implicits._
     val tokenRe = "[a-z0-9]+".r
-    val grams = documents.select(col("doc_id"), lower(col("text")).as("t")).as[(Long, String)]
+    val grams = Checkpoints(documents.select(col("doc_id"), lower(col("text")).as("t"))
+      .as[(Long, String)]
       .flatMap { case (id, text) =>
         val toks = if (text == null) Array.empty[String]
                    else tokenRe.findAllIn(text).toArray
@@ -1244,8 +1240,7 @@ object Text {
           }
         }
       }
-      .toDF("doc_id", "pos", "h")
-      .localCheckpoint()
+      .toDF("doc_id", "pos", "h"))
     val shared = grams.groupBy("h")
       .agg(countDistinct("doc_id").as("df"))
       .filter(col("df") >= 2)
@@ -1465,9 +1460,8 @@ object Text {
     // byte-identical
     val ttr = coalesce(qualityRatios.typeTokenRatio, lit(-1.0))
       .as("type_token_ratio")
-    val base = documents.select(col("doc_id"), ttr,
-        coalesce(size(toks).cast("long"), lit(0L)).as("n_tokens"))
-      .localCheckpoint()
+    val base = Checkpoints(documents.select(col("doc_id"), ttr,
+        coalesce(size(toks).cast("long"), lit(0L)).as("n_tokens")))
     // Bounded driver-side bucket prefix (≤ ~102 rows per level — the
     // maxDriverKeys discipline): best-first, whole buckets while they fit,
     // then at most one boundary bucket. The boundary bucket normally holds
@@ -1755,12 +1749,11 @@ object Text {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(28, 18)
     val q = qualityRatios
-    val feat = documents.select(col("doc_id"),
+    val feat = Checkpoints(documents.select(col("doc_id"),
         gopherSignals.meanWordLen.as("x1"),
         q.stopwordRatio.as("x2"),
         q.typeTokenRatio.as("x3"),
-        when(gopherKeep(), lit(1.0)).otherwise(lit(0.0)).as("y"))
-      .localCheckpoint()
+        when(gopherKeep(), lit(1.0)).otherwise(lit(0.0)).as("y")))
     val z = col("b") + col("w1") * col("x1") +
       col("w2") * col("x2") + col("w3") * col("x3")
     val sigma = lit(0.5) + lit(0.5) * z / (lit(1.0) + abs(z))
@@ -2016,7 +2009,7 @@ object Text {
     val spark = documents.sparkSession
     import spark.implicits._
     val tokenRe = "[a-z0-9]+".r
-    val grams = documents.select(col("doc_id"), lower(col("text")).as("t"))
+    val grams = Checkpoints(documents.select(col("doc_id"), lower(col("text")).as("t"))
       .as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, text) =>
@@ -2046,8 +2039,7 @@ object Text {
             }
           }
         }
-      }.toDF("doc_id", "ngram")
-      .localCheckpoint()
+      }.toDF("doc_id", "ngram"))
     val firsts = grams.groupBy("ngram").agg(min("doc_id").as("first_doc"))
     grams.join(firsts, "ngram")
       .groupBy("doc_id")

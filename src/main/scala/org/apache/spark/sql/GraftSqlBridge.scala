@@ -3,11 +3,15 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into `private[sql]` API: converting between a public
-  * `Column` and its Catalyst `Expression` so graft can define native
-  * codegen expressions (graft.functions.VectorExpressions) without
-  * forking Spark. This is the only `org.apache.spark.sql`-packaged code
-  * in the project and it delegates 1:1 to Spark's own helpers.
+/** Minimal bridge into `private[sql]` and `private[spark]` API, each
+  * member a thin delegation to Spark's own helpers: Column ⇄ Expression
+  * conversion for graft's native codegen expressions
+  * (graft.functions.VectorExpressions), plan ⇒ DataFrame for custom plan
+  * nodes, driver-side scan-split planning, and the session, cache and
+  * listener-bus probes the specs use. This is the only
+  * `org.apache.spark.sql`-packaged code in the project. Checkpoint
+  * lifetime is not here: `graft.ops.Checkpoints` owns it through public
+  * API alone.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -98,35 +102,4 @@ object GraftSqlBridge {
     */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
-
-  /** Release the storage blocks behind a `localCheckpoint()`ed DataFrame.
-    *
-    * `Dataset.unpersist` cannot do this — checkpoint blocks live on the
-    * internal RDD wrapped in the plan's `LogicalRDD`, not in the
-    * CacheManager. The iterative kernels checkpoint round after round
-    * (graft.ops.Rounds, which releases each superseded round); without an
-    * explicit release each round's blocks survive until JVM garbage
-    * collection triggers the ContextCleaner — unbounded resident storage
-    * over a long-running session. ONLY call this on checkpoints that are
-    * fully superseded: a localCheckpoint has no lineage, so a released
-    * RDD that is referenced again cannot be recomputed and the job fails.
-    */
-  def releaseLocalCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-
-  /** Release the checkpoints `df`'s plan reads that no frame in `keep`
-    * reads — for a consumer that has materialized a producer's output:
-    * the producer's own intermediates go, while any checkpoint the caller
-    * passed in (and still reads through `keep`) stays.
-    */
-  def releaseLocalCheckpointsExcept(df: Dataset[_], keep: Dataset[_]*): Unit = {
-    def rdds(d: Dataset[_]) = d.queryExecution.analyzed.collect {
-      case lr: execution.LogicalRDD => lr.rdd
-    }
-    val kept = keep.flatMap(rdds).map(_.id).toSet
-    rdds(df).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
-  }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Registry-wide guards: every registered query must run and produce rows on
   * the smallest fixture (an empty result would silently weaken the driver's
-  * hash check), and each record's name is unique and its oracle non-blank.
+  * hash check) and leave resident only the checkpoints its result reads,
+  * and each record's name is unique and its oracle non-blank.
   */
 class RegistrySpec extends SparkSpec {
 
@@ -15,11 +18,20 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("every registered query returns rows at sf0.001") {
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      if (n == 0) Some(name) else None
+    val empty = Seq.newBuilder[String]
+    val resident = Seq.newBuilder[String]
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      // residency: the build leaves persisted exactly the checkpoints its
+      // result reads, whatever operators it composed
+      val (added, df) = persistedDuring(fn(spark, sfDir))
+      val reads = df.queryExecution.analyzed
+        .collectWithSubqueries { case lr: LogicalRDD => lr.rdd.id }.toSet
+      if (added != reads)
+        resident += s"$name left ${added.toSeq.sorted} but reads ${reads.toSeq.sorted}"
+      if (df.count() == 0) empty += name
     }
-    assert(empty.isEmpty, s"queries with empty results: $empty")
+    assert(empty.result().isEmpty, s"queries with empty results: ${empty.result()}")
+    assert(resident.result().isEmpty, s"builds with unread checkpoints: ${resident.result()}")
   }
 
   test("flagship entry returns rows (driver t1 smoke)") {

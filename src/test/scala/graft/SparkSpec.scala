@@ -35,4 +35,13 @@ abstract class SparkSpec extends AnyFunSuite {
       (jobs.get(), out)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The ids of the persistent RDDs `body` added, with its result — what
+    * a build leaves resident (specs run one at a time).
+    */
+  def persistedDuring[T](body: => T): (Set[Int], T) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = body
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet -- before, out)
+  }
 }

@@ -214,10 +214,12 @@ class GraphSpec extends SparkSpec {
 
   test("kCore: rejects degenerate parameters and refuses to exceed maxIters") {
     intercept[IllegalArgumentException](Graph.kCore(edges((1L, 2L)), k = 0))
-    // triangle+tail needs 3 peel rounds + 1 confirm at k=2; maxIters=2 must throw
-    intercept[IllegalStateException](
+    // triangle+tail needs 3 peel rounds + 1 confirm at k=2; maxIters=2 must
+    // throw, and leave none of its checkpoints resident
+    val (added, _) = persistedDuring(intercept[IllegalStateException](
       Graph.kCore(edges((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)),
-        k = 2, maxIters = 2))
+        k = 2, maxIters = 2)))
+    assert(added.isEmpty, s"the throw left persisted RDDs ${added.toSeq.sorted}")
   }
 
   private def census(pairs: (Long, Long)*): (Long, Long, Long, Long, Double) = {
@@ -512,9 +514,11 @@ class GraphSpec extends SparkSpec {
     val out = labelsOf(Graph.connectedComponents(path, maxIters = 12))
     assert(out.size == 64 && out.values.forall(_ == 0L))
     // and the safety fence THROWS (never a partial labeling) when capped
-    // below what convergence + the one confirmation round need
-    intercept[IllegalStateException](
-      Graph.connectedComponents(path, maxIters = 2))
+    // below what convergence + the one confirmation round need, leaving
+    // none of its checkpoints resident
+    val (added, _) = persistedDuring(intercept[IllegalStateException](
+      Graph.connectedComponents(path, maxIters = 2)))
+    assert(added.isEmpty, s"the throw left persisted RDDs ${added.toSeq.sorted}")
   }
 
   test("connectedComponents: invariant to direction/duplicates; bit-identical under repartitioning") {

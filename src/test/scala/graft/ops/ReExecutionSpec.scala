@@ -113,12 +113,10 @@ class ReExecutionSpec extends SparkSpec {
 
   private def reExecutes(name: String, build: () => DataFrame, checkResidency: Boolean): Unit = {
     GraftSqlBridge.clearSqlCache(spark)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = build()
+    val (added, df) = persistedDuring(build())
     if (checkResidency) {
       // the round driver's contract: every checkpoint the build made is in
       // the returned frame's plan or already released
-      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
       val inPlan = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
       assert(added == inPlan,
         s"$name: the build left persisted RDDs ${added.toSeq.sorted} but its plan reads ${inPlan.toSeq.sorted}")
